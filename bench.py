@@ -72,7 +72,7 @@ HEADLINE = [
     # round-4 additions: the widest join shape in the catalog (lineitem ⋈
     # orders ⋈ customer ⋈ nation ⋈ region rollup), CDC feed collapse +
     # state apply (single key shuffle), and iterative entity-resolution
-    # closure (blocked linkage pairs → min-label propagation) — the three
+    # closure (blocked linkage pairs → connected components) — the three
     # staged r3 shapes most likely to misbehave at scale
     "revenue_rollup_nation_year",
     "cdc_apply_state",

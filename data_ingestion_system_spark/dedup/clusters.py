@@ -8,18 +8,16 @@ it groups only literally-identical content). The standard fix is the
 connected components of the verified-pair graph, with one keeper per
 component.
 
-Components are computed with min-label propagation expressed as pure
-DataFrame algebra: every doc starts labeled with its own id, and each
-round replaces a doc's label with the minimum label among itself and its
-neighbors. The loop converges in graph-diameter rounds; near-dup
-components are band-overlap cliques with tiny diameters (≤ a few hops),
-so a small capped loop is the right trade against the
-log-diameter-but-heavier alternating large-star/small-star algorithm
-(Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC
-2014) — which is the documented upgrade path if 100 TB corpora ever
-produce long duplicate chains. Each round is one (src)-keyed shuffle
-join + one groupBy; lineage is truncated per round with an eager local
-checkpoint so the plan does not grow with iterations.
+Components are computed on the driver when the edge relation is small
+(one collect + union-find), and otherwise with the edge-contraction loop
+of Kiveris et al. ("Connected Components in MapReduce and Beyond", SoCC
+2014) expressed as pure DataFrame algebra: each round every node takes
+the minimum label of its closed neighborhood, then the graph contracts
+onto the new labels (self-loops dropped, parallel edges merged) and the
+original-doc mapping composes through the round. Dense near-dup
+components — band-overlap cliques — collapse in a round or two. Each
+round is one scheduled job; lineage is truncated per round with lazy
+checkpoints so the plan does not grow with iterations.
 
 The DuckDB oracle runs the same MinHash pipeline (shared CTE body) and
 closes it transitively with a recursive CTE, so the differential test
@@ -46,35 +44,23 @@ from data_ingestion_system_spark.tables import (
     load_table,
 )
 
-MAX_ITERS = 20  # >> observed duplicate-chain diameter; convergence asserted
+MAX_ITERS = 20  # >> observed contraction rounds (6-7 on keeper graphs); else raises
 
-# §4d threshold dispatch for the component loop: below this edge count
-# the plain propagation loop wins — contraction spends THREE jobs per
-# round (relabel checkpoint, contracted-edge checkpoint + emptiness
-# probe) whose fixed cost dwarfs the joins on a small graph (sf0.1
-# keeper bench: 6.0 s plain vs 10.7 s contracted), while above it the
-# full-size-edge rescan dominates and contraction pays it once instead
-# of every round (sf10 keeper: 118 -> 81 s). The count is read off the
-# just-checkpointed edge relation — a cached-scan job, not extra
-# lineage.
-CC_CONTRACT_MIN_EDGES = 1_000_000
-
-# r10 (§4d third arm): at or below this edge count the whole closure
-# runs as ONE collect + driver-side union-find instead of the iterative
-# propagation loop. Every distributed round costs two scheduled jobs of
-# fixed driver/scheduler overhead (~0.15-0.3 s each on local[32])
-# regardless of how small the graph is, and diameter is not bounded by
-# corpus size — the sf0.1 simhash VALUE graph (116k doubled edges)
-# converges in 10 rounds, ~2-4 s of pure round overhead that one
-# collect replaces (measured interleaved A/B: keepers 5.9 -> 3.9 s
-# median). The collect is bounded by the floor at ~4 MB (2 longs x
-# 256k rows) — the same driver-metadata scale as the equi-depth
-# boundary tuples and the PQ codebook collects, far under
-# spark.driver.maxResultSize — and union-find with path compression
-# closes 256k edges in well under 100 ms. Above the floor the
-# iterative arms are unchanged, so the 100 TB posture (never a
-# corpus-scale driver collect) is preserved; all three arms are
-# oracle-forced in tests/test_dispatch_arms.py.
+# r10 (§4d): at or below this edge count the whole closure runs as ONE
+# collect + driver-side union-find instead of the contraction loop.
+# Every distributed round costs fixed driver/scheduler overhead
+# (~0.15-0.3 s per job on local[32]) regardless of how small the graph
+# is, and the round count is not bounded by corpus size — the sf0.1
+# simhash VALUE graph (116k doubled edges) took 10 distributed rounds,
+# ~2-4 s of pure round overhead that one collect replaces (measured
+# interleaved A/B: keepers 5.9 -> 3.9 s median). The collect is bounded
+# by the floor at ~4 MB (2 longs x 256k rows) — the same driver-metadata
+# scale as the equi-depth boundary tuples and the PQ codebook collects,
+# far under spark.driver.maxResultSize — and union-find with path
+# compression closes 256k edges in well under 100 ms. Above the floor
+# the contraction loop runs, so the 100 TB posture (never a corpus-scale
+# driver collect) is preserved; both arms, and both relabel strategies
+# of the contraction loop, are oracle-forced in tests/test_dispatch_arms.py.
 CC_DRIVER_MAX_EDGES = 262_144
 
 # r11 (§4d): in the contract arm, when the graph's NODE count (counted
@@ -100,32 +86,34 @@ CC_BCAST_MAX_NODES = 4_000_000
 LAST_CC_STATS: dict = {}
 
 
-def connected_components(pairs: DataFrame, max_iters: int = MAX_ITERS) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """(doc_a, doc_b) undirected edges → (doc_id, cluster_id) where
     cluster_id is the minimum doc_id of the component.
 
-    Two physical loops, one answer (§4d, dispatched on the edge count):
+    Two physical arms, one answer (§4d, dispatched on the edge count):
 
-    - PLAIN min-label propagation (small graphs): every round each node
-      takes the min label over its closed neighborhood; converges in
-      diameter rounds; two jobs per round (lazy label checkpoint
-      materialized by the convergence agg).
-    - EDGE CONTRACTION (large graphs — the Kiveris et al. upgrade the
-      r2 docstring promised): after each min round the graph CONTRACTS
-      onto the new labels (edges relabelled, self-loops dropped,
-      parallel edges merged) and the original-vertex mapping composes
-      through the round. Dense near-dup graphs — band-overlap cliques,
-      saturated simhash value balls — collapse to single nodes in one
-      round, so the full-size edge rescan the plain loop pays EVERY
-      round (10 × 43M-edge joins, 115 s on the sf10 value graph) is
-      paid once; path-shaped chains halve per round (O(log n) rounds).
+    - DRIVER union-find (at most `CC_DRIVER_MAX_EDGES` edges): one
+      collect, no distributed rounds.
+    - EDGE CONTRACTION (larger graphs — Kiveris et al.): after each min
+      round the graph CONTRACTS onto the new labels (edges relabelled,
+      self-loops dropped, parallel edges merged) and the original-vertex
+      mapping composes through the round. Dense near-dup graphs —
+      band-overlap cliques, saturated simhash value balls — collapse to
+      single nodes in a round or two, so the full-size edge relation is
+      scanned once, not every round. The round count is NOT O(log n) in
+      general: a node only merges into its smallest neighbor, so a path
+      whose ids increase monotonically along it loses one node per round
+      (a 200-node chain takes 199 rounds and exceeds `MAX_ITERS`). A chain
+      with ids in random order shrinks by a constant factor per round in
+      expectation; near-dup graphs are clique-like and close in a few
+      rounds.
 
     Correctness of the contraction's min invariant: a node's new label
     is the min of CURRENT labels in its closed neighborhood, and every
     current label is by induction the min original id of its merged
     set, so a merged set's label stays the min original id of its
     union; at termination (no cross-label edge) each component is one
-    node = its min doc_id — the same contract as the plain loop, pinned
+    node = its min doc_id — the same contract as the driver arm, pinned
     by the recursive-CTE oracles, the keeper-equality pytest, and the
     forced-arm dispatch test."""
     edges = (
@@ -142,30 +130,26 @@ def connected_components(pairs: DataFrame, max_iters: int = MAX_ITERS) -> DataFr
         LAST_CC_STATS["arm"] = "driver"
         LAST_CC_STATS["rounds"] = 0  # no distributed rounds by construction
         return _cc_driver(edges)
-    # original doc_id -> current component label (composes every round);
-    # built only for the iterative arms — the driver arm never needs it
+    LAST_CC_STATS["arm"] = "contract"
+    # original doc_id -> current component label (composes every round)
     mapping = (
         edges.select(F.col("src").alias("doc_id"))
         .distinct()
         .select("doc_id", F.col("doc_id").alias("label"))
-        .transform(corpus_checkpoint_lazy)  # materialized by its first consumer
+        .transform(corpus_checkpoint_lazy)
     )
-    if n_edges < CC_CONTRACT_MIN_EDGES:
-        LAST_CC_STATS["arm"] = "propagate"
-        return _cc_propagate(edges, mapping, max_iters)
-    LAST_CC_STATS["arm"] = "contract"
     # exact node count (materializes the lazy mapping checkpoint, which
     # its consumers needed anyway) dispatches the relabel-join strategy
     n_nodes = mapping.count()
     LAST_CC_STATS["n_nodes"] = n_nodes
-    return _cc_contract(edges, mapping, max_iters, bcast=n_nodes <= CC_BCAST_MAX_NODES)
+    return _cc_contract(edges, mapping, bcast=n_nodes <= CC_BCAST_MAX_NODES)
 
 
 def _cc_driver(edges: DataFrame) -> DataFrame:
     """Small-graph arm: one collect of the (bounded) edge relation, then
     union-find with path compression on the driver, roots kept at the
     minimum doc_id so each component's label is its min member — the
-    identical contract the iterative arms converge to. The result is
+    identical contract the contraction loop converges to. The result is
     re-parallelized with the same column type the edges carried (an
     ExistingRDD scan, like tables.replay_rows_df, so re-use replays
     cheaply and never re-runs the collect)."""
@@ -207,41 +191,9 @@ def _cc_driver(edges: DataFrame) -> DataFrame:
     )
 
 
-def _cc_propagate(edges: DataFrame, labels: DataFrame, max_iters: int) -> DataFrame:
-    """Plain min-label propagation; convergence detected by the label
-    sum (labels only ever decrease, so an unchanged sum is a fixpoint —
-    one cheap scalar agg per round instead of a join-diff)."""
-    prev_sum = labels.agg(F.sum("label")).collect()[0][0]
-    for rnd in range(max_iters):
-        nbr_min = (
-            edges.join(labels.withColumnRenamed("doc_id", "src"), "src")
-            .groupBy(F.col("dst").alias("doc_id"))
-            .agg(F.min("label").alias("nmin"))
-        )
-        # non-eager: in LOCAL mode the convergence agg right below
-        # materializes the checkpoint in the SAME job; in reliable mode
-        # the checkpoint-write job re-runs the round's join once more
-        # but reads the PREVIOUS round's checkpoint, so the extra cost
-        # stays one bounded join per round (tables._reliable_checkpoint)
-        labels = (
-            labels.join(nbr_min, "doc_id", "left")
-            .select("doc_id", F.least("label", F.coalesce("nmin", "label")).alias("label"))
-            .transform(corpus_checkpoint_lazy)
-        )
-        cur_sum = labels.agg(F.sum("label")).collect()[0][0]
-        if cur_sum == prev_sum:
-            LAST_CC_STATS["rounds"] = rnd + 1
-            return labels.select("doc_id", F.col("label").alias("cluster_id"))
-        prev_sum = cur_sum
-    raise RuntimeError(f"connected components did not converge in {max_iters} rounds")
-
-
-def _cc_contract(
-    edges: DataFrame, mapping: DataFrame, max_iters: int, bcast: bool = False
-) -> DataFrame:
+def _cc_contract(edges: DataFrame, mapping: DataFrame, bcast: bool) -> DataFrame:
     """Min-label round + graph contraction; convergence is the
-    contracted edge relation going empty (the plain loop's label-sum
-    scalar is meaningless across contractions).
+    contracted edge relation going empty.
 
     ONE scheduled job per round (r11; guide §2.4 — fixed per-job driver
     overhead was the measured #1 residual of the keeper query at sf1.0):
@@ -253,7 +205,7 @@ def _cc_contract(
     — eager relabel ckpt, eager edges ckpt, isEmpty probe — whose
     driver/scheduler round-trips (~0.15-0.3 s each on local[32]) cost
     more than the shrinking post-round-1 graphs they computed."""
-    for rnd in range(max_iters):
+    for rnd in range(MAX_ITERS):
         # min over the closed neighborhood, in the CURRENT contracted
         # space (a contracted node's label is itself)
         # checkpoint (lazy): relabel feeds THREE subtrees (both
@@ -301,7 +253,7 @@ def _cc_contract(
         if edges.count() == 0:
             LAST_CC_STATS["rounds"] = rnd + 1
             return mapping.select("doc_id", F.col("label").alias("cluster_id"))
-    raise RuntimeError(f"connected components did not converge in {max_iters} rounds")
+    raise RuntimeError(f"connected components did not converge in {MAX_ITERS} rounds")
 
 
 _CLUSTER_ORACLE = f"""

@@ -703,7 +703,7 @@ def near_dup_simhash_multiblock_keepers(spark: SparkSession, sf_dir: str) -> Dat
     value ⇒ Hamming 0 ⇒ always a pair). So connected components run on
     the BOUNDED value graph — nodes ≤ distinct 32-bit fingerprints
     present (≤ min(corpus, 2³²), saturating), edges =
-    `_multiblock_value_pairs` — via the same min-label propagation as
+    `_multiblock_value_pairs` — via the same `connected_components` as
     `dedup_clusters`, and docs pick up their value's component label
     with ONE corpus-sized hash join afterwards. Output is one row per
     doc with ≥ 1 near-dup: cluster id (min doc_id), cluster size,

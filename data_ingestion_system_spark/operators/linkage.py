@@ -235,9 +235,9 @@ def linkage_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph — A~B and B~C merge into one entity even when A and C differ
     by more than the threshold (the chaining behavior that makes record
     linkage RESOLUTION, not just pair matching). min-doc_id is the
-    canonical record; reuses the distributed min-label-propagation of
-    dedup/clusters.py, so the iteration cost bounds match the MinHash
-    cluster query's."""
+    canonical record; reuses dedup/clusters.connected_components (driver
+    union-find or the contraction loop), so the iteration cost bounds
+    match the MinHash cluster query's."""
     from data_ingestion_system_spark.dedup.clusters import connected_components
 
     keyed = _keyed(spark, sf_dir)

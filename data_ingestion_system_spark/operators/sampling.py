@@ -325,7 +325,7 @@ def cluster_aware_split_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     report verifies zero straddling units alongside per-split yield.
 
     Scale shape: cluster closure is the existing bounded
-    MinHash-LSH + min-label-propagation path; everything after is a
+    MinHash-LSH + connected-components path; everything after is a
     hash-threshold projection and two aggregates."""
     from data_ingestion_system_spark.dedup.clusters import connected_components
     from data_ingestion_system_spark.dedup.minhash import (

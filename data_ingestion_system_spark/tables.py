@@ -319,9 +319,12 @@ def _reliable_checkpoint(df: DataFrame, ckpt_dir: str, eager: bool) -> DataFrame
 # (500k docs) MEMORY_AND_DISK token blocks fill the unified pool's
 # storage half and starve wide aggregates / trigger GCLocker stalls
 # (sf10 A/B: 58.8/54.3 → 39.4/51.3 s; r8 re-measured the crossover as
-# box-dependent — SCALING.md round-8). Below it the relation fits in
-# memory and the disk round-trip is pure overhead (r7's blanket
-# DISK_ONLY cost near_dup_minhash_lsh ×1.84 at sf0.1).
+# box-dependent — SCALING.md round-8 — and DISK_ONLY stays above the
+# floor because on a box where memory would win its cost is a bounded
+# slowdown, while MEMORY_AND_DISK's class-#5 failure is fatal). Below
+# it the relation fits in memory and the disk round-trip is pure
+# overhead (r7's blanket DISK_ONLY cost near_dup_minhash_lsh ×1.84 at
+# sf0.1).
 #
 # UNITS: the floor is calibrated in SOURCE-CORPUS rows (documents), not
 # rows of the checkpointed relation — every calibrated caller passes
@@ -339,39 +342,8 @@ def _reliable_checkpoint(df: DataFrame, ckpt_dir: str, eager: bool) -> DataFrame
 BULK_DISK_ONLY_MIN_ROWS = 200_000
 _BULK_DISK_ONLY_MIN_BYTES = 32 * 1024 * 1024
 
-# Operator override for the bulk storage level: "auto" (the floor above),
-# "disk" (always DISK_ONLY), "memory" (always MEMORY_AND_DISK). The r8
-# interleaved sf10 A/Bs measured the crossover as BOX-DEPENDENT — r7's
-# box: DISK_ONLY 39.4 s vs MEMORY_AND_DISK 58.8 s (GCLocker stalls);
-# r8's box, same corpus and code: 67.2 s vs 41.0 s, no stalls — so auto
-# keeps the arm that degrades gracefully (DISK_ONLY never OOMs: class
-# #5's MEMORY_AND_DISK failure at sf30 is fatal, its DISK_ONLY cost is
-# a bounded slowdown), and a deployment that has measured its own
-# heap/disk balance pins the other arm here.
-BULK_STORAGE_ENV = "SPARK_GRAFT_BULK_STORAGE"
-
-
-def _bulk_storage_mode() -> str:
-    """Validated value of the bulk-storage override knob. Raises on a
-    typo'd value — the override must not silently fall back to auto (the
-    knob exists precisely because the auto arm was measured wrong for
-    some deployments), and the validation runs even when the reliable
-    mode makes the storage level moot, so a mis-set knob fails fast
-    regardless of which checkpoint path a query takes."""
-    mode = os.environ.get(BULK_STORAGE_ENV, "auto").lower()
-    if mode not in ("auto", "disk", "memory"):
-        raise ValueError(
-            f"{BULK_STORAGE_ENV}={mode!r}: expected auto, disk, or memory"
-        )
-    return mode
-
 
 def _bulk_wants_disk_only(df: DataFrame, n_rows: int | None) -> bool:
-    mode = _bulk_storage_mode()
-    if mode == "disk":
-        return True
-    if mode == "memory":
-        return False
     if n_rows is not None:
         return n_rows >= BULK_DISK_ONLY_MIN_ROWS
     total = _local_input_bytes(df)
@@ -411,7 +383,6 @@ def bulk_checkpoint(
     where memory residency is the point."""
     from pyspark.storagelevel import StorageLevel
 
-    _bulk_storage_mode()  # fail fast on a typo'd knob even in reliable mode
     ckpt_dir = _reliable_checkpoint_dir(df.sparkSession)
     if ckpt_dir:
         return _reliable_checkpoint(df, ckpt_dir, eager)

@@ -125,46 +125,18 @@ def score_documents(
     docs: DataFrame,
     weights: DataFrame,
     toks: DataFrame | None = None,
-    wcounts: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_id, source, n_tokens, score, keep): hashed-unigram logistic
     score per document. The weight lookup is a broadcast hash join onto
     the exploded token stream — the model never shuffles the corpus.
 
     `toks` optionally supplies a pre-tokenized (doc_id, source, ts)
-    relation shared with other pipeline stages; `wcounts` goes further
-    and supplies the per-(doc_id, source, word) count relation `c`
-    (text/repetition.word_counts) so a composed pipeline pays for ONE
-    unigram explode+shuffle shared with the repetition filters — the
-    mean bucket weight over the token stream equals the c-weighted mean
-    over distinct words: sum(c·w)/sum(c).
+    relation shared with other pipeline stages.
 
     `keep` is the sign test on the mean ROUNDED at 6 decimals
     (round_port, the repo's cross-engine contract; mirrored in
-    CLASSIFIER_CTES): the two Spark paths compute the same rational
-    mean at different decimal scales (avg over the stream vs decimal
-    sum(c·w)/sum(c), whose division truncates at scale 6 — ADVICE r4),
-    so an unrounded `> 0` could flip between paths/engines for a doc
-    whose mean sits within scale noise of 0. Rounding first makes all
-    three computations agree (tests/test_semdedup_classifier.py pins
-    the path equivalence over the corpus)."""
-    if wcounts is not None:
-        feats = wcounts.select(
-            "doc_id",
-            "source",
-            "c",
-            F.md5(F.concat(F.lit("qc:"), F.col("w"))).alias("h"),
-        ).select("doc_id", "source", "c", F.expr(_bucket_sql("instr")).alias("bucket"))
-        mean_w = F.sum(F.col("c") * F.col("w")) / F.sum("c")
-        return (
-            feats.join(F.broadcast(weights), "bucket")
-            .groupBy("doc_id", "source")
-            .agg(
-                F.sum("c").alias("n_tokens"),
-                (F.lit(1.0) / (F.lit(1.0) + F.exp(F.lit(-GAIN) * mean_w))).alias("score"),
-                F.when(round_port(mean_w, 6) > 0, 1).otherwise(0).alias("keep"),
-            )
-        )
+    CLASSIFIER_CTES): an unrounded `> 0` could flip between engines for
+    a doc whose mean sits within scale noise of 0."""
     tokenized = (
         fan_out(docs, "doc_id").select(
             "doc_id", "source", F.split("text", " ").alias("ts")

@@ -145,17 +145,11 @@ def stage_quality_ids(
     return m.filter(rep_keep).select(*cols)
 
 
-def stage_clf_keep_ids(
-    docs: DataFrame,
-    toks: DataFrame | None = None,
-    wcounts: DataFrame | None = None,
-) -> DataFrame:
+def stage_clf_keep_ids(docs: DataFrame, toks: DataFrame | None = None) -> DataFrame:
     """Stage 2: doc_ids the model-based quality gate keeps (fixture
     weights — production loads an exported model)."""
     return (
-        score_documents(
-            docs, hashed_weight_table(docs.sparkSession), toks=toks, wcounts=wcounts
-        )
+        score_documents(docs, hashed_weight_table(docs.sparkSession), toks=toks)
         .filter(F.col("keep") == 1)
         .select("doc_id")
     )
@@ -253,8 +247,8 @@ def corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exploding it into its feature stream (the round-3 bench showed the
     # classifier stage re-tokenizing what stage 1 had already
     # tokenized). The r10 shape additionally built a per-(doc, word)
-    # count relation (word_counts) for the classifier and the yield
-    # report's doc lengths; r11 removes it — the classifier's
+    # count relation for the classifier and the yield report's doc
+    # lengths; r11 removes it — the classifier's
     # token-stream path is one corpus pass with a map-side-compacted
     # per-doc aggregate (vs explode + vocabulary groupBy + decimal
     # c·w aggregate, measured the heaviest sf1.0 stage), and the yield

@@ -33,21 +33,6 @@ TOP_BIGRAM_MAX = 0.18   # Gopher: most frequent 2-gram ≤ 18%
 DUP_TRIGRAM_MAX = 0.60  # fraction of 3-gram occurrences that are repeats
 
 
-def word_counts(toks: DataFrame, *extra: str) -> DataFrame:
-    """Per-(doc_id, [*extra,] word) occurrence counts `c` from a
-    (doc_id, [*extra,] ts) token relation — the shared base of the
-    unigram statistics here and the classifier's feature stream
-    (text/classifier.py): a composed pipeline computes this ONE
-    explode+groupBy and feeds both consumers. Extra columns must be
-    functionally dependent on doc_id (e.g. source) so they never change
-    the counts."""
-    return (
-        toks.select("doc_id", *extra, F.explode("ts").alias("w"))
-        .groupBy("doc_id", *extra, "w")
-        .agg(F.count("*").alias("c"))
-    )
-
-
 # Longest run in the SORTED rendering of `arr` — the count of the most
 # frequent element, as one aggregate() fold with a (prev, run, best)
 # struct. Higher-order lambdas evaluate interpreted (outside whole-stage

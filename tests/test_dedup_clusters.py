@@ -4,6 +4,9 @@ A≈B, B≈C into one group when A and C share nothing — the closure must.
 
 from __future__ import annotations
 
+import pytest
+
+from data_ingestion_system_spark.dedup import clusters
 from data_ingestion_system_spark.dedup.clusters import connected_components
 
 
@@ -23,18 +26,22 @@ def test_closure_exceeds_pairwise_groups(spark):
         "doc_a long, doc_b long",
     )
     comp = connected_components(pairs)
-    clusters = {r.cluster_id for r in comp.collect()}
-    assert clusters == {1}
+    cluster_ids = {r.cluster_id for r in comp.collect()}
+    assert cluster_ids == {1}
 
 
-def test_driver_arm_adversarial_graph(spark):
-    # r10 pinning test for the driver union-find arm on a graph shaped to
-    # stress it: a 200-node chain (diameter 199 — beyond MAX_ITERS for
-    # the plain propagation loop, trivial for union-find), two cliques
-    # bridged into the chain, isolated pairs, ids far from dense/sorted
-    # insertion order. Expected labels from an independent in-test
-    # union-find.
+@pytest.mark.parametrize("arm", ["driver", "contract"])
+def test_cc_arm_adversarial_graph(spark, monkeypatch, arm):
+    # Both component arms on a graph shaped to stress them: a 200-node
+    # chain (diameter 199 — trivial for union-find; the contraction loop
+    # closes it in a few rounds because the ids along it are in random
+    # order), two cliques bridged into the chain, isolated pairs, ids far
+    # from dense/sorted insertion order. Expected labels from an
+    # independent in-test union-find.
     import random
+
+    if arm == "contract":
+        monkeypatch.setattr(clusters, "CC_DRIVER_MAX_EDGES", -1)
 
     rng = random.Random(7)
     ids = rng.sample(range(10**6, 10**9), 600)
@@ -65,6 +72,7 @@ def test_driver_arm_adversarial_graph(spark):
 
     pairs = spark.createDataFrame(edge_list, "doc_a long, doc_b long")
     got = {(r.doc_id, r.cluster_id) for r in connected_components(pairs).collect()}
+    assert clusters.LAST_CC_STATS["arm"] == arm
     assert got == expect
 
 

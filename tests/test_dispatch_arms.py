@@ -82,23 +82,20 @@ DISPATCHED = [
         id="equi-depth-exact",
     ),
     pytest.param(
-        # r8 component-loop dispatch: plain propagation vs edge
-        # contraction must close the identical transitive clusters.
-        # r10 added the driver union-find arm below CC_DRIVER_MAX_EDGES;
-        # the iterative arms force it OFF so they still run distributed.
-        # r11 split the contract arm on CC_BCAST_MAX_NODES (broadcast vs
-        # shuffle relabel joins) — both relabel strategies forced here.
+        # component-loop dispatch: the driver union-find arm (at most
+        # CC_DRIVER_MAX_EDGES edges) vs the edge-contraction loop must
+        # close the identical transitive clusters. r11 split the contract
+        # arm on CC_BCAST_MAX_NODES (broadcast vs shuffle relabel joins)
+        # — both relabel strategies forced here.
         "dedup_clusters",
         [
             (clusters, "CC_DRIVER_MAX_EDGES"),
-            (clusters, "CC_CONTRACT_MIN_EDGES"),
             (clusters, "CC_BCAST_MAX_NODES"),
         ],
         {
-            "contract_bcast": [-1, 0, HUGE],
-            "contract_shuffle": [-1, 0, -1],
-            "propagate": [-1, HUGE, HUGE],
-            "driver_unionfind": [HUGE, HUGE, HUGE],
+            "contract_bcast": [-1, HUGE],
+            "contract_shuffle": [-1, -1],
+            "driver_unionfind": [HUGE, HUGE],
         },
         id="cc-loop",
     ),

@@ -115,23 +115,6 @@ def test_release_sweeps_reliable_checkpoint_files(spark, sf_dir, reliable_dir):
         assert not os.path.exists(d), d
 
 
-def test_unknown_bulk_storage_mode_fails_fast(spark, sf_dir, monkeypatch):
-    docs = load_table(spark, sf_dir, "documents")
-    monkeypatch.setenv(tables.BULK_STORAGE_ENV, "disk_only")  # typo'd
-    with pytest.raises(ValueError, match="SPARK_GRAFT_BULK_STORAGE"):
-        _bulk_wants_disk_only(docs, 1)
-
-
-def test_bulk_storage_env_override(spark, sf_dir, monkeypatch):
-    docs = load_table(spark, sf_dir, "documents")
-    monkeypatch.setenv(tables.BULK_STORAGE_ENV, "disk")
-    assert _bulk_wants_disk_only(docs, 1) is True
-    monkeypatch.setenv(tables.BULK_STORAGE_ENV, "memory")
-    assert _bulk_wants_disk_only(docs, 10**12) is False
-    monkeypatch.setenv(tables.BULK_STORAGE_ENV, "auto")
-    assert _bulk_wants_disk_only(docs, 10**12) is True
-
-
 def test_keepers_reliable_mode_parity(spark, sf_dir, reliable_dir, monkeypatch):
     """The round's flagship new query composes with the round's new
     mode: keeper output is identical under reliable checkpointing
@@ -147,18 +130,6 @@ def test_keepers_reliable_mode_parity(spark, sf_dir, reliable_dir, monkeypatch):
     assert got == want
     assert len(got) > 0
     tables.release_session_checkpoints(spark)
-
-
-def test_typoed_bulk_storage_fails_fast_even_in_reliable_mode(
-    spark, sf_dir, reliable_dir, monkeypatch
-):
-    """r9 advisor fix: the reliable-mode early return must not skip the
-    BULK_STORAGE validation — a typo'd knob fails fast regardless of
-    which checkpoint path the query takes."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    monkeypatch.setenv(tables.BULK_STORAGE_ENV, "disk_only")  # typo'd
-    with pytest.raises(ValueError, match="SPARK_GRAFT_BULK_STORAGE"):
-        bulk_checkpoint(docs, n_rows=1)
 
 
 def test_release_does_not_sweep_app_owned_checkpoint_dir(

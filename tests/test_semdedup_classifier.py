@@ -105,38 +105,6 @@ def test_classifier_score_is_deterministic_across_runs(spark):
     assert s1 == s2
 
 
-def test_classifier_wcounts_path_matches_token_stream_path(spark, sf_dir):
-    # ADVICE r4: the wcounts path computes the doc mean as sum(c*w)/sum(c)
-    # (decimal division, scale-6) while the token-stream path computes
-    # AVG(w) at a higher decimal scale — the raw means differ by up to
-    # ~5e-7, so `keep` now sign-tests the 6dp-ROUNDED mean (round_port)
-    # in both paths and the oracle. Assert both paths agree on the whole
-    # sf0.001 corpus: identical keep set + n_tokens, scores within the
-    # scale-truncation envelope.
-    from data_ingestion_system_spark.tables import fan_out, load_table
-    from data_ingestion_system_spark.text.repetition import word_counts
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    w = hashed_weight_table(spark)
-    via_stream = score_documents(docs, w)
-    toks = fan_out(docs, "doc_id").select(
-        "doc_id", "source", F.split("text", " ").alias("ts")
-    )
-    via_wcounts = score_documents(docs, w, wcounts=word_counts(toks, "source"))
-
-    def _snap(df):
-        return {r.doc_id: (r.n_tokens, r.keep, r.score) for r in df.collect()}
-
-    a, b = _snap(via_stream), _snap(via_wcounts)
-    assert set(a) == set(b)
-    for doc_id, (n_a, keep_a, score_a) in a.items():
-        n_b, keep_b, score_b = b[doc_id]
-        assert (n_a, keep_a) == (n_b, keep_b), doc_id
-        # sigmoid(GAIN·mean): a 5e-7 mean truncation moves the score by
-        # at most GAIN·5e-7/4 — the two paths must stay inside that
-        assert abs(score_a - score_b) < 2e-6, doc_id
-
-
 def test_blas_twin_matches_hier_exactly(spark, sf_dir):
     """semantic_dedup_blas (per-cell BLAS matmul pair term) must equal
     semantic_dedup_hier (relational pair join) row-for-row: same trained

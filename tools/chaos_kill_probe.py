@@ -129,9 +129,10 @@ def run_arm(
     from data_ingestion_system_spark.session import get_spark
 
     # the probe exists to kill an executor MID-COMPONENT-LOOP and watch
-    # the reliable machinery recover the iterative rounds — the r10
-    # driver union-find arm (no distributed rounds at small edge counts)
-    # would dodge exactly the code path under test, so force it off
+    # the reliable machinery recover the iterative rounds — the driver
+    # union-find arm (no distributed rounds at small edge counts) would
+    # dodge exactly the code path under test, so force it off: the kill
+    # then lands in the edge-contraction loop (clusters._cc_contract)
     clusters.CC_DRIVER_MAX_EDGES = -1
 
     ckpt_dir = None
