@@ -230,7 +230,6 @@ _DRIVER_PRIORITY = (
     "equi_depth_buckets",
     "semantic_dedup",
     "semantic_dedup_hier",
-    "semantic_dedup_blas",
     "near_dup_embedding_cosine",
     "ann_topk_bruteforce",
     "ann_lsh_topk",

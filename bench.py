@@ -29,6 +29,7 @@ if _REPO not in sys.path:
 
 from data_ingestion_system_spark.registry import load_all
 from data_ingestion_system_spark.session import get_spark
+from data_ingestion_system_spark.tables import release_session_checkpoints
 
 HEADLINE = [
     "app_stats",
@@ -83,10 +84,6 @@ HEADLINE = [
     # SemDeDup twin (the fix for the flat op's inherent n^1.5)
     "near_dup_simhash_multiblock",
     "semantic_dedup_hier",
-    # round-5 late addition: the BLAS escape-hatch twin (applyInPandas
-    # dgemm per fine cell) — the pair-term scale path, tracked alongside
-    # its relational sibling (sf10: hier 200 s, blas 32 s, same answer)
-    "semantic_dedup_blas",
     # round-7 addition: the exact equi-depth histogram, size-dispatched
     # this round to the distributed rank scheme (range-repartition +
     # boundary tuples) — at sf0.1 it runs the no-global-sort plan, the
@@ -154,57 +151,31 @@ def main() -> None:
 
     times: dict[str, float] = {}
     collect_sec: dict[str, float] = {}
-    from data_ingestion_system_spark.tables import release_session_checkpoints
-
     import shutil
     import tempfile
 
     sink_root = tempfile.mkdtemp(prefix="bench_keeper_sink_")
     for name in HEADLINE:
-        sink_measured = name in OUTPUT_BOUND
-        keeper_sink = name in KEEPER_SINK
-        reps = []
-        for _ in range(REPS):
-            # free finished runs' checkpoint blocks so no rep is
-            # measured under another's leftover storage pressure
-            # (tables.release_session_checkpoints — scale-failure class
-            # #6). Per-REP, not just per-query: an iterative query's
-            # rep 1 otherwise leaves ~20 rounds of component
-            # checkpoints pinned under reps 2-3, and dedup_clusters
-            # reps were observed growing 9.8 -> 12.1 -> 17.8 s at
-            # sf1.0 from exactly that. (The ANN index cache is
-            # driver-row-mirrored, so the release cannot evict it.)
-            release_session_checkpoints(spark)
-            t0 = time.perf_counter()
-            df = registry[name].spark(spark, sf_dir)
-            if sink_measured:
-                df.count()
-            elif keeper_sink:
-                df.write.mode("overwrite").parquet(os.path.join(sink_root, name))
-            else:
-                df.collect()
-            reps.append(time.perf_counter() - t0)
-        times[name] = round(statistics.median(reps), 3)
-        if sink_measured or keeper_sink:
+        walls, _ = time_query(spark, registry, name, sf_dir, REPS, sink_root)
+        times[name] = round(statistics.median(walls), 3)
+        if name in OUTPUT_BOUND or name in KEEPER_SINK:
             t0 = time.perf_counter()
             registry[name].spark(spark, sf_dir).collect()
             collect_sec[name] = round(time.perf_counter() - t0, 3)
     shutil.rmtree(sink_root, ignore_errors=True)
 
     total = round(sum(times.values()), 3)
-    anchor = _reference_anchor(spark)
     # Box calibration (VERDICT r6 ask #1): this box drifts ±50%
     # run-to-run, so raw cross-round deltas are box-confounded. The r5/r6
-    # scheme normalized by a single-snapshot anchor run, which cannot
-    # track drift ACROSS a 50 s bench session — r6's anchor said the box
-    # was 10% faster while code-untouched queries ran 1.2-2.3x slower,
-    # yielding a phantom normalized regression. The estimator is now
-    # SELF-normalizing: the median per-query ratio (this round / previous
-    # round) over queries whose implementing module is UNCHANGED since
-    # the previous BENCH file was committed (git diff). Untouched queries
-    # normalize to ~1.0x by construction; touched queries' normalized
-    # deltas are then code-caused, box-corrected. The anchor stays for
-    # the BASELINE.md comparison only — it no longer normalizes anything.
+    # scheme normalized by a separate single-snapshot reference-workload
+    # run, which cannot track drift ACROSS a 50 s bench session — r6's
+    # run said the box was 10% faster while code-untouched queries ran
+    # 1.2-2.3x slower, yielding a phantom normalized regression. The
+    # estimator is now SELF-normalizing: the median per-query ratio (this
+    # round / previous round) over queries whose implementing module is
+    # UNCHANGED since the previous BENCH file was committed (git diff).
+    # Untouched queries normalize to ~1.0x by construction; touched
+    # queries' normalized deltas are then code-caused, box-corrected.
     boxcal = _box_factor(times, registry, sf)
     # r11 (VERDICT r10 ask #2, after two consecutive self-stamped-noisy
     # official sessions): the primary `value` is the box-CALIBRATED total
@@ -228,7 +199,6 @@ def main() -> None:
         "reps": REPS,
         "collect_sec": collect_sec,
         "ann_index_train_sec": train_sec,
-        "ref_anchor": anchor,
         "box_cal": boxcal,
         "data_manifest": _data_manifest(sf_dir),
     }
@@ -254,7 +224,6 @@ def main() -> None:
         "sf": sf,
         "reps": REPS,
         "ann_index_train_sec": train_sec,
-        "ref_anchor_total": anchor.get("total"),
         "box_cal": (
             {
                 k: boxcal[k]
@@ -274,6 +243,54 @@ def main() -> None:
         "manifest_seed": full["data_manifest"].get("seed"),
     }
     print(json.dumps(lean))
+
+
+def time_query(
+    spark, registry: dict, name: str, sf_dir: str, reps: int, sink_root: str
+) -> tuple[list[float], int | None]:
+    """Time `reps` runs of one catalog query; returns (walls in seconds,
+    answer rows). OUTPUT_BOUND queries run via .count() (the count is the
+    row count), KEEPER_SINK queries write parquet under `sink_root` (rows
+    read from the written footers afterwards, untimed), everything else
+    is .collect()ed."""
+    walls, rows = [], None
+    for _ in range(reps):
+        # free finished runs' checkpoint blocks so no rep is measured
+        # under another's leftover storage pressure
+        # (tables.release_session_checkpoints — scale-failure class #6).
+        # Per-REP, not just per-query: an iterative query's rep 1
+        # otherwise leaves ~20 rounds of component checkpoints pinned
+        # under reps 2-3, and dedup_clusters reps were observed growing
+        # 9.8 -> 12.1 -> 17.8 s at sf1.0 from exactly that. (The ANN
+        # index cache is driver-row-mirrored, so the release cannot
+        # evict it.)
+        release_session_checkpoints(spark)
+        t0 = time.perf_counter()
+        df = registry[name].spark(spark, sf_dir)
+        if name in OUTPUT_BOUND:
+            rows = df.count()
+        elif name in KEEPER_SINK:
+            # keeper-scale outputs are WRITTEN, not collected
+            # (CONVENTIONS.md §6/§7) — the sink write is the production
+            # contract being timed
+            df.write.mode("overwrite").parquet(os.path.join(sink_root, name))
+        else:
+            rows = len(df.collect())
+        walls.append(time.perf_counter() - t0)
+    if name in KEEPER_SINK:
+        rows = _parquet_rows(os.path.join(sink_root, name))
+    return walls, rows
+
+
+def _parquet_rows(path: str) -> int:
+    import glob
+
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.ParquetFile(p).metadata.num_rows
+        for p in glob.glob(os.path.join(path, "*.parquet"))
+    )
 
 
 def _box_factor(times: dict, registry: dict, sf: float | None) -> dict | None:
@@ -439,12 +456,6 @@ def _internal_deps(mod: str | None, cache: dict) -> set:
     return deps
 
 
-# The r4 session's ref_anchor total — kept ONLY as historical context
-# for reading old SCALING.md tables that were normalized against it;
-# the anchor no longer normalizes anything (see _box_factor).
-REF_ANCHOR_BASELINE_SEC = 2.856
-
-
 def _data_manifest(sf_dir: str) -> dict:
     """Provenance of the measured corpus (VERDICT r5 ask #3). Generated
     dirs carry tools/gen_bench_data.py's manifest.json (generator digest,
@@ -478,70 +489,6 @@ def _data_manifest(sf_dir: str) -> dict:
         "fingerprint": hashlib.md5("\n".join(stat_parts).encode()).hexdigest(),
         "rows": rows,
     }
-
-
-REF_CORPUS_ROWS = 87_381  # reference corpus size (BASELINE.md: summery_deck.md:205-212)
-REF_LABELED_ROWS = 13_107  # ~15% of the corpus labeled (reference labeling runs)
-
-
-def _reference_anchor(spark) -> dict:
-    """Reference-workload-shaped timing: the reference's own view queries
-    (v_app_stats / v_daily_stats / v_reviews_sentiment, schema.sql:209-261,
-    plus the labeling surface v_labeled_reviews, schema.sql:375-404, and
-    the pairwise Cohen's-kappa profile) over a corpus of exactly its
-    production size (87,381 reviews), materialized to parquet untimed —
-    so 'within 2x of BASELINE' is a measured number over the stored
-    corpus covering the full reference view surface, not an inference
-    from the scraper-bound wall clock."""
-    import shutil
-    import tempfile
-
-    from data_ingestion_system_spark.fixtures import (
-        generate_annotators,
-        generate_apps,
-        generate_labels,
-        generate_reviews,
-    )
-    from data_ingestion_system_spark.views import (
-        pairwise_kappa,
-        v_app_stats,
-        v_daily_stats,
-        v_labeled_reviews,
-        v_reviews_sentiment,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="bench_ref_anchor_")
-    try:
-        generate_reviews(spark, REF_CORPUS_ROWS).write.mode("overwrite").parquet(
-            os.path.join(tmp, "reviews")
-        )
-        generate_labels(spark, REF_CORPUS_ROWS, REF_LABELED_ROWS).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(tmp, "labels"))
-        reviews = spark.read.parquet(os.path.join(tmp, "reviews"))
-        labels = spark.read.parquet(os.path.join(tmp, "labels"))
-        apps = generate_apps(spark)
-        annotators = generate_annotators(spark)
-        anchor: dict = {"rows": REF_CORPUS_ROWS, "labeled_rows": REF_LABELED_ROWS}
-        for name, thunk in [
-            ("v_app_stats", lambda: v_app_stats(reviews)),
-            ("v_daily_stats", lambda: v_daily_stats(reviews)),
-            ("v_reviews_sentiment", lambda: v_reviews_sentiment(reviews)),
-            (
-                "v_labeled_reviews",
-                lambda: v_labeled_reviews(labels, reviews, apps, annotators),
-            ),
-            ("pairwise_kappa", lambda: pairwise_kappa(labels)),
-        ]:
-            t0 = time.perf_counter()
-            thunk().collect()
-            anchor[name] = round(time.perf_counter() - t0, 3)
-        anchor["total"] = round(
-            sum(v for k, v in anchor.items() if k not in ("rows", "labeled_rows")), 3
-        )
-        return anchor
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -32,6 +32,9 @@ oracle in this repo relies on).
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import and_
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -110,9 +113,12 @@ ORDER BY cell_id
 def assign_with_centroid_cosine(v: DataFrame, cents: DataFrame) -> DataFrame:
     """(vec_id, ev, nrm, cell_id, ccos): nearest-centroid assignment that
     KEEPS the member→centroid cosine — SemDeDup's keep rule ranks on it.
-    Argmax as a max_by hash aggregate, not a sort window (the same
-    tie rule — cosine DESC, cell_id ASC — as lexicographic struct max;
-    train_centroids' documented shape).
+    Argmax as a max_by aggregate, not a sort window (the same tie rule —
+    cosine DESC, cell_id ASC — as lexicographic struct max;
+    train_centroids' documented shape). ccos is the winning cell's
+    cosine, i.e. the plain max over the member's scores, so it is a
+    separate `max` that the optimizer prunes when a caller drops ccos
+    (the hierarchical coarse assignment ranks on fcos instead).
 
     The n×K scoring relation is SKINNY (vec_id, cell_id, ccos) — the
     64-double ev array joins back after the argmax collapses n×K rows
@@ -132,41 +138,42 @@ def assign_with_centroid_cosine(v: DataFrame, cents: DataFrame) -> DataFrame:
         .groupBy("vec_id")
         .agg(
             F.max_by(
-                F.struct("cell_id", "ccos"),
-                F.struct(F.col("ccos"), (-F.col("cell_id")).alias("neg")),
-            ).alias("best"),
+                "cell_id", F.struct(F.col("ccos"), (-F.col("cell_id")).alias("neg"))
+            ).alias("cell_id"),
+            F.max("ccos").alias("ccos"),
         )
-        .select("vec_id", F.col("best.cell_id").alias("cell_id"), F.col("best.ccos").alias("ccos"))
     )
     return best.join(vn, "vec_id").select(
         "vec_id", "ev", "nrm", "cell_id", "ccos"
     )
 
 
-def _cell_pairs(
+def _bucket_pairs(
     assigned: DataFrame,
+    keys: tuple[str, ...],
+    rank_col: str,
     threshold: float = SEM_THRESHOLD,
     n_rows: int | None = None,
 ) -> DataFrame:
-    """The width-pinned in-cell pair join, UN-checkpointed — split out so
-    the pinned shape stays plan-inspectable (the caller's localCheckpoint
-    replaces the lineage with a Scan ExistingRDD; see
-    tests/test_plan_quality.py::test_pair_expansion_joins_pin_their_width)."""
-    spread = pin_join_width(assigned, "cell_id", n_rows=n_rows)
+    """The width-pinned in-bucket pair join, UN-checkpointed — split out
+    so the pinned shape stays plan-inspectable (the caller's
+    localCheckpoint replaces the lineage with a Scan ExistingRDD; see
+    tests/test_plan_quality.py::test_pair_expansion_joins_pin_their_width).
+    A bucket is one value of `keys`: (cell_id,) for the flat op,
+    (cell_id, fine_id) for the hierarchical one; `rank_col` is the
+    centroid cosine the keep rule ranks on (ccos / fcos)."""
+    spread = pin_join_width(assigned, *keys, n_rows=n_rows)
     a = spread.alias("a")
     b = spread.alias("b")
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
     return (
-        a.join(
-            b,
-            (F.col("a.cell_id") == F.col("b.cell_id"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
+        a.join(b, reduce(and_, on + [F.col("a.vec_id") < F.col("b.vec_id")]))
         .select(
-            F.col("a.cell_id").alias("cell_id"),
+            *[F.col(f"a.{k}").alias(k) for k in keys],
             F.col("a.vec_id").alias("va"),
             F.col("b.vec_id").alias("vb"),
-            F.col("a.ccos").alias("ca"),
-            F.col("b.ccos").alias("cb"),
+            F.col(f"a.{rank_col}").alias("ca"),
+            F.col(f"b.{rank_col}").alias("cb"),
             (
                 _dot("a.ev", "b.ev") / (F.col("a.nrm") * F.col("b.nrm"))
             ).alias("cos"),
@@ -177,24 +184,28 @@ def _cell_pairs(
 
 def semdedup_pairs_dropped(
     assigned: DataFrame,
+    keys: tuple[str, ...],
+    rank_col: str,
     threshold: float = SEM_THRESHOLD,
     n_rows: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """(pairs, dropped): within-cell pairs with cosine ≥ threshold, and
-    the (cell_id, vec_id) rows SemDeDup removes — the
-    higher-centroid-cosine member of each pair (the more cluster-typical
-    one; ties by higher vec_id), de-duplicated across pairs. The
-    self-join shuffles on cell_id only.
+    """(pairs, dropped): within-bucket pairs with cosine ≥ threshold, and
+    the (*keys, vec_id) rows SemDeDup removes — the higher-`rank_col`
+    member of each pair (the more cluster-typical one; ties by higher
+    vec_id), de-duplicated across pairs. The self-join shuffles on
+    `keys` only.
 
     The join width is pinned against AQE's byte-based coalesce
-    (tables.pin_join_width): the in-cell pair expansion does n²/K work
+    (tables.pin_join_width): the in-bucket pair expansion does n²/K work
     per bucket from a byte-tiny shuffled input — partition count must
     target the EXPANDED work, not the map bytes."""
     # two consumers (pair counts + the drop rule) — materialize the
-    # in-cell join once instead of running it per branch
-    pairs = _cell_pairs(assigned, threshold, n_rows=n_rows).transform(corpus_checkpoint_lazy)
+    # in-bucket join once instead of running it per branch
+    pairs = _bucket_pairs(assigned, keys, rank_col, threshold, n_rows).transform(
+        corpus_checkpoint_lazy
+    )
     dropped = pairs.select(
-        "cell_id",
+        *keys,
         F.when(F.col("ca") > F.col("cb"), F.col("va"))
         .when(F.col("cb") > F.col("ca"), F.col("vb"))
         .otherwise(F.greatest("va", "vb"))
@@ -203,19 +214,103 @@ def semdedup_pairs_dropped(
     return pairs, dropped
 
 
-def flat_group_stats(assigned: DataFrame, n: int, force: str | None = None) -> DataFrame:
-    """Per-cell SemDeDup statistics for the FLAT op, physical plan picked
-    by corpus size — the same dispatch `hier_group_stats` gives the
-    hierarchical twin (defined below; this one reuses its floor and its
-    blocked-dgemm kernel with keys=(cell_id,) and the keep rule ranking
-    on the COARSE centroid cosine). Identical rows from both plans
-    (forced-side equality pinned in tests/test_semdedup_classifier.py;
-    shared driver oracle)."""
-    use_blas = n >= SEMDEDUP_BLAS_MIN_ROWS if force is None else force == "blas"
-    if use_blas:
-        return assigned.groupBy("cell_id").applyInPandas(
-            make_blas_group_stats(SEM_THRESHOLD, keys=("cell_id",), rank_col="ccos"),
-            "cell_id int, n_members long, n_dup_pairs long, n_dropped long",
+def make_blas_group_stats(keys: tuple[str, ...], rank_col: str):
+    """Per-`keys` SemDeDup statistics via one dense matmul — runs inside
+    `applyInPandas` (Arrow batch in, one aggregate row out). `keys` /
+    `rank_col` are the bucket identity and the keep-rule rank column,
+    as in `_bucket_pairs`.
+
+    Mirrors the relational pair term EXACTLY: pairs are (va < vb)
+    members with cosine ≥ threshold; each pair drops its
+    higher-rank-cosine member (ties → greater vec_id); n_dropped counts
+    distinct dropped members. Sorting the group by vec_id maps
+    (va < vb) onto the upper triangle. The relational join ships BOTH
+    64-double arrays per candidate pair; this plan ships each vector
+    ONCE into its group (O(m·DIM) traffic for O(m²·DIM) flops).
+
+    Float caveat: numpy sums the dot in SIMD/pairwise order, not the
+    sequential fold both engines use — a cosine within ~1e-15 of
+    SEM_THRESHOLD could in principle flip a pair against the relational
+    plan. On the shipped corpora no pair sits that close (both arms
+    match one oracle: tests/test_dispatch_arms.py semdedup-*-pair-term),
+    and a corpus where the boundary bites would surface as an oracle hash
+    mismatch, not a silent wrong answer.
+
+    Returned as a self-contained closure so cloudpickle serializes it BY
+    VALUE (same reason as multimodal.make_feature_extractor: python
+    workers don't have this package on their PYTHONPATH).
+
+    Memory guard: the √n bucket ladder bounds groups to hundreds of rows
+    on well-spread corpora, but a degenerate corpus (many near-identical
+    vectors collapsing into one fine cell) can hand this a group of ANY
+    size — so the matmul runs in row blocks of ≤ ~4M doubles
+    (B = block_elems // m rows at a time): peak extra memory is O(B·m)
+    ≈ 32 MB however large the group, instead of the full m×m matrix plus
+    two O(m²) triu index arrays. Groups that fit one block (every
+    non-degenerate corpus) still run the single full dgemm."""
+
+    out_cols = list(keys) + ["n_members", "n_dup_pairs", "n_dropped"]
+    threshold = SEM_THRESHOLD
+
+    def stats(pdf):
+        import numpy as np
+        import pandas as pd
+
+        pdf = pdf.sort_values("vec_id").reset_index(drop=True)
+        m = len(pdf)
+        key_vals = [int(pdf[k].iloc[0]) for k in keys]
+        if m < 2:
+            return pd.DataFrame([key_vals + [m, 0, 0]], columns=out_cols)
+        e = np.stack(pdf["ev"].to_numpy())          # m × DIM
+        nrm = pdf["nrm"].to_numpy()
+        rank = pdf[rank_col].to_numpy()
+        block_rows = max(1, min(m, 4_194_304 // m))  # B·m ≤ 4M doubles
+        n_pairs = 0
+        drop_chunks = []
+        for s in range(0, m - 1, block_rows):
+            blk = slice(s, min(s + block_rows, m))
+            # BLAS dgemm per row block — the whole point
+            cos = (e[blk] @ e.T) / np.outer(nrm[blk], nrm)
+            bi, bj = np.nonzero(cos >= threshold)
+            gi = bi + s
+            keep = bj > gi                           # upper triangle (va < vb)
+            qi, qj = gi[keep], bj[keep]
+            n_pairs += int(qi.size)
+            if qi.size:
+                # higher rank-cosine member drops; tie → greater vec_id == j
+                drop_chunks.append(np.where(rank[qi] > rank[qj], qi, qj))
+        n_dropped = (
+            int(np.unique(np.concatenate(drop_chunks)).size) if drop_chunks else 0
+        )
+        return pd.DataFrame([key_vals + [m, n_pairs, n_dropped]], columns=out_cols)
+
+    return stats
+
+
+# Corpus floor for dispatching the pair term to the dgemm plan (same
+# two-physical-plans idiom as tables._should_pin). Measured same-session
+# on the hierarchical op: sf10 (200k vectors) relational 200 s vs dgemm
+# 32 s; sf1.0 (20k) see bench_results/SCALING.md r6 A/B; sf0.1 (2k) the
+# two are equal within noise. Below the floor the relational join keeps
+# the whole-stage-codegen plan (no Python workers to spin up); above it
+# the per-pair array traffic (O(pairs·DIM) through the self-join) loses
+# to shipping each vector once into its group (O(n·DIM)) and one dgemm.
+SEMDEDUP_BLAS_MIN_ROWS = 16_384
+
+
+def semdedup_group_stats(
+    assigned: DataFrame, n: int, keys: tuple[str, ...], rank_col: str
+) -> DataFrame:
+    """Per-bucket SemDeDup statistics (*keys, n_members, n_dup_pairs,
+    n_dropped), physical plan picked by corpus size: the relational
+    in-bucket self-join below SEMDEDUP_BLAS_MIN_ROWS, the per-group
+    dgemm (`make_blas_group_stats`) at or above it. One answer from both
+    plans (forced-arm oracle tests in tests/test_dispatch_arms.py)."""
+    if n >= SEMDEDUP_BLAS_MIN_ROWS:
+        return assigned.groupBy(*keys).applyInPandas(
+            make_blas_group_stats(keys, rank_col),
+            ", ".join(f"{k} int" for k in keys)
+            + ", n_members long, n_dup_pairs long, n_dropped long",
         )
     # relational pair term: assignment feeds three consumers (members /
     # both pair sides) — materialize once, width pinned BEFORE the
@@ -224,16 +319,17 @@ def flat_group_stats(assigned: DataFrame, n: int, force: str | None = None) -> D
     # that width for every downstream dense pass. Keyless (round-robin):
     # every consumer either re-shuffles on its own keys or
     # broadcast-joins, so balance beats co-location here.
+    keys = list(keys)
     assigned = pin_width(assigned, n_rows=n).transform(corpus_checkpoint_lazy)
-    pairs, dropped = semdedup_pairs_dropped(assigned, n_rows=n)
-    members = assigned.groupBy("cell_id").agg(F.count("*").alias("n_members"))
-    pair_counts = pairs.groupBy("cell_id").agg(F.count("*").alias("n_dup_pairs"))
-    drop_counts = dropped.groupBy("cell_id").agg(F.count("*").alias("n_dropped"))
+    pairs, dropped = semdedup_pairs_dropped(assigned, keys, rank_col, n_rows=n)
+    members = assigned.groupBy(*keys).agg(F.count("*").alias("n_members"))
+    pair_counts = pairs.groupBy(*keys).agg(F.count("*").alias("n_dup_pairs"))
+    drop_counts = dropped.groupBy(*keys).agg(F.count("*").alias("n_dropped"))
     return (
-        members.join(pair_counts, "cell_id", "left")
-        .join(drop_counts, "cell_id", "left")
+        members.join(pair_counts, keys, "left")
+        .join(drop_counts, keys, "left")
         .select(
-            F.col("cell_id").cast("int").alias("cell_id"),
+            *[F.col(k).cast("int").alias(k) for k in keys],
             "n_members",
             F.coalesce("n_dup_pairs", F.lit(0)).cast("long").alias("n_dup_pairs"),
             F.coalesce("n_dropped", F.lit(0)).cast("long").alias("n_dropped"),
@@ -249,12 +345,13 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantic-dedup pass — which clusters concentrate the redundancy.
 
     This op keeps the paper's FLAT quantization (the exact-semantics
-    reference; `semantic_dedup_hier` is the two-level scale twin), but
-    its pair term is SIZE-DISPATCHED like the twin's
-    (`flat_group_stats`): relational in-cell self-join below
-    SEMDEDUP_BLAS_MIN_ROWS, per-cell blocked dgemm above — the flat op
-    was the slowest sf10 probe query (225-248 s) purely on pair-term
-    array traffic its own K≈√n cells bound anyway."""
+    reference; `semantic_dedup_hier` is the two-level variant for
+    scale). Its pair term is the shared size-dispatched one
+    (`semdedup_group_stats` keyed on cell_id, ranking on ccos):
+    relational in-cell self-join below SEMDEDUP_BLAS_MIN_ROWS, per-cell
+    blocked dgemm above — the flat op was the slowest sf10 probe query
+    (225-248 s) purely on pair-term array traffic its own K≈√n cells
+    bound anyway."""
     # count from the raw table (footer-statistics read), not the
     # fanned-out vector relation — no shuffle just to size the ladder
     n = load_table(spark, sf_dir, "embeddings").count()
@@ -267,11 +364,11 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         v, cache_key=dataset_cache_key(sf_dir), n_cells=adaptive_cells(n)
     )
     assigned = assign_with_centroid_cosine(v, cents)
-    return flat_group_stats(assigned, n).orderBy("cell_id")
+    return semdedup_group_stats(assigned, n, ("cell_id",), "ccos").orderBy("cell_id")
 
 
 # ---------------------------------------------------------------------------
-# Hierarchical (two-level) SemDeDup — the scale twin (VERDICT r4 ask #2)
+# Hierarchical (two-level) SemDeDup — the scale variant (VERDICT r4 ask #2)
 # ---------------------------------------------------------------------------
 
 _FINE_ITERS = 2  # Lloyd iterations for the per-cell fine quantizer
@@ -358,31 +455,6 @@ LEFT JOIN (SELECT cell_id, fine_id, COUNT(*) AS n_dup_pairs FROM fpairs GROUP BY
 LEFT JOIN (SELECT cell_id, fine_id, COUNT(*) AS n_dropped FROM fdropped GROUP BY cell_id, fine_id) d USING (cell_id, fine_id)
 ORDER BY cell_id, fine_id
 """
-
-
-def assign_coarse(v: DataFrame, cents: DataFrame) -> DataFrame:
-    """(vec_id, ev, nrm, cell_id): nearest-coarse-centroid assignment.
-    Same skinny-score-then-join-back argmax as
-    `assign_with_centroid_cosine`, without keeping the centroid cosine
-    (the hierarchical keep rule ranks on the FINE centroid cosine)."""
-    vn = _with_norm(v, "ev", "nrm").transform(corpus_checkpoint_lazy)
-    cn = _with_norm(cents, "cv", "cnrm")
-    best = (
-        vn.select("vec_id", "ev", "nrm")
-        .crossJoin(F.broadcast(cn))
-        .select(
-            "vec_id",
-            "cell_id",
-            (_dot("ev", "cv") / (F.col("nrm") * F.col("cnrm"))).alias("c"),
-        )
-        .groupBy("vec_id")
-        .agg(
-            F.max_by(
-                "cell_id", F.struct(F.col("c"), (-F.col("cell_id")).alias("neg"))
-            ).alias("cell_id"),
-        )
-    )
-    return best.join(vn, "vec_id").select("vec_id", "ev", "nrm", "cell_id")
 
 
 def train_fine_centroids(
@@ -515,52 +587,14 @@ def assign_fine(cassigned: DataFrame, fcents: DataFrame) -> DataFrame:
     )
 
 
-def _fine_cell_pairs(fassigned: DataFrame, n_rows: int | None = None) -> DataFrame:
-    """The width-pinned in-(cell, fine-cell) pair join, UN-checkpointed
-    (same split as `_cell_pairs`: the caller's localCheckpoint hides the
-    lineage, so the pinned shape is asserted on this builder)."""
-    spread = pin_join_width(fassigned, "cell_id", "fine_id", n_rows=n_rows)
-    a = spread.alias("a")
-    b = spread.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.cell_id") == F.col("b.cell_id"))
-            & (F.col("a.fine_id") == F.col("b.fine_id"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.cell_id").alias("cell_id"),
-            F.col("a.fine_id").alias("fine_id"),
-            F.col("a.vec_id").alias("va"),
-            F.col("b.vec_id").alias("vb"),
-            F.col("a.fcos").alias("ca"),
-            F.col("b.fcos").alias("cb"),
-            (
-                _dot("a.ev", "b.ev") / (F.col("a.nrm") * F.col("b.nrm"))
-            ).alias("cos"),
-        )
-        .filter(F.col("cos") >= SEM_THRESHOLD)
-    )
-
-
-# Corpus floor for dispatching the hierarchical pair term to the dgemm
-# plan (same two-physical-plans idiom as tables._should_pin). Measured
-# same-session: sf10 (200k vectors) relational 200 s vs dgemm 32 s; sf1.0
-# (20k) see bench_results/SCALING.md r6 A/B; sf0.1 (2k) the two are equal
-# within noise. Below the floor the relational join keeps the
-# whole-stage-codegen plan (no Python workers to spin up); above it the
-# per-pair array traffic (O(pairs·DIM) through the self-join) loses to
-# shipping each vector once into its group (O(n·DIM)) and one dgemm.
-SEMDEDUP_BLAS_MIN_ROWS = 16_384
-
-
 def _hier_fassigned(spark: SparkSession, sf_dir: str) -> tuple[int, DataFrame]:
     """The shared hierarchical chain: corpus count, coarse quantizer
     (memoized k-means), per-cell fine quantizer, fine assignment —
     everything upstream of the pair term, identical for both physical
     pair plans. Returns (n, fassigned) with fassigned UN-pinned and
-    UN-checkpointed (each pair plan applies its own materialization)."""
+    UN-checkpointed (each pair plan applies its own materialization).
+    The coarse assignment is the flat op's; its ccos is dropped before
+    the checkpoint (the hierarchical keep rule ranks on fcos)."""
     n = load_table(spark, sf_dir, "embeddings").count()
     v = load_vectors(spark, sf_dir)
     kc, kf = hier_cells(n)
@@ -571,7 +605,9 @@ def _hier_fassigned(spark: SparkSession, sf_dir: str) -> tuple[int, DataFrame]:
     # (fine-centroid Lloyd rounds, fine assignment — measured 2-of-32-core
     # grind at sf10 unpinned). Keyless: all downstream scoring joins are
     # broadcast, so round-robin balance beats key co-location.
-    cassigned = pin_width(assign_coarse(v, cents), n_rows=n).transform(corpus_checkpoint_lazy)
+    cassigned = pin_width(
+        assign_with_centroid_cosine(v, cents).drop("ccos"), n_rows=n
+    ).transform(corpus_checkpoint_lazy)
     fcents = train_fine_centroids(
         cassigned,
         kf,
@@ -592,59 +628,9 @@ def warm_fine_quantizer(spark: SparkSession, sf_dir: str) -> None:
     _hier_fassigned(spark, sf_dir)
 
 
-_HIER_STATS_SCHEMA = (
-    "cell_id int, fine_id int, n_members long, n_dup_pairs long, n_dropped long"
-)
-
-
-def hier_group_stats(
-    fassigned: DataFrame, n: int, force: str | None = None
-) -> DataFrame:
-    """Per-(cell_id, fine_id) SemDeDup statistics, physical plan picked
-    by corpus size (the production entry point — callers get the sf10
-    32 s dgemm plan above the floor without knowing the variant menu;
-    VERDICT r5 ask #1). `force` pins a variant ("relational"/"blas")
-    for the explicit catalog twins and the plan-assert tests. Both
-    plans return identical rows (pinned row-equal by
-    tests/test_semdedup_classifier.py and the shared driver oracle)."""
-    use_blas = n >= SEMDEDUP_BLAS_MIN_ROWS if force is None else force == "blas"
-    if use_blas:
-        return fassigned.groupBy("cell_id", "fine_id").applyInPandas(
-            make_blas_group_stats(), _HIER_STATS_SCHEMA
-        )
-    # relational pair term: pin-width + checkpoint the assignment (three
-    # consumers: members / both pair sides), then the width-pinned
-    # in-(cell, fine) self-join (AQE's byte-based coalesce must not
-    # starve the quadratic expansion — see _fine_cell_pairs)
-    fassigned = pin_width(fassigned, n_rows=n).transform(corpus_checkpoint_lazy)
-    pairs = _fine_cell_pairs(fassigned, n_rows=n).transform(corpus_checkpoint_lazy)
-    dropped = pairs.select(
-        "cell_id",
-        "fine_id",
-        F.when(F.col("ca") > F.col("cb"), F.col("va"))
-        .when(F.col("cb") > F.col("ca"), F.col("vb"))
-        .otherwise(F.greatest("va", "vb"))
-        .alias("vec_id"),
-    ).distinct()
-    members = fassigned.groupBy("cell_id", "fine_id").agg(F.count("*").alias("n_members"))
-    pair_counts = pairs.groupBy("cell_id", "fine_id").agg(F.count("*").alias("n_dup_pairs"))
-    drop_counts = dropped.groupBy("cell_id", "fine_id").agg(F.count("*").alias("n_dropped"))
-    return (
-        members.join(pair_counts, ["cell_id", "fine_id"], "left")
-        .join(drop_counts, ["cell_id", "fine_id"], "left")
-        .select(
-            F.col("cell_id").cast("int").alias("cell_id"),
-            F.col("fine_id").cast("int").alias("fine_id"),
-            "n_members",
-            F.coalesce("n_dup_pairs", F.lit(0)).cast("long").alias("n_dup_pairs"),
-            F.coalesce("n_dropped", F.lit(0)).cast("long").alias("n_dropped"),
-        )
-    )
-
-
 @query("semantic_dedup_hier", oracle=_hier_oracle(), survey="EXT-dedup,EXT-similarity")
 def semantic_dedup_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hierarchical SemDeDup — the scale twin of `semantic_dedup`
+    """Hierarchical SemDeDup — the scale variant of `semantic_dedup`
     (which stays the exact-semantics flat reference). Two-level
     quantization: Kc coarse k-means cells (the shared trained
     quantizer), then Kf fine cells WITHIN each coarse cell, with
@@ -669,106 +655,12 @@ def semantic_dedup_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Extends the reference's exact duplicate detection
     (src/analysis/data_quality_analyzer.py:172) like its flat sibling;
-    same SEM_THRESHOLD contract. The pair term is SIZE-DISPATCHED
-    (`hier_group_stats`): relational self-join below
+    same SEM_THRESHOLD contract. The pair term is the flat op's
+    size-dispatched one (`semdedup_group_stats`, keyed on (cell_id,
+    fine_id) and ranking on fcos): relational self-join below
     SEMDEDUP_BLAS_MIN_ROWS, per-group dgemm above it (sf10
     same-session: 200 s → 32 s) — one operator, two physical plans,
     one answer."""
     n, fassigned = _hier_fassigned(spark, sf_dir)
-    return hier_group_stats(fassigned, n).orderBy("cell_id", "fine_id")
-
-
-def make_blas_group_stats(
-    threshold: float = SEM_THRESHOLD,
-    keys: tuple = ("cell_id", "fine_id"),
-    rank_col: str = "fcos",
-):
-    """Per-`keys` SemDeDup statistics via one dense matmul — runs inside
-    `applyInPandas` (Arrow batch in, one aggregate row out). `keys` /
-    `rank_col` parametrize the bucket identity and the keep-rule rank
-    column: (cell_id, fine_id)/fcos for the hierarchical twin,
-    (cell_id,)/ccos for the flat reference op.
-
-    Mirrors the relational pair term EXACTLY: pairs are (va < vb)
-    members with cosine ≥ threshold; each pair drops its
-    higher-rank-cosine member (ties → greater vec_id); n_dropped counts
-    distinct dropped members. Sorting the group by vec_id maps
-    (va < vb) onto the upper triangle.
-
-    Returned as a self-contained closure so cloudpickle serializes it BY
-    VALUE (same reason as multimodal.make_feature_extractor: python
-    workers don't have this package on their PYTHONPATH).
-
-    Memory guard: the √n bucket ladder bounds groups to hundreds of rows
-    on well-spread corpora, but a degenerate corpus (many near-identical
-    vectors collapsing into one fine cell) can hand this a group of ANY
-    size — so the matmul runs in row blocks of ≤ ~4M doubles
-    (B = block_elems // m rows at a time): peak extra memory is O(B·m)
-    ≈ 32 MB however large the group, instead of the full m×m matrix plus
-    two O(m²) triu index arrays. Groups that fit one block (every
-    non-degenerate corpus) still run the single full dgemm."""
-
-    out_cols = list(keys) + ["n_members", "n_dup_pairs", "n_dropped"]
-
-    def stats(pdf):
-        import numpy as np
-        import pandas as pd
-
-        pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-        m = len(pdf)
-        key_vals = [int(pdf[k].iloc[0]) for k in keys]
-        if m < 2:
-            return pd.DataFrame([key_vals + [m, 0, 0]], columns=out_cols)
-        e = np.stack(pdf["ev"].to_numpy())          # m × DIM
-        nrm = pdf["nrm"].to_numpy()
-        rank = pdf[rank_col].to_numpy()
-        block_rows = max(1, min(m, 4_194_304 // m))  # B·m ≤ 4M doubles
-        n_pairs = 0
-        drop_chunks = []
-        for s in range(0, m - 1, block_rows):
-            blk = slice(s, min(s + block_rows, m))
-            # BLAS dgemm per row block — the whole point
-            cos = (e[blk] @ e.T) / np.outer(nrm[blk], nrm)
-            bi, bj = np.nonzero(cos >= threshold)
-            gi = bi + s
-            keep = bj > gi                           # upper triangle (va < vb)
-            qi, qj = gi[keep], bj[keep]
-            n_pairs += int(qi.size)
-            if qi.size:
-                # higher rank-cosine member drops; tie → greater vec_id == j
-                drop_chunks.append(np.where(rank[qi] > rank[qj], qi, qj))
-        n_dropped = (
-            int(np.unique(np.concatenate(drop_chunks)).size) if drop_chunks else 0
-        )
-        return pd.DataFrame([key_vals + [m, n_pairs, n_dropped]], columns=out_cols)
-
-    return stats
-
-
-@query("semantic_dedup_blas", oracle=_hier_oracle(), survey="EXT-dedup,EXT-similarity")
-def semantic_dedup_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`semantic_dedup_hier` with the in-cell pair term computed by a
-    per-group BLAS matmul (`applyInPandas`) instead of a relational
-    self-join — the production escape hatch SCALING.md names for the
-    pair term's remaining cost at 10⁶+ vectors.
-
-    Same trained quantizers, same assignments, same keep rule, same
-    output — only the physical pair computation differs. The relational
-    join ships BOTH 64-double arrays per candidate pair (~128 doubles ×
-    n²/K pairs of shuffle-side materialization, the measured wall at
-    sf10); this plan ships each vector ONCE into its (cell, fine) group
-    (Arrow batch) and the m×m cosine matrix comes out of one dgemm per
-    group — O(m²·DIM) flops but O(m·DIM) traffic. Group sizes are
-    bounded by the √n bucket ladder (≈ hundreds of rows at any corpus
-    size), so a group always fits an Arrow batch.
-
-    Float caveat: numpy sums the dot in SIMD/pairwise order, not the
-    sequential fold both engines use — a cosine within ~1e-15 of
-    SEM_THRESHOLD could in principle flip a pair vs the relational twin.
-    On the shipped corpora no pair sits that close (blas == hier exactly
-    at sf0.001/sf0.01, pinned by tests/test_semdedup_classifier.py), so
-    the op shares `semantic_dedup_hier`'s oracle; a corpus where the
-    boundary bites would surface as a driver hash mismatch, not a silent
-    wrong answer."""
-    n, fassigned = _hier_fassigned(spark, sf_dir)
-    return hier_group_stats(fassigned, n, force="blas").orderBy("cell_id", "fine_id")
+    keys = ("cell_id", "fine_id")
+    return semdedup_group_stats(fassigned, n, keys, "fcos").orderBy(*keys)

@@ -13,21 +13,28 @@ from data_ingestion_system_spark.registry import load_all
 REGISTRY = load_all()
 
 
-def test_every_query_has_unique_column_names(spark, sf_dir):
+@pytest.fixture(scope="module")
+def catalog_columns(spark, sf_dir) -> dict[str, list[str]]:
+    """name -> output columns of every registered query, each query built
+    once and shared by the two column-name checks below (building a
+    query can run its eager checkpoints, so one walk of the catalog is
+    the cost of both)."""
+    return {name: spec.spark(spark, sf_dir).columns for name, spec in sorted(REGISTRY.items())}
+
+
+def test_every_query_has_unique_column_names(catalog_columns):
     """Duplicate output columns break the sort-columns-by-name compare."""
-    for name, spec in sorted(REGISTRY.items()):
-        df = spec.spark(spark, sf_dir)
-        assert len(df.columns) == len(set(df.columns)), f"{name}: {df.columns}"
+    for name, columns in catalog_columns.items():
+        assert len(columns) == len(set(columns)), f"{name}: {columns}"
 
 
-def test_oracle_aliases_every_computed_column(spark, sf_dir):
+def test_oracle_aliases_every_computed_column(catalog_columns):
     """Oracle SELECT columns must be plain identifiers (aliased), so both
     engines agree on names — e.g. no bare `sum(l_quantity)` headers."""
-    for name, spec in sorted(REGISTRY.items()):
-        if spec.oracle is None:
+    for name, columns in catalog_columns.items():
+        if REGISTRY[name].oracle is None:
             continue
-        df = spec.spark(spark, sf_dir)
-        for col in df.columns:
+        for col in columns:
             assert re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", col), (
                 f"{name}: column {col!r} is not a plain identifier"
             )

@@ -245,8 +245,8 @@ def test_semdedup_hier_pairwise_is_fine_cell_bucketed(spark, sf_dir):
     # the fine-scoring join sits behind a checkpoint in the full query —
     # assert its broadcast shape on the builder directly
     from data_ingestion_system_spark.dedup.semdedup import (
-        assign_coarse,
         assign_fine,
+        assign_with_centroid_cosine,
         train_fine_centroids,
     )
     from data_ingestion_system_spark.similarity.ann import _as_double
@@ -255,7 +255,7 @@ def test_semdedup_hier_pairwise_is_fine_cell_bucketed(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     v = emb.select("vec_id", _as_double("embedding").alias("ev"))
-    cassigned = assign_coarse(v, train_centroids(v, n_cells=4))
+    cassigned = assign_with_centroid_cosine(v, train_centroids(v, n_cells=4)).drop("ccos")
     fcents = train_fine_centroids(cassigned, 4)
     fine_plan = simple_plan_str(assign_fine(cassigned, fcents))
     assert "CartesianProduct" not in fine_plan
@@ -271,33 +271,21 @@ def test_semdedup_hier_pair_term_is_size_dispatched(spark, sf_dir):
     from data_ingestion_system_spark.dedup.semdedup import (
         SEMDEDUP_BLAS_MIN_ROWS,
         _hier_fassigned,
-        hier_group_stats,
+        semdedup_group_stats,
     )
 
     n, fa = _hier_fassigned(spark, sf_dir)
     assert n < SEMDEDUP_BLAS_MIN_ROWS  # testdata sits below the floor
 
-    small_plan = (
-        hier_group_stats(fa, n)._jdf.queryExecution().executedPlan().toString()
-    )
+    def plan(rows):
+        stats = semdedup_group_stats(fa, rows, ("cell_id", "fine_id"), "fcos")
+        return stats._jdf.queryExecution().executedPlan().toString()
+
+    small_plan = plan(n)
     assert "FlatMapGroupsInPandas" not in small_plan
     assert "fine_id" in small_plan  # the bucketed relational self-join
 
-    big_plan = (
-        hier_group_stats(fa, SEMDEDUP_BLAS_MIN_ROWS)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "FlatMapGroupsInPandas" in big_plan
-
-    forced_plan = (
-        hier_group_stats(fa, n, force="blas")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "FlatMapGroupsInPandas" in forced_plan
+    assert "FlatMapGroupsInPandas" in plan(SEMDEDUP_BLAS_MIN_ROWS)
 
 
 def test_quality_classifier_weights_broadcast(spark, sf_dir):
@@ -692,25 +680,22 @@ def test_pair_expansion_joins_pin_their_width(spark, sf_dir):
     # asserted on the un-checkpointed builders: in-memory relations are
     # untraceable → pin, unless the caller-supplied count is under the
     # rows floor
-    from data_ingestion_system_spark.dedup.semdedup import (
-        _cell_pairs,
-        _fine_cell_pairs,
-    )
+    from data_ingestion_system_spark.dedup.semdedup import _bucket_pairs
 
-    assigned = spark.createDataFrame(
-        [(1, [1.0, 0.0], 1.0, 0, 0.9)],
-        "vec_id long, ev array<double>, nrm double, cell_id long, ccos double",
-    )
-    assert count_pinned_repartitions(_cell_pairs(assigned)) >= 1
-    assert count_pinned_repartitions(_cell_pairs(assigned, n_rows=PIN_MIN_ROWS)) >= 1
-    assert count_pinned_repartitions(_cell_pairs(assigned, n_rows=PIN_MIN_ROWS - 1)) == 0
-    fassigned = spark.createDataFrame(
-        [(1, [1.0, 0.0], 1.0, 0, 0, 0.9)],
-        "vec_id long, ev array<double>, nrm double, cell_id long, "
-        "fine_id long, fcos double",
-    )
-    assert count_pinned_repartitions(_fine_cell_pairs(fassigned)) >= 1
-    assert count_pinned_repartitions(_fine_cell_pairs(fassigned, n_rows=PIN_MIN_ROWS)) >= 1
+    for keys, rank_col in ((("cell_id",), "ccos"), (("cell_id", "fine_id"), "fcos")):
+        assigned = spark.createDataFrame(
+            [(1, [1.0, 0.0], 1.0, *[0] * len(keys), 0.9)],
+            "vec_id long, ev array<double>, nrm double, "
+            + "".join(f"{k} long, " for k in keys)
+            + f"{rank_col} double",
+        )
+
+        def pins(**kw):
+            return count_pinned_repartitions(_bucket_pairs(assigned, keys, rank_col, **kw))
+
+        assert pins() >= 1, keys
+        assert pins(n_rows=PIN_MIN_ROWS) >= 1, keys
+        assert pins(n_rows=PIN_MIN_ROWS - 1) == 0, keys
 
 
 def test_equi_depth_distributed_exact_under_heavy_ties(spark, tmp_path):

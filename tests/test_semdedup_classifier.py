@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_ingestion_system_spark.dedup.semdedup import (
@@ -35,11 +36,18 @@ def _cent_df(spark, rows):
     )
 
 
-def test_semdedup_drops_the_more_cluster_typical_member(spark):
+@pytest.mark.parametrize(
+    "keys,rank_col",
+    [(("cell_id",), "ccos"), (("cell_id", "fine_id"), "fcos")],
+    ids=["flat", "hier"],
+)
+def test_semdedup_drops_the_more_cluster_typical_member(spark, keys, rank_col):
     # two clusters on orthogonal axes; in cell 0, vec 10 IS the centroid
     # direction (ccos=1.0) and vec 11 is tilted but still within the
     # duplicate threshold of vec 10 — SemDeDup keeps the less typical
-    # member (11), dropping 10. vec 20 sits alone in cell 1.
+    # member (11), dropping 10. vec 20 sits alone in cell 1. The
+    # hierarchical keying puts every member in fine cell 0 and ranks on
+    # the same cosine renamed fcos: one pair join, both bucket shapes.
     cents = _cent_df(spark, [(0, [1.0, 0.0]), (1, [0.0, 1.0])])
     v = _vec_df(
         spark,
@@ -53,8 +61,13 @@ def test_semdedup_drops_the_more_cluster_typical_member(spark):
     got = {(r.vec_id, r.cell_id) for r in assigned.select("vec_id", "cell_id").collect()}
     assert got == {(10, 0), (11, 0), (20, 1)}
 
-    pairs, dropped = semdedup_pairs_dropped(assigned, threshold=0.9)
+    if rank_col == "fcos":
+        assigned = assigned.withColumn("fine_id", F.lit(0)).withColumnRenamed(
+            "ccos", "fcos"
+        )
+    pairs, dropped = semdedup_pairs_dropped(assigned, keys, rank_col, threshold=0.9)
     assert [(r.va, r.vb) for r in pairs.select("va", "vb").collect()] == [(10, 11)]
+    assert dropped.columns == [*keys, "vec_id"]
     assert [r.vec_id for r in dropped.collect()] == [10]  # the on-centroid one
 
 
@@ -71,7 +84,7 @@ def test_semdedup_tie_drops_higher_id_and_respects_threshold(spark):
         ],
     )
     assigned = assign_with_centroid_cosine(v, cents)
-    pairs, dropped = semdedup_pairs_dropped(assigned, threshold=0.9)
+    pairs, dropped = semdedup_pairs_dropped(assigned, ("cell_id",), "ccos", threshold=0.9)
     assert [(r.va, r.vb) for r in pairs.select("va", "vb").collect()] == [(10, 11)]
     assert [r.vec_id for r in dropped.collect()] == [11]
 
@@ -105,31 +118,17 @@ def test_classifier_score_is_deterministic_across_runs(spark):
     assert s1 == s2
 
 
-def test_blas_twin_matches_hier_exactly(spark, sf_dir):
-    """semantic_dedup_blas (per-cell BLAS matmul pair term) must equal
-    semantic_dedup_hier (relational pair join) row-for-row: same trained
-    quantizers, same assignments, same keep rule — only the physical
-    pair computation differs. numpy's SIMD/pairwise summation could in
-    principle flip a cosine sitting within ~1e-15 of SEM_THRESHOLD; on
-    the shipped corpus no pair does, which is exactly the condition that
-    lets the twin share the hier oracle."""
-    from data_ingestion_system_spark.registry import load_all
-
-    reg = load_all()
-    h = sorted(map(tuple, reg["semantic_dedup_hier"].spark(spark, sf_dir).collect()))
-    b = sorted(map(tuple, reg["semantic_dedup_blas"].spark(spark, sf_dir).collect()))
-    assert b == h
-
-
-def test_flat_semdedup_dispatch_sides_agree(spark, sf_dir):
-    """The flat op's size-dispatched pair term (flat_group_stats) must
-    return identical rows from both physical plans — relational in-cell
-    self-join and per-cell dgemm with the keep rule ranking on the
-    coarse centroid cosine."""
+def test_flat_semdedup_dispatch_sides_agree(spark, sf_dir, monkeypatch):
+    """The flat op's size-dispatched pair term (semdedup_group_stats on
+    cell_id) must return identical rows from both physical plans —
+    relational in-cell self-join and per-cell dgemm with the keep rule
+    ranking on the coarse centroid cosine. Each arm is forced by moving
+    the SEMDEDUP_BLAS_MIN_ROWS floor."""
+    from data_ingestion_system_spark.dedup import semdedup
     from data_ingestion_system_spark.dedup.semdedup import (
         adaptive_cells,
         assign_with_centroid_cosine,
-        flat_group_stats,
+        semdedup_group_stats,
     )
     from data_ingestion_system_spark.similarity.ann import load_vectors
     from data_ingestion_system_spark.similarity.ivf import (
@@ -144,20 +143,21 @@ def test_flat_semdedup_dispatch_sides_agree(spark, sf_dir):
         v, cache_key=dataset_cache_key(sf_dir), n_cells=adaptive_cells(n)
     )
     assigned = assign_with_centroid_cosine(v, cents)
-    rel = sorted(map(tuple, flat_group_stats(assigned, n, force="relational").collect()))
-    blas = sorted(map(tuple, flat_group_stats(assigned, n, force="blas").collect()))
-    assert blas == rel
+
+    def stats(rows):
+        return semdedup_group_stats(assigned, rows, ("cell_id",), "ccos")
 
     # both dispatch sides plan-asserted on the same builder
-    small = flat_group_stats(assigned, n)._jdf.queryExecution().executedPlan().toString()
+    small = stats(n)._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" not in small
-    big = (
-        flat_group_stats(assigned, 16_384)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    big = stats(16_384)._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" in big
+
+    monkeypatch.setattr(semdedup, "SEMDEDUP_BLAS_MIN_ROWS", 10**12)
+    rel = sorted(map(tuple, stats(n).collect()))
+    monkeypatch.setattr(semdedup, "SEMDEDUP_BLAS_MIN_ROWS", 0)
+    blas = sorted(map(tuple, stats(n).collect()))
+    assert blas == rel
 
 
 def test_fine_centroid_memo_replays_identically(spark, sf_dir):
@@ -165,10 +165,7 @@ def test_fine_centroid_memo_replays_identically(spark, sf_dir):
     train_centroids pattern) must replay EXACTLY the rows, types, and
     fnrm the cold Lloyd training produced — warm and cold serving paths
     may never diverge in schema or values."""
-    from data_ingestion_system_spark.dedup.semdedup import (
-        assign_coarse,
-        train_fine_centroids,
-    )
+    from data_ingestion_system_spark.dedup.semdedup import train_fine_centroids
     from data_ingestion_system_spark.similarity.ann import load_vectors
     from data_ingestion_system_spark.similarity.ivf import (
         _index_cache,
@@ -184,7 +181,7 @@ def test_fine_centroid_memo_replays_identically(spark, sf_dir):
     kc, kf = hier_cells(n)
     key = dataset_cache_key(sf_dir)
     cents = train_centroids(v, cache_key=key, n_cells=kc)
-    cassigned = assign_coarse(v, cents)
+    cassigned = assign_with_centroid_cosine(v, cents).drop("ccos")
     memo = ("fine_centroids", key, kf, adaptive_train_mod(n))
     _index_cache(spark).pop(memo, None)  # force the cold path
     cold = train_fine_centroids(

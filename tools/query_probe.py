@@ -34,10 +34,9 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
-from bench import KEEPER_SINK, OUTPUT_BOUND  # noqa: E402
+from bench import KEEPER_SINK, OUTPUT_BOUND, time_query  # noqa: E402
 from data_ingestion_system_spark.registry import load_all  # noqa: E402
 from data_ingestion_system_spark.session import get_spark  # noqa: E402
-from data_ingestion_system_spark.tables import release_session_checkpoints  # noqa: E402
 
 
 def main() -> None:
@@ -79,31 +78,8 @@ def main() -> None:
     for name in names:
         sink_measured = name in OUTPUT_BOUND
         keeper_sink = name in KEEPER_SINK
-        walls, rows = [], None
-        for _ in range(reps):
-            # between-RUNS hygiene (tables.release_session_checkpoints):
-            # a sequential sweep otherwise accumulates every finished
-            # run's checkpoint blocks until the heap dies (class #6).
-            # Inside the reps loop, not just per query: an iterative
-            # query's earlier reps otherwise pin their component
-            # checkpoints under the later ones and the walls creep up.
-            release_session_checkpoints(spark)
-            t0 = time.perf_counter()
-            df = registry[name].spark(spark, sf_dir)
-            if sink_measured:
-                rows = df.count()
-            elif keeper_sink:
-                # keeper-scale outputs are WRITTEN, not collected
-                # (CONVENTIONS.md §6/§7) — the sink write is the
-                # production contract this probe times; rows come from
-                # the written footers afterwards, untimed
-                path = os.path.join(sink_root, name)
-                df.write.mode("overwrite").parquet(path)
-            else:
-                rows = len(df.collect())
-            walls.append(round(time.perf_counter() - t0, 3))
-        if keeper_sink:
-            rows = _parquet_rows(os.path.join(sink_root, name))
+        walls, rows = time_query(spark, registry, name, sf_dir, reps, sink_root)
+        walls = [round(w, 3) for w in walls]
         out[name] = {
             "sec": round(statistics.median(walls), 3),
             "rows": rows,
@@ -126,17 +102,6 @@ def main() -> None:
                 },
             }
         )
-    )
-
-
-def _parquet_rows(path: str) -> int:
-    import glob
-
-    import pyarrow.parquet as pq
-
-    return sum(
-        pq.ParquetFile(p).metadata.num_rows
-        for p in glob.glob(os.path.join(path, "*.parquet"))
     )
 
 
