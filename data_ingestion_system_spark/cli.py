@@ -88,7 +88,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from data_ingestion_system_spark.registry import load_all
     from data_ingestion_system_spark.session import get_spark
-    from data_ingestion_system_spark.tables import load_table
+    from data_ingestion_system_spark.tables import has_parquet, load_table
 
     spark = get_spark(app_name=f"dis-cli-{args.cmd}")
     spark.sparkContext.setLogLevel("ERROR")
@@ -135,9 +135,7 @@ def main(argv: list[str] | None = None) -> int:
             checkpoint_dir=os.path.join(args.workdir, "checkpoint"),
         )
         run_file_ingestion(spark, paths, TESTDATA_SCHEMAS["events"], key_col=args.key)
-        if os.path.isdir(paths.audit_dir) and any(
-            f.endswith(".parquet") for f in os.listdir(paths.audit_dir)
-        ):
+        if has_parquet(paths.audit_dir):
             _emit(spark.read.parquet(paths.audit_dir).orderBy("batch_id"))
         else:  # empty landing dir: zero batches ran — report, don't crash
             print(json.dumps({"batches": 0, "fetched": 0, "inserted": 0}))

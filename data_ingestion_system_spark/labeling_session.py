@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_system_spark.operators.statemachine import current_state, next_batch
+from data_ingestion_system_spark.tables import has_parquet
 
 SENTIMENTS = {"very_negative", "negative", "neutral", "positive", "very_positive"}
 CONFIDENCES = {"high", "medium", "low"}
@@ -59,14 +60,11 @@ class LabelingStore:
         self.labels_dir = os.path.join(workdir, "labels")
         self.sessions_dir = os.path.join(workdir, "sessions")
 
-    def _exists(self, d: str) -> bool:
-        return os.path.isdir(d) and any(f.endswith(".parquet") for f in os.listdir(d))
-
     def events(self) -> DataFrame:
         return self.spark.read.parquet(self.events_dir)
 
     def labels(self) -> DataFrame | None:
-        return self.spark.read.parquet(self.labels_dir) if self._exists(self.labels_dir) else None
+        return self.spark.read.parquet(self.labels_dir) if has_parquet(self.labels_dir) else None
 
     def append_events(self, rows: list[tuple]) -> None:
         self.spark.createDataFrame(rows, _EVENT_SCHEMA).coalesce(1).write.mode(
@@ -84,12 +82,12 @@ class LabelingStore:
         ).parquet(self.sessions_dir)
 
     def next_seq(self) -> int:
-        if not self._exists(self.events_dir):
+        if not has_parquet(self.events_dir):
             return 1
         return (self.events().agg(F.max("seq")).first()[0] or 0) + 1
 
     def next_session_id(self) -> int:
-        if not self._exists(self.sessions_dir):
+        if not has_parquet(self.sessions_dir):
             return 1
         return (
             self.spark.read.parquet(self.sessions_dir).agg(F.max("session_id")).first()[0]
@@ -117,7 +115,7 @@ def populate_queue(
     from pyspark.sql import Window
 
     candidates = reviews
-    if store._exists(store.events_dir):
+    if has_parquet(store.events_dir):
         # the reference builds an exclusion set (queued ∪ labeled ids,
         # sampler.py:204-222) before inserting — re-running populate
         # must not enqueue a second queue_id for the same review

@@ -499,41 +499,15 @@ def equi_depth_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries (orderkey, linenumber) tiebreakers so both engines tile the
     same total order (SURVEY §4.2.4 determinism rule).
 
-    Size-dispatched (§4d two-physical-plans, r7 — previously a documented
-    single-partition trade): below EQUI_DEPTH_DIRECT_MAX_ROWS the plain
-    global NTILE window wins (one sort of a small relation, no extra
-    passes); above it `_equi_depth_exact_distributed` computes the SAME
-    exact answer with no global sort — range-repartition, per-partition
-    counts, the 9 bucket-boundary tuples located by rank, then a
-    codegen 9-comparison bucket assignment. Both plans pinned and their
-    equality asserted by tests/test_plan_quality.py
-    (test_equi_depth_exact_dispatch_plans,
-    test_equi_depth_distributed_equals_direct, and the heavy-ties
-    variant test_equi_depth_distributed_exact_under_heavy_ties)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    if li.count() >= EQUI_DEPTH_DIRECT_MAX_ROWS:  # parquet footer count
-        return _equi_depth_exact_distributed(li)
-    w = Window.orderBy("l_extendedprice", "l_orderkey", "l_linenumber")
-    tiled = li.select("l_extendedprice", F.ntile(N_DEPTH_BUCKETS).over(w).alias("bucket"))
-    return (
-        tiled.groupBy(F.col("bucket").cast("int").alias("bucket"))
-        .agg(
-            F.count("*").alias("n_rows"),
-            round_port(F.min("l_extendedprice"), 6).alias("lo"),
-            round_port(F.max("l_extendedprice"), 6).alias("hi"),
-            round_port(F.avg("l_extendedprice"), 6).alias("mean_price"),
-        )
-        .orderBy("bucket")
-    )
+    Computed by `_equi_depth_exact_distributed`: the exact NTILE answer
+    with no global sort — range-repartition, per-partition counts, the 9
+    bucket-boundary tuples located by rank, then a codegen 9-comparison
+    bucket assignment. Its plan is pinned by
+    tests/test_plan_quality.py (test_equi_depth_exact_dispatch_plans)
+    and its exactness under heavy ties by
+    test_equi_depth_distributed_exact_under_heavy_ties."""
+    return _equi_depth_exact_distributed(load_table(spark, sf_dir, "lineitem"))
 
-
-# Above this row count the global-NTILE window's single-partition sort
-# loses to the distributed rank scheme's three bounded passes; below it
-# the extra passes (range exchange + checkpoint + boundary window) cost
-# more than sorting a few MB on one core. Matches the codebase-wide
-# PIN_MIN_ROWS floor so sf0.001 pytest parity exercises the direct plan
-# and the sf0.01 driver gate exercises the distributed one.
-EQUI_DEPTH_DIRECT_MAX_ROWS = 16_384
 
 _EQUI_DEPTH_KEYS = ("l_extendedprice", "l_orderkey", "l_linenumber")
 

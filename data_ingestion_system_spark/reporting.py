@@ -13,18 +13,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_ingestion_system_spark.tables import has_parquet
+
 _BAR = "=" * 64
 
 
 def format_run_report(audit: DataFrame, alerts: DataFrame | None = None) -> str:
     """Per-batch breakdown + totals for one ingestion run, from the audit
     rows (batch_id, fetched, inserted, skipped, quarantined, dedup_rate,
-    status, duration_seconds). The quarantined column appears in every
-    live audit row (ingest accounting: fetched = inserted + skipped +
-    quarantined); a legacy 7-column audit reads as quarantined=0 so the
-    lines still reconcile."""
+    status, duration_seconds); the lines reconcile as fetched = inserted
+    + skipped + quarantined. A null duration (a backfilled row) prints a
+    dash."""
     rows = audit.orderBy("batch_id").collect()
-    has_q = "quarantined" in audit.columns
     lines = [
         _BAR,
         f"  INGESTION RUN — {len(rows)} batch(es)",
@@ -33,16 +33,15 @@ def format_run_report(audit: DataFrame, alerts: DataFrame | None = None) -> str:
         "  " + "-" * 64,
     ]
     for r in rows:
-        q = r.quarantined if has_q else 0
         secs = f"{r.duration_seconds:>6.2f}s" if r.duration_seconds is not None else "     —"
         lines.append(
-            f"  {r.batch_id:>6} {r.fetched:>8} {r.inserted:>6} {r.skipped:>8} {q:>6}"
+            f"  {r.batch_id:>6} {r.fetched:>8} {r.inserted:>6} {r.skipped:>8} {r.quarantined:>6}"
             f" {100.0 * r.dedup_rate:>6.1f}% {secs}  {r.status}"
         )
     fetched = sum(r.fetched for r in rows)
     inserted = sum(r.inserted for r in rows)
     skipped = sum(r.skipped for r in rows)
-    quarantined = sum((r.quarantined if has_q else 0) for r in rows)
+    quarantined = sum(r.quarantined for r in rows)
     rate = 100.0 * skipped / fetched if fetched else 0.0
     lines += [
         "",
@@ -67,16 +66,7 @@ def format_store_snapshot(spark: SparkSession, target_dir: str, key_col: str) ->
     the stored time range. One aggregate job, one collected row. An
     absent/empty store prints zeros (the reference's report_db_growth
     does the same on an empty DB) instead of PATH_NOT_FOUND."""
-    import os
-
-    if not (
-        os.path.isdir(target_dir)
-        and any(
-            f.endswith(".parquet")
-            for _, _, fs in os.walk(target_dir)
-            for f in fs
-        )
-    ):
+    if not has_parquet(target_dir):
         return "\n".join(
             ["  Store snapshot:", "    rows          : 0", "    distinct keys : 0"]
         )

@@ -14,12 +14,11 @@ groupBy over provenance, no replay.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_system_spark.streaming.ingest import IngestPaths
+from data_ingestion_system_spark.tables import has_parquet
 
 
 def reconstruct_audit(spark: SparkSession, paths: IngestPaths, key_col: str) -> DataFrame:
@@ -31,8 +30,6 @@ def reconstruct_audit(spark: SparkSession, paths: IngestPaths, key_col: str) -> 
     an arbitrary file, and a 7-column backfilled footer would silently
     drop `quarantined` from every audit read."""
     prov = spark.read.parquet(paths.provenance_dir)
-    if "quarantined" not in prov.columns:  # pre-rules provenance layout
-        prov = prov.withColumn("quarantined", F.lit(False))
     clean = prov.filter(~F.col("quarantined"))
     first_batch = clean.groupBy(key_col).agg(F.min("batch_id").alias("first_batch"))
     per_batch = prov.groupBy("batch_id").agg(
@@ -83,10 +80,7 @@ def backfill_missing_audit(spark: SparkSession, paths: IngestPaths, key_col: str
     total-loss scenario this tool exists to repair — means every
     provenance batch is missing."""
     reconstructed = reconstruct_audit(spark, paths, key_col)
-    audit_exists = os.path.isdir(paths.audit_dir) and any(
-        f.endswith(".parquet") for f in os.listdir(paths.audit_dir)
-    )
-    if audit_exists:
+    if has_parquet(paths.audit_dir):
         audit = spark.read.parquet(paths.audit_dir)
         missing = reconstructed.join(audit.select("batch_id"), "batch_id", "left_anti")
     else:

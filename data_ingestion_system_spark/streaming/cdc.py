@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_ingestion_system_spark.operators.merge import _swap_write
+from data_ingestion_system_spark.streaming.ingest import drain_files
 
 STATE_COLS = ["key", "last_seq", "payload_type", "payload_value"]
 
@@ -117,8 +118,9 @@ def run_cdc_stream(
     """File-stream the change feed and mirror it: foreachBatch applies
     `cdc_apply_batch` and (optionally) appends one audit row per batch —
     the T3 fetched=applied+skipped invariant for CDC. availableNow
-    drains the backlog and stops (the test/backfill trigger; a
-    production run would drop the trigger for continuous tailing).
+    drains the whole backlog (no per-batch file cap) and returns the
+    stopped query (the test/backfill trigger; a production run would
+    drop the trigger for continuous tailing).
 
     Audit-row semantics (changed in round 4 to make the T3 invariant
     hold; dashboards reading these columns should use these meanings):
@@ -129,7 +131,6 @@ def run_cdc_stream(
     deleted`, which folds in both cross-batch stale rows and
     within-batch duplicates collapsed by the per-key max-seq winner
     rule. See `cdc_apply_batch` for the per-case accounting."""
-    stream = spark.readStream.schema(FEED_SCHEMA).parquet(feed_dir)
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         counters = cdc_apply_batch(spark, batch_df, state_dir)
@@ -148,9 +149,11 @@ def run_cdc_stream(
                 "skipped_stale long",
             ).write.mode("append").parquet(audit_dir)
 
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return drain_files(
+        spark,
+        feed_dir,
+        FEED_SCHEMA,
+        checkpoint_dir,
+        _batch,
+        max_files_per_trigger=None,
     )

@@ -24,6 +24,8 @@ import time as _time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_ingestion_system_spark.streaming.ingest import drain_files
+
 _PSI_DECILES = [i / 10.0 for i in range(1, 10)]
 
 
@@ -108,18 +110,15 @@ def run_drift_monitor(
             "batch_id long, n_rows long, psi double, alert boolean, ts double",
         ).write.mode("append").parquet(psi_audit_dir)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-    writer = stream.writeStream.foreachBatch(_on_batch).option(
-        "checkpointLocation", psi_audit_dir + "_ckpt"
+    # watch mode (`await_seconds`) runs back-to-back micro-batches —
+    # Spark's default trigger — for that long, then stops
+    return drain_files(
+        spark,
+        source_dir,
+        schema,
+        psi_audit_dir + "_ckpt",
+        _on_batch,
+        max_files_per_trigger,
+        processing_time=None if await_seconds is None else "0 seconds",
+        await_seconds=await_seconds,
     )
-    if await_seconds is None:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-    else:
-        q = writer.start()
-        q.awaitTermination(await_seconds)
-        q.stop()
-    return q

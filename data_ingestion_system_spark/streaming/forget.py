@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_system_spark.streaming.ingest import IngestPaths
+from data_ingestion_system_spark.tables import has_parquet
 
 TOMBSTONES = "tombstones"
 
@@ -47,7 +48,7 @@ def _rewrite_without(
 ) -> int:
     """Anti-join rewrite of a parquet dir with the 2-rename swap.
     Returns rows removed."""
-    if not (os.path.isdir(path) and any(f.endswith(".parquet") for root, _, fs in os.walk(path) for f in fs)):
+    if not has_parquet(path):
         return 0
     df = spark.read.parquet(path)
     kept = df.join(keys, key_col, "left_anti").localCheckpoint(eager=True)

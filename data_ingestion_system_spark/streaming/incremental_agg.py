@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_ingestion_system_spark.streaming.ingest import drain_files
+
 
 def write_partial(batch: DataFrame, batch_id: int, ts_col: str, val_col: str, partials_dir: str) -> None:
     """Append this batch's per-day partial aggregate, overwriting only
@@ -76,15 +78,11 @@ def run_incremental_daily_stats(
     def _on_batch(batch_df: DataFrame, batch_id: int) -> None:
         write_partial(batch_df, batch_id, ts_col, val_col, partials_dir)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    q = (
-        reader.parquet(source_dir)
-        .writeStream.foreachBatch(_on_batch)
-        .option("checkpointLocation", partials_dir + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
+    return drain_files(
+        spark,
+        source_dir,
+        schema,
+        partials_dir + "_ckpt",
+        _on_batch,
+        max_files_per_trigger,
     )
-    q.awaitTermination()
-    return q

@@ -7,7 +7,9 @@ IGNORE sinks (src/database/db_manager.py:141-230), a run-audit row per
 batch (db_manager.py:266-314), and provenance rows
 (db_manager.py:488-506). Spark-first equivalents:
 
-- scheduler      → `trigger(processingTime=...)` / `Trigger.AvailableNow`
+- scheduler      → `drain_files`: `trigger(processingTime=...)` /
+                   `Trigger.AvailableNow` (the one drain loop every
+                   file-source foreachBatch runner shares)
 - checkpoints    → `checkpointLocation` (exactly-once source progress,
                    replacing file_storage.py:209-229 manual checkpoints)
 - dedup sink     → per-batch anti-join against the target on the key
@@ -26,10 +28,13 @@ from __future__ import annotations
 import os
 import shutil
 from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from data_ingestion_system_spark.tables import has_parquet
 
 
 @dataclass
@@ -75,9 +80,7 @@ def evaluate_batch_health(
     a full-history single-partition window sort; a healthy batch writes
     NOTHING (no empty-file accretion in alerts_dir)."""
     avg_inserted5 = avg_duration5 = None
-    if os.path.isdir(paths.audit_dir) and any(
-        f.endswith(".parquet") for f in os.listdir(paths.audit_dir)
-    ):
+    if has_parquet(paths.audit_dir):
         prev = (
             spark.read.parquet(paths.audit_dir)
             .filter(F.col("batch_id") < int(batch_id))
@@ -97,7 +100,6 @@ def evaluate_batch_health(
         alerts.append("insert_drop")
     if avg_duration5 is not None and duration_seconds > DURATION_SPIKE_FACTOR * avg_duration5:
         alerts.append("duration_spike")
-    _migrate_legacy_flat_alerts(spark, paths.alerts_dir)
     if alerts:
         spark.createDataFrame(
             [(int(batch_id), a) for a in alerts], "batch_id long, alert string"
@@ -116,47 +118,71 @@ def evaluate_batch_health(
             shutil.rmtree(stale)
 
 
-def _migrate_legacy_flat_alerts(spark: SparkSession, alerts_dir: str) -> None:
-    """One layout for the alerts store (ADVICE r9): a dir written by the
-    pre-partitioned (flat append) code would mix root-level part files
-    with batch_id=N subdirs after the first partitioned write —
-    unreadable by Spark. Unlike the near-dup state store's rename-only
-    migration, flat alert files CONTAIN the batch_id column, so a rename
-    into one partition dir would corrupt every row's batch id; instead
-    the (metadata-tiny by construction: alert rows only) legacy files
-    are rewritten once into their true per-batch partitions and the flat
-    files removed. Idempotent under a crash mid-migration: the rewrite
-    derives entirely from the flat files, prior `legacy-*` outputs are
-    cleared before moving, and the flat files are deleted LAST."""
-    if not os.path.isdir(alerts_dir):
-        return
-    flat = [f for f in os.listdir(alerts_dir) if f.endswith(".parquet")]
-    if not flat:
-        return
-    legacy = spark.read.parquet(
-        *[os.path.join(alerts_dir, f) for f in flat]
-    ).select("batch_id", "alert")
-    tmp = alerts_dir.rstrip("/") + ".__legacy_migration__"
-    legacy.write.mode("overwrite").partitionBy("batch_id").parquet(tmp)
-    for d in os.listdir(tmp):
-        if not d.startswith("batch_id="):
-            continue
-        dest = os.path.join(alerts_dir, d)
-        os.makedirs(dest, exist_ok=True)
-        for stale in os.listdir(dest):
-            if stale.startswith("legacy-"):
-                os.remove(os.path.join(dest, stale))
-        for f in os.listdir(os.path.join(tmp, d)):
-            if f.endswith(".parquet"):
-                os.rename(
-                    os.path.join(tmp, d, f), os.path.join(dest, "legacy-" + f)
-                )
-    shutil.rmtree(tmp)
-    for f in flat:
-        os.remove(os.path.join(alerts_dir, f))
-        crc = os.path.join(alerts_dir, f".{f}.crc")
-        if os.path.exists(crc):
-            os.remove(crc)
+def file_stream(
+    spark: SparkSession,
+    source_dir: str,
+    schema: StructType | str,
+    max_files_per_trigger: int | None = 1,
+) -> DataFrame:
+    """The parquet files landing in `source_dir` as a stream, at most
+    `max_files_per_trigger` files per micro-batch (None = all pending)."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(source_dir)
+
+
+def drain_files(
+    spark: SparkSession,
+    source_dir: str,
+    schema: StructType | str,
+    checkpoint_dir: str,
+    on_batch: Callable[[DataFrame, int], None],
+    max_files_per_trigger: int | None = 1,
+    processing_time: str | None = None,
+    await_seconds: float | None = None,
+):
+    """The one drain behind every file-source foreachBatch runner: hand
+    each micro-batch of `file_stream` to `on_batch(batch_df, batch_id)`,
+    with source progress checkpointed in `checkpoint_dir`.
+
+    `processing_time=None` → Trigger.AvailableNow: drain everything
+    pending and stop — the reference's `--once` mode (scheduler.py:65-86).
+    A processing-time trigger reproduces the 4-hour cadence
+    (settings.py:125) without a sleep loop. With `await_seconds` the
+    query runs that long and is then stopped (graceful shutdown, T8);
+    without it the call returns when the query ends.
+    """
+    trigger = (
+        {"availableNow": True}
+        if processing_time is None
+        else {"processingTime": processing_time}
+    )
+    query = (
+        file_stream(spark, source_dir, schema, max_files_per_trigger)
+        .writeStream.foreachBatch(on_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(**trigger)
+        .start()
+    )
+    if await_seconds is not None:
+        query.awaitTermination(await_seconds)
+        query.stop()
+    else:
+        query.awaitTermination()
+    return query
+
+
+def batch_committed(spark: SparkSession, audit_dir: str, batch_id: int) -> bool:
+    """Whether `batch_id`'s audit row — the commit marker both write
+    paths append LAST — exists, i.e. the batch is a replay to skip."""
+    return has_parquet(audit_dir) and (
+        spark.read.parquet(audit_dir)
+        .filter(F.col("batch_id") == int(batch_id))
+        .limit(1)
+        .count()
+        > 0
+    )
 
 
 def dedup_insert_batch(
@@ -199,18 +225,8 @@ def dedup_insert_batch(
             "dedup_insert_batch: rules= requires paths.quarantine_dir "
             "(CHECK violators are diverted, never destroyed)"
         )
-    audit_exists = os.path.isdir(paths.audit_dir) and any(
-        f.endswith(".parquet") for f in os.listdir(paths.audit_dir)
-    )
-    if audit_exists:
-        already_done = (
-            spark.read.parquet(paths.audit_dir)
-            .filter(F.col("batch_id") == int(batch_id))
-            .limit(1)
-            .count()
-        )
-        if already_done:
-            return
+    if batch_committed(spark, paths.audit_dir, batch_id):
+        return
 
     batch_df = batch_df.dropDuplicates([key_col]).localCheckpoint(eager=True)
     fetched = batch_df.count()
@@ -242,10 +258,7 @@ def dedup_insert_batch(
             quar_df.select(F.col(key_col), F.lit(True).alias("quarantined"))
         )
 
-    target_exists = os.path.isdir(paths.target_dir) and any(
-        f.endswith(".parquet") for f in os.listdir(paths.target_dir)
-    )
-    if target_exists:
+    if has_parquet(paths.target_dir):
         existing_keys = spark.read.parquet(paths.target_dir).select(key_col)
         # eager localCheckpoint pins the anti-join result: the lineage must
         # not recompute by re-reading target_dir mid-append (self-read-write)
@@ -296,35 +309,22 @@ def run_file_ingestion(
     await_seconds: float | None = None,
     rules: list | None = None,
 ):
-    """Continuous (or one-shot) file-source ingestion.
-
-    `processing_time=None` → Trigger.AvailableNow: drain everything
-    pending and stop — the reference's `--once` mode (scheduler.py:65-86).
-    A processing-time trigger reproduces the 4-hour cadence
-    (settings.py:125) without a sleep loop.
-    """
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(paths.source_dir)
+    """Continuous (or one-shot) file-source ingestion: `drain_files` with
+    the replay-safe `dedup_insert_batch` as the batch body."""
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         dedup_insert_batch(spark, batch_df, batch_id, key_col, paths, rules=rules)
 
-    writer = stream.writeStream.foreachBatch(_batch).option(
-        "checkpointLocation", paths.checkpoint_dir
+    return drain_files(
+        spark,
+        paths.source_dir,
+        schema,
+        paths.checkpoint_dir,
+        _batch,
+        max_files_per_trigger,
+        processing_time,
+        await_seconds,
     )
-    if processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    if await_seconds is not None:
-        query.awaitTermination(await_seconds)
-        query.stop()  # graceful shutdown, T8
-    else:
-        query.awaitTermination()
-    return query
 
 
 def windowed_event_counts(

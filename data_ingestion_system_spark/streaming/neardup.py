@@ -49,6 +49,8 @@ from data_ingestion_system_spark.dedup.minhash import (
     token_sets,
     verified_pairs,
 )
+from data_ingestion_system_spark.streaming.ingest import batch_committed, drain_files
+from data_ingestion_system_spark.tables import has_parquet
 
 
 @dataclass
@@ -59,38 +61,6 @@ class NearDupPaths:
     tokens_dir: str      # shingle sets of accepted docs: (doc_id, token)
     audit_dir: str       # one row per batch
     checkpoint_dir: str
-
-
-def _dir_has_parquet(path: str) -> bool:
-    # recursive: state dirs hold per-batch `batch_id=<n>` partition subdirs
-    if not os.path.isdir(path):
-        return False
-    return any(
-        f.endswith(".parquet") for _, _, files in os.walk(path) for f in files
-    )
-
-
-def _migrate_legacy_flat(path: str) -> None:
-    """Move pre-partitioned (flat append) state files into a
-    ``batch_id=-1`` partition dir, giving the store ONE layout: Spark
-    cannot read a dir that mixes root-level files with partition
-    subdirs, which is exactly what the first partitioned write into a
-    legacy store would create. -1 means 'committed before the
-    partitioned layout existed' — every such row was appended by a
-    batch whose audit marker already landed. File renames, no data
-    rewrite (local/HDFS; an object-store deployment would copy)."""
-    if not os.path.isdir(path):
-        return
-    flat = [f for f in os.listdir(path) if f.endswith(".parquet")]
-    if not flat:
-        return
-    dest = os.path.join(path, "batch_id=-1")
-    os.makedirs(dest, exist_ok=True)
-    for f in flat:
-        os.rename(os.path.join(path, f), os.path.join(dest, f))
-        crc = os.path.join(path, f".{f}.crc")
-        if os.path.exists(crc):
-            os.rename(crc, os.path.join(dest, f".{f}.crc"))
 
 
 def neardup_insert_batch(
@@ -108,35 +78,25 @@ def neardup_insert_batch(
     import time as _time
 
     t0 = _time.perf_counter()
-    for d in (paths.target_dir, paths.bands_dir, paths.tokens_dir):
-        _migrate_legacy_flat(d)
-    if _dir_has_parquet(paths.audit_dir):
-        already = (
-            spark.read.parquet(paths.audit_dir)
-            .filter(F.col("batch_id") == int(batch_id))
-            .limit(1)
-            .count()
-        )
-        if already:
-            return
+    if batch_committed(spark, paths.audit_dir, batch_id):
+        return
 
     batch = batch_df.dropDuplicates(["doc_id"]).localCheckpoint(eager=True)
     fetched = batch.count()
     toks = token_sets(batch).localCheckpoint(eager=True)
     bands = band_keys(minhash_signatures(toks)).localCheckpoint(eager=True)
 
-    if _dir_has_parquet(paths.bands_dir):
+    if has_parquet(paths.bands_dir):
         # exclude this batch's own partition: a replay of a mid-batch
         # crash would otherwise find the partial attempt's index rows in
         # the store and reject every doc as a near-dup of itself (then
         # overwrite the partition with nothing — silent data loss). The
-        # filter is a pruned partition scan, not a data read. A store
-        # written by the pre-partitioned (flat append) layout has no
-        # batch_id column — those rows are all committed prior batches.
-        store_bands = spark.read.parquet(paths.bands_dir)
-        if "batch_id" in store_bands.columns:
-            store_bands = store_bands.filter(F.col("batch_id") != int(batch_id))
-        store_bands = store_bands.select("doc_id", "band_key")
+        # filter is a pruned partition scan, not a data read.
+        store_bands = (
+            spark.read.parquet(paths.bands_dir)
+            .filter(F.col("batch_id") != int(batch_id))
+            .select("doc_id", "band_key")
+        )
         cross = (
             bands.alias("n")
             .join(store_bands.alias("s"), F.col("n.band_key") == F.col("s.band_key"))
@@ -148,11 +108,15 @@ def neardup_insert_batch(
         # exact Jaccard needs both sides' shingles: batch tokens plus the
         # stored shingles of ONLY the candidate store docs (semi-join —
         # the index, not the corpus, bounds what gets read)
-        store_toks = spark.read.parquet(paths.tokens_dir)
-        if "batch_id" in store_toks.columns:
-            store_toks = store_toks.filter(F.col("batch_id") != int(batch_id))
-        store_toks = store_toks.select("doc_id", "token").join(
-            cross.select(F.col("doc_a").alias("doc_id")).distinct(), "doc_id", "left_semi"
+        store_toks = (
+            spark.read.parquet(paths.tokens_dir)
+            .filter(F.col("batch_id") != int(batch_id))
+            .select("doc_id", "token")
+            .join(
+                cross.select(F.col("doc_a").alias("doc_id")).distinct(),
+                "doc_id",
+                "left_semi",
+            )
         )
         # distinct: a re-delivered doc_id appears in BOTH sides of the
         # union with identical shingles; duplicates would double n_common
@@ -228,7 +192,7 @@ def accepted_docs(
     empty committed view; without it there is nothing to infer a schema
     from, so it raises a clear ValueError instead of Spark's
     PATH_NOT_FOUND."""
-    if not _dir_has_parquet(paths.target_dir):
+    if not has_parquet(paths.target_dir):
         if schema is not None:
             return spark.createDataFrame([], schema)
         raise ValueError(
@@ -236,19 +200,9 @@ def accepted_docs(
             "pass schema= for an empty committed view"
         )
     target = spark.read.parquet(paths.target_dir)
-    if "batch_id" not in target.columns:
-        # pre-partitioned (flat append) layout: every written row was
-        # committed at its batch's audit-marker skip level
-        return target
-    if not _dir_has_parquet(paths.audit_dir):
+    if not has_parquet(paths.audit_dir):
         return target.limit(0).drop("batch_id")
-    # batch_id=-1 is the migrated legacy partition — committed by
-    # construction (see _migrate_legacy_flat)
-    committed = (
-        spark.read.parquet(paths.audit_dir)
-        .select(F.col("batch_id").cast("long"))
-        .union(spark.range(1).select(F.lit(-1).cast("long").alias("batch_id")))
-    )
+    committed = spark.read.parquet(paths.audit_dir).select("batch_id")
     return (
         target.withColumn("batch_id", F.col("batch_id").cast("long"))
         .join(F.broadcast(committed), "batch_id", "left_semi")
@@ -266,19 +220,15 @@ def run_neardup_ingestion(
     """Drain pending document files through the incremental near-dup
     filter (Trigger.AvailableNow, one landing file per micro-batch by
     default — the reference's --once drain loop shape)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(paths.source_dir)
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         neardup_insert_batch(spark, batch_df, batch_id, paths, threshold)
 
-    query = (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", paths.checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return drain_files(
+        spark,
+        paths.source_dir,
+        schema,
+        paths.checkpoint_dir,
+        _batch,
+        max_files_per_trigger,
     )
-    query.awaitTermination()
-    return query

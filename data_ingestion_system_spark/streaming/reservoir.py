@@ -21,12 +21,12 @@ priorities are i.i.d. uniform across keys.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_system_spark.functions.scalar import det_rank_key
+from data_ingestion_system_spark.streaming.ingest import drain_files
+from data_ingestion_system_spark.tables import has_parquet
 
 RESERVOIR_SEED = 17
 
@@ -41,10 +41,7 @@ def update_reservoir(
 ) -> None:
     """Fold one batch into the k-row reservoir at `reservoir_dir`."""
     keyed = batch.withColumn("_prio", det_rank_key(F.col(key_col), seed=seed))
-    has_state = os.path.isdir(reservoir_dir) and any(
-        f.endswith(".parquet") for f in os.listdir(reservoir_dir)
-    )
-    if has_state:
+    if has_parquet(reservoir_dir):
         # eager checkpoint pins the union result before the overwrite of
         # the directory it was read from (self-read-write hazard)
         keyed = keyed.unionByName(spark.read.parquet(reservoir_dir))
@@ -75,15 +72,11 @@ def run_stream_reservoir(
     def _on_batch(batch_df: DataFrame, batch_id: int) -> None:
         update_reservoir(spark, batch_df, reservoir_dir, key_col, k, seed)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    q = (
-        reader.parquet(source_dir)
-        .writeStream.foreachBatch(_on_batch)
-        .option("checkpointLocation", reservoir_dir + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
+    return drain_files(
+        spark,
+        source_dir,
+        schema,
+        reservoir_dir + "_ckpt",
+        _on_batch,
+        max_files_per_trigger,
     )
-    q.awaitTermination()
-    return q

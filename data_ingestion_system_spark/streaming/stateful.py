@@ -25,6 +25,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from data_ingestion_system_spark.streaming.ingest import file_stream
+
 PROFILE_SCHEMA = StructType(
     [
         StructField("user_id", LongType()),
@@ -93,10 +95,7 @@ def run_profile_stream(
     """Drain a file-source stream through the stateful profile operator;
     the parquet sink accumulates one profile row per (key, micro-batch)
     touch — the latest row per key is the live profile."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = file_stream(spark, source_dir, schema, max_files_per_trigger)
     profiles = user_profiles_stream(stream)
     query = (
         profiles.writeStream.outputMode("append")

@@ -4,7 +4,7 @@ The reference paces its API scraper with a min-interval rate limiter
 (reference: src/scraper/rate_limiter.py:15-75 `RateLimiter.wait`) and
 retries transient failures with capped exponential backoff
 (rate_limiter.py:78-137 `ExponentialBackoff`). In the file-source world
-the volume ceiling is `maxFilesPerTrigger` (files per batch); this
+the volume ceiling is `max_files_per_trigger` (files per batch); this
 module adds the two reference behaviors Spark does not provide:
 
 - a minimum wall-clock interval between batch *starts* (the
@@ -29,7 +29,11 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from data_ingestion_system_spark.streaming.ingest import IngestPaths, dedup_insert_batch
+from data_ingestion_system_spark.streaming.ingest import (
+    IngestPaths,
+    dedup_insert_batch,
+    drain_files,
+)
 
 
 @dataclass
@@ -99,15 +103,11 @@ def run_throttled_ingestion(
         )
         with_backoff(lambda: body(batch_df, batch_id), cfg)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(paths.source_dir)
-    query = (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", paths.checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return drain_files(
+        spark,
+        paths.source_dir,
+        schema,
+        paths.checkpoint_dir,
+        _batch,
+        max_files_per_trigger,
     )
-    query.awaitTermination()
-    return query

@@ -47,9 +47,7 @@ def _first_insert_batches(
     (quarantined fetches excluded), optionally restricted to batches
     <= up_to — the pre-aggregate filter is what lets the parquet scan
     prune provenance partitions."""
-    prov = spark.read.parquet(paths.provenance_dir)
-    if "quarantined" in prov.columns:
-        prov = prov.filter(~F.col("quarantined"))
+    prov = spark.read.parquet(paths.provenance_dir).filter(~F.col("quarantined"))
     if up_to is not None:
         prov = prov.filter(F.col("batch_id") <= int(up_to))
     key_col = [c for c in prov.columns if c not in ("batch_id", "quarantined")][0]

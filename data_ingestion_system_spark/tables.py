@@ -62,6 +62,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.schema(TESTDATA_SCHEMAS[name]).parquet(path)
 
 
+def has_parquet(path: str) -> bool:
+    """Whether `path` is a directory holding at least one parquet file,
+    at its root or in partition subdirs (`batch_id=<n>/...`)."""
+    return any(f.endswith(".parquet") for _, _, files in os.walk(path) for f in files)
+
+
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every testdata table as a temp view (SQL entry point).
 

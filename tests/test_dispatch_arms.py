@@ -22,7 +22,7 @@ from conftest import assert_df_matches_oracle
 
 from data_ingestion_system_spark import tables
 from data_ingestion_system_spark.dedup import clusters, minhash, semdedup, simhash
-from data_ingestion_system_spark.operators import integrity, statistics
+from data_ingestion_system_spark.operators import integrity
 from data_ingestion_system_spark.similarity import ivf
 from data_ingestion_system_spark.registry import load_all
 from data_ingestion_system_spark.tables import TABLE_NAMES
@@ -74,12 +74,6 @@ DISPATCHED = [
         [(semdedup, "SEMDEDUP_BLAS_MIN_ROWS")],
         {"blas": [0], "relational": [HUGE]},
         id="semdedup-hier-pair-term",
-    ),
-    pytest.param(
-        "equi_depth_buckets",
-        [(statistics, "EQUI_DEPTH_DIRECT_MAX_ROWS")],
-        {"distributed": [0], "direct_ntile": [HUGE]},
-        id="equi-depth-exact",
     ),
     pytest.param(
         # component-loop dispatch: the driver union-find arm (at most

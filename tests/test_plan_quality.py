@@ -149,23 +149,12 @@ def test_equi_depth_approx_no_global_sort(spark, sf_dir):
 
 
 def test_equi_depth_exact_dispatch_plans(spark, sf_dir):
-    """`equi_depth_buckets` is size-dispatched (r7): the sf0.001 direct
-    plan keeps the exact global NTILE window; the distributed builder
-    (the >= EQUI_DEPTH_DIRECT_MAX_ROWS plan) must carry NO Window at all
-    in its final bucket-assignment pass — the range exchange + the
-    checkpointed scan feed a pure projection + 10-group aggregate. Both
-    produce the identical answer (equality asserted in
-    test_sketch_refine.py)."""
-    from data_ingestion_system_spark.operators.statistics import (
-        _equi_depth_exact_distributed,
-    )
-    from data_ingestion_system_spark.tables import load_table
-
-    direct = REGISTRY["equi_depth_buckets"].spark(spark, sf_dir)
-    dplan = direct._jdf.queryExecution().executedPlan().toString()
-    assert "ntile" in dplan.lower(), dplan
-
-    dist = _equi_depth_exact_distributed(load_table(spark, sf_dir, "lineitem"))
+    """`equi_depth_buckets` runs the distributed exact NTILE at every
+    size: its final bucket-assignment pass must carry NO Window at all —
+    the range exchange + the checkpointed scan feed a pure projection +
+    10-group aggregate. Its answer is checked against DuckDB's NTILE by
+    the oracle-parity suite."""
+    dist = REGISTRY["equi_depth_buckets"].spark(spark, sf_dir)
     plan = dist._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan, plan
     # the only sort allowed is the final 10-row bucket ordering — the
@@ -175,20 +164,6 @@ def test_equi_depth_exact_dispatch_plans(spark, sf_dir):
             assert "bucket" in line, plan
     # the bucket projection runs straight off the checkpointed scan
     assert "CartesianProduct" not in plan, plan
-
-
-def test_equi_depth_distributed_equals_direct(spark, sf_dir):
-    """The distributed rank scheme computes the exact NTILE answer —
-    bucket sizes, boundaries, and per-bucket stats all equal the global
-    window's, row for row."""
-    from data_ingestion_system_spark.operators.statistics import (
-        _equi_depth_exact_distributed,
-    )
-    from data_ingestion_system_spark.tables import load_table
-
-    direct = REGISTRY["equi_depth_buckets"].spark(spark, sf_dir).collect()
-    dist = _equi_depth_exact_distributed(load_table(spark, sf_dir, "lineitem")).collect()
-    assert [r.asDict() for r in direct] == [r.asDict() for r in dist]
 
 
 def test_bigram_lm_model_broadcast(spark, sf_dir):

@@ -9,11 +9,6 @@ AUDIT_DDL = (
     " dedup_rate double, status string, duration_seconds double"
 )
 
-LEGACY_AUDIT_DDL = (  # pre-rules 7-column layout: no quarantined
-    "batch_id long, fetched long, inserted long, skipped long,"
-    " dedup_rate double, status string, duration_seconds double"
-)
-
 
 def test_run_report_golden(spark):
     audit = spark.createDataFrame(
@@ -49,14 +44,15 @@ def test_run_report_golden(spark):
 
 
 def test_run_report_legacy_seven_column_audit(spark):
-    """A pre-rules audit (no quarantined column) still reconciles:
-    quar reads 0 and a null duration (backfilled rows) prints a dash."""
+    """A backfilled audit row (streaming/backfill.reconstruct_audit) has
+    the live 8-column schema with a null duration: the report prints a
+    dash for it and the totals still reconcile."""
     audit = spark.createDataFrame(
-        [(0, 10, 10, 0, 0.0, "backfilled", None)], LEGACY_AUDIT_DDL
+        [(0, 10, 8, 0, 2, 0.0, "backfilled", None)], AUDIT_DDL
     )
     report = format_run_report(audit)
-    assert "      0       10     10        0      0    0.0%      —  backfilled" in report
-    assert "total quarantined: 0" in report
+    assert "      0       10      8        0      2    0.0%      —  backfilled" in report
+    assert "total quarantined: 2" in report
 
 
 def test_store_snapshot_absent_dir_prints_zeros(spark, tmp_path):

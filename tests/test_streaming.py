@@ -18,21 +18,18 @@ from data_ingestion_system_spark.streaming.ingest import (
     run_windowed_stream,
     streaming_dedup_within_watermark,
 )
-from data_ingestion_system_spark.tables import load_table
+from data_ingestion_system_spark.tables import has_parquet, load_table
 
 EVENTS_SCHEMA_DDL = (
     "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
 )
 
 
-@pytest.fixture()
-def overlap_batches(spark, sf_dir, tmp_path):
-    """Three landing files with ~40% id overlap between consecutive
-    batches (the re-fetch pattern, docs/summery_deck.md:194-203)."""
+def _land_ranges(spark, sf_dir, tmp_path, ranges) -> str:
+    """One landing file per [lo, hi) event_id range, in range order."""
     events = load_table(spark, sf_dir, "events").limit(1000).cache()
     src = str(tmp_path / "landing")
     os.makedirs(src)
-    ranges = [(0, 400), (300, 700), (600, 1000)]
     for i, (lo, hi) in enumerate(ranges):
         (
             events.filter((F.col("event_id") >= lo) & (F.col("event_id") < hi))
@@ -45,6 +42,13 @@ def overlap_batches(spark, sf_dir, tmp_path):
         part = next(p for p in os.listdir(staging) if p.endswith(".parquet"))
         os.rename(staging / part, tmp_path / "landing" / f"batch_{i}.parquet")
     return src
+
+
+@pytest.fixture()
+def overlap_batches(spark, sf_dir, tmp_path):
+    """Three landing files with ~40% id overlap between consecutive
+    batches (the re-fetch pattern, docs/summery_deck.md:194-203)."""
+    return _land_ranges(spark, sf_dir, tmp_path, [(0, 400), (300, 700), (600, 1000)])
 
 
 def test_overlapping_batches_dedup(spark, overlap_batches, tmp_path):
@@ -95,6 +99,48 @@ def test_restart_is_idempotent(spark, overlap_batches, tmp_path):
     run_file_ingestion(spark, paths, schema, key_col="event_id")  # no new files
     assert spark.read.parquet(paths.target_dir).count() == 1000
     assert spark.read.parquet(paths.audit_dir).count() == 3
+
+
+def test_processing_time_trigger_stops_then_available_now_finishes(
+    spark, sf_dir, tmp_path
+):
+    """T1/T8: the continuous (processing-time) trigger runs for
+    `await_seconds` and is stopped; whatever it committed reconciles.
+    An availableNow drain on the same checkpoint then finishes the
+    backlog, leaving the target with exactly the landed key set."""
+    src = _land_ranges(spark, sf_dir, tmp_path, [(0, 400), (300, 600)])
+    paths = IngestPaths(
+        source_dir=src,
+        target_dir=str(tmp_path / "target"),
+        audit_dir=str(tmp_path / "audit"),
+        provenance_dir=str(tmp_path / "prov"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    schema = TESTDATA_SCHEMAS["events"]
+    q = run_file_ingestion(
+        spark, paths, schema, "event_id", processing_time="1 second", await_seconds=8
+    )
+    assert not q.isActive
+
+    def committed():
+        if not has_parquet(paths.audit_dir):
+            return []
+        return spark.read.parquet(paths.audit_dir).orderBy("batch_id").collect()
+
+    def assert_reconciles(audit):
+        for row in audit:
+            assert row.fetched == row.inserted + row.skipped + row.quarantined
+            prov = spark.read.parquet(paths.provenance_dir)
+            assert prov.filter(F.col("batch_id") == row.batch_id).count() == row.fetched
+
+    assert_reconciles(committed())
+
+    run_file_ingestion(spark, paths, schema, "event_id")
+    audit = committed()
+    assert [r.batch_id for r in audit] == [0, 1]
+    assert_reconciles(audit)
+    keys = [r.event_id for r in spark.read.parquet(paths.target_dir).select("event_id").collect()]
+    assert sorted(keys) == list(range(600))
 
 
 def test_batch_replay_does_not_duplicate_side_writes(spark, overlap_batches, tmp_path):
@@ -478,49 +524,3 @@ def test_alert_replay_supersedes_stale_partition(spark, tmp_path):
     evaluate_batch_health(spark, paths, 5, inserted=100, dedup_rate=0.0,
                           duration_seconds=0.1)
     assert not os.path.isdir(stale)
-
-
-def test_alerts_dir_legacy_flat_migrates(spark, tmp_path):
-    """ADVICE r9: an alerts dir written by the flat-append code must be
-    migrated into per-batch partitions (preserving each row's REAL
-    batch_id — the flat files carry the column) before the first
-    partitioned write, or the mixed layout is unreadable."""
-    from data_ingestion_system_spark.streaming.ingest import (
-        IngestPaths, evaluate_batch_health)
-
-    alerts_dir = tmp_path / "alerts"
-    staging = tmp_path / "staging"
-    (
-        spark.createDataFrame(
-            [(1, "dedup_rate_ceiling"), (2, "insert_drop")],
-            "batch_id long, alert string",
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(str(staging))
-    )
-    os.makedirs(alerts_dir)
-    part = next(p for p in os.listdir(staging) if p.endswith(".parquet"))
-    os.rename(staging / part, alerts_dir / part)  # the legacy flat layout
-    paths = IngestPaths(
-        source_dir=str(tmp_path / "src"),
-        target_dir=str(tmp_path / "t"),
-        audit_dir=str(tmp_path / "audit"),
-        provenance_dir=str(tmp_path / "prov"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        alerts_dir=str(alerts_dir),
-    )
-    evaluate_batch_health(spark, paths, 7, inserted=1, dedup_rate=1.0,
-                          duration_seconds=0.1)
-    rows = {(r.batch_id, r.alert) for r in spark.read.parquet(str(alerts_dir)).collect()}
-    assert rows == {
-        (1, "dedup_rate_ceiling"),
-        (2, "insert_drop"),
-        (7, "dedup_rate_ceiling"),
-    }
-    assert not any(f.endswith(".parquet") for f in os.listdir(alerts_dir))
-    # idempotent: running again on the migrated store changes nothing
-    evaluate_batch_health(spark, paths, 7, inserted=1, dedup_rate=1.0,
-                          duration_seconds=0.1)
-    rows2 = {(r.batch_id, r.alert) for r in spark.read.parquet(str(alerts_dir)).collect()}
-    assert rows2 == rows

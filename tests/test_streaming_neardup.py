@@ -224,40 +224,6 @@ def test_kill_and_resume_recovers_without_double_accepting(spark, tmp_path, monk
         assert idx_ids == got
 
 
-def test_resume_over_pre_partitioned_flat_store(spark, tmp_path):
-    """A store written by the pre-r9 flat append layout (no batch_id
-    partition dirs, no batch_id column) must still dedup new batches:
-    the insert first migrates flat files into a batch_id=-1 partition
-    (Spark cannot read a dir mixing root files with partition subdirs),
-    then runs normally; accepted_docs treats -1 as committed."""
-    paths = _paths(tmp_path)
-    neardup_insert_batch(spark, _df(spark, [(1, BASE), (2, OTHER)]), 0, paths)
-
-    # flatten the state dirs to the legacy layout: read (losing the
-    # partition column is the point), rewrite as plain appends
-    import shutil
-
-    for d in (paths.target_dir, paths.bands_dir, paths.tokens_dir):
-        flat = spark.read.parquet(d).drop("batch_id").collect()
-        schema = spark.read.parquet(d).drop("batch_id").schema
-        shutil.rmtree(d)
-        spark.createDataFrame(flat, schema).write.mode("overwrite").parquet(d)
-
-    neardup_insert_batch(
-        spark, _df(spark, [(10, VARIANT), (20, THIRD)]), 1, paths
-    )
-    audit = {r.batch_id: r for r in spark.read.parquet(paths.audit_dir).collect()}
-    assert audit[1].dup_vs_store == 1  # VARIANT ~ legacy-stored BASE
-    assert audit[1].inserted == 1
-    assert os.path.isdir(os.path.join(paths.target_dir, "batch_id=-1"))
-
-    from data_ingestion_system_spark.streaming.neardup import accepted_docs
-
-    # committed view spans the migrated legacy rows AND the new batch
-    got = sorted(r.doc_id for r in accepted_docs(spark, paths).collect())
-    assert got == [1, 2, 20]
-
-
 def test_accepted_docs_before_any_committed_state(spark, tmp_path):
     """Fresh deployment (or crash before batch 0's target write): the
     committed view is empty-with-schema when a schema is supplied and a

@@ -45,15 +45,6 @@ N_EVENT_BATCHES = 8
 N_DOC_BATCHES = 5
 
 
-def _batch_sec(a: dict):
-    """Per-batch wall from the audit row, None for rows written before the
-    duration_seconds column existed (an audit dir resumed across the r8
-    schema change holds mixed 5/6-column files; parquet schema-merges the
-    missing column to null)."""
-    d = a.get("duration_seconds")
-    return round(d, 2) if d is not None else None
-
-
 def _dir_bytes(path: str) -> int:
     return sum(
         os.path.getsize(p)
@@ -61,12 +52,25 @@ def _dir_bytes(path: str) -> int:
     ) if os.path.isdir(path) else 0
 
 
+def _land(df, n_files: int, src: str) -> None:
+    """Write `df` as `n_files` landing files, one micro-batch each under
+    maxFilesPerTrigger=1. The file source drains oldest mtime first and
+    parallel write tasks finish in any order (often in the same
+    millisecond), so the mtimes are stamped in part-file order: without
+    it the batch order, and with it the near-dup per-batch counts,
+    change from run to run."""
+    df.repartition(n_files).write.mode("overwrite").parquet(src)
+    parts = sorted(glob.glob(os.path.join(src, "part-*.parquet")))
+    t0 = time.time() - len(parts)
+    for i, part in enumerate(parts):
+        os.utime(part, (t0 + i, t0 + i))
+
+
 def probe_event_ingestion(spark, sf_dir: str, root: str) -> dict:
     ev = load_table(spark, sf_dir, "events")
     n = ev.count()
     src = os.path.join(root, "landing_events")
-    # N landing files = N micro-batches under maxFilesPerTrigger=1
-    ev.repartition(N_EVENT_BATCHES).write.mode("overwrite").parquet(src)
+    _land(ev, N_EVENT_BATCHES, src)
     paths = IngestPaths(
         source_dir=src,
         target_dir=os.path.join(root, "ev_target"),
@@ -87,7 +91,7 @@ def probe_event_ingestion(spark, sf_dir: str, root: str) -> dict:
         "batches": len(audit),
         "wall_sec": round(wall, 1),
         "rows_per_sec": round(n / wall),
-        "per_batch_sec": [_batch_sec(a) for a in audit],
+        "per_batch_sec": [round(a["duration_seconds"], 2) for a in audit],
         "per_batch_inserted": [a["inserted"] for a in audit],
         "target_bytes_final": _dir_bytes(paths.target_dir),
     }
@@ -97,7 +101,7 @@ def probe_neardup_ingestion(spark, sf_dir: str, root: str) -> dict:
     docs = load_table(spark, sf_dir, "documents")
     n = docs.count()
     src = os.path.join(root, "landing_docs")
-    docs.repartition(N_DOC_BATCHES).write.mode("overwrite").parquet(src)
+    _land(docs, N_DOC_BATCHES, src)
     paths = NearDupPaths(
         source_dir=src,
         target_dir=os.path.join(root, "nd_target"),
@@ -124,7 +128,7 @@ def probe_neardup_ingestion(spark, sf_dir: str, root: str) -> dict:
             {k: a[k] for k in ("batch_id", "fetched", "dup_vs_store", "dup_within_batch", "inserted")}
             for a in audit
         ],
-        "per_batch_sec": [_batch_sec(a) for a in audit],
+        "per_batch_sec": [round(a["duration_seconds"], 2) for a in audit],
         "inserted_total": inserted,
         "index_state_bytes": _dir_bytes(paths.bands_dir) + _dir_bytes(paths.tokens_dir),
     }
