@@ -21,7 +21,7 @@ hashes instead of seeded random affine maps.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_ingestion_system_spark.functions.scalar import round_port
@@ -75,15 +75,33 @@ WIDE_ROWS = 4  # rows per band on the wide rung
 N_WIDE_BANDS = N_HASHES // WIDE_ROWS
 
 
-def token_sets(docs: DataFrame, toks: DataFrame | None = None) -> DataFrame:
-    """Distinct (doc_id, shingle) pairs — 3-word shingle sets.
+def shingle_set(ts: Column) -> Column:
+    """A doc's sorted DISTINCT 3-word shingle array, from its token array
+    `ts` — row-local expression algebra (transform / array_distinct /
+    array_sort), no explode and no shuffle.
 
     Shingling (not unigrams) is what makes MinHash discriminative: the
     testdata vocabulary is ~31 words, so unigram sets of long documents
     are all nearly identical (Jaccard≈1 for most pairs → LSH degenerates
     to all-pairs, measured 126 s at sf0.1); 3-gram shingle space is
     ~27k, restoring locality. Documents shorter than 3 tokens use the
-    whole text as their single shingle.
+    whole text as their single shingle."""
+    shingles = F.when(
+        F.size(ts) >= 3,
+        F.transform(
+            F.sequence(F.lit(0), F.size(ts) - 3),
+            lambda i: F.concat(ts[i], F.lit(" "), ts[i + 1], F.lit(" "), ts[i + 2]),
+        ),
+    ).otherwise(F.array(F.concat_ws(" ", ts)))
+    return F.array_sort(F.array_distinct(shingles))
+
+
+def token_set_arrays(docs: DataFrame, toks: DataFrame | None = None) -> DataFrame:
+    """(doc_id, tset, n): each doc's `shingle_set` and its cardinality,
+    built ROW-LOCALLY. The r9 chain exploded to a (doc_id, token)
+    relation and then paid a groupBy exchange per consumer to collapse
+    it back (one for the signature mins, one for the verify arrays); the
+    set never needed to leave its row.
 
     `toks` optionally supplies a pre-tokenized (doc_id, ts) relation
     shared with other pipeline stages (text/pipeline.py)."""
@@ -93,70 +111,23 @@ def token_sets(docs: DataFrame, toks: DataFrame | None = None) -> DataFrame:
         )
     else:
         toks = toks.select("doc_id", "ts")
-    return toks.select(
-        "doc_id",
-        F.explode(
-            F.when(
-                F.size("ts") >= 3,
-                F.expr(
-                    "transform(sequence(0, size(ts) - 3),"
-                    " i -> concat(ts[i], ' ', ts[i + 1], ' ', ts[i + 2]))"
-                ),
-            ).otherwise(F.array(F.concat_ws(" ", F.col("ts"))))
-        ).alias("token"),
-    ).distinct()
-
-
-def token_set_arrays(docs: DataFrame, toks: DataFrame | None = None) -> DataFrame:
-    """(doc_id, tset, n): each doc's sorted DISTINCT shingle array and
-    its cardinality, built ROW-LOCALLY — transform / array_distinct /
-    array_sort expression algebra, no explode and no shuffle (guide
-    §2.4). The r9 chain exploded to a (doc_id, token) relation and then
-    paid a groupBy exchange per consumer to collapse it back (one for
-    the signature mins, one for the verify arrays); the set never needed
-    to leave its row. Same shingle definition as `token_sets` (3-word
-    windows, whole text below 3 tokens), so `array_sort(array_distinct)`
-    here equals `sort_array(collect_list)` over the exploded distinct
-    relation element for element."""
-    if toks is None:
-        toks = fan_out(docs, "doc_id").select(
-            "doc_id", F.split(F.col("text"), " ").alias("ts")
-        )
-    else:
-        toks = toks.select("doc_id", "ts")
-    shingles = F.when(
-        F.size("ts") >= 3,
-        F.expr(
-            "transform(sequence(0, size(ts) - 3),"
-            " i -> concat(ts[i], ' ', ts[i + 1], ' ', ts[i + 2]))"
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", F.col("ts"))))
-    return toks.select(
-        "doc_id", F.array_sort(F.array_distinct(shingles)).alias("tset")
-    ).withColumn("n", F.size("tset").cast("long"))
-
-
-def minhash_signatures(tokens: DataFrame) -> DataFrame:
-    """One row per doc with m0..m{H-1} minhash columns."""
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("token")))).alias(f"m{i}")
-        for i in range(N_HASHES)
-    ]
-    return tokens.groupBy("doc_id").agg(*aggs)
+    return toks.select("doc_id", shingle_set(F.col("ts")).alias("tset")).withColumn(
+        "n", F.size("tset").cast("long")
+    )
 
 
 def signatures_from_sets(tsets: DataFrame) -> DataFrame:
-    """Signature columns computed from the per-doc shingle ARRAY — a
-    narrow projection (array_min over transform), no aggregation: the
-    min over md5('i:'||t) of the same element set `minhash_signatures`
-    reduces with a groupBy, without the exchange."""
+    """`tsets` plus the m0..m{H-1} MinHash columns of its `tset` — a
+    narrow projection (array_min over transform of md5('i:'||t)), no
+    aggregation. Every input column passes through, so a caller can
+    carry a batch's own columns alongside the signature."""
     cols = [
         F.expr(
             f"array_min(transform(tset, t -> md5(concat('{i}:', t))))"
         ).alias(f"m{i}")
         for i in range(N_HASHES)
     ]
-    return tsets.select("doc_id", *cols)
+    return tsets.select("*", *cols)
 
 
 def band_keys(sigs: DataFrame) -> DataFrame:
@@ -247,18 +218,25 @@ def candidate_pairs(bands: DataFrame, n_docs: int | None = None) -> DataFrame:
     )
 
 
-def verified_pairs(
-    tokens: DataFrame, cand: DataFrame, threshold: float, n_docs: int | None = None
+def verified_pairs_from_sets(
+    tsets: DataFrame,
+    cand: DataFrame,
+    threshold: float,
+    n_docs: int | None = None,
+    tsets_b: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact Jaccard on candidates only; keep pairs ≥ threshold.
+    """Exact Jaccard on candidates only; keep pairs ≥ threshold, over the
+    (doc_id, tset, n) set relation (`token_set_arrays`).
 
-    Verification is array-based (r6): each doc's shingle set collapses
-    to ONE sorted array row, candidates join the array relation twice,
-    and `array_intersect` computes the overlap per pair — two
+    Verification is array-based (r6): each doc's shingle set is ONE
+    sorted array row, candidates join the array relation twice, and
+    `array_intersect` computes the overlap per pair — two
     candidate-sized joins instead of the exploded token⋈token join,
     whose intermediate is Σ_cand |A| rows (~167M at sf10). Same-session
     A/B, identical answers: sf1.0 7.5/6.1 s → 3.8/2.6 s, sf10 (4.38M
-    candidates) 64.6/58.8 s → 29.1/24.9 s.
+    candidates) 64.6/58.8 s → 29.1/24.9 s. `tsets_b`, when given, holds
+    the doc_b side's sets (the streaming store probe: stored docs on
+    the doc_a side, the batch on the doc_b side).
 
     Join strategy is threshold-dispatched like the width pins
     (tables._should_pin): above the corpus floor — or when the lineage
@@ -271,28 +249,16 @@ def verified_pairs(
     mode at 100 TB. Small corpora keep AQE's broadcast plan. Streaming
     callers pass n_docs=0: a micro-batch is bounded by the trigger
     interval, so the broadcast verify is the right plan there."""
-    tsets = tokens.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list("token")).alias("tset"),
-        F.count("*").alias("n"),
-    )
-    return verified_pairs_from_sets(tsets, cand, threshold, n_docs=n_docs)
-
-
-def verified_pairs_from_sets(
-    tsets: DataFrame, cand: DataFrame, threshold: float, n_docs: int | None = None
-) -> DataFrame:
-    """`verified_pairs` taking the pre-built (doc_id, tset, n) relation
-    (token_set_arrays) directly — batch callers build the set arrays
-    once, checkpoint 1 row/doc, and skip the exploded-relation groupBy
-    entirely."""
     from data_ingestion_system_spark.tables import _should_pin
 
-    big = _should_pin(tsets, n_docs)
-    if big:
+    if tsets_b is None:
+        tsets_b = tsets
+    if _should_pin(tsets, n_docs):
         tsets = tsets.hint("merge")
+        tsets_b = tsets_b.hint("merge")
         cand = cand.hint("merge")
     ta = tsets.alias("ta")
-    tb = tsets.alias("tb")
+    tb = tsets_b.alias("tb")
     jac = (
         cand.join(ta, F.col("doc_a") == F.col("ta.doc_id"))
         .join(tb, F.col("doc_b") == F.col("tb.doc_id"))

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_system_spark.operators.statemachine import current_state, next_batch
-from data_ingestion_system_spark.tables import has_parquet
+from data_ingestion_system_spark.tables import has_parquet, local_rows_df
 
 SENTIMENTS = {"very_negative", "negative", "neutral", "positive", "very_positive"}
 CONFIDENCES = {"high", "medium", "low"}
@@ -67,17 +67,17 @@ class LabelingStore:
         return self.spark.read.parquet(self.labels_dir) if has_parquet(self.labels_dir) else None
 
     def append_events(self, rows: list[tuple]) -> None:
-        self.spark.createDataFrame(rows, _EVENT_SCHEMA).coalesce(1).write.mode(
+        local_rows_df(self.spark, rows, _EVENT_SCHEMA).coalesce(1).write.mode(
             "append"
         ).parquet(self.events_dir)
 
     def append_label(self, row: tuple) -> None:
-        self.spark.createDataFrame([row], _LABEL_SCHEMA).coalesce(1).write.mode(
+        local_rows_df(self.spark, [row], _LABEL_SCHEMA).coalesce(1).write.mode(
             "append"
         ).parquet(self.labels_dir)
 
     def append_session(self, row: tuple) -> None:
-        self.spark.createDataFrame([row], _SESSION_SCHEMA).coalesce(1).write.mode(
+        local_rows_df(self.spark, [row], _SESSION_SCHEMA).coalesce(1).write.mode(
             "append"
         ).parquet(self.sessions_dir)
 

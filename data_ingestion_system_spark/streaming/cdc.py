@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from data_ingestion_system_spark.operators.merge import _swap_write
 from data_ingestion_system_spark.streaming.ingest import drain_files
+from data_ingestion_system_spark.tables import local_rows_df
 
 STATE_COLS = ["key", "last_seq", "payload_type", "payload_value"]
 
@@ -135,7 +136,8 @@ def run_cdc_stream(
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         counters = cdc_apply_batch(spark, batch_df, state_dir)
         if audit_dir is not None:
-            spark.createDataFrame(
+            local_rows_df(
+                spark,
                 [
                     (
                         batch_id,

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_system_spark.streaming.ingest import drain_files
+from data_ingestion_system_spark.tables import local_rows_df
 
 _PSI_DECILES = [i / 10.0 for i in range(1, 10)]
 
@@ -105,7 +106,8 @@ def run_drift_monitor(
         psi = batch_psi(
             batch_df.select(F.col(value_col).alias("value")), cuts, shares
         )
-        spark.createDataFrame(
+        local_rows_df(
+            spark,
             [(int(batch_id), n, float(psi), bool(psi > 0.2), _time.time())],
             "batch_id long, n_rows long, psi double, alert boolean, ts double",
         ).write.mode("append").parquet(psi_audit_dir)

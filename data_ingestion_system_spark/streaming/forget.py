@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_system_spark.streaming.ingest import IngestPaths
-from data_ingestion_system_spark.tables import has_parquet
+from data_ingestion_system_spark.tables import has_parquet, local_rows_df
 
 TOMBSTONES = "tombstones"
 
@@ -75,9 +75,7 @@ def forget_keys(
 ) -> dict:
     """Erase the keys from target + provenance and append them to the
     suppression list. Returns per-store removed-row counts."""
-    keys = spark.createDataFrame(
-        [(v,) for v in key_values], f"{key_col} long"
-    ).localCheckpoint(eager=True)
+    keys = local_rows_df(spark, [(v,) for v in key_values], f"{key_col} long")
     removed_target = _rewrite_without(spark, paths.target_dir, key_col, keys, None)
     removed_prov = _rewrite_without(
         spark, paths.provenance_dir, key_col, keys, "batch_id"

@@ -30,11 +30,11 @@ import shutil
 from dataclasses import dataclass
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from data_ingestion_system_spark.tables import has_parquet
+from data_ingestion_system_spark.tables import has_parquet, local_rows_df
 
 
 @dataclass
@@ -47,6 +47,13 @@ class IngestPaths:
     alerts_dir: str | None = None  # ingestion_metrics alerts (T5/T6)
     quarantine_dir: str | None = None  # CHECK-rule violators (+ reasons)
 
+
+# the audit row both the writer and the pinned-schema readers use
+AUDIT_SCHEMA = (
+    "batch_id long, fetched long, inserted long, skipped long,"
+    " quarantined long, dedup_rate double, status string,"
+    " duration_seconds double"
+)
 
 # thresholds mirroring monitor.py:72-78
 DEDUP_RATE_ALERT = 0.995
@@ -76,23 +83,22 @@ def evaluate_batch_health(
     same partition (previously alerts were appended AFTER the marker —
     a crash in between lost them forever, since replay short-circuits
     on the existing audit row). The baseline read is a 5-row
-    TakeOrdered over the one-row-per-batch audit — metadata scale — not
-    a full-history single-partition window sort; a healthy batch writes
-    NOTHING (no empty-file accretion in alerts_dir)."""
+    TakeOrdered over the one-row-per-batch audit — one job, metadata
+    scale — not a full-history single-partition window sort; a healthy
+    batch writes NOTHING (no empty-file accretion in alerts_dir)."""
     avg_inserted5 = avg_duration5 = None
     if has_parquet(paths.audit_dir):
         prev = (
-            spark.read.parquet(paths.audit_dir)
+            spark.read.schema(AUDIT_SCHEMA)
+            .parquet(paths.audit_dir)
             .filter(F.col("batch_id") < int(batch_id))
             .orderBy(F.col("batch_id").desc())
             .limit(5)
-            .agg(
-                F.avg(F.col("inserted").cast("double")).alias("ai"),
-                F.avg("duration_seconds").alias("ad"),
-            )
-            .collect()[0]  # one aggregate row — metadata scale
+            .select("inserted", "duration_seconds")
+            .collect()  # ≤ 5 rows — metadata scale
         )
-        avg_inserted5, avg_duration5 = prev.ai, prev.ad
+        avg_inserted5 = _mean([r.inserted for r in prev])
+        avg_duration5 = _mean([r.duration_seconds for r in prev])
     alerts = []
     if dedup_rate > DEDUP_RATE_ALERT:
         alerts.append("dedup_rate_ceiling")
@@ -101,8 +107,8 @@ def evaluate_batch_health(
     if avg_duration5 is not None and duration_seconds > DURATION_SPIKE_FACTOR * avg_duration5:
         alerts.append("duration_spike")
     if alerts:
-        spark.createDataFrame(
-            [(int(batch_id), a) for a in alerts], "batch_id long, alert string"
+        local_rows_df(
+            spark, [(int(batch_id), a) for a in alerts], "batch_id long, alert string"
         ).write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy("batch_id").parquet(paths.alerts_dir)
@@ -116,6 +122,12 @@ def evaluate_batch_health(
         stale = os.path.join(paths.alerts_dir, f"batch_id={int(batch_id)}")
         if os.path.isdir(stale):
             shutil.rmtree(stale)
+
+
+def _mean(values: list) -> float | None:
+    """SQL AVG over a driver-held column: nulls ignored, None when empty."""
+    vals = [float(v) for v in values if v is not None]
+    return sum(vals) / len(vals) if vals else None
 
 
 def file_stream(
@@ -175,13 +187,15 @@ def drain_files(
 
 def batch_committed(spark: SparkSession, audit_dir: str, batch_id: int) -> bool:
     """Whether `batch_id`'s audit row — the commit marker both write
-    paths append LAST — exists, i.e. the batch is a replay to skip."""
-    return has_parquet(audit_dir) and (
-        spark.read.parquet(audit_dir)
+    paths append LAST — exists, i.e. the batch is a replay to skip. One
+    job: the `batch_id` column is read with its type pinned (no footer
+    inference) and the matching rows are collected (no limit, whose
+    partition scale-up can take several jobs)."""
+    return has_parquet(audit_dir) and bool(
+        spark.read.schema("batch_id long")
+        .parquet(audit_dir)
         .filter(F.col("batch_id") == int(batch_id))
-        .limit(1)
-        .count()
-        > 0
+        .collect()
     )
 
 
@@ -197,7 +211,8 @@ def dedup_insert_batch(
 
     Mirrors pipeline.run (pipeline.py:82-159): dedup within batch, dedup
     against store, append survivors, record run + provenance. Counts are
-    computed from DataFrame aggregates, not driver loops.
+    observed (`Observation`) on the target and provenance writes, not
+    computed by count jobs or driver loops.
 
     With ``rules`` (operators/integrity.Rule list — the CHECK-constraint
     gate the reference's schema enforces per-row, schema.sql:58,89-90,
@@ -228,8 +243,8 @@ def dedup_insert_batch(
     if batch_committed(spark, paths.audit_dir, batch_id):
         return
 
+    # the checkpoint feeds the quarantine, target and provenance writes
     batch_df = batch_df.dropDuplicates([key_col]).localCheckpoint(eager=True)
-    fetched = batch_df.count()
     # provenance logs EVERY fetched key — including ones the CHECK gate
     # quarantines below — so the fetched/inserted/skipped/quarantined
     # audit counts reconcile against the provenance log exactly. The
@@ -239,19 +254,16 @@ def dedup_insert_batch(
     # would backdate snapshots to Q.
     prov_df = batch_df.select(F.col(key_col), F.lit(False).alias("quarantined"))
 
-    quarantined = 0
     if rules:
         from data_ingestion_system_spark.operators.integrity import validate
 
         valid_df, quar_df = validate(batch_df, rules)
-        if paths.quarantine_dir is not None:
-            quar_df.withColumn(
-                "batch_id", F.lit(int(batch_id)).cast("long")
-            ).write.mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).partitionBy("batch_id").parquet(paths.quarantine_dir)
-        batch_df = valid_df.localCheckpoint(eager=True)
-        quarantined = fetched - batch_df.count()
+        quar_df.withColumn(
+            "batch_id", F.lit(int(batch_id)).cast("long")
+        ).write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("batch_id").parquet(paths.quarantine_dir)
+        batch_df = valid_df
         prov_df = valid_df.select(
             F.col(key_col), F.lit(False).alias("quarantined")
         ).unionByName(
@@ -259,7 +271,8 @@ def dedup_insert_batch(
         )
 
     if has_parquet(paths.target_dir):
-        existing_keys = spark.read.parquet(paths.target_dir).select(key_col)
+        key_type = batch_df.schema[key_col].dataType.simpleString()
+        existing_keys = spark.read.schema(f"{key_col} {key_type}").parquet(paths.target_dir)
         # eager localCheckpoint pins the anti-join result: the lineage must
         # not recompute by re-reading target_dir mid-append (self-read-write)
         new_rows = batch_df.join(existing_keys, key_col, "left_anti").localCheckpoint(
@@ -267,19 +280,29 @@ def dedup_insert_batch(
         )
     else:
         new_rows = batch_df
-    inserted = new_rows.count()
-    skipped = fetched - quarantined - inserted
-    status = "completed" if fetched else "empty"
 
-    new_rows.write.mode("append").parquet(paths.target_dir)
+    # counts are observed on the writes, in their result stages: no
+    # count jobs, and a retried map stage cannot count twice
+    inserted_obs, fetched_obs = Observation(), Observation()
+    new_rows.observe(inserted_obs, F.count(F.lit(1)).alias("n")).write.mode(
+        "append"
+    ).parquet(paths.target_dir)
     # provenance: every fetched key is logged for this run, including skips
     # (review_scrape_log records re-fetches too, db_manager.py:488-506);
     # partitioned by batch_id + dynamic overwrite → idempotent under replay
-    prov_df.withColumn(
+    prov_df.observe(
+        fetched_obs,
+        F.count(F.lit(1)).alias("fetched"),
+        F.count_if(F.col("quarantined")).alias("quarantined"),
+    ).withColumn(
         "batch_id", F.lit(batch_id).cast("long")
     ).write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
         "batch_id"
     ).parquet(paths.provenance_dir)
+    inserted = inserted_obs.get["n"]
+    fetched, quarantined = fetched_obs.get["fetched"], fetched_obs.get["quarantined"]
+    skipped = fetched - quarantined - inserted
+    status = "completed" if fetched else "empty"
     dedup_rate = float(skipped) / fetched if fetched else 0.0
     duration = _time.perf_counter() - t0
     # health alerts are pre-marker writes (dynamic overwrite of this
@@ -289,14 +312,12 @@ def dedup_insert_batch(
         evaluate_batch_health(
             spark, paths, int(batch_id), inserted, dedup_rate, duration
         )
-    audit = spark.createDataFrame(
+    local_rows_df(
+        spark,
         [(int(batch_id), fetched, inserted, skipped, quarantined,
           dedup_rate, status, duration)],
-        "batch_id long, fetched long, inserted long, skipped long,"
-        " quarantined long, dedup_rate double, status string,"
-        " duration_seconds double",
-    )
-    audit.write.mode("append").parquet(paths.audit_dir)
+        AUDIT_SCHEMA,
+    ).write.mode("append").parquet(paths.audit_dir)
 
 
 def run_file_ingestion(

@@ -26,10 +26,11 @@ the dedup/minhash.py pipeline incrementally inside foreachBatch:
   double-accept, no self-rejection. `accepted_docs` is the committed
   read view (target partitions whose audit marker exists).
 
-At scale the band-key join shuffles only (doc_id, band_key) pairs and
-the token join only candidate docs' shingles; accepted-state appends are
-partitioned by batch via file layout. Nothing about the corpus ever
-sits in driver memory.
+At scale the band-key join broadcasts the batch's (doc_id, band_key)
+rows and streams the index past them, and the token read keeps only
+candidate docs' shingles; accepted-state appends are partitioned by
+batch via file layout. Nothing about the corpus ever sits in driver
+memory.
 """
 
 from __future__ import annotations
@@ -37,7 +38,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -45,12 +46,12 @@ from data_ingestion_system_spark.dedup.minhash import (
     JACCARD_THRESHOLD,
     band_keys,
     candidate_pairs,
-    minhash_signatures,
-    token_sets,
-    verified_pairs,
+    shingle_set,
+    signatures_from_sets,
+    verified_pairs_from_sets,
 )
 from data_ingestion_system_spark.streaming.ingest import batch_committed, drain_files
-from data_ingestion_system_spark.tables import has_parquet
+from data_ingestion_system_spark.tables import has_parquet, local_rows_df
 
 
 @dataclass
@@ -74,17 +75,26 @@ def neardup_insert_batch(
     within the batch (smallest doc_id of a verified pair wins), append
     survivors and their index state, record the audit row (with the
     batch's wall seconds, so scale probes read per-batch cost from the
-    operator's own audit instead of inferring it from totals)."""
+    operator's own audit instead of inferring it from totals).
+
+    Row-local: each doc's shingle set and MinHash signature are computed
+    on its own row (`shingle_set`, `signatures_from_sets`) on the output
+    of `dropDuplicates("doc_id")`, whose exchange already hashes by
+    doc_id, and the batch is checkpointed once. The counts come from one
+    Observation on the survivors' checkpoint (no count jobs), and the
+    index rows are the survivors' own arrays exploded (no semi-joins
+    back onto the batch's index relations)."""
     import time as _time
 
     t0 = _time.perf_counter()
     if batch_committed(spark, paths.audit_dir, batch_id):
         return
 
-    batch = batch_df.dropDuplicates(["doc_id"]).localCheckpoint(eager=True)
-    fetched = batch.count()
-    toks = token_sets(batch).localCheckpoint(eager=True)
-    bands = band_keys(minhash_signatures(toks)).localCheckpoint(eager=True)
+    batch = signatures_from_sets(
+        batch_df.dropDuplicates(["doc_id"])
+        .withColumn("tset", shingle_set(F.split(F.col("text"), " ")))
+        .withColumn("n", F.size("tset").cast("long"))
+    ).localCheckpoint(eager=True)
 
     if has_parquet(paths.bands_dir):
         # exclude this batch's own partition: a replay of a mid-batch
@@ -92,74 +102,98 @@ def neardup_insert_batch(
         # the store and reject every doc as a near-dup of itself (then
         # overwrite the partition with nothing — silent data loss). The
         # filter is a pruned partition scan, not a data read.
+        doc_id = batch.schema["doc_id"].dataType.simpleString()
         store_bands = (
-            spark.read.parquet(paths.bands_dir)
+            spark.read.schema(f"doc_id {doc_id}, band_key string, batch_id long")
+            .parquet(paths.bands_dir)
             .filter(F.col("batch_id") != int(batch_id))
-            .select("doc_id", "band_key")
         )
+        # every broadcast here is batch-sized (the batch's band keys,
+        # its candidate store ids, the ids to drop): the store side
+        # streams through without a shuffle, and joins onto the
+        # checkpointed batch need no exchange on it
         cross = (
-            bands.alias("n")
+            F.broadcast(band_keys(batch)).alias("n")
             .join(store_bands.alias("s"), F.col("n.band_key") == F.col("s.band_key"))
             .select(
                 F.col("s.doc_id").alias("doc_a"), F.col("n.doc_id").alias("doc_b")
             )
-            .distinct()
         )
-        # exact Jaccard needs both sides' shingles: batch tokens plus the
-        # stored shingles of ONLY the candidate store docs (semi-join —
-        # the index, not the corpus, bounds what gets read)
-        store_toks = (
-            spark.read.parquet(paths.tokens_dir)
+        # exact Jaccard needs both sides' shingles: the batch's are on
+        # its rows; of the store only the candidate docs' (semi-join —
+        # the index, not the corpus, bounds what gets read) are
+        # collapsed back into arrays
+        store_sets = (
+            spark.read.schema(f"doc_id {doc_id}, token string, batch_id long")
+            .parquet(paths.tokens_dir)
             .filter(F.col("batch_id") != int(batch_id))
-            .select("doc_id", "token")
             .join(
-                cross.select(F.col("doc_a").alias("doc_id")).distinct(),
+                F.broadcast(cross.select(F.col("doc_a").alias("doc_id"))),
                 "doc_id",
                 "left_semi",
             )
+            .groupBy("doc_id")
+            .agg(
+                F.array_sort(F.collect_list("token")).alias("tset"),
+                F.count("*").alias("n"),
+            )
         )
-        # distinct: a re-delivered doc_id appears in BOTH sides of the
-        # union with identical shingles; duplicates would double n_common
-        dup_vs_store_ids = (
-            verified_pairs(toks.unionByName(store_toks).distinct(), cross, threshold, n_docs=0)
-            .select(F.col("doc_b").alias("doc_id"))
-            .distinct()
-        )
-        remaining = batch.join(dup_vs_store_ids, "doc_id", "left_anti").localCheckpoint(
-            eager=True
+        flagged = batch.join(
+            F.broadcast(
+                _flag(
+                    verified_pairs_from_sets(
+                        store_sets, cross, threshold, n_docs=0, tsets_b=batch
+                    ),
+                    "dup_vs_store",
+                )
+            ),
+            "doc_id",
+            "left",
         )
     else:
-        remaining = batch
-    after_store = remaining.count()
+        flagged = batch.withColumn("dup_vs_store", F.lit(None).cast("boolean"))
 
-    rtoks = toks.join(remaining.select("doc_id"), "doc_id", "left_semi")
-    rbands = bands.join(remaining.select("doc_id"), "doc_id", "left_semi")
-    within = verified_pairs(rtoks, candidate_pairs(rbands, n_docs=0), threshold, n_docs=0)
-    drop_ids = within.select(F.col("doc_b").alias("doc_id")).distinct()
-    survivors = remaining.join(drop_ids, "doc_id", "left_anti").localCheckpoint(eager=True)
-    inserted = survivors.count()
+    remaining = flagged.filter(F.col("dup_vs_store").isNull())
+    within = verified_pairs_from_sets(
+        remaining, candidate_pairs(band_keys(remaining), n_docs=0), threshold, n_docs=0
+    )
+    flagged = flagged.join(F.broadcast(_flag(within, "dup_within_batch")), "doc_id", "left")
+    # the Observation sits in the checkpoint's result stage: a retried
+    # map stage cannot count twice
+    counts = Observation()
+    survivors = (
+        flagged.observe(
+            counts,
+            F.count(F.lit(1)).alias("fetched"),
+            F.count("dup_vs_store").alias("dup_vs_store"),
+            F.count("dup_within_batch").alias("dup_within_batch"),
+        )
+        .filter(F.col("dup_vs_store").isNull() & F.col("dup_within_batch").isNull())
+        .localCheckpoint(eager=True)
+    )
+    c = counts.get
 
     # state writes go to per-batch partition dirs with OVERWRITE: a
     # replayed mid-batch crash replaces its own partial attempt instead
     # of appending a second copy (the audit marker below stays the
     # commit point — it is written LAST, plain append, one row)
     sub = f"batch_id={int(batch_id)}"
-    survivors.write.mode("overwrite").parquet(os.path.join(paths.target_dir, sub))
-    keep = survivors.select("doc_id")
-    bands.join(keep, "doc_id", "left_semi").write.mode("overwrite").parquet(
-        os.path.join(paths.bands_dir, sub)
+    survivors.select(*batch_df.columns).write.mode("overwrite").parquet(
+        os.path.join(paths.target_dir, sub)
     )
-    toks.join(keep, "doc_id", "left_semi").write.mode("overwrite").parquet(
-        os.path.join(paths.tokens_dir, sub)
-    )
-    audit = spark.createDataFrame(
+    band_keys(survivors).write.mode("overwrite").parquet(os.path.join(paths.bands_dir, sub))
+    survivors.select("doc_id", F.explode("tset").alias("token")).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(paths.tokens_dir, sub))
+    audit = local_rows_df(
+        spark,
         [
             (
                 int(batch_id),
-                fetched,
-                fetched - after_store,
-                after_store - inserted,
-                inserted,
+                c["fetched"],
+                c["dup_vs_store"],
+                c["dup_within_batch"],
+                c["fetched"] - c["dup_vs_store"] - c["dup_within_batch"],
                 round(_time.perf_counter() - t0, 3),
             )
         ],
@@ -167,6 +201,14 @@ def neardup_insert_batch(
         " inserted long, duration_seconds double",
     )
     _append_audit(audit, paths.audit_dir)
+
+
+def _flag(pairs: DataFrame, name: str) -> DataFrame:
+    """The distinct doc_b ids of verified `pairs` — the docs to drop —
+    with a true `name` column to left-join onto the batch."""
+    return pairs.select(F.col("doc_b").alias("doc_id")).distinct().withColumn(
+        name, F.lit(True)
+    )
 
 
 def _append_audit(audit: DataFrame, audit_dir: str) -> None:

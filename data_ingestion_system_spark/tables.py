@@ -509,6 +509,32 @@ def replay_rows_df(spark: SparkSession, rows: list, schema: StructType | str) ->
     return spark.createDataFrame(spark.sparkContext.parallelize(list(rows), 1), schema)
 
 
+def local_rows_df(spark: SparkSession, rows: list, schema: StructType | str) -> DataFrame:
+    """Small driver-built row set (audit, alert, label rows) → LocalRelation.
+
+    `createDataFrame(list, schema)` pickles the rows through `parallelize`
+    into a PythonRDD, so every append starts Python worker tasks (and the
+    first one in a session starts the `pyspark.daemon`). An Arrow table
+    plans as a `LocalTableScan` and runs no Python on the executors: one
+    write job, one part file. Column types and nullability are `schema`'s
+    exactly; top-level timestamps take the same wall-clock reading as
+    `createDataFrame(list, ...)` (a naive datetime is local time)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import TimestampType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    arrays = []
+    for field, arrow_field, values in zip(schema.fields, arrow_schema, columns):
+        if isinstance(field.dataType, TimestampType):
+            values = [None if v is None else field.dataType.toInternal(v) for v in values]
+        arrays.append(pa.array(values, arrow_field.type))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow_schema), schema)
+
+
 def fingerprint_fixture_dir(prefix: str, sf_dir: str, table: str = "events") -> str:
     """Deterministic temp-dir path for fixtures derived from a testdata
     table, keyed on the source parquet's (path, mtime_ns, size) via md5 —

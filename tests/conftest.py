@@ -46,6 +46,14 @@ def duck():
     con.close()
 
 
+def drain_jobs(spark, query) -> int:
+    """Spark jobs one streaming drain ran, from the status store: a
+    stream runs its batches under the job group of its runId."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(str(query.runId)))
+
+
 def _normalize(value):
     """Make a cell comparable across engines (mirror of the driver's
     order-insensitive value compare, with float tolerance handled by caller)."""

@@ -9,6 +9,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from conftest import drain_jobs
 from pyspark.sql import functions as F
 
 from data_ingestion_system_spark.schemas import TESTDATA_SCHEMAS
@@ -524,3 +525,38 @@ def test_alert_replay_supersedes_stale_partition(spark, tmp_path):
     evaluate_batch_health(spark, paths, 5, inserted=100, dedup_rate=0.0,
                           duration_seconds=0.1)
     assert not os.path.isdir(stale)
+
+
+def test_event_micro_batch_job_budget(spark, sf_dir, tmp_path):
+    """One event micro-batch with CHECK rules, quarantine and alerts,
+    into an existing store, runs at most 12 Spark jobs: the marker read,
+    the batch checkpoint (map + result), the quarantine write, the
+    anti-join checkpoint, the target and provenance writes, the health
+    read and the audit append. Counts are observed on the writes, so no
+    job exists only to count."""
+    from data_ingestion_system_spark.operators.integrity import event_rules
+
+    src = _land_ranges(spark, sf_dir, tmp_path, [(0, 400)])
+    paths = IngestPaths(
+        source_dir=src,
+        target_dir=str(tmp_path / "target"),
+        audit_dir=str(tmp_path / "audit"),
+        provenance_dir=str(tmp_path / "prov"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        alerts_dir=str(tmp_path / "alerts"),
+        quarantine_dir=str(tmp_path / "quar"),
+    )
+    schema = TESTDATA_SCHEMAS["events"]
+    run_file_ingestion(spark, paths, schema, "event_id", rules=event_rules())
+    _land_ranges(spark, sf_dir, tmp_path / "second", [(300, 700)])
+    os.rename(
+        tmp_path / "second" / "landing" / "batch_0.parquet",
+        os.path.join(src, "batch_1.parquet"),
+    )
+    q = run_file_ingestion(spark, paths, schema, "event_id", rules=event_rules())
+    assert drain_jobs(spark, q) <= 12
+    audit = {r.batch_id: r for r in spark.read.parquet(paths.audit_dir).collect()}
+    assert sorted(audit) == [0, 1]
+    for r in audit.values():
+        assert r.fetched == r.inserted + r.skipped + r.quarantined
+    assert audit[1].skipped > 0  # the 100 re-fetched keys

@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from conftest import drain_jobs
 from pyspark.sql import functions as F
 
 from data_ingestion_system_spark.streaming.neardup import (
@@ -239,3 +240,25 @@ def test_accepted_docs_before_any_committed_state(spark, tmp_path):
     assert empty.schema == schema
     with pytest.raises(ValueError, match="no committed state"):
         accepted_docs(spark, paths)
+
+
+def test_micro_batch_job_budget(spark, tmp_path):
+    """One near-dup micro-batch against an existing store runs at most 24
+    Spark jobs: one batch checkpoint, a row-local probe, one survivors
+    checkpoint carrying the Observation of every count, three state
+    writes and the audit append — and no count job."""
+    paths = _paths(tmp_path)
+    batches = [[(1, BASE), (2, OTHER)], [(10, VARIANT), (20, THIRD), (21, THIRD + " x")]]
+    _land_batches(spark, tmp_path, paths, batches[:1])
+    run_neardup_ingestion(spark, paths, _schema())
+    staging = tmp_path / "second"
+    _land_batches(spark, staging, _paths(staging), batches[1:])
+    os.rename(
+        os.path.join(_paths(staging).source_dir, "batch_0.parquet"),
+        os.path.join(paths.source_dir, "batch_1.parquet"),
+    )
+    q = run_neardup_ingestion(spark, paths, _schema())
+    assert drain_jobs(spark, q) <= 24
+    audit = {r.batch_id: r for r in spark.read.parquet(paths.audit_dir).collect()}
+    assert (audit[1].fetched, audit[1].dup_vs_store, audit[1].dup_within_batch) == (3, 1, 1)
+    assert audit[1].inserted == 1

@@ -12,6 +12,10 @@ Measures two surfaces:
      documents; reports per-batch fetched/dup counts, wall seconds, and
      the index state (bands + tokens bytes) growth.
 
+Both report `jobs_per_batch`: the Spark jobs of each micro-batch, from
+the status store (a stream runs its jobs under the job group of its
+runId, each described with its batch id).
+
 Usage:
     python tools/streaming_scale_probe.py /tmp/sf1.0
 """
@@ -21,6 +25,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import re
 import shutil
 import sys
 import tempfile
@@ -52,6 +57,21 @@ def _dir_bytes(path: str) -> int:
     ) if os.path.isdir(path) else 0
 
 
+def _jobs_per_batch(spark, query) -> list[int]:
+    """Spark jobs each micro-batch of `query` ran, in batch order, read
+    from the status store once the listener bus has caught up."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    per_batch: dict[int, int] = {}
+    for job_id in sc.statusTracker().getJobIdsForGroup(str(query.runId)):
+        desc = jsc.statusStore().job(job_id).description()
+        m = re.search(r"batch = (\d+)", desc.get() if desc.isDefined() else "")
+        if m:
+            per_batch[int(m.group(1))] = per_batch.get(int(m.group(1)), 0) + 1
+    return [per_batch[b] for b in sorted(per_batch)]
+
+
 def _land(df, n_files: int, src: str) -> None:
     """Write `df` as `n_files` landing files, one micro-batch each under
     maxFilesPerTrigger=1. The file source drains oldest mtime first and
@@ -79,7 +99,7 @@ def probe_event_ingestion(spark, sf_dir: str, root: str) -> dict:
         checkpoint_dir=os.path.join(root, "ev_ckpt"),
     )
     t0 = time.perf_counter()
-    run_file_ingestion(spark, paths, ev.schema, key_col="event_id")
+    query = run_file_ingestion(spark, paths, ev.schema, key_col="event_id")
     wall = time.perf_counter() - t0
     audit = [
         r.asDict()
@@ -93,6 +113,7 @@ def probe_event_ingestion(spark, sf_dir: str, root: str) -> dict:
         "rows_per_sec": round(n / wall),
         "per_batch_sec": [round(a["duration_seconds"], 2) for a in audit],
         "per_batch_inserted": [a["inserted"] for a in audit],
+        "jobs_per_batch": _jobs_per_batch(spark, query),
         "target_bytes_final": _dir_bytes(paths.target_dir),
     }
 
@@ -111,7 +132,7 @@ def probe_neardup_ingestion(spark, sf_dir: str, root: str) -> dict:
         checkpoint_dir=os.path.join(root, "nd_ckpt"),
     )
     t0 = time.perf_counter()
-    run_neardup_ingestion(spark, paths, docs.schema)
+    query = run_neardup_ingestion(spark, paths, docs.schema)
     wall = time.perf_counter() - t0
     audit = [
         r.asDict()
@@ -129,6 +150,7 @@ def probe_neardup_ingestion(spark, sf_dir: str, root: str) -> dict:
             for a in audit
         ],
         "per_batch_sec": [round(a["duration_seconds"], 2) for a in audit],
+        "jobs_per_batch": _jobs_per_batch(spark, query),
         "inserted_total": inserted,
         "index_state_bytes": _dir_bytes(paths.bands_dir) + _dir_bytes(paths.tokens_dir),
     }
