@@ -127,6 +127,8 @@ def main() -> None:
         sf = None
     spark = get_spark(app_name="dis-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
+    master = spark.sparkContext.master
     # Silence DAGScheduler's "Failed to update accumulator" stack traces:
     # AQE-cancelled stage tasks completing after a driver GC has cleared
     # their weak-ref'd SQLMetrics trip a benign scheduler race (verified:
@@ -176,7 +178,7 @@ def main() -> None:
     # UNCHANGED since the previous BENCH file was committed (git diff).
     # Untouched queries normalize to ~1.0x by construction; touched
     # queries' normalized deltas are then code-caused, box-corrected.
-    boxcal = _box_factor(times, registry, sf)
+    boxcal = _box_factor(times, registry, sf, cpus)
     # r11 (VERDICT r10 ask #2, after two consecutive self-stamped-noisy
     # official sessions): the primary `value` is the box-CALIBRATED total
     # — raw total divided by the untouched-query median ratio vs the
@@ -196,6 +198,8 @@ def main() -> None:
         "raw_total": total,
         "queries": times,
         "sf": sf,
+        "cpus": cpus,
+        "master": master,
         "reps": REPS,
         "collect_sec": collect_sec,
         "ann_index_train_sec": train_sec,
@@ -222,6 +226,8 @@ def main() -> None:
         "raw_total": total,
         "queries": times,
         "sf": sf,
+        "cpus": cpus,
+        "master": master,
         "reps": REPS,
         "ann_index_train_sec": train_sec,
         "box_cal": (
@@ -293,7 +299,9 @@ def _parquet_rows(path: str) -> int:
     )
 
 
-def _box_factor(times: dict, registry: dict, sf: float | None) -> dict | None:
+def _box_factor(
+    times: dict, registry: dict, sf: float | None, cpus: int | None
+) -> dict | None:
     """Session box-speed factor vs the previous round's bench: median of
     per-query time ratios over code-untouched headline queries.
 
@@ -331,6 +339,12 @@ def _box_factor(times: dict, registry: dict, sf: float | None) -> dict | None:
     # corpus scale (an sf0.001 smoke vs an sf0.1 round is 0.76x of
     # nothing)
     if sf is not None and prev.get("sf") is not None and prev["sf"] != sf:
+        return None
+    # nor across core counts: a 4-core session against a 32-core record
+    # measures the hardware, not the box's drift. The driver's wrapper
+    # carries `cpus`; a record without it cannot show it ran on this box
+    parsed = prev.get("parsed") if isinstance(prev.get("parsed"), dict) else {}
+    if (prev.get("cpus") or parsed.get("cpus")) != cpus:
         return None
     # the driver's BENCH_r{N}.json wraps bench stdout: per-query times
     # live under parsed.queries (parsed is null when the line was

@@ -46,6 +46,7 @@ from data_ingestion_system_spark.tables import (
     load_table,
     pin_join_width,
     pin_width,
+    replay_rows_df,
 )
 from data_ingestion_system_spark.similarity.ann import DIM, _dot, load_vectors
 from data_ingestion_system_spark.similarity.ivf import (
@@ -55,12 +56,14 @@ from data_ingestion_system_spark.similarity.ivf import (
     adaptive_train_mod_case_sql,
     _cos,
     _kmeans_ctes,
+    _memo,
     _with_norm,
     adaptive_cells,
     adaptive_cells_case_sql,
     dataset_cache_key,
     hier_cells,
     hier_cells_case_sql,
+    lloyd,
     train_centroids,
 )
 
@@ -114,17 +117,16 @@ def assign_with_centroid_cosine(v: DataFrame, cents: DataFrame) -> DataFrame:
     """(vec_id, ev, nrm, cell_id, ccos): nearest-centroid assignment that
     KEEPS the member→centroid cosine — SemDeDup's keep rule ranks on it.
     Argmax as a max_by aggregate, not a sort window (the same tie rule —
-    cosine DESC, cell_id ASC — as lexicographic struct max;
-    train_centroids' documented shape). ccos is the winning cell's
-    cosine, i.e. the plain max over the member's scores, so it is a
-    separate `max` that the optimizer prunes when a caller drops ccos
-    (the hierarchical coarse assignment ranks on fcos instead).
+    cosine DESC, cell_id ASC — as lexicographic struct max). ccos is the
+    winning cell's cosine, i.e. the plain max over the member's scores,
+    so it is a separate `max` that the optimizer prunes when a caller
+    drops ccos (the hierarchical coarse assignment ranks on fcos
+    instead).
 
     The n×K scoring relation is SKINNY (vec_id, cell_id, ccos) — the
     64-double ev array joins back after the argmax collapses n×K rows
-    to n, the same restructure that fixed large-K training
-    (train_centroids): shuffling arrays through the scored relation was
-    the dominant cost at K=256."""
+    to n: shuffling arrays through the scored relation was the dominant
+    cost at K=256."""
     vn = _with_norm(v, "ev", "nrm").transform(corpus_checkpoint_lazy)
     cn = _with_norm(cents, "cv", "cnrm")
     best = (
@@ -465,94 +467,48 @@ def train_fine_centroids(
 ) -> DataFrame:
     """Per-coarse-cell fine quantizer: seeds are the ``kf`` lowest-vec_id
     members of each coarse cell (from the FULL assignment, so every
-    nonempty cell has seeds), then ``_FINE_ITERS`` Lloyd rounds over the
-    1-in-TRAIN_MOD sample — each round scores a member only against its
-    OWN coarse cell's fine centroids (broadcast equi-join on cell_id:
-    n_sample x kf rows, never n x K_total). Centroid means round to 6
-    decimals per round; empty fine cells keep their previous centroid
-    (the train_centroids contract, mirrored in the oracle CTEs).
-    Returns (cell_id, fine_id, fv, fnrm).
+    nonempty cell has seeds), then ``_FINE_ITERS`` driver-side `lloyd`
+    rounds per cell over the cell's members in the 1-in-``train_mod``
+    sample (n_sample x kf scores, never n x K_total). One Spark job
+    ranks members per cell and collects the seeds and the sample
+    together. Returns (cell_id, fine_id, fv, fnrm).
 
     With ``cache_key`` set, the trained (cell_id, fine_id, fv) rows are
-    mirrored driver-side in the SAME per-SparkContext index cache that
-    holds the IVF centroids and PQ codebooks (similarity.ivf._index_cache)
-    — the fine quantizer is an index artifact by the identical
-    train-once/serve-many contract (it is a pure function of the corpus
-    fingerprint and the (kc, kf, train_mod) ladder), and retraining its
-    Lloyd rounds on every serving query was ~1.5 s of pure fixed job
-    overhead per call at sf0.1 (r10 measurement; the fine table itself is
-    kc·kf rows). The replay path recomputes fnrm with the same
-    expression, so warm and cold schemas/values are identical — pinned by
-    tests/test_semdedup_classifier.py::test_fine_centroid_memo_replays_identically."""
-    from data_ingestion_system_spark.similarity.ivf import _index_cache
-    from data_ingestion_system_spark.tables import replay_rows_df
+    memoized in the SAME per-SparkContext index cache that holds the IVF
+    centroids and PQ codebooks (similarity.ivf._index_cache) — the fine
+    quantizer is a pure function of the corpus fingerprint and the
+    (kc, kf, train_mod) ladder, so serving queries replay it."""
+    def build():
+        import numpy as np
 
-    spark = cassigned.sparkSession
-    cache = _index_cache(spark) if cache_key is not None else None
-    memo = ("fine_centroids", cache_key, kf, train_mod)
-    if cache is not None and memo in cache:
-        replay = replay_rows_df(
-            spark, cache[memo], "cell_id int, fine_id int, fv array<double>"
+        w_seed = Window.partitionBy("cell_id").orderBy("vec_id")
+        rows = (
+            cassigned.select("cell_id", "vec_id", "ev")
+            .withColumn("rn", F.row_number().over(w_seed))
+            .filter((F.col("rn") <= kf) | (F.pmod("vec_id", F.lit(train_mod)) == 0))
+            .collect()
         )
-        return _with_norm(replay, "fv", "fnrm")
-    w_seed = Window.partitionBy("cell_id").orderBy("vec_id")
-    fcents = (
-        cassigned.select("cell_id", "vec_id", "ev")
-        .withColumn("rn", F.row_number().over(w_seed))
-        .filter(F.col("rn") <= kf)
-        .select(
-            "cell_id",
-            (F.col("rn") - 1).cast("int").alias("fine_id"),
-            F.col("ev").alias("fv"),
-        )
+        cells: dict[int, list] = {}
+        for r in sorted(rows, key=lambda r: (r["cell_id"], r["rn"])):
+            cells.setdefault(r["cell_id"], []).append(r)
+        out = []
+        for cell, members in sorted(cells.items()):
+            seeds = np.array([r["ev"] for r in members if r["rn"] <= kf], dtype=np.float64)
+            sample = [r["ev"] for r in members if r["vec_id"] % train_mod == 0]
+            fcents = lloyd(
+                np.array(sample or np.zeros((0, DIM)), dtype=np.float64),
+                seeds,
+                _FINE_ITERS,
+                "cosine",
+            )
+            out += [(int(cell), f, fv) for f, fv in enumerate(fcents.tolist())]
+        return out
+
+    rows = _memo(cassigned.sparkSession, ("fine_centroids", cache_key, kf, train_mod), build)
+    replay = replay_rows_df(
+        cassigned.sparkSession, rows, "cell_id int, fine_id int, fv array<double>"
     )
-    fcents = _with_norm(fcents, "fv", "fnrm").localCheckpoint(eager=True)
-    sample = cassigned.filter(
-        F.pmod("vec_id", F.lit(train_mod)) == 0
-    ).localCheckpoint(eager=True)
-    for _ in range(_FINE_ITERS):
-        scored = sample.join(F.broadcast(fcents), "cell_id").select(
-            "vec_id",
-            "cell_id",
-            "fine_id",
-            (_dot("ev", "fv") / (F.col("nrm") * F.col("fnrm"))).alias("c"),
-        )
-        assigned = (
-            scored.groupBy("vec_id", "cell_id")
-            .agg(
-                F.max_by(
-                    "fine_id", F.struct(F.col("c"), (-F.col("fine_id")).alias("neg"))
-                ).alias("fine_id"),
-            )
-            .join(sample.select("vec_id", "ev"), "vec_id")
-        )
-        means = (
-            assigned.select("cell_id", "fine_id", F.posexplode("ev").alias("pos", "x"))
-            .groupBy("cell_id", "fine_id", "pos")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("cell_id", "fine_id")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-            .select(
-                "cell_id",
-                "fine_id",
-                F.expr("transform(pm, s -> round(s.m * 1000000.0) / 1000000.0)").alias("mv"),
-            )
-        )
-        fcents = (
-            fcents.alias("p")
-            .join(means.alias("m"), ["cell_id", "fine_id"], "left")
-            .select("cell_id", "fine_id", F.coalesce("m.mv", "p.fv").alias("fv"))
-        )
-        fcents = _with_norm(fcents, "fv", "fnrm").localCheckpoint(eager=True)
-    if cache is not None:
-        # mirror the kc·kf trained rows driver-side (train_centroids'
-        # exact pattern) so later serving calls replay instead of
-        # re-running the Lloyd jobs
-        cache[memo] = sorted(
-            (int(r["cell_id"]), int(r["fine_id"]), list(r["fv"]))
-            for r in fcents.select("cell_id", "fine_id", "fv").collect()
-        )
-    return fcents
+    return _with_norm(replay, "fv", "fnrm")
 
 
 def assign_fine(cassigned: DataFrame, fcents: DataFrame) -> DataFrame:
@@ -602,7 +558,7 @@ def _hier_fassigned(spark: SparkSession, sf_dir: str) -> tuple[int, DataFrame]:
     # the assignment checkpoint pins its width first (tables.pin_width):
     # the skinny argmax shuffles AQE-coalesce to 1-2 partitions, and the
     # checkpoint would freeze that width under every later dense pass
-    # (fine-centroid Lloyd rounds, fine assignment — measured 2-of-32-core
+    # (fine seed ranking, fine assignment — measured 2-of-32-core
     # grind at sf10 unpinned). Keyless: all downstream scoring joins are
     # broadcast, so round-robin balance beats key co-location.
     cassigned = pin_width(
@@ -650,8 +606,9 @@ def semantic_dedup_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cell counts come from an integer CASE ladder on COUNT(*)
     (`hier_cells`, mirrored in the oracle) — Kc·Kf = smallest power of
     two ≥ sqrt(n), split evenly. Fine seeds are the Kf lowest-vec_id
-    members per coarse cell; 2 Lloyd rounds over the 1-in-4 sample,
-    scoring members only against their own cell's fine table.
+    members per coarse cell; 2 driver-side Lloyd rounds over the
+    training sample, scoring members only against their own cell's fine
+    table.
 
     Extends the reference's exact duplicate detection
     (src/analysis/data_quality_analyzer.py:172) like its flat sibling;

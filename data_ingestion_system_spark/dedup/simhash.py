@@ -1,11 +1,11 @@
 """SimHash near-duplicate detection (SURVEY.md §7 Stage 6).
 
-16-bit SimHash (Charikar 2002; used by Manku et al., WWW'07 for web-scale
-near-dup): each token hashes to 16 bits (from its md5 hex prefix); per
-document, each bit position accumulates +1/-1 votes across tokens; the
-sign vector is the fingerprint. Near-dups = fingerprints within small
-Hamming distance, blocked by the top byte so the pair join is bucketed,
-never all-pairs.
+32-bit SimHash (Charikar 2002; used by Manku et al., WWW'07 for web-scale
+near-dup): each token hashes to MB_BITS bits (from its md5 hex prefix);
+per document, each bit position accumulates +1/-1 votes across tokens;
+the sign vector is the fingerprint. Near-dups = fingerprints within
+small Hamming distance, blocked by 8-bit fingerprint blocks so the pair
+join is bucketed, never all-pairs.
 
 Pure expression algebra: bit extraction is arithmetic on hex-digit
 positions (no UDF), so the DuckDB oracle reproduces the pipeline exactly.
@@ -22,10 +22,8 @@ from data_ingestion_system_spark.tables import (
     fan_out,
     load_table,
     pin_join_width,
-    pin_width,
 )
 
-N_BITS = 16
 HAMMING_MAX = 3
 
 # multi-block (rotated-table) variant: 32-bit fingerprints, 4 blocks of
@@ -38,76 +36,47 @@ MB_BLOCKS = 4
 MB_BLOCK_BITS = MB_BITS // MB_BLOCKS
 
 
-def _nibble_projs(instr_fn: str, n_nibbles: int = 4) -> list[str]:
-    """The hex-digit values of h (= substr(md5(token), 1, n_nibbles))
+def _nibble_projs(instr_fn: str) -> list[str]:
+    """The MB_BITS // 4 hex-digit values of h (= substr(md5(token), 1, k))
     projected ONCE per token as n0..n{k} — md5 and the instr lookups are
     both hoisted out of the per-bit vote SUMs (which then cost only a
     div+mod each). One md5 + k instr per token instead of 4k + k."""
     return [
         f"({instr_fn}('0123456789abcdef', substr(h, {i + 1}, 1)) - 1) AS n{i}"
-        for i in range(n_nibbles)
+        for i in range(MB_BITS // 4)
     ]
 
 
 def _bit_expr(b: int, intdiv: str) -> str:
-    """Bit b (msb-first) of the 16-bit token hash, read from the hoisted
+    """Bit b (msb-first) of the token hash, read from the hoisted
     nibble column n{b // 4}."""
     shift = 2 ** (3 - b % 4)
     return f"((n{b // 4} {intdiv} {shift}) % 2)"
 
 
-def _vote_sums(intdiv: str, n_bits: int = N_BITS) -> str:
+def _vote_sums(intdiv: str) -> str:
     return ",\n    ".join(
-        f"SUM(2 * {_bit_expr(b, intdiv)} - 1) AS s{b}" for b in range(n_bits)
+        f"SUM(2 * {_bit_expr(b, intdiv)} - 1) AS s{b}" for b in range(MB_BITS)
     )
 
 
-def _simhash_value(n_bits: int = N_BITS) -> str:
+def _simhash_value() -> str:
     return " + ".join(
-        f"(CASE WHEN s{b} > 0 THEN {2 ** (n_bits - 1 - b)} ELSE 0 END)"
-        for b in range(n_bits)
+        f"(CASE WHEN s{b} > 0 THEN {2 ** (MB_BITS - 1 - b)} ELSE 0 END)"
+        for b in range(MB_BITS)
     )
 
 
-def _oracle() -> str:
-    return f"""
-WITH tokens AS (
-  SELECT DISTINCT doc_id, token FROM (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
-  ) t
-), hashed AS (
-  SELECT doc_id, substr(md5(token), 1, 4) AS h FROM tokens
-), nibbled AS (
-  SELECT doc_id, {", ".join(_nibble_projs("strpos"))} FROM hashed
-), votes AS (
-  SELECT doc_id,
-    {_vote_sums("//")}
-  FROM nibbled GROUP BY doc_id
-), hashes AS (
-  SELECT doc_id, CAST({_simhash_value()} AS BIGINT) AS simhash FROM votes
-), pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         bit_count(xor(CAST(a.simhash AS BIGINT), CAST(b.simhash AS BIGINT))) AS hamming
-  FROM hashes a
-  JOIN hashes b
-    ON (a.simhash // 256) = (b.simhash // 256) AND a.doc_id < b.doc_id
-)
-SELECT doc_a, doc_b, CAST(hamming AS INTEGER) AS hamming
-FROM pairs WHERE hamming <= {HAMMING_MAX}
-ORDER BY doc_a, doc_b
-"""
-
-
-def simhash_fingerprints(docs: DataFrame, n_bits: int = N_BITS) -> DataFrame:
-    """doc_id → n_bits-wide simhash fingerprint (bits from the md5 hex
-    prefix, n_bits // 4 hex digits).
+def simhash_fingerprints(docs: DataFrame) -> DataFrame:
+    """doc_id → MB_BITS-wide simhash fingerprint (bits from the md5 hex
+    prefix, MB_BITS // 4 hex digits).
 
     Spark side (r11, guide §1.2 per-task work): the token hash is parsed
-    ONCE with conv() into an n_bits-wide integer and each bit vote is a
-    div/mod on it — the r10 shape projected n_bits/4 nibble columns via
+    ONCE with conv() into an MB_BITS-wide integer and each bit vote is a
+    div/mod on it — the r10 shape projected MB_BITS/4 nibble columns via
     substr+instr pairs per token (the same 13-term pattern
     scalar.U52_SPARK_SQL replaced; measured ~3x cheaper per evaluation).
-    Bit b (msb-first) of the hex prefix == bit (n_bits-1-b) of the parsed
+    Bit b (msb-first) of the hex prefix == bit (MB_BITS-1-b) of the parsed
     integer, so every vote SUM sees the identical ±1 terms; the DuckDB
     oracles keep the strpos nibble sums (no conv() there) and the hash
     parity is pinned by the oracle gates."""
@@ -117,16 +86,16 @@ def simhash_fingerprints(docs: DataFrame, n_bits: int = N_BITS) -> DataFrame:
     hashed = tokens.select(
         "doc_id",
         F.expr(
-            f"CAST(conv(substr(md5(token), 1, {n_bits // 4}), 16, 10) AS BIGINT)"
+            f"CAST(conv(substr(md5(token), 1, {MB_BITS // 4}), 16, 10) AS BIGINT)"
         ).alias("u"),
     )
     vote_exprs = [
-        F.expr(f"SUM(2 * ((u div {2 ** (n_bits - 1 - b)}) % 2) - 1)").alias(f"s{b}")
-        for b in range(n_bits)
+        F.expr(f"SUM(2 * ((u div {2 ** (MB_BITS - 1 - b)}) % 2) - 1)").alias(f"s{b}")
+        for b in range(MB_BITS)
     ]
     votes = hashed.groupBy("doc_id").agg(*vote_exprs)
     return votes.select(
-        "doc_id", F.expr(f"CAST({_simhash_value(n_bits)} AS BIGINT)").alias("simhash")
+        "doc_id", F.expr(f"CAST({_simhash_value()} AS BIGINT)").alias("simhash")
     )
 
 
@@ -167,13 +136,13 @@ WITH tokens AS (
 ), hashed AS (
   SELECT doc_id, substr(md5(token), 1, {MB_BITS // 4}) AS h FROM tokens
 ), nibbled AS (
-  SELECT doc_id, {", ".join(_nibble_projs("strpos", MB_BITS // 4))} FROM hashed
+  SELECT doc_id, {", ".join(_nibble_projs("strpos"))} FROM hashed
 ), votes AS (
   SELECT doc_id,
-    {_vote_sums("//", MB_BITS)}
+    {_vote_sums("//")}
   FROM nibbled GROUP BY doc_id
 ), hashes AS (
-  SELECT doc_id, CAST({_simhash_value(MB_BITS)} AS BIGINT) AS simhash FROM votes
+  SELECT doc_id, CAST({_simhash_value()} AS BIGINT) AS simhash FROM votes
 ), blocks AS (
   {blocks}
 ), pairs AS (
@@ -286,7 +255,7 @@ def simhash_pairs_multiblock_value_collapsed(hashes: DataFrame, n_docs: int | No
     Recovery is SALTED (r7, scale-failure class #4 applied here): the
     r6 shape keyed the doc-expansion joins by fingerprint VALUE, which
     concentrates Θ(that value's share of the answer) on single tasks —
-    fingerprints concentrate on similar corpora, and the 16-bit variant
+    fingerprints concentrate on similar corpora, and a 16-bit variant
     died of exactly this (hottest value 24,802 docs -> one 308M-pair
     task). The 16-bit fix (broadcast the value-pair table, stream docs
     round-robin) does not transfer: this op's value-pair relation grows
@@ -452,7 +421,7 @@ def near_dup_simhash_multiblock(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprints split into 4 8-bit blocks; candidates are pairs agreeing
     on any block's (t, bkey), which by pigeonhole covers every pair
     within Hamming 3 (Manku et al., WWW'07 multi-table scheme — the
-    recall fix for the single-blocking-table `near_dup_simhash`).
+    recall fix for a single top-byte blocking table).
 
     Scale shape: fingerprinting is one explode+groupBy pass; the
     candidate join is bucketed on (t, bkey) — 4 tables × 256 buckets —
@@ -469,14 +438,13 @@ def near_dup_simhash_multiblock(spark: SparkSession, sf_dir: str) -> DataFrame:
     off-diag split makes the expansion duplicate-free WITHOUT the
     pair-level DISTINCT the doc-level join needs over its (answer ×
     shared-blocks) blowup. Below the threshold the direct doc-level
-    block join is cheaper (same dispatch as `near_dup_simhash`;
-    identical answer either way, pinned by
+    block join is cheaper (identical answer either way, pinned by
     tests/test_plan_quality.py::test_simhash_multiblock_plans_agree).
 
     Reference parity: extends docs/summery_deck.md's near-dup goal
     (reference has no simhash; cited for the dedup requirement only)."""
     docs = load_table(spark, sf_dir, "documents")
-    hashes = corpus_checkpoint(simhash_fingerprints(docs, MB_BITS), eager=False)
+    hashes = corpus_checkpoint(simhash_fingerprints(docs), eager=False)
     n_docs = hashes.count()  # materializes the lazy checkpoint (one job, r11)
     pairs = (
         simhash_pairs_multiblock_value_collapsed(hashes, n_docs=n_docs)
@@ -497,138 +465,6 @@ def near_dup_simhash_multiblock(spark: SparkSession, sf_dir: str) -> DataFrame:
 VALUE_COLLAPSE_MIN_DOCS = 16_384
 
 
-def simhash_pairs_direct(hashes: DataFrame) -> DataFrame:
-    """Doc-level top-byte block self-join — the small-corpus plan."""
-    a = hashes.alias("a")
-    b = hashes.alias("b")
-    return (
-        a.join(
-            b,
-            (F.expr("a.simhash div 256") == F.expr("b.simhash div 256"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.expr("CAST(bit_count(a.simhash ^ b.simhash) AS INT)").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= HAMMING_MAX)
-    )
-
-
-def simhash_pairs_value_collapsed(hashes: DataFrame, n_docs: int | None = None) -> DataFrame:
-    """Value-collapsed candidate search — the at-scale plan (see
-    `near_dup_simhash`).
-
-    Recovery-join shape (r6 rework): the corpus-sized doc relation is
-    the round-robin-spread STREAM side and both small relations — the
-    Hamming-filtered value-pair table (≤ 65,536 × 93/2 rows at ANY
-    corpus size) and the (doc_id, simhash) table — BROADCAST. The
-    previous shape keyed the expansion joins BY VALUE, which on a
-    saturated corpus puts Θ(answer) on single tasks: simhash values
-    CONCENTRATE on similar corpora (measured sf10: 12,162 distinct
-    values over 500k docs, hottest held 24,802 docs → its same-value
-    term alone is C(24.8k, 2) ≈ 308M pairs in ONE task; the full
-    defined answer is 4.28G pairs), and the single-JVM run died with
-    one straggler task OOM. Round-robin spreads hot-value doc rows
-    uniformly, broadcast-hash match groups iterate LAZILY (no per-key
-    buffering), so each task streams ≈ answer/width with bounded
-    memory.
-
-    The explicit doc-table broadcast is bounded by the op's own
-    feasibility ceiling: a 16-bit fingerprint space saturates at 65,536
-    values, so the answer grows ~n²/2¹⁶ and the op stops being runnable
-    (multi-billion-row output) long before the 16-bytes-per-doc
-    broadcast (12 MB at 500k docs) approaches broadcast limits —
-    `near_dup_simhash_multiblock` (32-bit space) is the documented
-    scale path."""
-    vals = hashes.select("simhash").distinct()
-    u = vals.alias("u")
-    w = vals.alias("w")
-    # value-level candidates: same top byte, strictly increasing value
-    vp = (
-        u.join(
-            w,
-            (F.expr("u.simhash div 256") == F.expr("w.simhash div 256"))
-            & (F.col("u.simhash") < F.col("w.simhash")),
-        )
-        .select(
-            F.col("u.simhash").alias("va"),
-            F.col("w.simhash").alias("vb"),
-            F.expr("CAST(bit_count(u.simhash ^ w.simhash) AS INT)").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= HAMMING_MAX)
-    )
-    hp = pin_width(hashes, n_rows=n_docs)  # keyless: hot values must spread
-    x = hp.alias("x")
-    y = hashes.alias("y")
-    cross = (
-        x.join(F.broadcast(vp), F.col("x.simhash") == F.col("va"))
-        .join(F.broadcast(y), F.col("y.simhash") == F.col("vb"))
-        .select(
-            F.least("x.doc_id", "y.doc_id").alias("doc_a"),
-            F.greatest("x.doc_id", "y.doc_id").alias("doc_b"),
-            "hamming",
-        )
-    )
-    same = x.join(
-        F.broadcast(y),
-        (F.col("x.simhash") == F.col("y.simhash"))
-        & (F.col("x.doc_id") < F.col("y.doc_id")),
-    ).select(
-        F.col("x.doc_id").alias("doc_a"),
-        F.col("y.doc_id").alias("doc_b"),
-        F.lit(0).cast("int").alias("hamming"),
-    )
-    return cross.unionByName(same)
-
-
-# pytest-gated oracle for the demoted diagnostic below
-# (tests/test_simhash_keepers.py::test_near_dup_simhash_oracle_parity)
-SIMHASH_PAIRS_ORACLE = _oracle()
-
-
-def near_dup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs: Hamming ≤ 3 among docs sharing the top
-    fingerprint byte (the blocking key). Blocking keeps the join from
-    going quadratic; recall can be raised by re-running with rotated
-    fingerprints (Manku et al.'s table approach).
-
-    LIBRARY DIAGNOSTIC since round 8 (catalog slot handed to
-    `near_dup_simhash_multiblock_keepers`, the production surface —
-    VERDICT r7 asks #3/#9): this 16-bit single-table variant has known
-    imperfect recall and a pair-sized answer that saturates at scale;
-    `near_dup_simhash_multiblock` is the exact-recall pair diagnostic
-    and the keeper query is what a pipeline consumes. Correctness stays
-    pinned by the pytest oracle gate (SIMHASH_PAIRS_ORACLE) and the
-    direct/collapsed equivalence tests.
-
-    Above VALUE_COLLAPSE_MIN_DOCS the candidate search runs over
-    DISTINCT fingerprint VALUES, not docs
-    (`simhash_pairs_value_collapsed`): the 16-bit value space is
-    bounded at 65,536 rows no matter the corpus size, so the
-    Hamming-filtered value-pair join is O(1) w.r.t. the corpus, and doc
-    pairs are recovered by two hash joins keyed on the value — the only
-    corpus-growing cost is the answer itself. (The doc-level self-join
-    went quadratic as the 16-bit space saturated: measured 86x wall at
-    10x corpus; value-collapsed it is output-bound.) Below the
-    threshold the direct doc-level block join (`simhash_pairs_direct`)
-    is cheaper — the collapse constant never pays off on a corpus whose
-    fingerprints barely repeat. Identical answer either way (pinned by
-    tests/test_dedup_recall.py); fingerprints materialize once (eager
-    checkpoint) and every downstream join reads the 1-row-per-doc
-    relation."""
-    docs = load_table(spark, sf_dir, "documents")
-    hashes = corpus_checkpoint(simhash_fingerprints(docs), eager=False)
-    n_docs = hashes.count()  # materializes the lazy checkpoint (one job, r11)
-    pairs = (
-        simhash_pairs_value_collapsed(hashes, n_docs=n_docs)
-        if n_docs >= VALUE_COLLAPSE_MIN_DOCS
-        else simhash_pairs_direct(hashes)
-    )
-    return pairs.orderBy("doc_a", "doc_b")
-
-
 def _multiblock_keepers_oracle() -> str:
     vblocks = "\n  UNION ALL ".join(
         f"SELECT simhash, {t} AS t, (simhash // {d}) % {2**MB_BLOCK_BITS} AS bkey FROM vals"
@@ -642,13 +478,13 @@ WITH RECURSIVE tokens AS (
 ), hashed AS (
   SELECT doc_id, substr(md5(token), 1, {MB_BITS // 4}) AS h FROM tokens
 ), nibbled AS (
-  SELECT doc_id, {", ".join(_nibble_projs("strpos", MB_BITS // 4))} FROM hashed
+  SELECT doc_id, {", ".join(_nibble_projs("strpos"))} FROM hashed
 ), votes AS (
   SELECT doc_id,
-    {_vote_sums("//", MB_BITS)}
+    {_vote_sums("//")}
   FROM nibbled GROUP BY doc_id
 ), hashes AS MATERIALIZED (
-  SELECT doc_id, CAST({_simhash_value(MB_BITS)} AS BIGINT) AS simhash FROM votes
+  SELECT doc_id, CAST({_simhash_value()} AS BIGINT) AS simhash FROM votes
 ), vals AS MATERIALIZED (
   SELECT simhash, COUNT(*) AS cnt FROM hashes GROUP BY simhash
 ), vblocks AS MATERIALIZED (
@@ -719,7 +555,7 @@ def near_dup_simhash_multiblock_keepers(spark: SparkSession, sf_dir: str) -> Dat
     joins, so the differential test covers the value-clique theorem,
     not just the plumbing."""
     docs = load_table(spark, sf_dir, "documents")
-    hashes = corpus_checkpoint(simhash_fingerprints(docs, MB_BITS), eager=False)
+    hashes = corpus_checkpoint(simhash_fingerprints(docs), eager=False)
     n_docs = hashes.count()  # materializes the lazy checkpoint (one job, r11)
     # pre-saturation this is corpus-sized (one row per distinct value,
     # <= n_docs), so it takes the corpus truncation helper: memory-

@@ -4,24 +4,21 @@ The inverted-file (IVF) index structure: vectors are assigned to their
 nearest centroid's cell; a query probes only the `NPROBE` nearest cells.
 Centroids are trained with `N_ITERS` Lloyd iterations of spherical
 k-means (cosine assignment, element-wise-mean update) over a
-deterministic 1-in-`TRAIN_MOD` sample, seeded from a fixed corpus slice
-(vec_ids CENTROID_BASE..+K). Sampling the quantizer's training set is
-the standard at-scale practice (FAISS trains IVF on ~30-256 points per
-centroid, not the corpus); the sample predicate is mirrored in the
-oracle. Every iteration is DataFrame algebra: a broadcast sample×K
-scoring join, a max_by argmax, and a posexplode element-wise mean —
-the MLlib KMeans loop shape, localCheckpoint'ed per iteration so plans
-stay one-iteration deep (a lazily chained 3-iteration plan measurably
-blows up Catalyst analysis). Centroid means are rounded to 6 decimals
-after each update so the DuckDB oracle (which unrolls the same
-iterations as CTEs) lands on bit-identical centroids despite
-engine-specific float summation order.
+deterministic 1-in-`adaptive_train_mod(n)` sample, seeded from a fixed
+corpus slice (vec_ids CENTROID_BASE..+K). Sampling the quantizer's
+training set is the standard at-scale practice (FAISS trains IVF on
+~30-256 points per centroid, not the corpus), and the sample is capped
+by count, so it fits the driver at any corpus size: Spark filters and
+collects it once, and `lloyd` runs the iterations in numpy. Centroid
+means are rounded to 6 decimals after each update so the DuckDB oracle
+(which unrolls the same iterations as CTEs) lands on bit-identical
+centroids despite engine-specific float summation order.
 
 Vector norms are hoisted into a column once (cosine = dot/(nrm*cnrm)),
-which cuts the per-pair aggregate work 3× in both training and search.
+which cuts the per-pair aggregate work 3× in search.
 
-At scale: training touches only the sample N_ITERS times; the final
-cell assignment is one broadcast join + argmax pass over the corpus
+At scale: training touches only the bounded sample; the final cell
+assignment is one broadcast join + argmax pass over the corpus
 (written partitioned by cell), and a query touches NPROBE/K of the data
 — the classic IVF pruning ratio.
 """
@@ -30,17 +27,14 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_ingestion_system_spark.functions.scalar import round_port
 from data_ingestion_system_spark.registry import query
 from data_ingestion_system_spark.similarity.ann import DIM, N_QUERIES, TOP_K, _dot, load_vectors
-from data_ingestion_system_spark.tables import (
-    corpus_checkpoint,
-    corpus_checkpoint_lazy,
-    load_table,
-)
+from data_ingestion_system_spark.tables import corpus_checkpoint_lazy, load_table
 
 N_CELLS = 16
 CENTROID_BASE = 100  # vec_ids seeding the coarse quantizer
@@ -103,23 +97,31 @@ def hier_cells(n: int) -> tuple[int, int]:
 # integer CASE ladder in the oracle CTEs, keyed on COUNT(*) of the
 # vector relation, so both engines derive the identical sample at any
 # corpus size; at the shipped test scales (n ≤ 16384) the mod stays 4
-# and every existing oracle result is bit-unchanged.
+# and every existing oracle result is bit-unchanged. Past the ladder the
+# sample is capped by COUNT: at most TRAIN_SAMPLE_CAP vectors (256 points
+# per cell × the 256-cell adaptive cap, FAISS practice), so the collected
+# sample stays ≤ 32 MB on the driver however large the corpus (a fixed
+# mod of 256 would grow it as n/256: 4M vectors at 1B).
 TRAIN_MOD_LADDER = ((16_384, TRAIN_MOD), (65_536, 16), (262_144, 64))
 TRAIN_MOD_CAP = 256
+TRAIN_SAMPLE_CAP = 65_536
 
 
 def adaptive_train_mod(n: int) -> int:
     for bound, mod in TRAIN_MOD_LADDER:
         if n <= bound:
             return mod
-    return TRAIN_MOD_CAP
+    return max(TRAIN_MOD_CAP, -(-n // TRAIN_SAMPLE_CAP))
 
 
 def adaptive_train_mod_case_sql(n_sql: str = "(SELECT COUNT(*) FROM v)") -> str:
     arms = " ".join(
         f"WHEN {n_sql} <= {bound} THEN {mod}" for bound, mod in TRAIN_MOD_LADDER
     )
-    return f"(CASE {arms} ELSE {TRAIN_MOD_CAP} END)"
+    cap = TRAIN_SAMPLE_CAP
+    return (
+        f"(CASE {arms} ELSE GREATEST({TRAIN_MOD_CAP}, ({n_sql} + {cap - 1}) // {cap}) END)"
+    )
 
 
 def hier_cells_case_sql(n_sql: str) -> tuple[str, str]:
@@ -181,133 +183,180 @@ def dataset_cache_key(sf_dir: str) -> str:
 
 
 def warm_index_cache(spark: SparkSession, sf_dir: str) -> None:
-    """Train the IVF centroids and PQ codebooks for ``sf_dir`` into the
-    session index cache, so subsequent ANN queries measure SERVING, not
+    """Train every index artifact for ``sf_dir`` into the session index
+    cache, so subsequent ANN and SemDeDup queries measure SERVING, not
     training — an index is built once and queried many times, and bench
     numbers should reflect that steady state.
 
-    The artifacts (fixed-K IVF quantizer, PQ codebooks, SemDeDup's
-    adaptive-K quantizer, the hierarchical twin's coarse quantizer) are
-    INDEPENDENT job DAGs over the same corpus — they train concurrently
-    from a thread pool, so warm-up wall-clock is the slowest single
-    training, not the sum (the Lloyd loops are scheduling-overhead
-    bound, ~2 s/iteration regardless of sample size, so sequential
-    training pays that constant 8-9 times over)."""
-    from concurrent.futures import ThreadPoolExecutor
-
+    The artifacts are the PQ codebooks, the fixed-K IVF quantizer,
+    SemDeDup's adaptive-K quantizer, and the hierarchical op's coarse and
+    fine quantizers. They train in sequence: each is a `lloyd` run on the
+    driver over the one memoized sample collect, and a cell count shared
+    by two of them (small corpora) hits the memo the second time."""
+    # local imports: pq and semdedup import this module at top level
+    from data_ingestion_system_spark.dedup.semdedup import warm_fine_quantizer
     from data_ingestion_system_spark.similarity.pq import train_codebooks
 
     v = load_vectors(spark, sf_dir)
     key = dataset_cache_key(sf_dir)
     n = load_table(spark, sf_dir, "embeddings").count()
-    kc, _ = hier_cells(n)
-    # one training per DISTINCT cell count: on small corpora the
-    # adaptive / hierarchical ladders collapse onto N_CELLS, and two
-    # concurrent trainings of the same memo key would both miss the
-    # cold cache and run the full Lloyd loop twice
-    cell_counts = {N_CELLS, adaptive_cells(n), kc}
-    jobs = [lambda: train_codebooks(v, cache_key=key)] + [
-        (lambda k=k: train_centroids(v, cache_key=key, n_cells=k))
-        for k in sorted(cell_counts)
-    ]
-    with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
-        for fut in [ex.submit(j) for j in jobs]:
-            fut.result()
-    # the hierarchical SemDeDup fine quantizer is an index artifact by the
-    # same train-once/serve-many contract (r10) — train it AFTER the pool
-    # so its internal train_centroids(kc) call hits the fresh memo instead
-    # of racing the dedicated kc training job above. Local import: semdedup
-    # imports this module at top level.
-    from data_ingestion_system_spark.dedup.semdedup import warm_fine_quantizer
+    train_codebooks(v, cache_key=key)
+    for k in (N_CELLS, adaptive_cells(n)):
+        train_centroids(v, cache_key=key, n_cells=k)
+    warm_fine_quantizer(spark, sf_dir)  # the kc coarse quantizer, then the fine one
 
-    warm_fine_quantizer(spark, sf_dir)
+
+def _memo(spark: SparkSession, memo: tuple, build):
+    """The rows of index artifact ``memo`` = (kind, cache_key, *params):
+    built once per session by ``build()`` and kept in `_index_cache`. A
+    None cache_key (an ad-hoc relation, not a fingerprinted corpus)
+    builds without caching."""
+    if memo[1] is None:
+        return build()
+    cache = _index_cache(spark)
+    if memo not in cache:
+        cache[memo] = build()
+    return cache[memo]
+
+
+# The shared training collect also carries every vec_id in
+# [CENTROID_BASE, SEED_END): the seed slices of every quantizer with at
+# most ADAPTIVE_CELL_CAP cells, and of the PQ codebooks (pq.PQ_CODE_BASE
+# + K_CODES = 216).
+SEED_END = CENTROID_BASE + ADAPTIVE_CELL_CAP
+
+
+def train_sample(v: DataFrame, cache_key: str | None = None):
+    """(mod, vec_ids, vectors) for driver-side training, from ONE Spark
+    collect: the 1-in-`adaptive_train_mod(n)` sample (vec_id % mod == 0)
+    plus the seed slice [CENTROID_BASE, SEED_END), sorted by vec_id. The
+    count cap bounds it at TRAIN_SAMPLE_CAP + 256 rows of DIM doubles.
+    Memoized per corpus, so every quantizer of a warm-up shares it."""
+
+    def build():
+        mod = adaptive_train_mod(v.count())
+        rows = (
+            v.filter(
+                (F.pmod("vec_id", F.lit(mod)) == 0)
+                | F.col("vec_id").between(CENTROID_BASE, SEED_END - 1)
+            )
+            .select("vec_id", "ev")
+            .collect()
+        )
+        rows.sort(key=lambda r: r[0])
+        ids = np.array([r[0] for r in rows], dtype=np.int64)
+        x = np.array([r[1] for r in rows] or np.zeros((0, DIM)), dtype=np.float64)
+        return mod, ids, x
+
+    return _memo(v.sparkSession, ("train_sample", cache_key), build)
+
+
+# Rows scored per block: a block × K score array stays ≤ 8 MB at the
+# 256-cell cap, whatever the sample size.
+_SCORE_BLOCK = 4096
+
+
+def _fold(x, c, term):
+    """x (n×d) against c (K×d): the n×K matrix of left-to-right folds
+    acc = ((0 + t_0) + t_1) + ... over the d dims, each term t_j computed
+    by ``term`` with a separate multiply and add — the IEEE order of
+    ann._dot / pq._l2 (Spark's aggregate over zip_with)."""
+    acc = np.zeros((len(x), len(c)))
+    for j in range(x.shape[1]):
+        acc += term(x[:, j, None], c[None, :, j])
+    return acc
+
+
+def _dot_term(a, b):
+    return a * b
+
+
+def _l2_term(a, b):
+    d = a - b
+    return d * d
+
+
+def _norms(x):
+    """sqrt of each row's `_fold` self-dot (ivf._with_norm's value)."""
+    acc = np.zeros(len(x))
+    for j in range(x.shape[1]):
+        acc += x[:, j] * x[:, j]
+    return np.sqrt(acc)
+
+
+def round6(m):
+    """Spark SQL's ``round(m * 1000000.0) / 1000000.0`` in numpy: the
+    scaled double rounds half away from zero (HALF_UP on its exact value;
+    `np.round` is half-even and disagrees on every .5)."""
+    x = np.asarray(m, dtype=np.float64) * 1000000.0
+    t = np.trunc(x)
+    # x - t is exact (Sterbenz), so the half test sees the true fraction
+    return (t + np.where(np.abs(x - t) >= 0.5, np.sign(x), 0.0)) / 1000000.0
+
+
+def lloyd(x, c, iters: int, metric: str = "cosine"):
+    """``iters`` Lloyd rounds over the sample rows ``x`` (n×d) from the
+    seed centroids ``c`` (K×d); returns the trained K×d centroids. The
+    numeric contract of the oracle CTEs (`_kmeans_ctes`,
+    pq._codebook_ctes, the hierarchical fine CTEs), so the result is
+    bit-identical to them:
+
+    - ``metric="cosine"`` assigns by max dot / (nrm · cnrm), ``"l2"`` by
+      min squared L2; both fold left to right over the dims (`_fold`);
+    - ties go to the first centroid (the lowest cell_id / code / fine_id);
+    - a centroid becomes the mean of its members rounded by `round6`;
+    - an empty cell keeps its previous centroid.
+
+    Scores are computed in blocks of `_SCORE_BLOCK` rows."""
+    c = np.array(c, dtype=np.float64, copy=True)
+    if not len(c):  # no seed rows in the corpus: nothing to train
+        return c
+    term = _dot_term if metric == "cosine" else _l2_term
+    nrm = _norms(x)
+    for _ in range(iters):
+        cnrm = _norms(c)
+        labels = np.empty(len(x), dtype=np.int64)
+        for s in range(0, len(x), _SCORE_BLOCK):
+            blk = slice(s, s + _SCORE_BLOCK)
+            score = _fold(x[blk], c, term)
+            if metric == "cosine":
+                labels[blk] = np.argmax(score / (nrm[blk, None] * cnrm), axis=1)
+            else:
+                labels[blk] = np.argmin(score, axis=1)
+        sums = np.zeros_like(c)
+        np.add.at(sums, labels, x)
+        counts = np.bincount(labels, minlength=len(c))
+        hit = counts > 0
+        c[hit] = round6(sums[hit] / counts[hit, None])
+    return c
 
 
 def train_centroids(
     v: DataFrame, cache_key: str | None = None, n_cells: int = N_CELLS
 ) -> DataFrame:
-    """Spherical k-means over the 1-in-TRAIN_MOD sample: N_ITERS ×
-    (cosine-argmax assign → rounded element-wise mean). Empty cells keep
-    their previous centroid. Returns a K-row (cell_id, cv) DataFrame.
-    K = ``n_cells`` (default the ANN index's fixed N_CELLS; SemDeDup
-    passes the corpus-adaptive `adaptive_cells` count).
-
-    Each iteration localCheckpoints the K updated centroids so plans stay
-    one-iteration deep (a lazily chained 3-iteration plan measurably
-    blows up Catalyst analysis) and the per-iteration generated code is
-    byte-identical → Janino's compile cache stays hot (a driver-side
-    LocalRelation loop was tried and measured SLOWER: the row literals
-    inline into the generated source, forcing a recompile per iteration).
-    With ``cache_key`` set, the final K rows are mirrored driver-side so
-    later index builds in the same session (e.g. IVF-PQ reusing IVF's
-    coarse quantizer) skip the Lloyd jobs entirely — an IVF index is
-    trained once and served many times."""
+    """Spherical k-means over the training sample (`train_sample`):
+    N_ITERS driver-side `lloyd` rounds from the seeds vec_id
+    CENTROID_BASE..+K. Returns the K-row (cell_id, cv) DataFrame. K =
+    ``n_cells`` (default the ANN index's fixed N_CELLS; SemDeDup passes
+    the corpus-adaptive `adaptive_cells` / `hier_cells` counts). With
+    ``cache_key`` the trained rows are memoized per session, so later
+    index builds (e.g. IVF-PQ reusing IVF's coarse quantizer) replay them
+    without any job."""
     from data_ingestion_system_spark.tables import replay_rows_df
 
-    spark = v.sparkSession
-    cache = _index_cache(spark) if cache_key is not None else None
-    memo = ("centroids", cache_key, n_cells)
-    if cache is not None and memo in cache:
-        return replay_rows_df(spark, cache[memo], CENT_SCHEMA)
-    vn = corpus_checkpoint(_with_norm(v, "ev", "nrm"))
-    # bounded training sample: the mod ladder keeps Lloyd cost
-    # corpus-size-independent (counts the materialized checkpoint)
-    mod = adaptive_train_mod(vn.count())
-    vt = vn.filter(F.pmod("vec_id", F.lit(mod)) == 0).localCheckpoint(eager=True)
-    cents = vn.filter(
-        (F.col("vec_id") >= CENTROID_BASE) & (F.col("vec_id") < CENTROID_BASE + n_cells)
-    ).select(
-        (F.col("vec_id") - CENTROID_BASE).alias("cell_id"),
-        F.col("ev").alias("cv"),
-        F.col("nrm").alias("cnrm"),
-    )
-    for _ in range(N_ITERS):
-        # score SKINNY rows (vec_id, cell_id, c) — carrying the 64-double
-        # ev array through the sample×K relation and its groupBy shuffle
-        # is what made large-K training memory-bound (measured 3x at
-        # K=256); the vectors join back AFTER the argmax collapses the
-        # relation to one row per training vector
-        scored = vt.crossJoin(F.broadcast(cents)).select(
-            "vec_id",
-            (_dot("ev", "cv") / (F.col("nrm") * F.col("cnrm"))).alias("c"),
-            "cell_id",
+    if n_cells > ADAPTIVE_CELL_CAP:
+        raise ValueError(
+            f"n_cells={n_cells} > ADAPTIVE_CELL_CAP: its seeds lie past SEED_END"
         )
-        # argmax by (cosine DESC, cell_id ASC) as a hash-agg max_by — no
-        # sort window needed; lexicographic struct max == the tie order
-        assigned = scored.groupBy("vec_id").agg(
-            F.max_by(
-                "cell_id", F.struct(F.col("c"), (-F.col("cell_id")).alias("neg"))
-            ).alias("cell_id"),
-        ).join(vt.select("vec_id", "ev"), "vec_id")
-        # element-wise mean via posexplode + one avg — a narrow codegen
-        # aggregate instead of DIM parallel agg expressions
-        means = (
-            assigned.select("cell_id", F.posexplode("ev").alias("pos", "x"))
-            .groupBy("cell_id", "pos")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("cell_id")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-            .select(
-                "cell_id",
-                F.expr("transform(pm, s -> round(s.m * 1000000.0) / 1000000.0)").alias("mv"),
-            )
-        )
-        cents = (
-            cents.alias("p")
-            .join(means.alias("m"), "cell_id", "left")
-            .select("cell_id", F.coalesce("m.mv", "p.cv").alias("cv"))
-        )
-        cents = _with_norm(cents, "cv", "cnrm").localCheckpoint(eager=True)
-    if cache is not None:
-        # mirror the K trained rows driver-side so later index builds in
-        # this session (e.g. IVF-PQ after IVF) skip the Lloyd jobs entirely
-        cache[memo] = sorted(
-            (int(r["cell_id"]), list(r["cv"])) for r in cents.select("cell_id", "cv").collect()
-        )
-    # int cast: the cold path derives cell_id as a LONG (vec_id
-    # arithmetic) while the memo/index replay path declares CENT_SCHEMA's
-    # int — the same query cold vs warm must not change schema
-    return cents.select(F.col("cell_id").cast("int").alias("cell_id"), "cv")
+
+    def build():
+        mod, ids, x = train_sample(v, cache_key)
+        seed = (ids >= CENTROID_BASE) & (ids < CENTROID_BASE + n_cells)
+        cents = lloyd(x[ids % mod == 0], x[seed], N_ITERS, "cosine")
+        return [(int(i) - CENTROID_BASE, cv) for i, cv in zip(ids[seed], cents.tolist())]
+
+    rows = _memo(v.sparkSession, ("centroids", cache_key, n_cells), build)
+    return replay_rows_df(v.sparkSession, rows, CENT_SCHEMA)
 
 
 def _kmeans_ctes(n_cells_sql: str | int = N_CELLS) -> str:
@@ -386,9 +435,8 @@ ORDER BY query_id, rank
 # Above this source size the n×K scored relation must be SKINNY —
 # (vec_id, cell_id, c) only: carrying ev+nrm through the checkpoint and
 # a full-corpus sort window pins K copies of every embedding in session
-# storage and shuffles them (the fat-relation regression
-# train_centroids documents as measured 3x at large K; at sf10 ~1.6 GB
-# for K=16). Below it the fat single-pass shape wins — the extra
+# storage and shuffles them (the fat relation measured 3x slower in
+# the former Spark k-means at large K; at sf10 ~1.6 GB for K=16). Below it the fat single-pass shape wins — the extra
 # vectors-join and second checkpoint of the skinny arm cost more than
 # 16 copies of a tiny table (measured at sf0.1: 1.4 -> 1.7-2.1 s).
 # §4d threshold dispatch: two physical plans, one answer; both arms
@@ -434,8 +482,8 @@ def assign_and_probes(
         )
     else:
         # skinny arm: score (vec_id, cell_id, c) only; hash-agg argmax
-        # (tie order (c DESC, cell_id ASC) ≡ lexicographic struct max,
-        # as in train_centroids) and the vectors join back AFTER the
+        # (tie order (c DESC, cell_id ASC) ≡ lexicographic struct max)
+        # and the vectors join back AFTER the
         # collapse; only the n_queries×K probe slice pays a sort window
         vn = _with_norm(v, "ev", "nrm").transform(corpus_checkpoint_lazy)
         scored_cells = vn.crossJoin(F.broadcast(cn)).select(

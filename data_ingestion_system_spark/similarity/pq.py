@@ -11,16 +11,16 @@ join touches only (vec_id, m, code) triples, never raw vectors.
 
 Codebooks are trained with Lloyd iterations per subspace (L2
 assignment, element-wise-mean update, rounded to 6 decimals) over the
-1-in-TRAIN_MOD sample, seeded from a fixed corpus slice — the exact
-training recipe of the IVF coarse quantizer, so the DuckDB oracle can
-unroll it as CTEs and the whole pipeline (training included) is
-value-hash-checked.
+IVF quantizer's training sample, seeded from a fixed corpus slice — the
+exact training recipe of the IVF coarse quantizer (`ivf.lloyd` on the
+driver), so the DuckDB oracle can unroll it as CTEs and the whole
+pipeline (training included) is value-hash-checked.
 
-At scale: training touches the sample M x PQ_ITERS times; encoding is
-one broadcast join over the corpus (128 codebook rows); a query is a
-broadcast LUT join + an 8-term sum per candidate. ADC scores are inner
-products, not cosines — rank-equivalent for normalized embeddings and
-the standard PQ scoring choice.
+At scale: training touches the bounded sample M x PQ_ITERS times on the
+driver; encoding is one broadcast join over the corpus (128 codebook
+rows); a query is a broadcast LUT join + an 8-term sum per candidate.
+ADC scores are inner products, not cosines — rank-equivalent for
+normalized embeddings and the standard PQ scoring choice.
 """
 
 from __future__ import annotations
@@ -30,11 +30,13 @@ from pyspark.sql import functions as F
 
 from data_ingestion_system_spark.functions.scalar import round_port
 from data_ingestion_system_spark.registry import query
-from data_ingestion_system_spark.tables import corpus_checkpoint
+from data_ingestion_system_spark.tables import corpus_checkpoint, replay_rows_df
 from data_ingestion_system_spark.similarity.ivf import (
-    adaptive_train_mod,
+    _memo,
     adaptive_train_mod_case_sql,
     dataset_cache_key,
+    lloyd,
+    train_sample,
 )
 from data_ingestion_system_spark.similarity.ann import (
     DIM,
@@ -92,74 +94,37 @@ def _assign(sv: DataFrame, codes: DataFrame) -> DataFrame:
 CODES_SCHEMA = "m int, code int, cv array<double>"
 
 
-def train_codebooks(
-    v: DataFrame, sv: DataFrame | None = None, cache_key: str | None = None
-) -> DataFrame:
-    """PQ_ITERS Lloyd rounds per subspace over the sample. Returns the
-    (m, code, cv) codebook; empty codes keep their previous centroid.
-    Pass an already-checkpointed `sv` (subvectors(v)) to share the
-    exploded relation with the caller's encode/LUT stages. With
-    ``cache_key``, the trained (m, code, cv) rows are mirrored driver-side
-    and reused by later index builds in the same session."""
-    from data_ingestion_system_spark.similarity.ivf import _index_cache
-    from data_ingestion_system_spark.tables import replay_rows_df
-
-    spark = v.sparkSession
-    cache = _index_cache(spark) if cache_key is not None else None
-    memo = ("codebooks", cache_key)
-    if cache is not None and memo in cache:
-        return replay_rows_df(spark, cache[memo], CODES_SCHEMA)
-    if sv is None:
-        sv = corpus_checkpoint(subvectors(v))
-    # bounded training sample, same mod ladder as the IVF quantizer
-    # (sv is checkpointed: n_vectors = rows / M subspaces, counted cheap)
-    mod = adaptive_train_mod(sv.count() // M_SUB)
-    train = sv.filter(F.pmod("vec_id", F.lit(mod)) == 0).localCheckpoint(eager=True)
-    codes = sv.filter(
-        (F.col("vec_id") >= PQ_CODE_BASE) & (F.col("vec_id") < PQ_CODE_BASE + K_CODES)
-    ).select("m", (F.col("vec_id") - PQ_CODE_BASE).alias("code"), F.col("sv").alias("cv"))
-    if codes.limit(1).isEmpty():
-        # the seed slice [PQ_CODE_BASE, PQ_CODE_BASE + K_CODES) assumes
-        # contiguous vec_ids covering it; a smaller/re-based corpus would
-        # otherwise train an EMPTY codebook and every PQ query would
-        # silently return zero rows (and the oracle, mirroring the same
-        # predicate, would pass vacuously on empty-vs-empty)
-        raise ValueError(
-            f"PQ codebook seed slice [{PQ_CODE_BASE}, {PQ_CODE_BASE + K_CODES}) "
-            "matched no vectors — corpus too small or vec_ids not contiguous"
-        )
-    for _ in range(PQ_ITERS):
-        assigned = _assign(train, codes)
-        means = (
-            assigned.select("m", "code", F.posexplode("sv").alias("pos", "x"))
-            .groupBy("m", "code", "pos")
-            .agg(F.avg("x").alias("mean"))
-            .groupBy("m", "code")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "mean"))).alias("pm"))
-            .select(
-                "m",
-                "code",
-                F.expr("transform(pm, s -> round(s.mean * 1000000.0) / 1000000.0)").alias("mv"),
+def train_codebooks(v: DataFrame, cache_key: str | None = None) -> DataFrame:
+    """PQ_ITERS driver-side `lloyd` rounds (L2) per subspace over the
+    shared training sample (`ivf.train_sample`), seeded from vec_ids
+    PQ_CODE_BASE..+K_CODES. Returns the (m, code, cv) codebook; empty
+    codes keep their previous centroid. With ``cache_key``, the trained
+    rows are memoized per session and reused by later index builds."""
+    def build():
+        mod, ids, x = train_sample(v, cache_key)
+        seed = (ids >= PQ_CODE_BASE) & (ids < PQ_CODE_BASE + K_CODES)
+        if not seed.any():
+            # the seed slice [PQ_CODE_BASE, PQ_CODE_BASE + K_CODES) assumes
+            # contiguous vec_ids covering it; a smaller/re-based corpus would
+            # otherwise train an EMPTY codebook and every PQ query would
+            # silently return zero rows (and the oracle, mirroring the same
+            # predicate, would pass vacuously on empty-vs-empty)
+            raise ValueError(
+                f"PQ codebook seed slice [{PQ_CODE_BASE}, {PQ_CODE_BASE + K_CODES}) "
+                "matched no vectors — corpus too small or vec_ids not contiguous"
             )
-        )
-        codes = (
-            codes.alias("p")
-            .join(means.alias("g"), ["m", "code"], "left")
-            .select("m", "code", F.coalesce("g.mv", "p.cv").alias("cv"))
-            .localCheckpoint(eager=True)
-        )
-    if cache is not None:
-        cache[memo] = sorted(
-            (int(r["m"]), int(r["code"]), list(r["cv"])) for r in codes.collect()
-        )
-    # int casts: the cold path derives code as LONG (vec_id arithmetic)
-    # while memo/index replay declares CODES_SCHEMA's ints — the same
-    # query cold vs warm must not change schema
-    return codes.select(
-        F.col("m").cast("int").alias("m"),
-        F.col("code").cast("int").alias("code"),
-        "cv",
-    )
+        train = x[ids % mod == 0]
+        rows = []
+        for m in range(M_SUB):
+            sub = slice(m * SD, (m + 1) * SD)
+            codes = lloyd(train[:, sub], x[seed, sub], PQ_ITERS, "l2")
+            rows += [
+                (m, int(i) - PQ_CODE_BASE, cv) for i, cv in zip(ids[seed], codes.tolist())
+            ]
+        return rows
+
+    rows = _memo(v.sparkSession, ("codebooks", cache_key), build)
+    return replay_rows_df(v.sparkSession, rows, CODES_SCHEMA)
 
 
 def pq_topk(
@@ -167,15 +132,10 @@ def pq_topk(
     codes: DataFrame,
     top_k: int = TOP_K,
     n_queries: int = N_QUERIES,
-    sv: DataFrame | None = None,
 ) -> DataFrame:
     """ADC search: encode the corpus to (vec_id, m, code), build the
-    query x code inner-product LUT, sum LUT hits per candidate. Pass
-    ``sv`` to share the caller's exploded-subvector checkpoint (a cold
-    train_codebooks + pq_topk would otherwise explode and checkpoint
-    the corpus twice)."""
-    if sv is None:
-        sv = corpus_checkpoint(subvectors(v), eager=False)
+    query x code inner-product LUT, sum LUT hits per candidate."""
+    sv = corpus_checkpoint(subvectors(v), eager=False)
     encoded = _assign(sv.filter(F.col("vec_id") >= n_queries), codes).select(
         F.col("vec_id").alias("cand_id"), "m", "code"
     )
@@ -222,14 +182,13 @@ def pq_rerank_topk(
     shortlist: int = SHORTLIST,
     top_k: int = TOP_K,
     n_queries: int = N_QUERIES,
-    sv: DataFrame | None = None,
 ) -> DataFrame:
     """ADC shortlist + exact re-rank: PQ cannot separate candidates that
     share all 8 codes (within-cluster neighbors), so the standard recipe
     re-scores the top-`shortlist` ADC hits with exact cosine against the
     raw vectors — brute-force quality at PQ cost (the exact join touches
     `shortlist` vectors per query, not the corpus)."""
-    short = pq_topk(v, codes, top_k=shortlist, n_queries=n_queries, sv=sv).select(
+    short = pq_topk(v, codes, top_k=shortlist, n_queries=n_queries).select(
         "query_id", "cand_id"
     )
     q = v.filter(F.col("vec_id") < n_queries).select(
@@ -371,10 +330,7 @@ def ann_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     only on the shortlist. Clustered-data recall gate in
     tests/test_similarity.py."""
     v = load_vectors(spark, sf_dir)
-    sv = corpus_checkpoint(subvectors(v), eager=False)
-    out = pq_rerank_topk(
-        v, train_codebooks(v, sv=sv, cache_key=dataset_cache_key(sf_dir)), sv=sv
-    )
+    out = pq_rerank_topk(v, train_codebooks(v, cache_key=dataset_cache_key(sf_dir)))
     return out.select(
         "query_id",
         "cand_id",
@@ -393,8 +349,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     capped by the data having no structure to exploit; the clustered-
     data recall gate lives in tests/test_similarity.py."""
     v = load_vectors(spark, sf_dir)
-    sv = corpus_checkpoint(subvectors(v), eager=False)
-    out = pq_topk(v, train_codebooks(v, sv=sv, cache_key=dataset_cache_key(sf_dir)), sv=sv)
+    out = pq_topk(v, train_codebooks(v, cache_key=dataset_cache_key(sf_dir)))
     return out.select(
         "query_id",
         "cand_id",
@@ -476,20 +431,18 @@ def ivfpq_topk(
     nprobe: int | None = None,
     top_k: int = TOP_K,
     n_queries: int = N_QUERIES,
-    sv: DataFrame | None = None,
 ) -> DataFrame:
     """IVF-PQ search against given quantizers: coarse cells prune the
     corpus to `nprobe` cells per query, PQ LUT scoring ranks candidates
     inside the probed cells. Returns (query_id, cand_id, adot, rank),
-    adot unrounded. Pass a checkpointed `sv` to share the exploded
-    subvector relation with codebook training."""
+    adot unrounded. The exploded subvector relation is checkpointed
+    eagerly (a lazy checkpoint here measured slower)."""
     from data_ingestion_system_spark.similarity.ivf import NPROBE, assign_and_probes
 
+    sv = corpus_checkpoint(subvectors(v))
     assigned, probes = assign_and_probes(
         v, centroids, NPROBE if nprobe is None else nprobe, n_queries
     )
-    if sv is None:
-        sv = corpus_checkpoint(subvectors(v), eager=False)
     encoded = _assign(sv.filter(F.col("vec_id") >= n_queries), codes).select(
         F.col("vec_id").alias("cand_id"), "m", "code"
     )
@@ -530,18 +483,18 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the probed cells are scored through the PQ lookup table instead of
     raw vectors — the FAISS IVFADC architecture (Jégou et al. 2011 §IV)
     minus residual encoding, which is documented as the extension (the
-    codebooks here quantize raw vectors, shared with `ann_pq_topk`; at
-    100 TB both trainings reuse one sample pass).
+    codebooks here quantize raw vectors, shared with `ann_pq_topk`; both
+    trainings run on the driver over one collected sample).
 
-    Plan shape: two broadcast trainings over samples, one broadcast
+    Plan shape: two memoized quantizers replayed as broadcasts, one broadcast
     centroid join to assign cells, a (cell_id) equi-join to generate
     candidates (NPROBE/K of the corpus), and an 8-row LUT sum per
     candidate. No raw-vector math on the corpus side at query time."""
     from data_ingestion_system_spark.similarity.ivf import train_centroids
 
     v = load_vectors(spark, sf_dir)
-    sv = corpus_checkpoint(subvectors(v))
-    out = ivfpq_topk(v, train_centroids(v, cache_key=dataset_cache_key(sf_dir)), train_codebooks(v, sv=sv, cache_key=dataset_cache_key(sf_dir)), sv=sv)
+    key = dataset_cache_key(sf_dir)
+    out = ivfpq_topk(v, train_centroids(v, cache_key=key), train_codebooks(v, cache_key=key))
     return out.select(
         "query_id",
         "cand_id",

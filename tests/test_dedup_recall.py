@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from data_ingestion_system_spark.dedup.simhash import (
     HAMMING_MAX,
-    MB_BITS,
     MB_BLOCKS,
     simhash_blocks,
     simhash_fingerprints,
@@ -37,7 +36,7 @@ def test_pigeonhole_precondition():
 def test_multiblock_matches_all_pairs_bruteforce(spark):
     docs = load_table(spark, SF_DIR, "documents")
     fps = dict(
-        simhash_fingerprints(docs, MB_BITS)
+        simhash_fingerprints(docs)
         .rdd.map(lambda r: (r.doc_id, r.simhash))
         .collect()
     )
@@ -55,7 +54,7 @@ def test_multiblock_matches_all_pairs_bruteforce(spark):
 
 def test_each_doc_lands_in_every_block_table(spark):
     docs = load_table(spark, SF_DIR, "documents")
-    blocks = simhash_blocks(simhash_fingerprints(docs, MB_BITS))
+    blocks = simhash_blocks(simhash_fingerprints(docs))
     per_doc = blocks.groupBy("doc_id").agg(
         F.count("*").alias("n"), F.countDistinct("t").alias("nt")
     )

@@ -496,34 +496,23 @@ def test_source_vocab_jaccard_joins_on_token(spark, sf_dir):
 
 
 def test_simhash_candidates_join_on_fingerprint_value(spark, sf_dir):
-    """At scale both simhash variants search candidates over the
-    DISTINCT fingerprint-value relation and expand via value-keyed
+    """At scale the multiblock simhash searches candidates over the
+    DISTINCT fingerprint-value relation and expands via value-keyed
     equi-joins — the plan must carry the distinct aggregate and
     simhash-keyed joins, and never a cartesian (the doc-level self-join
-    this replaced went quadratic as the value space saturated).
-    `near_dup_simhash` picks the direct doc-level block join below
+    this replaced went quadratic as the value space saturated). The
+    query picks the direct doc-level block join below
     VALUE_COLLAPSE_MIN_DOCS (r5: the collapse constant cost ~1s at
     sf0.1 without buying anything), so the collapsed shape is asserted
     on the builder directly and the threshold dispatch separately."""
     from data_ingestion_system_spark.dedup.simhash import (
-        MB_BITS,
         simhash_fingerprints,
-        simhash_pairs_direct,
         simhash_pairs_multiblock_direct,
         simhash_pairs_multiblock_value_collapsed,
-        simhash_pairs_value_collapsed,
     )
     from data_ingestion_system_spark.tables import load_table
 
-    hashes = simhash_fingerprints(load_table(spark, sf_dir, "documents"))
-    collapsed = simple_plan_str(simhash_pairs_value_collapsed(hashes))
-    assert "CartesianProduct" not in collapsed
-    assert "HashAggregate" in collapsed  # the distinct-value collapse
-    direct = simple_plan_str(simhash_pairs_direct(hashes))
-    assert "CartesianProduct" not in direct  # block-keyed equi-join
-    assert "simhash" in direct
-
-    mb = simhash_fingerprints(load_table(spark, sf_dir, "documents"), MB_BITS)
+    mb = simhash_fingerprints(load_table(spark, sf_dir, "documents"))
     mb_collapsed = simple_plan_str(simhash_pairs_multiblock_value_collapsed(mb))
     assert "CartesianProduct" not in mb_collapsed
     assert "HashAggregate" in mb_collapsed
@@ -532,39 +521,8 @@ def test_simhash_candidates_join_on_fingerprint_value(spark, sf_dir):
     assert "bkey" in mb_direct
 
     # the sf0.001 corpus (500 docs) is below the threshold → direct plan
-    # (near_dup_simhash is a library diagnostic since r8 — called direct)
-    from data_ingestion_system_spark.dedup.simhash import near_dup_simhash
-
-    for name, build in (
-        ("near_dup_simhash", near_dup_simhash),
-        ("near_dup_simhash_multiblock", REGISTRY["near_dup_simhash_multiblock"].spark),
-    ):
-        small = build(spark, sf_dir)
-        assert "CartesianProduct" not in simple_plan_str(small), name
-
-
-def test_simhash_direct_and_collapsed_plans_agree(spark, sf_dir):
-    """The threshold in near_dup_simhash only picks a physical shape —
-    both builders must produce the identical pair set."""
-    from data_ingestion_system_spark.dedup.simhash import (
-        simhash_fingerprints,
-        simhash_pairs_direct,
-        simhash_pairs_value_collapsed,
-    )
-    from data_ingestion_system_spark.tables import load_table
-
-    hashes = simhash_fingerprints(
-        load_table(spark, sf_dir, "documents")
-    ).localCheckpoint(eager=True)
-    direct = {
-        (r.doc_a, r.doc_b, r.hamming) for r in simhash_pairs_direct(hashes).collect()
-    }
-    collapsed = {
-        (r.doc_a, r.doc_b, r.hamming)
-        for r in simhash_pairs_value_collapsed(hashes).collect()
-    }
-    assert direct == collapsed
-    assert len(direct) > 0
+    small = REGISTRY["near_dup_simhash_multiblock"].spark(spark, sf_dir)
+    assert "CartesianProduct" not in simple_plan_str(small)
 
 
 def test_simhash_multiblock_plans_agree(spark, sf_dir):
@@ -573,7 +531,6 @@ def test_simhash_multiblock_plans_agree(spark, sf_dir):
     value-collapsed (cross/same split) builders return the identical
     pair set."""
     from data_ingestion_system_spark.dedup.simhash import (
-        MB_BITS,
         simhash_fingerprints,
         simhash_pairs_multiblock_direct,
         simhash_pairs_multiblock_value_collapsed,
@@ -581,7 +538,7 @@ def test_simhash_multiblock_plans_agree(spark, sf_dir):
     from data_ingestion_system_spark.tables import load_table
 
     hashes = simhash_fingerprints(
-        load_table(spark, sf_dir, "documents"), MB_BITS
+        load_table(spark, sf_dir, "documents")
     ).localCheckpoint(eager=True)
     direct = {
         (r.doc_a, r.doc_b, r.hamming)

@@ -5,28 +5,13 @@ would otherwise run — the full doc-pair dump fed through doc-level
 connected components — without ever materializing the pair relation.
 This pins the value-clique theorem (doc graph = value graph expanded by
 same-value cliques) on real data, not just the oracle plumbing.
-
-The demoted 16-bit diagnostic `near_dup_simhash` (catalog slot handed
-to the keeper query in r8) keeps its oracle gate here.
 """
 
 from __future__ import annotations
 
-from conftest import assert_df_matches_oracle
-
 from data_ingestion_system_spark.dedup.clusters import connected_components
-from data_ingestion_system_spark.dedup.simhash import (
-    SIMHASH_PAIRS_ORACLE,
-    near_dup_simhash,
-    near_dup_simhash_multiblock_keepers,
-)
+from data_ingestion_system_spark.dedup.simhash import near_dup_simhash_multiblock_keepers
 from data_ingestion_system_spark.registry import load_all
-
-
-def test_near_dup_simhash_oracle_parity(spark, sf_dir, duck):
-    """The library diagnostic keeps the exact pytest oracle gate it had
-    as a catalog query."""
-    assert_df_matches_oracle(near_dup_simhash(spark, sf_dir), duck, SIMHASH_PAIRS_ORACLE)
 
 
 def test_keepers_equal_pairdump_components(spark, sf_dir):
