@@ -28,7 +28,7 @@ if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
 from data_ingestion_system_spark.registry import load_all
-from data_ingestion_system_spark.session import get_spark
+from data_ingestion_system_spark.session import codegen_counters, get_spark
 from data_ingestion_system_spark.tables import release_session_checkpoints
 
 HEADLINE = [
@@ -153,12 +153,16 @@ def main() -> None:
 
     times: dict[str, float] = {}
     collect_sec: dict[str, float] = {}
+    compiles: dict[str, list[int]] = {}
+    compile_ms: dict[str, list[float]] = {}
     import shutil
     import tempfile
 
     sink_root = tempfile.mkdtemp(prefix="bench_keeper_sink_")
     for name in HEADLINE:
-        walls, _ = time_query(spark, registry, name, sf_dir, REPS, sink_root)
+        walls, _, compiles[name], compile_ms[name] = time_query(
+            spark, registry, name, sf_dir, REPS, sink_root
+        )
         times[name] = round(statistics.median(walls), 3)
         if name in OUTPUT_BOUND or name in KEEPER_SINK:
             t0 = time.perf_counter()
@@ -205,6 +209,12 @@ def main() -> None:
         "ann_index_train_sec": train_sec,
         "box_cal": boxcal,
         "data_manifest": _data_manifest(sf_dir),
+        # per query and rep: Janino compiles (generated-class cache
+        # misses) and their milliseconds; `codegen_session_compiles` is
+        # the session's total, warm-up and index training included
+        "codegen_compiles": compiles,
+        "codegen_ms": compile_ms,
+        "codegen_session_compiles": codegen_counters(spark)[0],
     }
     if boxcal:
         norm = {k: round(v / boxcal["factor"], 3) for k, v in times.items()}
@@ -253,13 +263,15 @@ def main() -> None:
 
 def time_query(
     spark, registry: dict, name: str, sf_dir: str, reps: int, sink_root: str
-) -> tuple[list[float], int | None]:
+) -> tuple[list[float], int | None, list[int], list[float]]:
     """Time `reps` runs of one catalog query; returns (walls in seconds,
-    answer rows). OUTPUT_BOUND queries run via .count() (the count is the
-    row count), KEEPER_SINK queries write parquet under `sink_root` (rows
-    read from the written footers afterwards, untimed), everything else
-    is .collect()ed."""
-    walls, rows = [], None
+    answer rows, and per rep the classes Janino compiled and their
+    milliseconds). OUTPUT_BOUND queries run via .count() (the count is
+    the row count), KEEPER_SINK queries write parquet under `sink_root`
+    (rows read from the written footers afterwards, untimed), everything
+    else is .collect()ed. The compile counters are read outside the
+    timed span and run no Spark job."""
+    walls, rows, compiles, compile_ms = [], None, [], []
     for _ in range(reps):
         # free finished runs' checkpoint blocks so no rep is measured
         # under another's leftover storage pressure
@@ -271,6 +283,7 @@ def time_query(
         # index cache is driver-row-mirrored, so the release cannot
         # evict it.)
         release_session_checkpoints(spark)
+        n0, ms0 = codegen_counters(spark)
         t0 = time.perf_counter()
         df = registry[name].spark(spark, sf_dir)
         if name in OUTPUT_BOUND:
@@ -283,9 +296,12 @@ def time_query(
         else:
             rows = len(df.collect())
         walls.append(time.perf_counter() - t0)
+        n1, ms1 = codegen_counters(spark)
+        compiles.append(n1 - n0)
+        compile_ms.append(round(ms1 - ms0, 1))
     if name in KEEPER_SINK:
         rows = _parquet_rows(os.path.join(sink_root, name))
-    return walls, rows
+    return walls, rows, compiles, compile_ms
 
 
 def _parquet_rows(path: str) -> int:

@@ -151,8 +151,8 @@ def _cc_driver(edges: DataFrame) -> DataFrame:
     minimum doc_id so each component's label is its min member — the
     identical contract the contraction loop converges to. The result is
     re-parallelized with the same column type the edges carried (an
-    ExistingRDD scan, like tables.replay_rows_df, so re-use replays
-    cheaply and never re-runs the collect)."""
+    ExistingRDD scan in a few slices, so re-use replays cheaply and
+    never re-runs the collect)."""
     from pyspark.sql.types import StructField, StructType
 
     spark = edges.sparkSession

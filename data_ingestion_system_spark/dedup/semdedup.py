@@ -44,9 +44,9 @@ from data_ingestion_system_spark.registry import query
 from data_ingestion_system_spark.tables import (
     corpus_checkpoint_lazy,
     load_table,
+    local_rows_df,
     pin_join_width,
     pin_width,
-    replay_rows_df,
 )
 from data_ingestion_system_spark.similarity.ann import DIM, _dot, load_vectors
 from data_ingestion_system_spark.similarity.ivf import (
@@ -505,7 +505,7 @@ def train_fine_centroids(
         return out
 
     rows = _memo(cassigned.sparkSession, ("fine_centroids", cache_key, kf, train_mod), build)
-    replay = replay_rows_df(
+    replay = local_rows_df(
         cassigned.sparkSession, rows, "cell_id int, fine_id int, fv array<double>"
     )
     return _with_norm(replay, "fv", "fnrm")

@@ -11,6 +11,16 @@ The reference delegates all execution to in-process SQLite
   lexicographically (reference: src/database/db_manager.py:165-170); we keep
   native timestamps and pin the zone so results are environment-independent.
 - Arrow enabled for the (rare) pandas boundary.
+- A session compiles each plan shape once. Spark keeps Janino-compiled
+  classes in one JVM-wide LRU (`spark.sql.codegen.cache.maxEntries`,
+  default 100), and one perfbench `warehouse` pass alone generates about
+  170 classes, so at the default every pass recompiled what the pass
+  before had run (12-15 ms a class plus class loading, and on a long
+  session a full C1 code cache). The cap is `CODEGEN_CACHE_ENTRIES`
+  = 2048, at least twice the measured working set: 413 distinct
+  classes in a traced perfbench session of both workloads, 864 in a
+  `bench.py` headline session. `codegen_counters` reads the JVM's
+  compile count and time for the harnesses.
 """
 
 from __future__ import annotations
@@ -20,6 +30,17 @@ import os
 from pyspark.sql import SparkSession
 
 APP_NAME = "data-ingestion-system-spark"
+
+# Generated-class cache cap: the smallest power of two at least twice
+# the larger of two measured working sets, the distinct classes one
+# session compiles with an unbounded cache (local[4]). A traced
+# perfbench session of both workloads (set-up, drains, warm-up and
+# timed passes, checks) compiles 413; a bench.py headline session (35
+# queries at sf0.1, warm-up, index training and 3 reps each) 864. A
+# generated class averages 2.2-2.3 KB of bytecode, so the cap costs a
+# few MB at most. The conf is static: the first session of the JVM
+# fixes it, and `extra_conf` overrides it there.
+CODEGEN_CACHE_ENTRIES = 2048
 
 
 def default_parallelism() -> int:
@@ -72,6 +93,7 @@ def get_spark(
         # deterministically between queries
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.sql.shuffledHashJoinFactor", "3")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # bucketed tables (sources/bucketing.py) live in the session
         # catalog; keep the warehouse out of the repo checkout
         .config(
@@ -125,6 +147,18 @@ def get_spark(
         if width and spark.conf.get("spark.sql.shuffle.partitions") != str(width):
             spark.conf.set("spark.sql.shuffle.partitions", str(width))
     return spark
+
+
+def codegen_counters(spark: SparkSession) -> tuple[int, float]:
+    """(classes compiled, compile milliseconds) by this JVM so far, read
+    from Spark's own codegen metrics on the driver: two py4j calls and
+    no Spark job. Harnesses take deltas around a query or a micro-batch;
+    a compile is a cache miss, so a plan that reruns should add none.
+    Under a multi-JVM master the executors' compiles are not counted."""
+    jvm = spark.sparkContext._jvm
+    n = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return int(n), ns / 1e6
 
 
 def _topology_width(spark: SparkSession, local_n: int) -> int | None:

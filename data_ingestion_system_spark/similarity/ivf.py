@@ -342,7 +342,7 @@ def train_centroids(
     ``cache_key`` the trained rows are memoized per session, so later
     index builds (e.g. IVF-PQ reusing IVF's coarse quantizer) replay them
     without any job."""
-    from data_ingestion_system_spark.tables import replay_rows_df
+    from data_ingestion_system_spark.tables import local_rows_df
 
     if n_cells > ADAPTIVE_CELL_CAP:
         raise ValueError(
@@ -356,7 +356,7 @@ def train_centroids(
         return [(int(i) - CENTROID_BASE, cv) for i, cv in zip(ids[seed], cents.tolist())]
 
     rows = _memo(v.sparkSession, ("centroids", cache_key, n_cells), build)
-    return replay_rows_df(v.sparkSession, rows, CENT_SCHEMA)
+    return local_rows_df(v.sparkSession, rows, CENT_SCHEMA)
 
 
 def _kmeans_ctes(n_cells_sql: str | int = N_CELLS) -> str:

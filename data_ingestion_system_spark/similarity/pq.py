@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from data_ingestion_system_spark.functions.scalar import round_port
 from data_ingestion_system_spark.registry import query
-from data_ingestion_system_spark.tables import corpus_checkpoint, replay_rows_df
+from data_ingestion_system_spark.tables import corpus_checkpoint, local_rows_df
 from data_ingestion_system_spark.similarity.ivf import (
     _memo,
     adaptive_train_mod_case_sql,
@@ -124,7 +124,7 @@ def train_codebooks(v: DataFrame, cache_key: str | None = None) -> DataFrame:
         return rows
 
     rows = _memo(v.sparkSession, ("codebooks", cache_key), build)
-    return replay_rows_df(v.sparkSession, rows, CODES_SCHEMA)
+    return local_rows_df(v.sparkSession, rows, CODES_SCHEMA)
 
 
 def pq_topk(

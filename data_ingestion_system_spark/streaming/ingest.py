@@ -85,13 +85,19 @@ def evaluate_batch_health(
     on the existing audit row). The baseline read is a 5-row
     TakeOrdered over the one-row-per-batch audit — one job, metadata
     scale — not a full-history single-partition window sort; a healthy
-    batch writes NOTHING (no empty-file accretion in alerts_dir)."""
+    batch writes NOTHING (no empty-file accretion in alerts_dir).
+
+    The baseline is the newest 5 audit rows, with no `batch_id < N`
+    filter: this runs before batch N's marker is written, and
+    `batch_committed` has just found no marker at or after N, so every
+    audit row is an earlier batch's. Without the filter the plan holds
+    no batch number, and every batch reuses the classes the first one
+    compiled."""
     avg_inserted5 = avg_duration5 = None
     if has_parquet(paths.audit_dir):
         prev = (
             spark.read.schema(AUDIT_SCHEMA)
             .parquet(paths.audit_dir)
-            .filter(F.col("batch_id") < int(batch_id))
             .orderBy(F.col("batch_id").desc())
             .limit(5)
             .select("inserted", "duration_seconds")
@@ -187,16 +193,28 @@ def drain_files(
 
 def batch_committed(spark: SparkSession, audit_dir: str, batch_id: int) -> bool:
     """Whether `batch_id`'s audit row — the commit marker both write
-    paths append LAST — exists, i.e. the batch is a replay to skip. One
-    job: the `batch_id` column is read with its type pinned (no footer
-    inference) and the matching rows are collected (no limit, whose
-    partition scale-up can take several jobs)."""
-    return has_parquet(audit_dir) and bool(
+    paths append LAST — exists, i.e. the batch is a replay to skip.
+
+    Asked as "is the newest marker at or after `batch_id`", which has
+    the same answer: a stream runs its batches in id order, batch N only
+    after batch N-1 has returned, and every batch that returns has
+    written its marker, so the markers are the ids 0..M of the batches
+    done and one at or after N exists exactly when N's does. The plan
+    holds no batch number (a `batch_id == N` filter compiled two new
+    classes every batch). One job: the `batch_id` column read with its
+    type pinned (no footer inference) and its top row taken by
+    TakeOrdered (no plain limit, whose partition scale-up can take
+    several jobs)."""
+    if not has_parquet(audit_dir):
+        return False
+    newest = (
         spark.read.schema("batch_id long")
         .parquet(audit_dir)
-        .filter(F.col("batch_id") == int(batch_id))
+        .orderBy(F.col("batch_id").desc())
+        .limit(1)
         .collect()
     )
+    return bool(newest) and newest[0].batch_id >= int(batch_id)
 
 
 def dedup_insert_batch(
@@ -221,6 +239,12 @@ def dedup_insert_batch(
     batch_id with dynamic overwrite (replay-idempotent, like
     provenance), and counted in the audit record:
     fetched = inserted + skipped + quarantined.
+
+    The `batch_id` partition value of those two writes is a string
+    literal: Spark passes a string literal to its generated code by
+    reference, but inlines a long one, which made every batch compile
+    its own copy of the writes' classes. The partition directory is
+    `batch_id=<n>` either way, and readers infer the same type from it.
 
     Replay-safe: the audit row is the commit marker — a replayed batch
     whose audit row already exists is skipped outright, and provenance is
@@ -258,11 +282,11 @@ def dedup_insert_batch(
         from data_ingestion_system_spark.operators.integrity import validate
 
         valid_df, quar_df = validate(batch_df, rules)
-        quar_df.withColumn(
-            "batch_id", F.lit(int(batch_id)).cast("long")
-        ).write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("batch_id").parquet(paths.quarantine_dir)
+        quar_df.withColumn("batch_id", F.lit(str(int(batch_id)))).write.mode(
+            "overwrite"
+        ).option("partitionOverwriteMode", "dynamic").partitionBy("batch_id").parquet(
+            paths.quarantine_dir
+        )
         batch_df = valid_df
         prov_df = valid_df.select(
             F.col(key_col), F.lit(False).alias("quarantined")
@@ -294,11 +318,9 @@ def dedup_insert_batch(
         fetched_obs,
         F.count(F.lit(1)).alias("fetched"),
         F.count_if(F.col("quarantined")).alias("quarantined"),
-    ).withColumn(
-        "batch_id", F.lit(batch_id).cast("long")
-    ).write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
-        "batch_id"
-    ).parquet(paths.provenance_dir)
+    ).withColumn("batch_id", F.lit(str(int(batch_id)))).write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("batch_id").parquet(paths.provenance_dir)
     inserted = inserted_obs.get["n"]
     fetched, quarantined = fetched_obs.get["fetched"], fetched_obs.get["quarantined"]
     skipped = fetched - quarantined - inserted

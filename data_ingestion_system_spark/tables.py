@@ -437,9 +437,12 @@ def release_session_checkpoints(spark: SparkSession) -> int:
     caches (ANN index rows, broadcast handles) are not persistent RDDs
     and survive."""
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    rdds = list(jmap.values())
-    for rdd in rdds:
-        rdd.unpersist(False)
+    # indexed, not iterated: a py4j iterator ends in a JVM
+    # NoSuchElementException, which PySpark's error converter then
+    # matches against its exception classes (50-60 ms a call)
+    keys = jmap.keySet().toArray()
+    for i in range(len(keys)):
+        jmap.get(keys[i]).unpersist(False)
     # Reliable-mode twin (r8): df.checkpoint() part files are not
     # reference-tracked reliably either — ContextCleaner deletes them
     # only with cleanCheckpoints=true AND a timely driver GC, the same
@@ -478,7 +481,7 @@ def release_session_checkpoints(spark: SparkSession) -> int:
             for sub in os.listdir(d):
                 if sub.startswith("rdd-"):
                     shutil.rmtree(os.path.join(d, sub), ignore_errors=True)
-    return len(rdds)
+    return len(keys)
 
 
 def _declared_reduce_width(spark: SparkSession) -> int:
@@ -497,26 +500,17 @@ def _declared_reduce_width(spark: SparkSession) -> int:
         return spark.sparkContext.defaultParallelism
 
 
-def replay_rows_df(spark: SparkSession, rows: list, schema: StructType | str) -> DataFrame:
-    """Small driver-held row set → RDD-backed DataFrame (ExistingRDD scan).
-
-    Deliberately NOT a LocalRelation: local rows inline into the generated
-    code as literals, so re-creating the frame with different data inside
-    a loop makes every pass a *different* source that Janino recompiles
-    (~seconds each); an ExistingRDD scan keeps the compiled-code cache hot.
-    Used to replay memoized index artifacts (IVF centroids, PQ codebooks).
-    """
-    return spark.createDataFrame(spark.sparkContext.parallelize(list(rows), 1), schema)
-
-
 def local_rows_df(spark: SparkSession, rows: list, schema: StructType | str) -> DataFrame:
-    """Small driver-built row set (audit, alert, label rows) → LocalRelation.
+    """Small driver-built row set (audit, alert, label rows, replayed
+    index artifacts) → LocalRelation.
 
     `createDataFrame(list, schema)` pickles the rows through `parallelize`
     into a PythonRDD, so every append starts Python worker tasks (and the
     first one in a session starts the `pyspark.daemon`). An Arrow table
     plans as a `LocalTableScan` and runs no Python on the executors: one
-    write job, one part file. Column types and nullability are `schema`'s
+    write job, one part file. The rows are data, not code: a frame
+    rebuilt with other rows of the same schema reuses the compiled
+    classes. Column types and nullability are `schema`'s
     exactly; top-level timestamps take the same wall-clock reading as
     `createDataFrame(list, ...)` (a naive datetime is local time)."""
     import pyarrow as pa

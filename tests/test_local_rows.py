@@ -1,5 +1,6 @@
-"""`tables.local_rows_df`: driver-built rows (audit, alert, label rows)
-as a LocalRelation — no PythonRDD, so an append starts no Python worker."""
+"""`tables.local_rows_df`: driver-built rows (audit, alert, label rows,
+replayed index artifacts) as a LocalRelation — no PythonRDD, so an
+append starts no Python worker."""
 
 from __future__ import annotations
 
@@ -52,3 +53,37 @@ def test_struct_type_schema_and_no_rows(spark):
     df = local_rows_df(spark, [], schema)
     assert df.schema == schema
     assert df.collect() == []
+
+
+def test_a_second_artifact_reuses_the_compiled_classes(spark):
+    """Replayed index artifacts are LocalTableScans whose rows are data,
+    not code: scoring against a second, different centroid set of the
+    same schema compiles no new class."""
+    from pyspark.sql import functions as F
+
+    from data_ingestion_system_spark.session import codegen_counters
+    from data_ingestion_system_spark.similarity.ivf import CENT_SCHEMA
+
+    vecs = spark.range(64).select(
+        F.col("id").alias("vec_id"),
+        F.array(*(F.sin(F.col("id") * k) for k in range(1, 5))).alias("ev"),
+    )
+
+    def nearest(rows):
+        cents = local_rows_df(spark, rows, CENT_SCHEMA)
+        dot = F.aggregate(
+            F.zip_with("ev", "cv", lambda a, b: a * b), F.lit(0.0), lambda s, x: s + x
+        )
+        return (
+            vecs.crossJoin(F.broadcast(cents))
+            .groupBy("vec_id")
+            .agg(F.max_by("cell_id", dot).alias("cell_id"))
+            .collect()
+        )
+
+    first = nearest([(c, [float(c), 1.0, -1.0, 0.5]) for c in range(8)])
+    n0 = codegen_counters(spark)[0]
+    second = nearest([(c, [0.25, float(-c), 2.0, 1.0]) for c in range(5)])
+    assert codegen_counters(spark)[0] - n0 == 0
+    assert len(first) == len(second) == 64
+    assert {r.cell_id for r in second} <= set(range(5))

@@ -191,13 +191,9 @@ def test_fine_centroid_memo_replays_identically(spark, sf_dir):
     warm = train_fine_centroids(
         cassigned, kf, train_mod=adaptive_train_mod(n), cache_key=key
     )
-    # names/types must match exactly; nullability flags may differ (an
-    # ExistingRDD scan is nullable-by-default) and normalize away in the
-    # downstream joins/aggregates — the QUERY-level schema equality is
-    # asserted below via semantic_dedup_hier itself
-    assert [(f.name, f.dataType) for f in warm.schema] == [
-        (f.name, f.dataType) for f in cold.schema
-    ]
+    # both sides replay the memoized rows through the same LocalRelation,
+    # so the schemas match exactly, nullability included
+    assert warm.schema == cold.schema
     assert sorted(map(tuple, warm.collect())) == sorted(map(tuple, cold.collect()))
     from data_ingestion_system_spark.dedup.semdedup import semantic_dedup_hier
 
@@ -206,5 +202,5 @@ def test_fine_centroid_memo_replays_identically(spark, sf_dir):
     q_cold = semantic_dedup_hier(spark, sf_dir)
     assert q_warm.schema == q_cold.schema
     assert q_warm.collect() == q_cold.collect()
-    # the replay is an ExistingRDD scan — no Lloyd jobs in its plan
-    assert "Scan ExistingRDD" in warm._jdf.queryExecution().executedPlan().toString()
+    # the replay is a LocalTableScan — no Lloyd jobs in its plan
+    assert "LocalTableScan" in warm._jdf.queryExecution().executedPlan().toString()

@@ -6,6 +6,9 @@ queries' checkpoint blocks must be releasable between queries in a
 long-lived session (`release_session_checkpoints`), because nothing else
 unpersists them and four sequential sf30 queries OOM'd a heap whose
 every single query runs standalone.
+
+Also the session's generated-code cache: a long-lived session compiles
+each plan shape once (`session.CODEGEN_CACHE_ENTRIES`).
 """
 
 from __future__ import annotations
@@ -63,6 +66,52 @@ def test_release_session_checkpoints_frees_and_queries_rerun(spark, sf_dir):
 def test_release_is_idempotent_on_empty_session(spark):
     release_session_checkpoints(spark)
     assert release_session_checkpoints(spark) == 0
+
+
+def test_release_frees_every_rdd_without_a_jvm_exception(spark, monkeypatch):
+    """The release indexes the persisted-RDD map: walking a py4j
+    iterator ends in a JVM NoSuchElementException, which PySpark turns
+    into a CapturedException after matching it against its exception
+    classes (50-60 ms a call even with nothing persisted)."""
+    from pyspark.errors.exceptions import captured
+
+    release_session_checkpoints(spark)
+    pinned = [spark.range(100 * i).localCheckpoint(eager=True) for i in (1, 2, 3)]
+    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == len(pinned)
+    created = []
+    init = captured.CapturedException.__init__
+
+    def counting_init(self, *a, **kw):
+        created.append(type(self).__name__)
+        init(self, *a, **kw)
+
+    monkeypatch.setattr(captured.CapturedException, "__init__", counting_init)
+    assert release_session_checkpoints(spark) == len(pinned)
+    assert release_session_checkpoints(spark) == 0
+    assert created == []
+    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == 0
+
+
+def test_get_spark_sets_the_codegen_cache_cap(spark):
+    from data_ingestion_system_spark.session import CODEGEN_CACHE_ENTRIES
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        CODEGEN_CACHE_ENTRIES
+    )
+
+
+def test_a_rerun_query_compiles_no_class(spark, sf_dir):
+    """A session compiles each plan shape once: the second run of a
+    registry query finds every generated class in the cache."""
+    from data_ingestion_system_spark.session import codegen_counters
+
+    query = load_all()["app_stats"]
+    first = query.spark(spark, sf_dir).collect()
+    release_session_checkpoints(spark)
+    n0 = codegen_counters(spark)[0]
+    second = query.spark(spark, sf_dir).collect()
+    assert codegen_counters(spark)[0] - n0 == 0
+    assert sorted(map(tuple, first)) == sorted(map(tuple, second))
 
 
 def test_topology_width_follows_master_not_launcher_cpus():

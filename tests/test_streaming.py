@@ -560,3 +560,48 @@ def test_event_micro_batch_job_budget(spark, sf_dir, tmp_path):
     for r in audit.values():
         assert r.fetched == r.inserted + r.skipped + r.quarantined
     assert audit[1].skipped > 0  # the 100 re-fetched keys
+
+
+def test_third_event_micro_batch_compiles_no_class(spark, sf_dir, tmp_path):
+    """Generated code is compiled once per session: once the first
+    micro-batches of an event drain (CHECK rules, quarantine and alerts
+    on) have compiled their plans, a later batch of the same shape finds
+    every class in the cache. A batch number inlined into a plan as a
+    long literal (a marker filter, a health filter, a partition column)
+    would compile new classes every batch."""
+    from data_ingestion_system_spark.operators.integrity import event_rules
+    from data_ingestion_system_spark.session import codegen_counters
+    from data_ingestion_system_spark.streaming.ingest import dedup_insert_batch, drain_files
+
+    src = _land_ranges(spark, sf_dir, tmp_path, [(0, 250), (200, 450), (400, 650)])
+    paths = IngestPaths(
+        source_dir=src,
+        target_dir=str(tmp_path / "target"),
+        audit_dir=str(tmp_path / "audit"),
+        provenance_dir=str(tmp_path / "prov"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        alerts_dir=str(tmp_path / "alerts"),
+        quarantine_dir=str(tmp_path / "quar"),
+    )
+    compiles = []
+
+    def body(df, batch_id):
+        n0 = codegen_counters(spark)[0]
+        dedup_insert_batch(spark, df, batch_id, "event_id", paths, rules=event_rules())
+        compiles.append(codegen_counters(spark)[0] - n0)
+
+    drain_files(spark, src, TESTDATA_SCHEMAS["events"], paths.checkpoint_dir, body)
+    assert len(compiles) == 3
+    assert compiles[2] == 0, compiles
+    audit = {r.batch_id: r for r in spark.read.parquet(paths.audit_dir).collect()}
+    assert sorted(audit) == [0, 1, 2]
+    for r in audit.values():
+        assert r.fetched == r.inserted + r.skipped + r.quarantined
+    assert audit[1].skipped > 0 and audit[2].skipped > 0
+    # the partition layout is unchanged: one batch_id=<n> directory per
+    # batch, read back with the type partition inference gives it
+    prov = spark.read.parquet(paths.provenance_dir)
+    assert prov.schema["batch_id"].dataType.simpleString() == "int"
+    assert sorted(
+        r.batch_id for r in prov.select("batch_id").distinct().collect()
+    ) == [0, 1, 2]

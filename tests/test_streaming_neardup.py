@@ -262,3 +262,48 @@ def test_micro_batch_job_budget(spark, tmp_path):
     audit = {r.batch_id: r for r in spark.read.parquet(paths.audit_dir).collect()}
     assert (audit[1].fetched, audit[1].dup_vs_store, audit[1].dup_within_batch) == (3, 1, 1)
     assert audit[1].inserted == 1
+
+
+def test_third_micro_batch_compiles_no_class(spark, tmp_path):
+    """Generated code is compiled once per session: from the third
+    micro-batch of a near-dup drain on, a batch of the same shape (a
+    near-dup of the store, a near-dup pair within the batch, a fresh
+    doc) compiles no class. The commit-marker read holds no batch
+    number; a `batch_id == N` filter compiled two classes every batch."""
+    from data_ingestion_system_spark.session import codegen_counters
+    from data_ingestion_system_spark.streaming.ingest import drain_files
+
+    words = [f"w{i}" for i in range(200)]
+
+    def doc(k, variant=False):
+        # a variant swaps the last token: 3-word-shingle Jaccard 9/11
+        toks = words[12 * k : 12 * k + 12]
+        return " ".join(toks[:11] + [f"x{k}"] if variant else toks)
+
+    # batch b: a near-dup of batch b-1's fresh doc, a within-batch pair
+    # and a fresh doc
+    batches = [[(1, doc(0)), (2, doc(1)), (3, doc(1, variant=True))]]
+    for b in (1, 2):
+        batches.append([
+            (10 * b, doc(3 * b - 1 if b > 1 else 0, variant=True)),
+            (10 * b + 1, doc(3 * b)),
+            (10 * b + 2, doc(3 * b, variant=True)),
+            (10 * b + 3, doc(3 * b + 2)),
+        ])
+    paths = _paths(tmp_path)
+    _land_batches(spark, tmp_path, paths, batches)
+    compiles = []
+
+    def body(df, batch_id):
+        n0 = codegen_counters(spark)[0]
+        neardup_insert_batch(spark, df, batch_id, paths)
+        compiles.append(codegen_counters(spark)[0] - n0)
+
+    drain_files(spark, paths.source_dir, _schema(), paths.checkpoint_dir, body)
+    assert len(compiles) == 3
+    assert compiles[2] == 0, compiles
+    audit = {r.batch_id: r for r in spark.read.parquet(paths.audit_dir).collect()}
+    for b in (1, 2):
+        assert (audit[b].dup_vs_store, audit[b].dup_within_batch, audit[b].inserted) == (
+            1, 1, 2
+        )

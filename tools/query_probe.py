@@ -18,6 +18,9 @@ pair-scale (bench.OUTPUT_BOUND) execute via .count() — the full plan
 runs engine-side and the count doubles as the answer row count — while
 everything else is .collect()ed. With --reps N the per-query value is
 the median of N runs (default 1: scale probes are usually one-shot).
+Each query also records, per rep, the classes Janino compiled and their
+milliseconds (`codegen_compiles`, `codegen_ms`; the driver JVM's
+counters, so a multi-JVM master's executor compiles are not in them).
 The ANN index cache is warmed first (untimed) whenever an `ann_*` query
 is requested, mirroring bench.py's serving-vs-training split.
 """
@@ -78,12 +81,17 @@ def main() -> None:
     for name in names:
         sink_measured = name in OUTPUT_BOUND
         keeper_sink = name in KEEPER_SINK
-        walls, rows = time_query(spark, registry, name, sf_dir, reps, sink_root)
+        walls, rows, compiles, compile_ms = time_query(
+            spark, registry, name, sf_dir, reps, sink_root
+        )
         walls = [round(w, 3) for w in walls]
         out[name] = {
             "sec": round(statistics.median(walls), 3),
             "rows": rows,
             "reps": walls if reps > 1 else None,
+            # per rep: Janino compiles (driver JVM) and their milliseconds
+            "codegen_compiles": compiles,
+            "codegen_ms": compile_ms,
             "sink_measured": sink_measured or None,
             "keeper_sink": keeper_sink or None,
         }

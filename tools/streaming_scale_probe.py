@@ -14,7 +14,9 @@ Measures two surfaces:
 
 Both report `jobs_per_batch`: the Spark jobs of each micro-batch, from
 the status store (a stream runs its jobs under the job group of its
-runId, each described with its batch id).
+runId, each described with its batch id), and `compiles_per_batch`: the
+classes Janino compiled inside each batch body (deltas of the driver's
+codegen counters; a steady-state batch should compile none).
 
 Usage:
     python tools/streaming_scale_probe.py /tmp/sf1.0
@@ -35,14 +37,15 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
-from data_ingestion_system_spark.session import get_spark  # noqa: E402
+from data_ingestion_system_spark.session import codegen_counters, get_spark  # noqa: E402
 from data_ingestion_system_spark.streaming.ingest import (  # noqa: E402
     IngestPaths,
-    run_file_ingestion,
+    dedup_insert_batch,
+    drain_files,
 )
 from data_ingestion_system_spark.streaming.neardup import (  # noqa: E402
     NearDupPaths,
-    run_neardup_ingestion,
+    neardup_insert_batch,
 )
 from data_ingestion_system_spark.tables import load_table  # noqa: E402
 
@@ -72,6 +75,20 @@ def _jobs_per_batch(spark, query) -> list[int]:
     return [per_batch[b] for b in sorted(per_batch)]
 
 
+def _drain_counting(spark, src: str, schema, ckpt: str, body) -> tuple:
+    """`drain_files` with `body` as the batch body (what
+    `run_file_ingestion` / `run_neardup_ingestion` run), returning the
+    query and the classes compiled inside each batch, in batch order."""
+    compiles: list[int] = []
+
+    def counted(batch_df, batch_id: int) -> None:
+        n0 = codegen_counters(spark)[0]
+        body(batch_df, batch_id)
+        compiles.append(codegen_counters(spark)[0] - n0)
+
+    return drain_files(spark, src, schema, ckpt, counted), compiles
+
+
 def _land(df, n_files: int, src: str) -> None:
     """Write `df` as `n_files` landing files, one micro-batch each under
     maxFilesPerTrigger=1. The file source drains oldest mtime first and
@@ -99,7 +116,10 @@ def probe_event_ingestion(spark, sf_dir: str, root: str) -> dict:
         checkpoint_dir=os.path.join(root, "ev_ckpt"),
     )
     t0 = time.perf_counter()
-    query = run_file_ingestion(spark, paths, ev.schema, key_col="event_id")
+    query, compiles = _drain_counting(
+        spark, src, ev.schema, paths.checkpoint_dir,
+        lambda df, bid: dedup_insert_batch(spark, df, bid, "event_id", paths),
+    )
     wall = time.perf_counter() - t0
     audit = [
         r.asDict()
@@ -114,6 +134,7 @@ def probe_event_ingestion(spark, sf_dir: str, root: str) -> dict:
         "per_batch_sec": [round(a["duration_seconds"], 2) for a in audit],
         "per_batch_inserted": [a["inserted"] for a in audit],
         "jobs_per_batch": _jobs_per_batch(spark, query),
+        "compiles_per_batch": compiles,
         "target_bytes_final": _dir_bytes(paths.target_dir),
     }
 
@@ -132,7 +153,10 @@ def probe_neardup_ingestion(spark, sf_dir: str, root: str) -> dict:
         checkpoint_dir=os.path.join(root, "nd_ckpt"),
     )
     t0 = time.perf_counter()
-    query = run_neardup_ingestion(spark, paths, docs.schema)
+    query, compiles = _drain_counting(
+        spark, src, docs.schema, paths.checkpoint_dir,
+        lambda df, bid: neardup_insert_batch(spark, df, bid, paths),
+    )
     wall = time.perf_counter() - t0
     audit = [
         r.asDict()
@@ -151,6 +175,7 @@ def probe_neardup_ingestion(spark, sf_dir: str, root: str) -> dict:
         ],
         "per_batch_sec": [round(a["duration_seconds"], 2) for a in audit],
         "jobs_per_batch": _jobs_per_batch(spark, query),
+        "compiles_per_batch": compiles,
         "inserted_total": inserted,
         "index_state_bytes": _dir_bytes(paths.bands_dir) + _dir_bytes(paths.tokens_dir),
     }
