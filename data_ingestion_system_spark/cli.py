@@ -90,6 +90,11 @@ def main(argv: list[str] | None = None) -> int:
     from data_ingestion_system_spark.session import get_spark
     from data_ingestion_system_spark.tables import has_parquet, load_table
 
+    # a mistyped query name fails before the JVM starts, not after
+    if args.cmd == "run" and args.name not in load_all():
+        print(f"unknown query {args.name!r}; known: {sorted(load_all())}", file=sys.stderr)
+        return 2
+
     spark = get_spark(app_name=f"dis-cli-{args.cmd}")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -118,11 +123,7 @@ def main(argv: list[str] | None = None) -> int:
         result = phrase_search(docs, build_postings(docs), args.phrase)
         _emit(result.orderBy("doc_id"), args.limit)
     elif args.cmd == "run":
-        registry = load_all()
-        if args.name not in registry:
-            print(f"unknown query {args.name!r}; known: {sorted(registry)}", file=sys.stderr)
-            return 2
-        _emit(registry[args.name].spark(spark, args.sf_dir), args.limit)
+        _emit(load_all()[args.name].spark(spark, args.sf_dir), args.limit)
     elif args.cmd == "ingest":
         from data_ingestion_system_spark.schemas import TESTDATA_SCHEMAS
         from data_ingestion_system_spark.streaming.ingest import IngestPaths, run_file_ingestion
