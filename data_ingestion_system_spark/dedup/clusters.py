@@ -32,13 +32,10 @@ from pyspark.sql import functions as F
 from data_ingestion_system_spark.dedup.minhash import (
     JACCARD_THRESHOLD,
     PAIR_CTES,
-    lsh_candidate_pairs,
-    token_set_arrays,
-    verified_pairs_from_sets,
+    minhash_pairs,
 )
 from data_ingestion_system_spark.registry import query
 from data_ingestion_system_spark.tables import (
-    bulk_checkpoint,
     corpus_checkpoint,
     corpus_checkpoint_lazy,
     load_table,
@@ -288,11 +285,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeper. Emits every doc that has at least one near-duplicate, with
     its cluster id, cluster size, and keeper flag — the `is_keeper =
     false` rows are exactly the set a dedup job would drop."""
-    docs = load_table(spark, sf_dir, "documents")
-    n_docs = docs.count()  # footer statistics
-    tsets = bulk_checkpoint(token_set_arrays(docs), eager=False, n_rows=n_docs)
-    cand = lsh_candidate_pairs(tsets, n_docs=n_docs)
-    pairs = verified_pairs_from_sets(tsets, cand, JACCARD_THRESHOLD, n_docs=n_docs)
+    pairs, _ = minhash_pairs(load_table(spark, sf_dir, "documents"))
     comp = connected_components(pairs)
     csizes = comp.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
     return (

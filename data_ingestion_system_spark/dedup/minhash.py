@@ -13,6 +13,19 @@ pipeline. At 100 TB the band join shuffles only (doc_id, band_key) pairs —
 candidate generation never compares documents pairwise; the quadratic
 step is confined to same-bucket members.
 
+`minhash_pairs` is the one builder of the batch chain (corpus count →
+shingle-set checkpoint → ladder-dispatched LSH candidates → exact-Jaccard
+verify). Its consumers are `near_dup_minhash_lsh`,
+`cross_source_dup_matrix`, `dedup_threshold_sweep` and
+`minhash_estimation_error` here, `dedup_clusters`
+(dedup/clusters.py), `corpus_prep_pipeline` and the pipeline runner
+through `stage_dup_drop` (text/pipeline.py),
+`cluster_aware_split_stats` (operators/sampling.py) and
+`fold_leakage_audit` (operators/crossval.py); `PAIR_CTES` is the oracle
+form every one of them embeds. The near-dup document ingest
+(streaming/neardup.py) keeps its own row-local chain over the same
+`shingle_set` / `band_keys` / `verified_pairs_from_sets` pieces.
+
 Design follows the standard MinHash-LSH construction (Broder 1997;
 Leskovec/Rajaraman/Ullman, Mining of Massive Datasets ch. 3) and mirrors
 pyspark.ml.feature.MinHashLSH's banding strategy with deterministic
@@ -24,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_ingestion_system_spark import tables
 from data_ingestion_system_spark.functions.scalar import round_port
 from data_ingestion_system_spark.registry import query
 from data_ingestion_system_spark.tables import (
@@ -34,7 +48,7 @@ from data_ingestion_system_spark.tables import (
 )
 
 N_HASHES = 8
-N_BANDS = 4  # 2 rows per band
+CLASSIC_ROWS = 2  # rows per band: 4 bands of 2
 JACCARD_THRESHOLD = 0.5
 
 # ---- band/row ladder (r9 VERDICT ask #5; CONVENTIONS §4b + §4d) ----
@@ -71,8 +85,7 @@ JACCARD_THRESHOLD = 0.5
 # 1-(1-j^4)^4 ≈ 23% at j=0.5) at double the signature cost.
 BAND_LADDER_MIN_DOCS = 100_000
 BAND_SATURATION_JV_PER_DOC = 2  # wide when Σ C(occ,2) >= 2 * n_docs
-WIDE_ROWS = 4  # rows per band on the wide rung
-N_WIDE_BANDS = N_HASHES // WIDE_ROWS
+WIDE_ROWS = 4  # rows per band on the wide rung: 2 bands of 4
 
 
 def shingle_set(ts: Column) -> Column:
@@ -96,26 +109,6 @@ def shingle_set(ts: Column) -> Column:
     return F.array_sort(F.array_distinct(shingles))
 
 
-def token_set_arrays(docs: DataFrame, toks: DataFrame | None = None) -> DataFrame:
-    """(doc_id, tset, n): each doc's `shingle_set` and its cardinality,
-    built ROW-LOCALLY. The r9 chain exploded to a (doc_id, token)
-    relation and then paid a groupBy exchange per consumer to collapse
-    it back (one for the signature mins, one for the verify arrays); the
-    set never needed to leave its row.
-
-    `toks` optionally supplies a pre-tokenized (doc_id, ts) relation
-    shared with other pipeline stages (text/pipeline.py)."""
-    if toks is None:
-        toks = fan_out(docs, "doc_id").select(
-            "doc_id", F.split(F.col("text"), " ").alias("ts")
-        )
-    else:
-        toks = toks.select("doc_id", "ts")
-    return toks.select("doc_id", shingle_set(F.col("ts")).alias("tset")).withColumn(
-        "n", F.size("tset").cast("long")
-    )
-
-
 def signatures_from_sets(tsets: DataFrame) -> DataFrame:
     """`tsets` plus the m0..m{H-1} MinHash columns of its `tset` — a
     narrow projection (array_min over transform of md5('i:'||t)), no
@@ -130,25 +123,14 @@ def signatures_from_sets(tsets: DataFrame) -> DataFrame:
     return tsets.select("*", *cols)
 
 
-def band_keys(sigs: DataFrame) -> DataFrame:
-    """Explode signatures into (doc_id, band_key) rows, 2 hashes per band."""
+def band_keys(sigs: DataFrame, rows: int) -> DataFrame:
+    """Explode signatures into (doc_id, band_key) rows, `rows` hashes per
+    band over the same 8-hash signatures: CLASSIC_ROWS (4 bands of 2)
+    below the ladder floors, WIDE_ROWS (2 bands of 4, collision
+    probability j^4 per band) on a saturated shingle space."""
     bands = [
-        F.concat(F.lit(f"b{b}:"), F.col(f"m{2 * b}"), F.col(f"m{2 * b + 1}"))
-        for b in range(N_BANDS)
-    ]
-    return sigs.select("doc_id", F.explode(F.array(*bands)).alias("band_key"))
-
-
-def band_keys_wide(sigs: DataFrame) -> DataFrame:
-    """Wide rung of the band/row ladder: (doc_id, band_key) rows with
-    WIDE_ROWS (4) hashes per band over the same 8-hash signatures —
-    collision probability j^4 per band, the saturated-space layout."""
-    bands = [
-        F.concat(
-            F.lit(f"b{b}:"),
-            *[F.col(f"m{WIDE_ROWS * b + r}") for r in range(WIDE_ROWS)],
-        )
-        for b in range(N_WIDE_BANDS)
+        F.concat(F.lit(f"b{b}:"), *[F.col(f"m{rows * b + r}") for r in range(rows)])
+        for b in range(N_HASHES // rows)
     ]
     return sigs.select("doc_id", F.explode(F.array(*bands)).alias("band_key"))
 
@@ -167,37 +149,25 @@ def band_join_volume(bands: DataFrame) -> int:
     return int(row.jv or 0)
 
 
-def lsh_candidate_pairs(
-    tsets: DataFrame, n_docs: int | None = None, force_wide: bool | None = None
-) -> DataFrame:
+def lsh_candidate_pairs(tsets: DataFrame, n_docs: int) -> DataFrame:
     """Ladder-dispatched LSH candidate pairs from the (doc_id, tset, n)
-    relation: classic 4x2 banding below the floors, 2x4 wide banding on
-    a measured-saturated space (see the BAND_LADDER_* constants — the
-    dispatch is mirrored in PAIR_CTES so every embedding oracle agrees).
-    Wide candidates are a strict SUBSET of classic ones (a 4-row band
-    match implies both 2-row halves match). `force_wide` pins an arm
-    for the dual-arm oracle tests."""
+    relation of `n_docs` documents: classic 4x2 banding below the
+    floors, 2x4 wide banding on a measured-saturated space (see the
+    BAND_LADDER_* constants — the dispatch is mirrored in PAIR_CTES so
+    every embedding oracle agrees). Wide candidates are a strict SUBSET
+    of classic ones (a 4-row band match implies both 2-row halves
+    match)."""
     sigs = signatures_from_sets(tsets)
-    wide = force_wide
-    if wide is None:
-        if n_docs is None:
-            # r10 ADVICE: the mirrored oracle (PAIR_CTES) ALWAYS
-            # evaluates the size floor + occupancy probe, so a caller
-            # omitting n_docs must not silently pin the classic arm and
-            # diverge from its own embedded oracle on a large saturated
-            # corpus — count the relation instead (every repo caller
-            # passes the footer count; this is the safety net).
-            n_docs = tsets.count()
-        wide = (
-            n_docs >= BAND_LADDER_MIN_DOCS
-            and band_join_volume(band_keys(sigs))
-            >= BAND_SATURATION_JV_PER_DOC * n_docs
-        )
-    bands = band_keys_wide(sigs) if wide else band_keys(sigs)
-    return candidate_pairs(bands, n_docs=n_docs)
+    wide = (
+        n_docs >= BAND_LADDER_MIN_DOCS
+        and band_join_volume(band_keys(sigs, CLASSIC_ROWS))
+        >= BAND_SATURATION_JV_PER_DOC * n_docs
+    )
+    bands = band_keys(sigs, WIDE_ROWS if wide else CLASSIC_ROWS)
+    return candidate_pairs(bands, n_docs)
 
 
-def candidate_pairs(bands: DataFrame, n_docs: int | None = None) -> DataFrame:
+def candidate_pairs(bands: DataFrame, n_docs: int) -> DataFrame:
     """Distinct doc pairs sharing ≥1 band bucket (doc_a < doc_b).
     Join width pinned above the dispatch floor: the in-bucket pair
     expansion is quadratic in bucket membership and AQE's byte-based
@@ -222,11 +192,11 @@ def verified_pairs_from_sets(
     tsets: DataFrame,
     cand: DataFrame,
     threshold: float,
-    n_docs: int | None = None,
+    n_docs: int,
     tsets_b: DataFrame | None = None,
 ) -> DataFrame:
     """Exact Jaccard on candidates only; keep pairs ≥ threshold, over the
-    (doc_id, tset, n) set relation (`token_set_arrays`).
+    (doc_id, tset, n) set relation (`minhash_pairs`).
 
     Verification is array-based (r6): each doc's shingle set is ONE
     sorted array row, candidates join the array relation twice, and
@@ -238,9 +208,9 @@ def verified_pairs_from_sets(
     the doc_b side's sets (the streaming store probe: stored docs on
     the doc_a side, the batch on the doc_b side).
 
-    Join strategy is threshold-dispatched like the width pins
-    (tables._should_pin): above the corpus floor — or when the lineage
-    can't be sized — the set and candidate joins are hinted MERGE.
+    Join strategy is threshold-dispatched on the width pins' floor
+    (tables.PIN_MIN_ROWS): from `n_docs` = PIN_MIN_ROWS up the set and
+    candidate joins are hinted MERGE.
     Catalyst's static estimate of the candidate relation is taken
     before the LSH bands materialize and can undercount by orders of
     magnitude; at sf10 it planned a broadcast whose runtime build blew
@@ -249,11 +219,9 @@ def verified_pairs_from_sets(
     mode at 100 TB. Small corpora keep AQE's broadcast plan. Streaming
     callers pass n_docs=0: a micro-batch is bounded by the trigger
     interval, so the broadcast verify is the right plan there."""
-    from data_ingestion_system_spark.tables import _should_pin
-
     if tsets_b is None:
         tsets_b = tsets
-    if _should_pin(tsets, n_docs):
+    if n_docs >= tables.PIN_MIN_ROWS:
         tsets = tsets.hint("merge")
         tsets_b = tsets_b.hint("merge")
         cand = cand.hint("merge")
@@ -287,23 +255,66 @@ def verified_pairs_from_sets(
     return jac.filter(F.col("jac") >= threshold)
 
 
+def minhash_pairs(
+    docs: DataFrame,
+    threshold: float = JACCARD_THRESHOLD,
+    toks: DataFrame | None = None,
+    n_docs: int | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """The batch MinHash near-dup chain, defined once: (verified pairs
+    (doc_a, doc_b, jac) with jac ≥ `threshold`, the (doc_id, tset, n)
+    shingle-set relation they were verified on). Every batch consumer
+    of the pair relation calls this; `minhash_estimation_error` also
+    reads the sets to join signatures back.
+
+    Steps: count the corpus (`n_docs`, parquet footer statistics,
+    unless the caller already holds it) → each doc's `shingle_set` and
+    its size, built ROW-LOCALLY (the r9 chain exploded to (doc_id,
+    token) and paid a groupBy exchange per consumer to collapse it
+    back) → one lazy `bulk_checkpoint` of that relation, which the
+    first job materializes for all three consumers (signatures, verify
+    join ×2); DISK_ONLY above `BULK_DISK_ONLY_MIN_ROWS` because it is
+    corpus-sized (scale-failure class #5) and its consumers are
+    sequential scans → ladder-dispatched LSH candidates → exact-Jaccard
+    verification, whose join strategy `n_docs` also picks.
+
+    `toks` optionally supplies a pre-tokenized (doc_id, ts) relation
+    shared with other pipeline stages (text/pipeline.py)."""
+    if n_docs is None:
+        n_docs = docs.count()
+    if toks is None:
+        toks = fan_out(docs, "doc_id").select(
+            "doc_id", F.split(F.col("text"), " ").alias("ts")
+        )
+    else:
+        toks = toks.select("doc_id", "ts")
+    tsets = bulk_checkpoint(
+        toks.select("doc_id", shingle_set(F.col("ts")).alias("tset")).withColumn(
+            "n", F.size("tset").cast("long")
+        ),
+        eager=False,
+        n_rows=n_docs,
+    )
+    cand = lsh_candidate_pairs(tsets, n_docs)
+    return verified_pairs_from_sets(tsets, cand, threshold, n_docs), tsets
+
+
 _HASH_COLS = ",\n    ".join(
     f"MIN(md5('{i}:' || token)) AS m{i}" for i in range(N_HASHES)
 )
-_BAND_SELECTS = "\n  UNION ALL ".join(
-    f"SELECT doc_id, 'b{b}:' || m{2 * b} || m{2 * b + 1} AS band_key FROM sigs"
-    for b in range(N_BANDS)
-)
-_BAND_SELECTS_WIDE = "\n  UNION ALL ".join(
-    "SELECT doc_id, 'b{b}:' || {cols} AS band_key FROM sigs".format(
-        b=b,
-        cols=" || ".join(f"m{WIDE_ROWS * b + r}" for r in range(WIDE_ROWS)),
+
+
+def _band_selects(rows: int) -> str:
+    """SQL twin of `band_keys`: one SELECT per band of `rows` hashes."""
+    return "\n  UNION ALL ".join(
+        "SELECT doc_id, 'b{b}:' || {cols} AS band_key FROM sigs".format(
+            b=b, cols=" || ".join(f"m{rows * b + r}" for r in range(rows))
+        )
+        for b in range(N_HASHES // rows)
     )
-    for b in range(N_WIDE_BANDS)
-)
 
 
-def pair_ctes(force_wide: bool | None = None) -> str:
+def pair_ctes() -> str:
     """The full shingle→signature→band→verify chain as a reusable CTE
     body: the pair query appends a SELECT over `jacs`, and the cluster
     query (dedup/clusters.py) builds its transitive closure on top of
@@ -317,17 +328,15 @@ def pair_ctes(force_wide: bool | None = None) -> str:
     BAND_SATURATION_JV_PER_DOC constants (§4b — integer arithmetic
     only, both engines derive the identical arm at every scale), and
     `cand` unions the two mutually-exclusive band joins gated on it.
-    `force_wide` pins `satd` to a constant for the dual-arm tests."""
-    if force_wide is None:
-        satd = f"""satd AS (
+    The constants are read at call time, so a test that moves them
+    builds each arm's oracle with the same patch as its Spark side."""
+    satd = f"""satd AS (
   SELECT CASE WHEN (SELECT COUNT(*) FROM documents) >= {BAND_LADDER_MIN_DOCS}
               AND COALESCE((SELECT SUM((c * (c - 1)) // 2) FROM (
                     SELECT COUNT(*) AS c FROM bands GROUP BY band_key) occ), 0)
                   >= {BAND_SATURATION_JV_PER_DOC} * (SELECT COUNT(*) FROM documents)
          THEN 1 ELSE 0 END AS wide
 )"""
-    else:
-        satd = f"satd AS (SELECT {1 if force_wide else 0} AS wide)"
     return f"""toklists AS (
   SELECT doc_id, string_split(text, ' ') AS ts FROM documents
 ), tokens AS (
@@ -342,9 +351,9 @@ def pair_ctes(force_wide: bool | None = None) -> str:
     {_HASH_COLS}
   FROM tokens GROUP BY doc_id
 ), bands AS MATERIALIZED (
-  {_BAND_SELECTS}
+  {_band_selects(CLASSIC_ROWS)}
 ), bandsw AS (
-  {_BAND_SELECTS_WIDE}
+  {_band_selects(WIDE_ROWS)}
 ), {satd}, cand AS (
   -- r10 ADVICE note: each branch is gated by a scalar subquery over
   -- satd; if DuckDB did not fold (SELECT wide FROM satd) before
@@ -396,17 +405,7 @@ ORDER BY doc_a, doc_b
 def near_dup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full MinHash→LSH→verify near-dup pipeline over documents; emits
     verified pairs with exact Jaccard ≥ 0.5."""
-    docs = load_table(spark, sf_dir, "documents")
-    n_docs = docs.count()  # parquet footer statistics — no scan
-    # checkpoint materializes the per-doc shingle ARRAYS once for the
-    # three consumers (signatures, verify join ×2): 1 row/doc instead of
-    # the r9 exploded (doc_id, token) relation, built with no shuffle
-    # (token_set_arrays); DISK_ONLY because the relation is corpus-sized
-    # (scale-failure class #5 — tables.bulk_checkpoint) and its
-    # consumers are sequential scans
-    tsets = bulk_checkpoint(token_set_arrays(docs), eager=False, n_rows=n_docs)
-    cand = lsh_candidate_pairs(tsets, n_docs=n_docs)
-    pairs = verified_pairs_from_sets(tsets, cand, JACCARD_THRESHOLD, n_docs=n_docs)
+    pairs, _ = minhash_pairs(load_table(spark, sf_dir, "documents"))
     return pairs.select(
         "doc_a", "doc_b", round_port(F.col("jac"), 6).alias("jaccard")
     ).orderBy("doc_a", "doc_b")
@@ -662,37 +661,13 @@ def _ngram_cand_pairkey(
     return bigcand.union(small).distinct()
 
 
-def _raise_if_gid_collision(n_grams: int, n_gids: int) -> None:
-    if n_gids != n_grams:
-        raise ValueError(
-            f"xxhash64 gram-id collision: {n_grams} distinct grams -> "
-            f"{n_gids} distinct gids; rerun with a salted hash"
-        )
-
-
-def _gid_collision_audit(gram_ids: DataFrame) -> None:
-    """Hard-fail if two distinct grams hashed to one xxhash64 gid —
-    array_intersect over gid arrays would overcount shared grams and
-    the operator's EXACT contract would silently break.
-
-    Standalone form for `force_scheme` paths only (equivalence tests,
-    forced timings); the production dispatch path folds the same
-    countDistinct into `_ngram_scheme_probe`'s single gram_ids
-    aggregate, so the corpus-scale gram groupBy+hash runs ONCE (r7
-    ADVICE: the extracted audit was re-running it as a second job)."""
-    st = gram_ids.agg(
-        F.count("*").alias("n_grams"),
-        F.countDistinct("gid").alias("n_gids"),
-    ).first()
-    _raise_if_gid_collision(int(st.n_grams or 0), int(st.n_gids or 0))
-
-
 def _ngram_scheme_probe(gram_ids: DataFrame, prefix: DataFrame) -> tuple[str, dict]:
     """Dispatch probe: EXACT join volumes of both candidate schemes,
     measured from the (already materialized) prefix relation. The gid
-    collision audit is folded into this probe's gram_ids aggregate
-    (hard-fails here); force_scheme pins that skip the probe run the
-    standalone `_gid_collision_audit` instead.
+    collision audit rides this probe's gram_ids aggregate and hard-fails
+    here: two distinct grams hashing to one xxhash64 gid would make
+    array_intersect overcount shared grams and silently break the
+    operator's EXACT contract.
 
       single_rows  = Σ_gid C(c_gid, 2)  — the single-gram join's exact
                      match-row count (c = prefix posting count per gid)
@@ -714,10 +689,15 @@ def _ngram_scheme_probe(gram_ids: DataFrame, prefix: DataFrame) -> tuple[str, di
         F.sum("df").alias("postings"),
         F.count("*").alias("n_grams"),
         # the gid collision audit's countDistinct rides the SAME agg job
-        # so the gram relation is aggregated once on the dispatch path
+        # so the gram relation is aggregated once
         F.countDistinct("gid").alias("n_gids"),
     ).first()
-    _raise_if_gid_collision(int(st.n_grams or 0), int(st.n_gids or 0))
+    n_grams, n_gids = int(st.n_grams or 0), int(st.n_gids or 0)
+    if n_gids != n_grams:
+        raise ValueError(
+            f"xxhash64 gram-id collision: {n_grams} distinct grams -> "
+            f"{n_gids} distinct gids; rerun with a salted hash"
+        )
     vol = prefix.groupBy("gid").agg(F.count("*").alias("c")).agg(
         F.sum(F.expr("c * (c - 1) DIV 2")).alias("single_rows")
     ).first()
@@ -735,9 +715,9 @@ def _ngram_scheme_probe(gram_ids: DataFrame, prefix: DataFrame) -> tuple[str, di
     # has >= 3 tokens) yield NULLs — the query must return its defined
     # empty result, not TypeError on None arithmetic
     return scheme, {
-        "n_grams": int(st.n_grams or 0),
+        "n_grams": n_grams,
         "postings": int(st.postings or 0),
-        "mean_df": int(st.postings or 0) / max(1, int(st.n_grams or 0)),
+        "mean_df": int(st.postings or 0) / max(1, n_grams),
         "single_rows": single_rows,
         "pk_postings": pk_postings,
         "ratio": single_rows / max(1, pk_postings),
@@ -819,81 +799,6 @@ def _ngram_prefix_relations(
     return gram_ids, gram_sets, prefix, n_docs
 
 
-def _ngram_jaccard_pairs(
-    spark: SparkSession, sf_dir: str, force_scheme: str | None = None
-) -> DataFrame:
-    """Shared builder for `near_dup_ngram_jaccard`; `force_scheme`
-    ("single"/"pairkey") pins a candidate scheme for the equivalence and
-    plan tests — production dispatches on the volume probe."""
-    # t as an exact rational (3/10): every pruning filter below is integer
-    # arithmetic — float rounding at exact-threshold pairs (jac == 0.3)
-    # must never prune a qualifying pair
-    p, q = 3, 10
-    t = p / q
-    gram_ids, gram_sets, prefix, n_docs = _ngram_prefix_relations(spark, sf_dir, p, q)
-    # the gid collision audit must hard-fail on EVERY path (two distinct
-    # grams hashing to one gid would make array_intersect overcount).
-    # On the dispatch path it rides the probe's single gram_ids
-    # aggregate; force_scheme callers (equivalence tests, the dispatch
-    # tool's forced timings) skip the probe's prefix-relation
-    # aggregates, so they run the standalone audit instead.
-    # Saturation is a CONTENT property — corpus size alone cannot see it.
-    if force_scheme is not None:
-        _gid_collision_audit(gram_ids)
-        scheme = force_scheme
-    else:
-        scheme, _probe = _ngram_scheme_probe(gram_ids, prefix)
-    from data_ingestion_system_spark.tables import _should_pin
-
-    big = _should_pin(prefix, n_docs)  # n_docs decides (counted above)
-    if scheme == "pairkey":
-        # pin on the pair-key join columns: same AQE-coalesce hazard as
-        # every pair-expansion join (tables.pin_join_width)
-        cand = _ngram_cand_pairkey(
-            pin_join_width(prefix, "doc_id", n_rows=n_docs), p, q, big=big
-        )
-    else:
-        cand = _ngram_cand_single(
-            pin_join_width(prefix, "gid", n_rows=n_docs), p, q
-        )
-    # verify join carries NO merge hint: both sides' static estimates
-    # are honest-large (cand is a post-join aggregate, gram_sets a
-    # groupBy over the checkpointed gram relation), so Catalyst plans
-    # sort-merge statically and only AQE's runtime conversion — sized on
-    # ACTUAL bytes, hence OOM-safe — can flip it to broadcast at small
-    # SF. The driver-heap fatality class needs a statically
-    # UNDERESTIMATED build side (the post-explode pairkey lineage above,
-    # the MinHash candidate relation in verified_pairs).
-    ga = gram_sets.alias("ga")
-    gb = gram_sets.alias("gb")
-    jacs = (
-        # no broadcast hint: gram_sets grows with the corpus, so the scale
-        # plan is a shuffle join on doc_id; AQE still broadcasts at small SF
-        cand.join(ga, F.col("doc_a") == F.col("ga.doc_id"))
-        .join(gb, F.col("doc_b") == F.col("gb.doc_id"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("ga.gset", "gb.gset")).alias("n_common"),
-            F.col("ga.n").alias("na"),
-            F.col("gb.n").alias("nb"),
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.col("n_common").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("n_common"))
-            ).alias("jac"),
-        )
-    )
-    return (
-        jacs.filter(F.col("jac") >= t)
-        .select("doc_a", "doc_b", round_port(F.col("jac"), 6).alias("jaccard"))
-        .orderBy("doc_a", "doc_b")
-    )
-
-
 @query("near_dup_ngram_jaccard", oracle=_NGRAM_ORACLE, survey="EXT-dedup")
 def near_dup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-3-gram Jaccard near-dup pairs (shingle-exact variant).
@@ -931,7 +836,62 @@ def near_dup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_ngram_prefix_recall.py pins both schemes against a
     literal brute force. Exact Jaccard is then verified on candidates
     from the full gram sets."""
-    return _ngram_jaccard_pairs(spark, sf_dir)
+    # t as an exact rational (3/10): every pruning filter below is integer
+    # arithmetic — float rounding at exact-threshold pairs (jac == 0.3)
+    # must never prune a qualifying pair
+    p, q = 3, 10
+    t = p / q
+    gram_ids, gram_sets, prefix, n_docs = _ngram_prefix_relations(spark, sf_dir, p, q)
+    # Saturation is a CONTENT property — corpus size alone cannot see it.
+    # The probe also runs the gid collision audit.
+    scheme, _ = _ngram_scheme_probe(gram_ids, prefix)
+    big = n_docs >= tables.PIN_MIN_ROWS  # the width pins' floor
+    if scheme == "pairkey":
+        # pin on the pair-key join columns: same AQE-coalesce hazard as
+        # every pair-expansion join (tables.pin_join_width)
+        cand = _ngram_cand_pairkey(
+            pin_join_width(prefix, "doc_id", n_rows=n_docs), p, q, big=big
+        )
+    else:
+        cand = _ngram_cand_single(
+            pin_join_width(prefix, "gid", n_rows=n_docs), p, q
+        )
+    # verify join carries NO merge hint: both sides' static estimates
+    # are honest-large (cand is a post-join aggregate, gram_sets a
+    # groupBy over the checkpointed gram relation), so Catalyst plans
+    # sort-merge statically and only AQE's runtime conversion — sized on
+    # ACTUAL bytes, hence OOM-safe — can flip it to broadcast at small
+    # SF. The driver-heap fatality class needs a statically
+    # UNDERESTIMATED build side (the post-explode pairkey lineage above,
+    # the MinHash candidate relation in verified_pairs_from_sets).
+    ga = gram_sets.alias("ga")
+    gb = gram_sets.alias("gb")
+    jacs = (
+        # no broadcast hint: gram_sets grows with the corpus, so the scale
+        # plan is a shuffle join on doc_id; AQE still broadcasts at small SF
+        cand.join(ga, F.col("doc_a") == F.col("ga.doc_id"))
+        .join(gb, F.col("doc_b") == F.col("gb.doc_id"))
+        .select(
+            "doc_a",
+            "doc_b",
+            F.size(F.array_intersect("ga.gset", "gb.gset")).alias("n_common"),
+            F.col("ga.n").alias("na"),
+            F.col("gb.n").alias("nb"),
+        )
+        .select(
+            "doc_a",
+            "doc_b",
+            (
+                F.col("n_common").cast("double")
+                / (F.col("na") + F.col("nb") - F.col("n_common"))
+            ).alias("jac"),
+        )
+    )
+    return (
+        jacs.filter(F.col("jac") >= t)
+        .select("doc_a", "doc_b", round_port(F.col("jac"), 6).alias("jaccard"))
+        .orderBy("doc_a", "doc_b")
+    )
 
 
 _CROSS_SOURCE_ORACLE = f"""
@@ -966,14 +926,7 @@ def cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     attribution is two (doc_id, source) joins of a narrow projection,
     then a sources²-bounded aggregate."""
     docs = load_table(spark, sf_dir, "documents")
-    n_docs = docs.count()  # footer statistics
-    tsets = bulk_checkpoint(token_set_arrays(docs), eager=False, n_rows=n_docs)
-    pairs = verified_pairs_from_sets(
-        tsets,
-        lsh_candidate_pairs(tsets, n_docs=n_docs),
-        JACCARD_THRESHOLD,
-        n_docs=n_docs,
-    )
+    pairs, _ = minhash_pairs(docs)
     src = docs.select("doc_id", "source")
     attributed = (
         pairs.join(src.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("source", "sa"), "doc_a")
@@ -1019,15 +972,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     is computed ONCE over the LSH candidates; the ladder is a 5-way
     literal explode of that pair-sized relation — no per-threshold
     rescans of the corpus."""
-    docs = load_table(spark, sf_dir, "documents")
-    n_docs = docs.count()  # footer statistics
-    tsets = bulk_checkpoint(token_set_arrays(docs), eager=False, n_rows=n_docs)
-    jacs = verified_pairs_from_sets(
-        tsets,
-        lsh_candidate_pairs(tsets, n_docs=n_docs),
-        0.0,
-        n_docs=n_docs,
-    )
+    jacs, _ = minhash_pairs(load_table(spark, sf_dir, "documents"), threshold=0.0)
     x = jacs.select(
         F.explode(
             F.array(*[F.lit(t) for t in _SWEEP_THRESHOLDS])
@@ -1084,12 +1029,11 @@ def minhash_estimation_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: everything downstream of the existing candidate
     generation — signatures join back per candidate pair (pair-sized),
     one aggregate row out."""
-    docs = load_table(spark, sf_dir, "documents")
-    n_docs = docs.count()  # footer statistics
-    tsets = bulk_checkpoint(token_set_arrays(docs), eager=False, n_rows=n_docs)
+    # threshold 0.0: every candidate pair that shares a shingle
+    exact, tsets = minhash_pairs(
+        load_table(spark, sf_dir, "documents"), threshold=0.0
+    )
     sigs = signatures_from_sets(tsets)
-    cand = lsh_candidate_pairs(tsets, n_docs=n_docs)
-    exact = verified_pairs_from_sets(tsets, cand, 0.0, n_docs=n_docs)  # all candidates
     matches = sum(
         F.when(F.col(f"sa.m{i}") == F.col(f"sb.m{i}"), 1).otherwise(0)
         for i in range(N_HASHES)

@@ -46,7 +46,6 @@ from data_ingestion_system_spark.tables import (
     load_table,
     local_rows_df,
     pin_join_width,
-    pin_width,
 )
 from data_ingestion_system_spark.similarity.ann import DIM, _dot, load_vectors
 from data_ingestion_system_spark.similarity.ivf import (
@@ -290,7 +289,7 @@ def make_blas_group_stats(keys: tuple[str, ...], rank_col: str):
 
 
 # Corpus floor for dispatching the pair term to the dgemm plan (same
-# two-physical-plans idiom as tables._should_pin). Measured same-session
+# two-physical-plans idiom as tables._past_floor). Measured same-session
 # on the hierarchical op: sf10 (200k vectors) relational 200 s vs dgemm
 # 32 s; sf1.0 (20k) see bench_results/SCALING.md r6 A/B; sf0.1 (2k) the
 # two are equal within noise. Below the floor the relational join keeps
@@ -316,13 +315,13 @@ def semdedup_group_stats(
         )
     # relational pair term: assignment feeds three consumers (members /
     # both pair sides) — materialize once, width pinned BEFORE the
-    # checkpoint (tables.pin_width): the skinny argmax shuffle
+    # checkpoint (tables.pin_join_width): the skinny argmax shuffle
     # AQE-coalesces to 1-2 partitions, and a checkpoint would freeze
     # that width for every downstream dense pass. Keyless (round-robin):
     # every consumer either re-shuffles on its own keys or
     # broadcast-joins, so balance beats co-location here.
     keys = list(keys)
-    assigned = pin_width(assigned, n_rows=n).transform(corpus_checkpoint_lazy)
+    assigned = pin_join_width(assigned, n_rows=n).transform(corpus_checkpoint_lazy)
     pairs, dropped = semdedup_pairs_dropped(assigned, keys, rank_col, n_rows=n)
     members = assigned.groupBy(*keys).agg(F.count("*").alias("n_members"))
     pair_counts = pairs.groupBy(*keys).agg(F.count("*").alias("n_dup_pairs"))
@@ -555,13 +554,13 @@ def _hier_fassigned(spark: SparkSession, sf_dir: str) -> tuple[int, DataFrame]:
     v = load_vectors(spark, sf_dir)
     kc, kf = hier_cells(n)
     cents = train_centroids(v, cache_key=dataset_cache_key(sf_dir), n_cells=kc)
-    # the assignment checkpoint pins its width first (tables.pin_width):
+    # the assignment checkpoint pins its width first (tables.pin_join_width):
     # the skinny argmax shuffles AQE-coalesce to 1-2 partitions, and the
     # checkpoint would freeze that width under every later dense pass
     # (fine seed ranking, fine assignment — measured 2-of-32-core
     # grind at sf10 unpinned). Keyless: all downstream scoring joins are
     # broadcast, so round-robin balance beats key co-location.
-    cassigned = pin_width(
+    cassigned = pin_join_width(
         assign_with_centroid_cosine(v, cents).drop("ccos"), n_rows=n
     ).transform(corpus_checkpoint_lazy)
     fcents = train_fine_centroids(

@@ -27,7 +27,7 @@ from data_ingestion_system_spark.functions.scalar import (
     u52_terms_sql,
 )
 from data_ingestion_system_spark.registry import query
-from data_ingestion_system_spark.tables import bulk_checkpoint, load_table
+from data_ingestion_system_spark.tables import load_table
 
 K_FOLDS = 5
 FOLD_SEED = 23
@@ -127,22 +127,10 @@ def fold_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the pair relation comes from the bounded LSH machinery
     (never all-pairs); fold ids join on doc_id — two key-partitioned
     joins and one scalar aggregate."""
-    from data_ingestion_system_spark.dedup.minhash import (
-        JACCARD_THRESHOLD,
-        lsh_candidate_pairs,
-        token_set_arrays,
-        verified_pairs_from_sets,
-    )
+    from data_ingestion_system_spark.dedup.minhash import minhash_pairs
 
     docs = load_table(spark, sf_dir, "documents")
-    n_docs = docs.count()  # footer statistics
-    tsets = bulk_checkpoint(token_set_arrays(docs), eager=False, n_rows=n_docs)
-    pairs = verified_pairs_from_sets(
-        tsets,
-        lsh_candidate_pairs(tsets, n_docs=n_docs),
-        JACCARD_THRESHOLD,
-        n_docs=n_docs,
-    )
+    pairs, _ = minhash_pairs(docs)
     folded = with_fold(docs.select("doc_id"), F.col("doc_id")).select("doc_id", "fold")
     fa = folded.select(F.col("doc_id").alias("doc_a"), F.col("fold").alias("fold_a"))
     fb = folded.select(F.col("doc_id").alias("doc_b"), F.col("fold").alias("fold_b"))

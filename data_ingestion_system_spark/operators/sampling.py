@@ -328,25 +328,12 @@ def cluster_aware_split_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHash-LSH + connected-components path; everything after is a
     hash-threshold projection and two aggregates."""
     from data_ingestion_system_spark.dedup.clusters import connected_components
-    from data_ingestion_system_spark.dedup.minhash import (
-        JACCARD_THRESHOLD,
-        lsh_candidate_pairs,
-        token_set_arrays,
-        verified_pairs_from_sets,
-    )
+    from data_ingestion_system_spark.dedup.minhash import minhash_pairs
     from data_ingestion_system_spark.functions.scalar import U52_DENOM, U52_SPARK_SQL
-    from data_ingestion_system_spark.tables import bulk_checkpoint
     from data_ingestion_system_spark.tables import load_table as _lt
 
     docs = _lt(spark, sf_dir, "documents")
-    n_docs = docs.count()  # footer statistics
-    tsets = bulk_checkpoint(token_set_arrays(docs), eager=False, n_rows=n_docs)
-    pairs = verified_pairs_from_sets(
-        tsets,
-        lsh_candidate_pairs(tsets, n_docs=n_docs),
-        JACCARD_THRESHOLD,
-        n_docs=n_docs,
-    )
+    pairs, _ = minhash_pairs(docs)
     comp = connected_components(pairs)
     units = docs.select("doc_id").join(comp, "doc_id", "left").select(
         "doc_id", F.coalesce("cluster_id", "doc_id").alias("unit_id")

@@ -67,7 +67,7 @@ def count_pinned_repartitions(df: DataFrame) -> int:
     (REPARTITION_BY_NUM) — the one shuffle origin AQE's size-based
     coalesce never folds. Pair-expansion joins and checkpointed
     assignment relations pin their width this way
-    (`tables.pin_join_width` / `tables.pin_width`): the map output is
+    (`tables.pin_join_width`): the map output is
     byte-tiny but the downstream per-partition work is quadratic in
     bucket membership (or K×DIM-dense per row), so the reduce width
     must target the EXPANDED work, not the shuffled bytes."""

@@ -166,7 +166,7 @@ def _topology_width(spark: SparkSession, local_n: int) -> int | None:
     launcher box's CPU count (VERDICT r8 ask #2): a
     `local-cluster[2,4,*]` session launched from a 32-core box would
     otherwise declare width 32 for an 8-core cluster — every shuffle
-    runs 4 waves of undersized tasks and `tables.pin_width` pins the
+    runs 4 waves of undersized tasks and `tables.pin_join_width` pins the
     wrong number into every checkpointed relation. local[n] keeps n
     (defaultParallelism == n, no change); local-cluster parses the
     master string (executors x cores — defaultParallelism right after

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from data_ingestion_system_spark.dedup.minhash import (
+    CLASSIC_ROWS,
     JACCARD_THRESHOLD,
     band_keys,
     candidate_pairs,
@@ -113,7 +114,7 @@ def neardup_insert_batch(
         # streams through without a shuffle, and joins onto the
         # checkpointed batch need no exchange on it
         cross = (
-            F.broadcast(band_keys(batch)).alias("n")
+            F.broadcast(band_keys(batch, CLASSIC_ROWS)).alias("n")
             .join(store_bands.alias("s"), F.col("n.band_key") == F.col("s.band_key"))
             .select(
                 F.col("s.doc_id").alias("doc_a"), F.col("n.doc_id").alias("doc_b")
@@ -155,7 +156,10 @@ def neardup_insert_batch(
 
     remaining = flagged.filter(F.col("dup_vs_store").isNull())
     within = verified_pairs_from_sets(
-        remaining, candidate_pairs(band_keys(remaining), n_docs=0), threshold, n_docs=0
+        remaining,
+        candidate_pairs(band_keys(remaining, CLASSIC_ROWS), n_docs=0),
+        threshold,
+        n_docs=0,
     )
     flagged = flagged.join(F.broadcast(_flag(within, "dup_within_batch")), "doc_id", "left")
     # the Observation sits in the checkpoint's result stage: a retried
@@ -181,7 +185,9 @@ def neardup_insert_batch(
     survivors.select(*batch_df.columns).write.mode("overwrite").parquet(
         os.path.join(paths.target_dir, sub)
     )
-    band_keys(survivors).write.mode("overwrite").parquet(os.path.join(paths.bands_dir, sub))
+    band_keys(survivors, CLASSIC_ROWS).write.mode("overwrite").parquet(
+        os.path.join(paths.bands_dir, sub)
+    )
     survivors.select("doc_id", F.explode("tset").alias("token")).write.mode(
         "overwrite"
     ).parquet(os.path.join(paths.tokens_dir, sub))

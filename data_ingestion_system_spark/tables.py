@@ -91,8 +91,7 @@ def fan_out(df: DataFrame, *keys: str) -> DataFrame:
     rows is far cheaper than serializing the exploded rows. Hash keys
     keep per-doc work co-located for downstream per-doc aggregates.
     """
-    n = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n, *keys) if keys else df.repartition(n)
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, *keys)
 
 
 # below this input size a fan-out shuffle costs more than it buys:
@@ -131,7 +130,7 @@ def fan_out_if_narrow(
     n = spark.sparkContext.defaultParallelism
     total = _local_input_bytes(df)
     if total is None or total == 0:
-        return df.repartition(n, *keys) if keys else df.repartition(n)
+        return df.repartition(n, *keys)
     if total < min_bytes:
         return df
     split = _parse_size_bytes(
@@ -141,7 +140,7 @@ def fan_out_if_narrow(
     est_splits = -(-total // max(1, split))
     if est_splits >= max(2, n // 2):
         return df
-    return df.repartition(n, *keys) if keys else df.repartition(n)
+    return df.repartition(n, *keys)
 
 
 _SIZE_UNITS = {
@@ -191,62 +190,51 @@ PIN_MIN_ROWS = 16_384
 _PIN_MIN_BYTES = 8 * 1024 * 1024
 
 
-def _should_pin(df: DataFrame, n_rows: int | None) -> bool:
+def _past_floor(
+    df: DataFrame, n_rows: int | None, min_rows: int, min_bytes: int
+) -> bool:
+    """The §4d size gate of the width pins (PIN_MIN_ROWS) and the bulk
+    checkpoint storage level (BULK_DISK_ONLY_MIN_ROWS): callers that
+    counted the corpus pass `n_rows`, compared with `min_rows`;
+    otherwise a planning-time bytes probe of the lineage's local files
+    keeps inputs under `min_bytes` below the floor. Lineages the probe
+    can't trace (checkpoints, in-memory) count as past it — the
+    scale-safe default."""
     if n_rows is not None:
-        return n_rows >= PIN_MIN_ROWS
+        return n_rows >= min_rows
     total = _local_input_bytes(df)
-    if total is not None and 0 < total < _PIN_MIN_BYTES:
+    if total is not None and 0 < total < min_bytes:
         return False
-    return True  # untraceable (checkpoint / in-memory) — pin, scale-safe
+    return True
 
 
 def pin_join_width(df: DataFrame, *keys: str, n_rows: int | None = None) -> DataFrame:
-    """Hash-repartition a candidate/expansion-join side to the session's
+    """Hash-repartition a relation to the session's
     `spark.sql.shuffle.partitions`, PINNED against AQE coalescing
-    (REPARTITION_BY_NUM is never coalesced).
+    (REPARTITION_BY_NUM is never coalesced). Keyless pins round-robin.
 
-    Every bucketed near-dup / linkage candidate join expands a byte-tiny
+    Two failure modes call for it. Candidate/expansion joins: every
+    bucketed near-dup / linkage candidate join expands a byte-tiny
     shuffled input into per-bucket pair work that is QUADRATIC in bucket
     membership. AQE's size-based coalesce (parallelismFirst=false, the
     production setting) sizes reduce partitions by MAP bytes — it cannot
     see the expansion — and folds the join onto a handful of tasks that
     grind the pair term serially (measured: hierarchical SemDeDup at
-    sf10 536 s unpinned vs 166-218 s pinned). The
+    sf10 536 s unpinned vs 166-218 s pinned). Checkpoint inputs: a
+    checkpoint FREEZES whatever layout its input shuffle ran with, so a
+    skinny argmax/assignment relation coalesced to 1-2 partitions would
+    starve its per-row-expensive consumers (k-means scoring, K×DIM fused
+    multiply-adds) across every later job (measured: hierarchical
+    SemDeDup's fine-assignment pass ground on 2 of 32 cores at sf10);
+    pinning before the checkpoint runs them at the declared width. The
     shuffle-partitions conf is the operator's declared reduce width: the
     knob a 100 TB deployment tunes anyway, instead of a local guess.
 
-    Threshold-dispatched: callers that already counted the corpus pass
-    `n_rows` (pins from PIN_MIN_ROWS up); otherwise a planning-time
-    bytes probe of the lineage's local files skips the pin for tiny
-    corpora, where AQE's coalesced plan is strictly cheaper. Relations
-    the probe can't trace (checkpoints, in-memory) pin unconditionally —
-    the scale-safe default."""
-    if not _should_pin(df, n_rows):
+    Threshold-dispatched (`_past_floor` at PIN_MIN_ROWS / 8 MB): tiny
+    corpora keep AQE's coalesced plan, which is strictly cheaper there."""
+    if not _past_floor(df, n_rows, PIN_MIN_ROWS, _PIN_MIN_BYTES):
         return df
     return df.repartition(_declared_reduce_width(df.sparkSession), *keys)
-
-
-def pin_width(df: DataFrame, *keys: str, n_rows: int | None = None) -> DataFrame:
-    """Pin the width of a dense-compute relation that is about to be
-    `localCheckpoint`ed (same REPARTITION_BY_NUM mechanics and threshold
-    dispatch as `pin_join_width`; distinct name because the failure mode
-    differs).
-
-    A checkpoint FREEZES whatever layout its input shuffle ran with.
-    When that input is a skinny argmax/assignment relation, AQE's
-    byte-based coalesce folds it to 1-2 partitions — correct for the
-    bytes, catastrophic for downstream per-row-expensive consumers
-    (k-means scoring, K×DIM fused multiply-adds) that inherit the
-    frozen width across every later job (measured: hierarchical
-    SemDeDup's fine-assignment pass ground on 2 of 32 cores at sf10).
-    Pinning the width BEFORE the checkpoint makes every consumer run at
-    the session's declared reduce width. Keys keep downstream
-    co-location (aggregates on the same keys reuse the exchange);
-    keyless pins round-robin."""
-    if not _should_pin(df, n_rows):
-        return df
-    n = _declared_reduce_width(df.sparkSession)
-    return df.repartition(n, *keys) if keys else df.repartition(n)
 
 
 # Reliable-checkpoint mode (cluster fault tolerance). localCheckpoint
@@ -349,15 +337,6 @@ BULK_DISK_ONLY_MIN_ROWS = 200_000
 _BULK_DISK_ONLY_MIN_BYTES = 32 * 1024 * 1024
 
 
-def _bulk_wants_disk_only(df: DataFrame, n_rows: int | None) -> bool:
-    if n_rows is not None:
-        return n_rows >= BULK_DISK_ONLY_MIN_ROWS
-    total = _local_input_bytes(df)
-    if total is not None and 0 < total < _BULK_DISK_ONLY_MIN_BYTES:
-        return False
-    return True
-
-
 def bulk_checkpoint(
     df: DataFrame, eager: bool = True, n_rows: int | None = None
 ) -> DataFrame:
@@ -394,7 +373,7 @@ def bulk_checkpoint(
         return _reliable_checkpoint(df, ckpt_dir, eager)
     level = (
         StorageLevel.DISK_ONLY
-        if _bulk_wants_disk_only(df, n_rows)
+        if _past_floor(df, n_rows, BULK_DISK_ONLY_MIN_ROWS, _BULK_DISK_ONLY_MIN_BYTES)
         else StorageLevel.MEMORY_AND_DISK
     )
     return df.localCheckpoint(eager=eager, storageLevel=level)

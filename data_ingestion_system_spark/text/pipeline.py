@@ -39,9 +39,7 @@ from data_ingestion_system_spark.dedup.clusters import connected_components
 from data_ingestion_system_spark.dedup.minhash import (
     JACCARD_THRESHOLD,
     PAIR_CTES,
-    lsh_candidate_pairs,
-    token_set_arrays,
-    verified_pairs_from_sets,
+    minhash_pairs,
 )
 from data_ingestion_system_spark.registry import query
 from data_ingestion_system_spark.tables import corpus_checkpoint, load_table
@@ -189,18 +187,7 @@ def stage_dup_drop(
     """Stage 3: doc_ids dropped as non-canonical members of near-dup
     clusters (closure over the FULL corpus — a doc whose cluster canon
     is an eval doc is dropped, same as the SQL)."""
-    from data_ingestion_system_spark.tables import bulk_checkpoint
-
-    # corpus-sized (every doc's sorted shingle array) → DISK_ONLY
-    tsets = bulk_checkpoint(
-        token_set_arrays(docs, toks=toks), eager=False, n_rows=n_docs
-    )
-    pairs = verified_pairs_from_sets(
-        tsets,
-        lsh_candidate_pairs(tsets, n_docs=n_docs),
-        JACCARD_THRESHOLD,
-        n_docs=n_docs,
-    )
+    pairs, _ = minhash_pairs(docs, toks=toks, n_docs=n_docs)
     comp = connected_components(pairs)
     return comp.filter(F.col("cluster_id") != F.col("doc_id")).select("doc_id")
 

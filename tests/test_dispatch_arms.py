@@ -4,7 +4,7 @@
 Several operators pick between two physical plans on a corpus-size floor
 (CONVENTIONS.md §4d: two physical plans, one answer). The driver gate
 only ever exercises the arm the floor picks at sf0.01; this test forces
-EACH arm via its floor/force knob and asserts the full oracle match at
+EACH arm by moving its floor constant and asserts the full oracle match at
 sf0.01 — so a dispatch regression on either side is a test failure, not
 a silent at-scale surprise.
 
@@ -41,7 +41,7 @@ DISPATCHED = [
         id="ngram-scheme",
     ),
     pytest.param(
-        # PIN_MIN_ROWS drives tables._should_pin, which picks the MinHash
+        # PIN_MIN_ROWS drives tables._past_floor, which picks the MinHash
         # verify-join strategy (AQE broadcast vs MERGE hint) and the
         # expansion-width pins
         "near_dup_minhash_lsh",
@@ -168,50 +168,37 @@ def test_dispatch_arm_matches_oracle(
 # --- band/row ladder (r10): the two banding arms CHANGE the defined
 # candidate set (unlike the §4d dispatches above, which pick a physical
 # plan for one answer), so each arm is verified against ITS OWN oracle
-# form — pair_ctes(force_wide=...) pins `satd` to that arm's constant,
-# exactly what the production dispatch CTE evaluates to on a corpus
-# that picks that arm.
-
-
-def _ladder_pairs(spark, force_wide):
-    from pyspark.sql import functions as F
-
-    from data_ingestion_system_spark.functions.scalar import round_port
-
-    docs = tables.load_table(spark, DISPATCH_SF_DIR, "documents")
-    n_docs = docs.count()
-    tsets = tables.bulk_checkpoint(
-        minhash.token_set_arrays(docs), eager=False, n_rows=n_docs
-    )
-    pairs = minhash.verified_pairs_from_sets(
-        tsets,
-        minhash.lsh_candidate_pairs(tsets, n_docs=n_docs, force_wide=force_wide),
-        minhash.JACCARD_THRESHOLD,
-        n_docs=n_docs,
-    )
-    return pairs.select(
-        "doc_a", "doc_b", round_port(F.col("jac"), 6).alias("jaccard")
-    ).orderBy("doc_a", "doc_b")
+# form. The floors are forced like every other arm; `pair_ctes()` reads
+# them when it is called, so the oracle built under the same patch
+# evaluates `satd` to that arm exactly as the Spark dispatch does.
+def _force_ladder_arm(monkeypatch, wide):
+    # both floors at 0 cross into the wide rung; an unreachable
+    # occupancy threshold keeps the measured dispatch on the classic one
+    monkeypatch.setattr(minhash, "BAND_LADDER_MIN_DOCS", 0)
+    monkeypatch.setattr(minhash, "BAND_SATURATION_JV_PER_DOC", 0 if wide else HUGE)
 
 
 @pytest.mark.parametrize("wide", [False, True])
-def test_band_ladder_arm_matches_oracle(spark, duck01, wide):
+def test_band_ladder_arm_matches_oracle(spark, duck01, registry, monkeypatch, wide):
+    _force_ladder_arm(monkeypatch, wide)
     oracle = f"""
-WITH {minhash.pair_ctes(force_wide=wide)}
+WITH {minhash.pair_ctes()}
 SELECT doc_a, doc_b, ROUND(jac * 1000000.0) / 1000000.0 AS jaccard
 FROM jacs
 WHERE jac >= {minhash.JACCARD_THRESHOLD}
 ORDER BY doc_a, doc_b
 """
-    assert_df_matches_oracle(_ladder_pairs(spark, wide), duck01, oracle)
+    assert_df_matches_oracle(
+        registry["near_dup_minhash_lsh"].spark(spark, DISPATCH_SF_DIR), duck01, oracle
+    )
     tables.release_session_checkpoints(spark)
 
 
 def test_band_ladder_dispatch_flips_on_measured_saturation(spark, monkeypatch):
-    """The production dispatch (floors un-pinned via monkeypatch so the
+    """The production dispatch (floors moved via monkeypatch so the
     sf0.01 fixture crosses them) must produce the SAME pairs as the
-    forced wide arm; with an unreachable occupancy threshold it must
-    stay on the classic arm. Also pins (a) wide candidates ⊂ classic
+    wide banding; with an unreachable occupancy threshold it must stay
+    on the classic banding. Also pins (a) wide candidates ⊂ classic
     candidates — the 4-row band key is the concatenation of its two
     2-row halves — and (b) the Python/SQL constant lockstep, so nobody
     retunes the Spark-side ladder without the PAIR_CTES mirror."""
@@ -221,19 +208,20 @@ def test_band_ladder_dispatch_flips_on_measured_saturation(spark, monkeypatch):
     assert f">= {minhash.BAND_SATURATION_JV_PER_DOC} * (SELECT COUNT(*)" in minhash.PAIR_CTES
     docs = tables.load_table(spark, DISPATCH_SF_DIR, "documents")
     n_docs = docs.count()
-    tsets = tables.bulk_checkpoint(
-        minhash.token_set_arrays(docs), eager=False, n_rows=n_docs
-    )
+    _, tsets = minhash.minhash_pairs(docs, n_docs=n_docs)
+    sigs = minhash.signatures_from_sets(tsets)
 
     def cand_set(df):
         return {(r.doc_a, r.doc_b) for r in df.collect()}
 
-    classic = cand_set(minhash.lsh_candidate_pairs(tsets, n_docs=n_docs, force_wide=False))
-    wide = cand_set(minhash.lsh_candidate_pairs(tsets, n_docs=n_docs, force_wide=True))
+    def banded(rows):
+        return cand_set(minhash.candidate_pairs(minhash.band_keys(sigs, rows), n_docs))
+
+    classic = banded(minhash.CLASSIC_ROWS)
+    wide = banded(minhash.WIDE_ROWS)
     assert wide <= classic  # strict band ⊂ loose band candidates
-    monkeypatch.setattr(minhash, "BAND_LADDER_MIN_DOCS", 0)
-    monkeypatch.setattr(minhash, "BAND_SATURATION_JV_PER_DOC", 0)
-    assert cand_set(minhash.lsh_candidate_pairs(tsets, n_docs=n_docs)) == wide
-    monkeypatch.setattr(minhash, "BAND_SATURATION_JV_PER_DOC", 10**12)
-    assert cand_set(minhash.lsh_candidate_pairs(tsets, n_docs=n_docs)) == classic
+    _force_ladder_arm(monkeypatch, True)
+    assert cand_set(minhash.lsh_candidate_pairs(tsets, n_docs)) == wide
+    _force_ladder_arm(monkeypatch, False)
+    assert cand_set(minhash.lsh_candidate_pairs(tsets, n_docs)) == classic
     tables.release_session_checkpoints(spark)

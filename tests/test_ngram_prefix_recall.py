@@ -24,10 +24,19 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from data_ingestion_system_spark.registry import load_all
+from data_ingestion_system_spark.dedup import minhash
 
 VOCAB = ["a", "b", "c", "d"]
 THRESHOLD = 0.3
+# NGRAM_PAIRKEY_COST_RATIO values that force each candidate scheme;
+# None leaves the production volume dispatch in place
+SCHEME_RATIO = {"pairkey": -1.0, "single": 10.0**12}
+
+
+def _ngram_pairs(spark, sf_dir, monkeypatch, scheme):
+    if scheme is not None:
+        monkeypatch.setattr(minhash, "NGRAM_PAIRKEY_COST_RATIO", SCHEME_RATIO[scheme])
+    return minhash.near_dup_ngram_jaccard(spark, sf_dir).collect()
 
 
 def _grams(text: str) -> frozenset:
@@ -69,9 +78,9 @@ def _write_docs(tmpdir: str, texts: dict[int, str]) -> str:
 
 @pytest.mark.parametrize("scheme", ["single", "pairkey", None])
 @pytest.mark.parametrize("seed", [1, 2, 3])
-def test_ngram_prefix_filters_keep_every_qualifying_pair(spark, tmp_path, seed, scheme):
-    from data_ingestion_system_spark.dedup.minhash import _ngram_jaccard_pairs
-
+def test_ngram_prefix_filters_keep_every_qualifying_pair(
+    spark, tmp_path, monkeypatch, seed, scheme
+):
     rng = random.Random(seed)
     texts = {}
     for i in range(60):
@@ -82,17 +91,12 @@ def test_ngram_prefix_filters_keep_every_qualifying_pair(spark, tmp_path, seed, 
     texts[101] = texts[1] + " " + rng.choice(VOCAB)
     sf_dir = _write_docs(str(tmp_path), texts)
 
-    got = {
-        (r.doc_a, r.doc_b)
-        for r in _ngram_jaccard_pairs(spark, sf_dir, force_scheme=scheme).collect()
-    }
+    got = {(r.doc_a, r.doc_b) for r in _ngram_pairs(spark, sf_dir, monkeypatch, scheme)}
     assert got == _brute_force(texts)
 
 
 @pytest.mark.parametrize("scheme", ["single", "pairkey", None])
-def test_ngram_prefix_filters_alpha_one_pairs(spark, tmp_path, scheme):
-    from data_ingestion_system_spark.dedup.minhash import _ngram_jaccard_pairs
-
+def test_ngram_prefix_filters_alpha_one_pairs(spark, tmp_path, monkeypatch, scheme):
     # hand-built minimal sets: single-gram docs (n=1 → alpha can be 1,
     # where min(2, alpha) = 1 shared gram must suffice — the pair-key
     # scheme's tiny-doc branch) and a 1-vs-3-gram pair right at the
@@ -106,22 +110,17 @@ def test_ngram_prefix_filters_alpha_one_pairs(spark, tmp_path, scheme):
         4: "x y",              # < 3 words: excluded entirely
     }
     sf_dir = _write_docs(str(tmp_path), texts)
-    got = {
-        (r.doc_a, r.doc_b)
-        for r in _ngram_jaccard_pairs(spark, sf_dir, force_scheme=scheme).collect()
-    }
+    got = {(r.doc_a, r.doc_b) for r in _ngram_pairs(spark, sf_dir, monkeypatch, scheme)}
     assert got == _brute_force(texts)
     assert (0, 1) in got and (0, 2) in got and (2, 3) in got
 
 
-def test_ngram_scheme_dispatch_and_equivalence_on_testdata(spark, sf_dir):
+def test_ngram_scheme_dispatch_and_equivalence_on_testdata(spark, sf_dir, monkeypatch):
     """Both candidate schemes return the identical pair set on the
     shipped testdata, and the registered query (content-dispatched)
     matches them — one operator, two physical plans, one answer."""
-    from data_ingestion_system_spark.dedup.minhash import _ngram_jaccard_pairs
-
-    single = _ngram_jaccard_pairs(spark, sf_dir, force_scheme="single").collect()
-    pairkey = _ngram_jaccard_pairs(spark, sf_dir, force_scheme="pairkey").collect()
-    dispatched = load_all()["near_dup_ngram_jaccard"].spark(spark, sf_dir).collect()
+    dispatched = _ngram_pairs(spark, sf_dir, monkeypatch, None)
+    single = _ngram_pairs(spark, sf_dir, monkeypatch, "single")
+    pairkey = _ngram_pairs(spark, sf_dir, monkeypatch, "pairkey")
     assert sorted(map(tuple, single)) == sorted(map(tuple, pairkey))
     assert sorted(map(tuple, dispatched)) == sorted(map(tuple, single))

@@ -585,7 +585,7 @@ def test_pair_expansion_joins_pin_their_width(spark, sf_dir):
     coalesce sizes reduce partitions by MAP bytes and cannot see the
     in-bucket quadratic expansion — measured at sf10: hierarchical
     SemDeDup 536 s unpinned vs 166-218 s pinned. The pin is
-    THRESHOLD-DISPATCHED (tables._should_pin): under PIN_MIN_ROWS /
+    THRESHOLD-DISPATCHED (tables._past_floor): under PIN_MIN_ROWS /
     the bytes floor an AQE-coalesced tiny plan is cheaper, so at test
     scale size-aware queries must show ZERO pinned exchanges, while
     large/untraceable relations must pin. A plan that loses either side

@@ -23,8 +23,9 @@ from pyspark.sql import functions as F
 
 from data_ingestion_system_spark import tables
 from data_ingestion_system_spark.tables import (
+    _BULK_DISK_ONLY_MIN_BYTES,
     BULK_DISK_ONLY_MIN_ROWS,
-    _bulk_wants_disk_only,
+    _past_floor,
     bulk_checkpoint,
     corpus_checkpoint,
     load_table,
@@ -40,6 +41,10 @@ def reliable_dir(tmp_path, monkeypatch):
     d = str(tmp_path / "ckpt")
     monkeypatch.setenv(tables.RELIABLE_CHECKPOINT_ENV, d)
     yield d
+
+
+def _bulk_wants_disk_only(df, n_rows):
+    return _past_floor(df, n_rows, BULK_DISK_ONLY_MIN_ROWS, _BULK_DISK_ONLY_MIN_BYTES)
 
 
 def test_storage_dispatch_by_n_rows(spark, sf_dir):

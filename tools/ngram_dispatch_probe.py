@@ -27,14 +27,17 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
+from data_ingestion_system_spark.dedup import minhash  # noqa: E402
 from data_ingestion_system_spark.dedup.minhash import (  # noqa: E402
-    _ngram_jaccard_pairs,
     _ngram_prefix_relations,
     _ngram_scheme_probe,
+    near_dup_ngram_jaccard,
 )
 from data_ingestion_system_spark.session import get_spark  # noqa: E402
 
 P, Q = 3, 10
+# NGRAM_PAIRKEY_COST_RATIO values that force each candidate scheme
+FORCE_RATIO = {"single": 10.0**12, "pairkey": -1.0}
 
 
 def probe_dir(spark, sf_dir: str, time_schemes: bool = True) -> dict:
@@ -49,15 +52,21 @@ def probe_dir(spark, sf_dir: str, time_schemes: bool = True) -> dict:
         "probe": {k: round(v, 3) if isinstance(v, float) else v for k, v in stats.items()},
     }
     if time_schemes:
-        for forced in ("single", "pairkey"):
-            t0 = time.perf_counter()
-            n_pairs = _ngram_jaccard_pairs(spark, sf_dir, force_scheme=forced).count()
+        ratio = minhash.NGRAM_PAIRKEY_COST_RATIO
+        for forced, forced_ratio in FORCE_RATIO.items():
+            # the forced timings include the dispatch probe's aggregates
+            minhash.NGRAM_PAIRKEY_COST_RATIO = forced_ratio
+            try:
+                t0 = time.perf_counter()
+                n_pairs = near_dup_ngram_jaccard(spark, sf_dir).count()
+            finally:
+                minhash.NGRAM_PAIRKEY_COST_RATIO = ratio
             out[f"{forced}_sec"] = round(time.perf_counter() - t0, 1)
             out[f"{forced}_pairs"] = n_pairs
         assert out["single_pairs"] == out["pairkey_pairs"], out
         # dispatched run (production decision), timed too
         t0 = time.perf_counter()
-        out["dispatched_pairs"] = _ngram_jaccard_pairs(spark, sf_dir).count()
+        out["dispatched_pairs"] = near_dup_ngram_jaccard(spark, sf_dir).count()
         out["dispatched_sec"] = round(time.perf_counter() - t0, 1)
     return out
 
