@@ -30,9 +30,10 @@ from data_ingestion_system_spark.functions.scalar import round_port
 from data_ingestion_system_spark.registry import query
 from data_ingestion_system_spark.tables import corpus_checkpoint, pin_join_width
 from data_ingestion_system_spark.similarity.ann import (
-    DIM,
-    load_vectors,
     _dot,
+    cosine,
+    cosine_sql,
+    load_vectors,
     lsh_bucket_expr,
 )
 
@@ -70,10 +71,7 @@ WITH v AS (
          ({lsh_bucket_expr("ev", "strpos", "//", MAX_PLANES)}) % (SELECT divisor FROM p) AS bucket
   FROM v
 ), pairs AS (
-  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-    list_sum(list_transform(range(1, {DIM} + 1), i -> a.ev[i] * b.ev[i]))
-      / (sqrt(list_sum(list_transform(range(1, {DIM} + 1), i -> a.ev[i] * a.ev[i])))
-         * sqrt(list_sum(list_transform(range(1, {DIM} + 1), i -> b.ev[i] * b.ev[i])))) AS cosine
+  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, {cosine_sql("a.ev", "b.ev")} AS cosine
   FROM bucketed a
   JOIN bucketed b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
 )
@@ -117,9 +115,7 @@ def near_dup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         F.col("a.vec_id").alias("vec_a"),
         F.col("b.vec_id").alias("vec_b"),
-        (
-            _dot("a.ev", "b.ev") / (F.col("a.nrm") * F.col("b.nrm"))
-        ).alias("cosine"),
+        cosine("a.ev", "b.ev", "a.nrm", "b.nrm").alias("cosine"),
     )
     return (
         pairs.filter(F.col("cosine") >= COSINE_THRESHOLD)

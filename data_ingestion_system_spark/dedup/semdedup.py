@@ -47,22 +47,28 @@ from data_ingestion_system_spark.tables import (
     local_rows_df,
     pin_join_width,
 )
-from data_ingestion_system_spark.similarity.ann import DIM, _dot, load_vectors
+from data_ingestion_system_spark.similarity.ann import (
+    DIM,
+    _with_norm,
+    cosine,
+    cosine_sql,
+    load_vectors,
+)
 from data_ingestion_system_spark.similarity.ivf import (
     N_ITERS,
     TRAIN_MOD,
     adaptive_train_mod,
     adaptive_train_mod_case_sql,
-    _cos,
     _kmeans_ctes,
     _memo,
-    _with_norm,
     adaptive_cells,
     adaptive_cells_case_sql,
+    centroid_cosines,
     dataset_cache_key,
     hier_cells,
     hier_cells_case_sql,
     lloyd,
+    nearest_centroid,
     train_centroids,
 )
 
@@ -83,14 +89,14 @@ centroids AS (
   SELECT cell_id, cv FROM c{N_ITERS}
 ), assigned AS MATERIALIZED (
   SELECT vec_id, ev, cell_id, ccos FROM (
-    SELECT v.vec_id, v.ev, c.cell_id, {_cos("v.ev", "c.cv")} AS ccos,
-           ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY {_cos("v.ev", "c.cv")} DESC, c.cell_id ASC) AS rn
+    SELECT v.vec_id, v.ev, c.cell_id, {cosine_sql("v.ev", "c.cv")} AS ccos,
+           ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY {cosine_sql("v.ev", "c.cv")} DESC, c.cell_id ASC) AS rn
     FROM v, centroids c
   ) t WHERE rn = 1
 ), pairs AS MATERIALIZED (
   SELECT cell_id, va, vb, ca, cb FROM (
     SELECT a.cell_id, a.vec_id AS va, b.vec_id AS vb, a.ccos AS ca, b.ccos AS cb,
-           {_cos("a.ev", "b.ev")} AS cos
+           {cosine_sql("a.ev", "b.ev")} AS cos
     FROM assigned a JOIN assigned b
       ON a.cell_id = b.cell_id AND a.vec_id < b.vec_id
   ) p WHERE cos >= {SEM_THRESHOLD}
@@ -112,40 +118,30 @@ ORDER BY cell_id
 """
 
 
-def assign_with_centroid_cosine(v: DataFrame, cents: DataFrame) -> DataFrame:
-    """(vec_id, ev, nrm, cell_id, ccos): nearest-centroid assignment that
-    KEEPS the member→centroid cosine — SemDeDup's keep rule ranks on it.
-    Argmax as a max_by aggregate, not a sort window (the same tie rule —
-    cosine DESC, cell_id ASC — as lexicographic struct max). ccos is the
-    winning cell's cosine, i.e. the plain max over the member's scores,
-    so it is a separate `max` that the optimizer prunes when a caller
-    drops ccos (the hierarchical coarse assignment ranks on fcos
-    instead).
+def assign_cells(
+    vn: DataFrame,
+    cents: DataFrame,
+    id_col: str = "cell_id",
+    by: tuple[str, ...] = (),
+    rank_col: str = "ccos",
+) -> DataFrame:
+    """(vec_id, ev, nrm, *by, id_col, rank_col): nearest-centroid
+    assignment of the normed relation `vn` through the shared argmax
+    (`ivf.nearest_centroid`), KEEPING the winning cosine as `rank_col` —
+    SemDeDup's keep rule ranks on it. Coarse cells cross the whole
+    centroid table (ccos); fine cells score only their own coarse cell's
+    table (`by` = ("cell_id",), `id_col` = "fine_id", fcos). The
+    optimizer prunes the cosine's aggregate when a caller drops it.
 
-    The n×K scoring relation is SKINNY (vec_id, cell_id, ccos) — the
+    The n×K scoring relation is SKINNY (vec_id, *by, id_col, c) — the
     64-double ev array joins back after the argmax collapses n×K rows
     to n: shuffling arrays through the scored relation was the dominant
     cost at K=256."""
-    vn = _with_norm(v, "ev", "nrm").transform(corpus_checkpoint_lazy)
-    cn = _with_norm(cents, "cv", "cnrm")
-    best = (
-        vn.select("vec_id", "ev", "nrm")
-        .crossJoin(F.broadcast(cn))
-        .select(
-            "vec_id",
-            "cell_id",
-            (_dot("ev", "cv") / (F.col("nrm") * F.col("cnrm"))).alias("ccos"),
-        )
-        .groupBy("vec_id")
-        .agg(
-            F.max_by(
-                "cell_id", F.struct(F.col("ccos"), (-F.col("cell_id")).alias("neg"))
-            ).alias("cell_id"),
-            F.max("ccos").alias("ccos"),
-        )
-    )
-    return best.join(vn, "vec_id").select(
-        "vec_id", "ev", "nrm", "cell_id", "ccos"
+    scored = centroid_cosines(vn.select("vec_id", *by, "ev", "nrm"), cents, id_col, by)
+    return (
+        nearest_centroid(scored, id_col)
+        .join(vn.select("vec_id", "ev", "nrm"), "vec_id")
+        .select("vec_id", "ev", "nrm", *by, id_col, F.col("c").alias(rank_col))
     )
 
 
@@ -175,9 +171,7 @@ def _bucket_pairs(
             F.col("b.vec_id").alias("vb"),
             F.col(f"a.{rank_col}").alias("ca"),
             F.col(f"b.{rank_col}").alias("cb"),
-            (
-                _dot("a.ev", "b.ev") / (F.col("a.nrm") * F.col("b.nrm"))
-            ).alias("cos"),
+            cosine("a.ev", "b.ev", "a.nrm", "b.nrm").alias("cos"),
         )
         .filter(F.col("cos") >= threshold)
     )
@@ -364,7 +358,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = train_centroids(
         v, cache_key=dataset_cache_key(sf_dir), n_cells=adaptive_cells(n)
     )
-    assigned = assign_with_centroid_cosine(v, cents)
+    assigned = assign_cells(_normed(v), cents)
     return semdedup_group_stats(assigned, n, ("cell_id",), "ccos").orderBy("cell_id")
 
 
@@ -390,7 +384,7 @@ def _hier_oracle() -> str:
             f"""fa{it} AS MATERIALIZED (
   SELECT vec_id, cell_id, fine_id, ev FROM (
     SELECT t.vec_id, t.cell_id, f.fine_id, t.ev,
-           ROW_NUMBER() OVER (PARTITION BY t.vec_id ORDER BY {_cos("t.ev", "f.fv")} DESC, f.fine_id ASC) AS rn
+           ROW_NUMBER() OVER (PARTITION BY t.vec_id ORDER BY {cosine_sql("t.ev", "f.fv")} DESC, f.fine_id ASC) AS rn
     FROM ft t JOIN {prev} f ON t.cell_id = f.cell_id
   ) s WHERE rn = 1
 ), fg{it} AS MATERIALIZED (
@@ -414,7 +408,7 @@ centroids AS (
 ), cassigned AS MATERIALIZED (
   SELECT vec_id, ev, cell_id FROM (
     SELECT v.vec_id, v.ev, c.cell_id,
-           ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY {_cos("v.ev", "c.cv")} DESC, c.cell_id ASC) AS rn
+           ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY {cosine_sql("v.ev", "c.cv")} DESC, c.cell_id ASC) AS rn
     FROM v, centroids c
   ) t WHERE rn = 1
 ), f0 AS MATERIALIZED (
@@ -428,14 +422,14 @@ centroids AS (
 {fine_block},
 fassigned AS MATERIALIZED (
   SELECT vec_id, ev, cell_id, fine_id, fcos FROM (
-    SELECT a.vec_id, a.ev, a.cell_id, f.fine_id, {_cos("a.ev", "f.fv")} AS fcos,
-           ROW_NUMBER() OVER (PARTITION BY a.vec_id ORDER BY {_cos("a.ev", "f.fv")} DESC, f.fine_id ASC) AS rn
+    SELECT a.vec_id, a.ev, a.cell_id, f.fine_id, {cosine_sql("a.ev", "f.fv")} AS fcos,
+           ROW_NUMBER() OVER (PARTITION BY a.vec_id ORDER BY {cosine_sql("a.ev", "f.fv")} DESC, f.fine_id ASC) AS rn
     FROM cassigned a JOIN f{_FINE_ITERS} f ON a.cell_id = f.cell_id
   ) t WHERE rn = 1
 ), fpairs AS MATERIALIZED (
   SELECT cell_id, fine_id, va, vb, ca, cb FROM (
     SELECT a.cell_id, a.fine_id, a.vec_id AS va, b.vec_id AS vb,
-           a.fcos AS ca, b.fcos AS cb, {_cos("a.ev", "b.ev")} AS cos
+           a.fcos AS ca, b.fcos AS cb, {cosine_sql("a.ev", "b.ev")} AS cos
     FROM fassigned a JOIN fassigned b
       ON a.cell_id = b.cell_id AND a.fine_id = b.fine_id AND a.vec_id < b.vec_id
   ) p WHERE cos >= {SEM_THRESHOLD}
@@ -470,9 +464,9 @@ def train_fine_centroids(
     rounds per cell over the cell's members in the 1-in-``train_mod``
     sample (n_sample x kf scores, never n x K_total). One Spark job
     ranks members per cell and collects the seeds and the sample
-    together. Returns (cell_id, fine_id, fv, fnrm).
+    together. Returns (cell_id, fine_id, cv).
 
-    With ``cache_key`` set, the trained (cell_id, fine_id, fv) rows are
+    With ``cache_key`` set, the trained (cell_id, fine_id, cv) rows are
     memoized in the SAME per-SparkContext index cache that holds the IVF
     centroids and PQ codebooks (similarity.ivf._index_cache) — the fine
     quantizer is a pure function of the corpus fingerprint and the
@@ -504,52 +498,22 @@ def train_fine_centroids(
         return out
 
     rows = _memo(cassigned.sparkSession, ("fine_centroids", cache_key, kf, train_mod), build)
-    replay = local_rows_df(
-        cassigned.sparkSession, rows, "cell_id int, fine_id int, fv array<double>"
-    )
-    return _with_norm(replay, "fv", "fnrm")
+    return local_rows_df(cassigned.sparkSession, rows, "cell_id int, fine_id int, cv array<double>")
 
 
-def assign_fine(cassigned: DataFrame, fcents: DataFrame) -> DataFrame:
-    """(vec_id, ev, nrm, cell_id, fine_id, fcos): nearest-fine-centroid
-    assignment within each member's coarse cell, KEEPING the fine-centroid
-    cosine (the hierarchical keep rule ranks on it). Skinny argmax, then
-    the 64-double ev joins back."""
-    best = (
-        cassigned.join(F.broadcast(fcents), "cell_id")
-        .select(
-            "vec_id",
-            "cell_id",
-            "fine_id",
-            (_dot("ev", "fv") / (F.col("nrm") * F.col("fnrm"))).alias("c"),
-        )
-        .groupBy("vec_id", "cell_id")
-        .agg(
-            F.max_by(
-                F.struct("fine_id", F.col("c").alias("fcos")),
-                F.struct(F.col("c"), (-F.col("fine_id")).alias("neg")),
-            ).alias("best"),
-        )
-        .select(
-            "vec_id",
-            "cell_id",
-            F.col("best.fine_id").alias("fine_id"),
-            F.col("best.fcos").alias("fcos"),
-        )
-    )
-    return best.join(cassigned.select("vec_id", "ev", "nrm"), "vec_id").select(
-        "vec_id", "ev", "nrm", "cell_id", "fine_id", "fcos"
-    )
+def _normed(v: DataFrame) -> DataFrame:
+    """`v` with its norm hoisted, checkpointed lazily: the argmax scoring
+    and the vectors join-back both read it."""
+    return _with_norm(v, "ev", "nrm").transform(corpus_checkpoint_lazy)
 
 
-def _hier_fassigned(spark: SparkSession, sf_dir: str) -> tuple[int, DataFrame]:
-    """The shared hierarchical chain: corpus count, coarse quantizer
-    (memoized k-means), per-cell fine quantizer, fine assignment —
-    everything upstream of the pair term, identical for both physical
-    pair plans. Returns (n, fassigned) with fassigned UN-pinned and
-    UN-checkpointed (each pair plan applies its own materialization).
-    The coarse assignment is the flat op's; its ccos is dropped before
-    the checkpoint (the hierarchical keep rule ranks on fcos)."""
+def _hier_chain(
+    spark: SparkSession, sf_dir: str, checkpoint: bool = True
+) -> tuple[int, DataFrame, DataFrame]:
+    """(n, cassigned, fcents): the corpus count, the coarse assignment
+    (the flat op's, ccos dropped: the hierarchical keep rule ranks on
+    fcos) and the per-cell fine quantizer trained from it. The coarse
+    quantizer and the fine one are memoized index artifacts."""
     n = load_table(spark, sf_dir, "embeddings").count()
     v = load_vectors(spark, sf_dir)
     kc, kf = hier_cells(n)
@@ -560,9 +524,9 @@ def _hier_fassigned(spark: SparkSession, sf_dir: str) -> tuple[int, DataFrame]:
     # (fine seed ranking, fine assignment — measured 2-of-32-core
     # grind at sf10 unpinned). Keyless: all downstream scoring joins are
     # broadcast, so round-robin balance beats key co-location.
-    cassigned = pin_join_width(
-        assign_with_centroid_cosine(v, cents).drop("ccos"), n_rows=n
-    ).transform(corpus_checkpoint_lazy)
+    cassigned = pin_join_width(assign_cells(_normed(v), cents).drop("ccos"), n_rows=n)
+    if checkpoint:
+        cassigned = cassigned.transform(corpus_checkpoint_lazy)
     fcents = train_fine_centroids(
         cassigned,
         kf,
@@ -572,15 +536,26 @@ def _hier_fassigned(spark: SparkSession, sf_dir: str) -> tuple[int, DataFrame]:
         # fingerprinted corpus via hier_cells(n)
         cache_key=dataset_cache_key(sf_dir),
     )
-    return n, assign_fine(cassigned, fcents)
+    return n, cassigned, fcents
+
+
+def _hier_fassigned(spark: SparkSession, sf_dir: str) -> tuple[int, DataFrame]:
+    """The shared hierarchical chain: corpus count, coarse quantizer
+    (memoized k-means), per-cell fine quantizer, fine assignment —
+    everything upstream of the pair term, identical for both physical
+    pair plans. Returns (n, fassigned) with fassigned UN-pinned and
+    UN-checkpointed (each pair plan applies its own materialization)."""
+    n, cassigned, fcents = _hier_chain(spark, sf_dir)
+    return n, assign_cells(cassigned, fcents, "fine_id", ("cell_id",), "fcos")
 
 
 def warm_fine_quantizer(spark: SparkSession, sf_dir: str) -> None:
     """Train the hierarchical fine quantizer into the session index cache
-    (ivf.warm_index_cache's r10 hook): running the shared chain up
-    through `train_fine_centroids` populates the ("fine_centroids", ...)
-    memo; the assign_fine tail stays lazy and is discarded."""
-    _hier_fassigned(spark, sf_dir)
+    (ivf.warm_index_cache's hook). The chain stops at
+    `train_fine_centroids`, and its training collect reads the coarse
+    assignment un-checkpointed: the serving path's checkpoint would be
+    materialized only to be discarded, and it stores the same rows."""
+    _hier_chain(spark, sf_dir, checkpoint=False)
 
 
 @query("semantic_dedup_hier", oracle=_hier_oracle(), survey="EXT-dedup,EXT-similarity")

@@ -16,6 +16,11 @@ built as one parsed SQL expression — A/B-measured fastest on the
 pair-expansion join shapes (see `_dot`) and bit-identical to the DuckDB
 oracle's list arithmetic (same left-to-right IEEE order), so scores
 hash-match after rounding.
+
+This module also holds the scoring core every vector query shares: the
+Spark cosine (`cosine`, with `_with_norm` hoisting norms), its DuckDB
+twin (`cosine_sql`) and the per-query rank rule (`top_k_rows`: score DESC,
+id ASC). The nearest-centroid argmax is `ivf.nearest_centroid`.
 """
 
 from __future__ import annotations
@@ -57,11 +62,10 @@ def _check_col_ref(ref) -> None:
         )
 
 
-def _dot(a: str, b: str, dim: int = DIM):
+def _dot(a: str, b: str):
     """Sequential-fold dot product over two double arrays. `a`/`b` are
     SQL column references (e.g. "ev", "a.ev"); the whole expression is
-    built as ONE parsed string (`dim` is accepted for call symmetry —
-    the fold walks whatever length the arrays have).
+    built as ONE parsed string.
 
     Why the fold and not an unrolled multiply-add chain: both were
     A/B-measured on the two hot shapes. On broadcast-scoring aggregates
@@ -82,11 +86,51 @@ def _dot(a: str, b: str, dim: int = DIM):
     instead of a round-trip per operator node."""
     _check_col_ref(a)
     _check_col_ref(b)
-    del dim
     return F.expr(
         f"aggregate(zip_with({a}, {b}, (x, y) -> x * y),"
         " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
     )
+
+
+def _with_norm(df: DataFrame, vec: str, out: str) -> DataFrame:
+    """`df` plus column `out` = sqrt of `vec`'s self-dot, hoisted once
+    per vector so a pair's cosine costs one fold-dot instead of three."""
+    return df.withColumn(out, F.sqrt(_dot(vec, vec)))
+
+
+def cosine(a: str, b: str, na: str | None = None, nb: str | None = None):
+    """The Spark cosine of two double-array column refs: dot / (|a|·|b|).
+    `na` / `nb` name hoisted norm columns (`_with_norm`); without them
+    each norm is sqrt of the vector's own fold-dot. Both forms compute
+    the same doubles as `cosine_sql`."""
+    norm_a = F.col(na) if na else F.sqrt(_dot(a, a))
+    norm_b = F.col(nb) if nb else F.sqrt(_dot(b, b))
+    return _dot(a, b) / (norm_a * norm_b)
+
+
+def cosine_sql(a: str, b: str) -> str:
+    """The DuckDB cosine every oracle uses: the three dots fold left to
+    right over 1-based indices, the IEEE order of `_dot`."""
+
+    def dot(x: str, y: str) -> str:
+        return f"list_sum(list_transform(range(1, {DIM} + 1), i -> {x}[i] * {y}[i]))"
+
+    return f"\n{dot(a, b)}\n  / (sqrt({dot(a, a)})\n     * sqrt({dot(b, b)}))\n"
+
+
+def top_k_rows(
+    scored: DataFrame,
+    k: int,
+    score: str = "cosine",
+    id_col: str = "cand_id",
+    by: str = "query_id",
+    rank: str = "rank",
+) -> DataFrame:
+    """The per-query rank rule of every vector search: within each `by`
+    group, row_number `rank` over (`score` DESC, `id_col` ASC), rows with
+    rank ≤ k kept."""
+    w = Window.partitionBy(by).orderBy(F.desc(score), F.asc(id_col))
+    return scored.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
 
 
 def _as_double(col):
@@ -123,19 +167,20 @@ def cosine_topk(queries: DataFrame, candidates: DataFrame, k: int) -> DataFrame:
     # norms hoisted to one dot per vector: the per-pair cosine then costs
     # ONE fold-dot instead of three (sqrt of the same double — results
     # bit-identical), which is 3x on the |q|×n scored relation
-    q = queries.select(
-        F.col("vec_id").alias("query_id"), _as_double("embedding").alias("qv")
-    ).withColumn("qnrm", F.sqrt(_dot("qv", "qv")))
-    c = candidates.select(
-        F.col("vec_id").alias("cand_id"), _as_double("embedding").alias("cv")
-    ).withColumn("cnrm", F.sqrt(_dot("cv", "cv")))
-    scored = F.broadcast(q).crossJoin(c).select(
-        "query_id",
-        "cand_id",
-        (_dot("qv", "cv") / (F.col("qnrm") * F.col("cnrm"))).alias("cosine"),
+    q = _with_norm(
+        queries.select(F.col("vec_id").alias("query_id"), _as_double("embedding").alias("qv")),
+        "qv",
+        "qnrm",
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    c = _with_norm(
+        candidates.select(F.col("vec_id").alias("cand_id"), _as_double("embedding").alias("cv")),
+        "cv",
+        "cnrm",
+    )
+    scored = F.broadcast(q).crossJoin(c).select(
+        "query_id", "cand_id", cosine("qv", "cv", "qnrm", "cnrm").alias("cosine")
+    )
+    return top_k_rows(scored, k)
 
 
 _BRUTE_ORACLE = f"""
@@ -146,10 +191,7 @@ WITH q AS (
   SELECT vec_id AS cand_id, CAST(embedding AS DOUBLE[]) AS cv
   FROM embeddings WHERE vec_id >= {N_QUERIES}
 ), scored AS (
-  SELECT query_id, cand_id,
-    list_sum(list_transform(range(1, {DIM} + 1), i -> qv[i] * cv[i]))
-      / (sqrt(list_sum(list_transform(range(1, {DIM} + 1), i -> qv[i] * qv[i])))
-         * sqrt(list_sum(list_transform(range(1, {DIM} + 1), i -> cv[i] * cv[i])))) AS cosine
+  SELECT query_id, cand_id, {cosine_sql("qv", "cv")} AS cosine
   FROM q, c
 ), ranked AS (
   SELECT query_id, cand_id, cosine,
@@ -226,10 +268,7 @@ WITH v AS (
 ), c AS (
   SELECT vec_id AS cand_id, ev AS cv, bucket FROM bucketed WHERE vec_id >= {N_QUERIES}
 ), scored AS (
-  SELECT query_id, cand_id,
-    list_sum(list_transform(range(1, {DIM} + 1), i -> qv[i] * cv[i]))
-      / (sqrt(list_sum(list_transform(range(1, {DIM} + 1), i -> qv[i] * qv[i])))
-         * sqrt(list_sum(list_transform(range(1, {DIM} + 1), i -> cv[i] * cv[i])))) AS cosine
+  SELECT query_id, cand_id, {cosine_sql("qv", "cv")} AS cosine
   FROM q JOIN c USING (bucket)
 ), ranked AS (
   SELECT query_id, cand_id, cosine,
@@ -261,17 +300,10 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("cand_id"), F.col("ev").alias("cv"), "bucket"
     )
     scored = F.broadcast(q).join(c, "bucket").select(
-        "query_id",
-        "cand_id",
-        (
-            _dot("qv", "cv")
-            / (F.sqrt(_dot("qv", "qv")) * F.sqrt(_dot("cv", "cv")))
-        ).alias("cosine"),
+        "query_id", "cand_id", cosine("qv", "cv").alias("cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
+        top_k_rows(scored, TOP_K)
         .select(
             "query_id",
             "cand_id",
@@ -289,10 +321,7 @@ _CONTRASTIVE_ORACLE = f"""
 WITH v AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings
 ), scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-    list_sum(list_transform(range(1, {DIM} + 1), i -> q.ev[i] * c.ev[i]))
-      / (sqrt(list_sum(list_transform(range(1, {DIM} + 1), i -> q.ev[i] * q.ev[i])))
-         * sqrt(list_sum(list_transform(range(1, {DIM} + 1), i -> c.ev[i] * c.ev[i])))) AS cosine
+  SELECT q.vec_id AS query_id, c.vec_id AS cand_id, {cosine_sql("q.ev", "c.ev")} AS cosine
   FROM v q JOIN v c ON q.vec_id < {N_QUERIES} AND c.vec_id >= {N_QUERIES}
 ), pos AS (
   SELECT query_id, cand_id, cosine FROM (
@@ -346,22 +375,9 @@ def contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("cand_id"), F.col("ev").alias("cv")
     )
     scored = c.crossJoin(F.broadcast(q)).select(
-        "query_id",
-        "cand_id",
-        (
-            _dot("qv", "cv")
-            / (
-                F.sqrt(_dot("qv", "qv"))
-                * F.sqrt(_dot("cv", "cv"))
-            )
-        ).alias("cosine"),
+        "query_id", "cand_id", cosine("qv", "cv").alias("cosine")
     ).transform(corpus_checkpoint_lazy)
-    w_pos = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    pos = (
-        scored.withColumn("rn", F.row_number().over(w_pos))
-        .filter(F.col("rn") == 1)
-        .select("query_id", "cand_id", "cosine")
-    )
+    pos = top_k_rows(scored, 1, rank="rn").select("query_id", "cand_id", "cosine")
     w_neg = Window.partitionBy("query_id").orderBy(
         F.md5(
             F.concat(

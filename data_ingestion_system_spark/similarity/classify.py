@@ -23,7 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_system_spark.registry import query
-from data_ingestion_system_spark.similarity.ann import DIM, _dot, load_vectors
+from data_ingestion_system_spark.similarity.ann import DIM, _with_norm, cosine_sql, load_vectors
+from data_ingestion_system_spark.similarity.ivf import centroid_cosines, nearest_centroid
 
 
 def label_centroids(v: DataFrame) -> DataFrame:
@@ -42,30 +43,14 @@ def label_centroids(v: DataFrame) -> DataFrame:
     )
 
 
-def nearest_centroid(v: DataFrame, centroids: DataFrame) -> DataFrame:
-    """(vec_id, label, predicted): cosine-argmax class assignment,
-    ties to the lower label id."""
-    vn = v.withColumn("nrm", F.sqrt(_dot("ev", "ev")))
-    cn = centroids.withColumn("cnrm", F.sqrt(_dot("cv", "cv"))).select(
-        F.col("label").alias("cl"), "cv", "cnrm"
-    )
-    scored = vn.crossJoin(F.broadcast(cn)).select(
-        "vec_id",
-        "label",
-        "cl",
-        (_dot("ev", "cv") / (F.col("nrm") * F.col("cnrm"))).alias("c"),
-    )
-    return scored.groupBy("vec_id").agg(
-        F.any_value("label").alias("label"),
-        F.max_by("cl", F.struct(F.col("c"), (-F.col("cl")).alias("neg"))).alias("predicted"),
-    )
+def predict_labels(v: DataFrame, centroids: DataFrame) -> DataFrame:
+    """(vec_id, label, predicted): cosine-argmax class assignment through
+    the shared argmax (`ivf.nearest_centroid`), ties to the lower label
+    id."""
+    cents = centroids.select(F.col("label").alias("predicted"), "cv")
+    scored = centroid_cosines(_with_norm(v, "ev", "nrm"), cents, "predicted", keep=("label",))
+    return nearest_centroid(scored, "predicted").drop("c")
 
-
-_COS_SQL = (
-    f"list_sum(list_transform(range(1, {DIM} + 1), i -> v.ev[i] * c.cv[i]))"
-    f" / (sqrt(list_sum(list_transform(range(1, {DIM} + 1), i -> v.ev[i] * v.ev[i])))"
-    f" * sqrt(list_sum(list_transform(range(1, {DIM} + 1), i -> c.cv[i] * c.cv[i]))))"
-)
 
 _ORACLE = f"""
 WITH v AS (
@@ -80,7 +65,7 @@ WITH v AS (
   SELECT vec_id, label, predicted FROM (
     SELECT v.vec_id, v.label, c.label AS predicted,
            ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                              ORDER BY {_COS_SQL} DESC, c.label ASC) AS rn
+                              ORDER BY {cosine_sql("v.ev", "c.cv")} DESC, c.label ASC) AS rn
     FROM v, cents c
   ) t WHERE rn = 1
 )
@@ -96,7 +81,7 @@ def label_centroid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors of each true label land on each class centroid."""
     v = load_vectors(spark, sf_dir, "label")
     cents = label_centroids(v)
-    assigned = nearest_centroid(v, cents)
+    assigned = predict_labels(v, cents)
     return (
         assigned.groupBy("label", "predicted")
         .agg(F.count("*").alias("n"))

@@ -28,12 +28,21 @@ from __future__ import annotations
 import os
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_system_spark.functions.scalar import round_port
 from data_ingestion_system_spark.registry import query
-from data_ingestion_system_spark.similarity.ann import DIM, N_QUERIES, TOP_K, _dot, load_vectors
+from data_ingestion_system_spark.similarity.ann import (
+    DIM,
+    N_QUERIES,
+    TOP_K,
+    _with_norm,
+    cosine,
+    cosine_sql,
+    load_vectors,
+    top_k_rows,
+)
 from data_ingestion_system_spark.tables import corpus_checkpoint_lazy, load_table
 
 N_CELLS = 16
@@ -135,20 +144,6 @@ def hier_cells_case_sql(n_sql: str) -> tuple[str, str]:
         f"(CASE {kc_arms} ELSE {HIER_CELL_CAP[0]} END)",
         f"(CASE {kf_arms} ELSE {HIER_CELL_CAP[1]} END)",
     )
-
-_COSINE = """
-list_sum(list_transform(range(1, {dim} + 1), i -> {a}[i] * {b}[i]))
-  / (sqrt(list_sum(list_transform(range(1, {dim} + 1), i -> {a}[i] * {a}[i])))
-     * sqrt(list_sum(list_transform(range(1, {dim} + 1), i -> {b}[i] * {b}[i]))))
-"""
-
-
-def _cos(a: str, b: str) -> str:
-    return _COSINE.format(dim=DIM, a=a, b=b)
-
-
-def _with_norm(df: DataFrame, vec: str, out: str) -> DataFrame:
-    return df.withColumn(out, F.sqrt(_dot(vec, vec)))
 
 
 CENT_SCHEMA = "cell_id int, cv array<double>"
@@ -382,7 +377,7 @@ def _kmeans_ctes(n_cells_sql: str | int = N_CELLS) -> str:
             f"""a{it} AS (
   SELECT vec_id, ev, cell_id FROM (
     SELECT t.vec_id, t.ev, c.cell_id,
-           ROW_NUMBER() OVER (PARTITION BY t.vec_id ORDER BY {_cos("t.ev", "c.cv")} DESC, c.cell_id ASC) AS rn
+           ROW_NUMBER() OVER (PARTITION BY t.vec_id ORDER BY {cosine_sql("t.ev", "c.cv")} DESC, c.cell_id ASC) AS rn
     FROM vt t, {prev} c
   ) s WHERE rn = 1
 )"""
@@ -406,18 +401,18 @@ centroids AS (
 ), assigned AS (
   SELECT vec_id, ev, cell_id FROM (
     SELECT v.vec_id, v.ev, c.cell_id,
-           ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY {_cos("v.ev", "c.cv")} DESC, c.cell_id ASC) AS rn
+           ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY {cosine_sql("v.ev", "c.cv")} DESC, c.cell_id ASC) AS rn
     FROM v, centroids c
   ) t WHERE rn = 1
 ), probes AS (
   SELECT vec_id AS query_id, cell_id FROM (
     SELECT v.vec_id, c.cell_id,
-           ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY {_cos("v.ev", "c.cv")} DESC, c.cell_id ASC) AS rn
+           ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY {cosine_sql("v.ev", "c.cv")} DESC, c.cell_id ASC) AS rn
     FROM v, centroids c
     WHERE v.vec_id < {N_QUERIES}
   ) t WHERE rn <= {NPROBE}
 ), scored AS (
-  SELECT p.query_id, a.vec_id AS cand_id, {_cos("q.ev", "a.ev")} AS cosine
+  SELECT p.query_id, a.vec_id AS cand_id, {cosine_sql("q.ev", "a.ev")} AS cosine
   FROM probes p
   JOIN assigned a ON a.cell_id = p.cell_id AND a.vec_id >= {N_QUERIES}
   JOIN v q ON q.vec_id = p.query_id
@@ -446,6 +441,40 @@ ORDER BY query_id, rank
 ASSIGN_SKINNY_MIN_BYTES = 32 * 1024 * 1024
 
 
+def centroid_cosines(
+    vn: DataFrame,
+    cents: DataFrame,
+    id_col: str = "cell_id",
+    by: tuple[str, ...] = (),
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """(vec_id, *by, *keep, id_col, c): every row of the normed relation
+    `vn` (vec_id, *by, ev, nrm, ...) scored by cosine against the
+    broadcast centroids `cents` (*by, id_col, cv) — crossed when `by` is
+    empty, else equi-joined on `by` (a fine quantizer's coarse cell).
+    `keep` names further `vn` columns carried through."""
+    cn = F.broadcast(_with_norm(cents, "cv", "cnrm"))
+    pairs = vn.join(cn, list(by)) if by else vn.crossJoin(cn)
+    return pairs.select(
+        "vec_id", *by, *keep, id_col, cosine("ev", "cv", "nrm", "cnrm").alias("c")
+    )
+
+
+def nearest_centroid(scored: DataFrame, id_col: str = "cell_id") -> DataFrame:
+    """The one nearest-centroid argmax: per row of `scored` (as built by
+    `centroid_cosines`), the `id_col` of the highest cosine `c`, ties to
+    the lower id, and that cosine. An aggregate grouped on every other
+    column of `scored`, with the tie order (c DESC, id ASC) as the
+    lexicographic max of struct(c, -id): unlike a rank window, its
+    partial aggregate collapses the K scores of a vector before the
+    shuffle. Callers join the vectors back after the collapse."""
+    keys = [k for k in scored.columns if k not in (id_col, "c")]
+    return scored.groupBy(*keys).agg(
+        F.max_by(id_col, F.struct(F.col("c"), (-F.col(id_col)).alias("neg"))).alias(id_col),
+        F.max("c").alias("c"),
+    )
+
+
 def assign_and_probes(
     v: DataFrame,
     centroids: DataFrame,
@@ -461,51 +490,27 @@ def assign_and_probes(
     from data_ingestion_system_spark.tables import _local_input_bytes
 
     extra = [c for c in v.columns if c not in ("vec_id", "ev")]
-    cn = _with_norm(centroids, "cv", "cnrm")
-    w_assign = Window.partitionBy("vec_id").orderBy(F.desc("c"), F.asc("cell_id"))
     src_bytes = _local_input_bytes(v)
     if src_bytes is not None and 0 < src_bytes < ASSIGN_SKINNY_MIN_BYTES:
-        # fat arm: one materialized scoring carries the vectors through
+        # fat arm: one materialized scoring carries the vectors through,
+        # and the top-1 cell per vector is a rank window over it
         vn = _with_norm(v, "ev", "nrm")
-        scored_cells = vn.crossJoin(F.broadcast(cn)).select(
-            "vec_id",
-            *extra,
-            "ev",
-            "nrm",
-            "cell_id",
-            (_dot("ev", "cv") / (F.col("nrm") * F.col("cnrm"))).alias("c"),
+        scored_cells = centroid_cosines(
+            vn, centroids, keep=(*extra, "ev", "nrm")
         ).transform(corpus_checkpoint_lazy)
-        assigned = (
-            scored_cells.withColumn("rn", F.row_number().over(w_assign))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", *extra, "ev", "nrm", "cell_id")
+        assigned = top_k_rows(scored_cells, 1, "c", "cell_id", "vec_id", "rn").select(
+            "vec_id", *extra, "ev", "nrm", "cell_id"
         )
     else:
-        # skinny arm: score (vec_id, cell_id, c) only; hash-agg argmax
-        # (tie order (c DESC, cell_id ASC) ≡ lexicographic struct max)
-        # and the vectors join back AFTER the
-        # collapse; only the n_queries×K probe slice pays a sort window
+        # skinny arm: score (vec_id, cell_id, c) only; the shared argmax
+        # collapses it and the vectors join back AFTER the collapse; only
+        # the n_queries×K probe slice pays a sort window
         vn = _with_norm(v, "ev", "nrm").transform(corpus_checkpoint_lazy)
-        scored_cells = vn.crossJoin(F.broadcast(cn)).select(
-            "vec_id",
-            "cell_id",
-            (_dot("ev", "cv") / (F.col("nrm") * F.col("cnrm"))).alias("c"),
-        ).transform(corpus_checkpoint_lazy)
-        assigned = (
-            scored_cells.groupBy("vec_id")
-            .agg(
-                F.max_by(
-                    "cell_id", F.struct(F.col("c"), (-F.col("cell_id")).alias("neg"))
-                ).alias("cell_id")
-            )
-            .join(vn, "vec_id")
-        )
-    probes = (
-        scored_cells.filter(F.col("vec_id") < n_queries)
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") <= nprobe)
-        .select(F.col("vec_id").alias("query_id"), "cell_id")
-    )
+        scored_cells = centroid_cosines(vn, centroids).transform(corpus_checkpoint_lazy)
+        assigned = nearest_centroid(scored_cells).drop("c").join(vn, "vec_id")
+    probes = top_k_rows(
+        scored_cells.filter(F.col("vec_id") < n_queries), nprobe, "c", "cell_id", "vec_id", "rn"
+    ).select(F.col("vec_id").alias("query_id"), "cell_id")
     return assigned, probes
 
 
@@ -515,33 +520,35 @@ def ivf_topk(
     nprobe: int = NPROBE,
     top_k: int = TOP_K,
     n_queries: int = N_QUERIES,
+    where=None,
 ) -> DataFrame:
-    """IVF search against a given quantizer: assign corpus to cells via a
-    broadcast centroid join + argmax window, probe the `nprobe` nearest
-    cells per query, exact cosine within the probed cells only. Returns
-    (query_id, cand_id, cosine, rank), cosine unrounded."""
+    """IVF search against a given quantizer: assign corpus to cells
+    (`assign_and_probes`), probe the `nprobe` nearest cells per query,
+    exact cosine within the probed cells only — among the candidates
+    that also pass the Column predicate `where` over `v`'s columns, if
+    given. Returns (query_id, cand_id, cosine, rank), cosine unrounded."""
     assigned, probes = assign_and_probes(v, centroids, nprobe, n_queries)
     vn = _with_norm(v, "ev", "nrm")
     q = vn.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"), F.col("ev").alias("qv"), F.col("nrm").alias("qnrm")
     )
+    cands = assigned.filter(F.col("vec_id") >= n_queries)
+    if where is not None:
+        cands = cands.filter(where)
     scored = (
         # probes is |queries| x nprobe rows — broadcast it so the cell
         # pruning join never sort-merges the corpus side (checkpointed
         # lineage hides size stats from the planner, which defaulted to SMJ)
         F.broadcast(probes)
-        .join(assigned.filter(F.col("vec_id") >= n_queries), "cell_id")
+        .join(cands, "cell_id")
         .join(F.broadcast(q), "query_id")
         .select(
             "query_id",
             F.col("vec_id").alias("cand_id"),
-            (_dot("qv", "ev") / (F.col("qnrm") * F.col("nrm"))).alias("cosine"),
+            cosine("qv", "ev", "qnrm", "nrm").alias("cosine"),
         )
     )
-    w_rank = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return scored.withColumn("rank", F.row_number().over(w_rank)).filter(
-        F.col("rank") <= top_k
-    )
+    return top_k_rows(scored, top_k)
 
 
 @query("ann_ivf_topk", oracle=_IVF_ORACLE, survey="EXT-similarity")
@@ -575,8 +582,8 @@ centroids AS (
   SELECT cell_id, cv FROM c{N_ITERS}
 ), assigned AS (
   SELECT vec_id, cell_id, c FROM (
-    SELECT v.vec_id, c.cell_id, {_cos("v.ev", "c.cv")} AS c,
-           ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY {_cos("v.ev", "c.cv")} DESC, c.cell_id ASC) AS rn
+    SELECT v.vec_id, c.cell_id, {cosine_sql("v.ev", "c.cv")} AS c,
+           ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY {cosine_sql("v.ev", "c.cv")} DESC, c.cell_id ASC) AS rn
     FROM v, centroids c
   ) t WHERE rn = 1
 )
@@ -598,22 +605,11 @@ def kmeans_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF index or a cluster-stratified training split.
 
     Scale shape: training is the shared memoized quantizer; profiling is
-    one broadcast-centroid scoring pass + a 16-group aggregate."""
+    one broadcast-centroid scoring pass, the shared argmax aggregate and a
+    16-group aggregate."""
     v = load_vectors(spark, sf_dir)
     cents = train_centroids(v, cache_key=dataset_cache_key(sf_dir))
-    vn = _with_norm(v, "ev", "nrm")
-    cn = _with_norm(cents, "cv", "cnrm")
-    w = Window.partitionBy("vec_id").orderBy(F.desc("c"), F.asc("cell_id"))
-    assigned = (
-        vn.crossJoin(F.broadcast(cn))
-        .select(
-            "vec_id",
-            "cell_id",
-            (_dot("ev", "cv") / (F.col("nrm") * F.col("cnrm"))).alias("c"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-    )
+    assigned = nearest_centroid(centroid_cosines(_with_norm(v, "ev", "nrm"), cents))
     return (
         assigned.groupBy(F.col("cell_id").cast("int").alias("cell_id"))
         .agg(
@@ -637,18 +633,18 @@ centroids AS (
 ), assigned AS (
   SELECT vec_id, label, ev, cell_id FROM (
     SELECT v.vec_id, v.label, v.ev, c.cell_id,
-           ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY {_cos("v.ev", "c.cv")} DESC, c.cell_id ASC) AS rn
+           ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY {cosine_sql("v.ev", "c.cv")} DESC, c.cell_id ASC) AS rn
     FROM v, centroids c
   ) t WHERE rn = 1
 ), probes AS (
   SELECT vec_id AS query_id, cell_id FROM (
     SELECT v.vec_id, c.cell_id,
-           ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY {_cos("v.ev", "c.cv")} DESC, c.cell_id ASC) AS rn
+           ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY {cosine_sql("v.ev", "c.cv")} DESC, c.cell_id ASC) AS rn
     FROM v, centroids c
     WHERE v.vec_id < {N_QUERIES}
   ) t WHERE rn <= {NPROBE}
 ), scored AS (
-  SELECT p.query_id, a.vec_id AS cand_id, {_cos("q.ev", "a.ev")} AS cosine
+  SELECT p.query_id, a.vec_id AS cand_id, {cosine_sql("q.ev", "a.ev")} AS cosine
   FROM probes p
   JOIN assigned a ON a.cell_id = p.cell_id AND a.vec_id >= {N_QUERIES}
                  AND a.label = {FILTER_LABEL}
@@ -680,35 +676,12 @@ def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = train_centroids(
         v.select("vec_id", "ev"), cache_key=dataset_cache_key(sf_dir)
     )
-    # the shared skinny assignment: `label` rides through assigned (see
-    # assign_and_probes) — no re-implemented copy to drift from
-    assigned, probes = assign_and_probes(v, cents)
-    vn = _with_norm(v, "ev", "nrm")
-    q = vn.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("ev").alias("qv"), F.col("nrm").alias("qnrm")
-    )
-    cands = assigned.filter(
-        (F.col("vec_id") >= N_QUERIES) & (F.col("label") == FILTER_LABEL)
-    )
-    scored = (
-        F.broadcast(probes)
-        .join(cands, "cell_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            F.col("vec_id").alias("cand_id"),
-            (_dot("qv", "ev") / (F.col("qnrm") * F.col("nrm"))).alias("cosine"),
-        )
-    )
-    w_rank = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "cand_id",
-            round_port(F.col("cosine"), 6).alias("cosine"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-        .orderBy("query_id", "rank")
-    )
+    # the shared IVF search: `label` rides through the assignment (see
+    # assign_and_probes) and filters the probed candidates before ranking
+    out = ivf_topk(v, cents, where=F.col("label") == FILTER_LABEL)
+    return out.select(
+        "query_id",
+        "cand_id",
+        round_port(F.col("cosine"), 6).alias("cosine"),
+        F.col("rank").cast("int").alias("rank"),
+    ).orderBy("query_id", "rank")

@@ -23,29 +23,24 @@ corpus size; the corpus is touched exactly once, in the pool pass.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_system_spark.functions.scalar import round_port
 from data_ingestion_system_spark.registry import query
 from data_ingestion_system_spark.similarity.ann import (
-    DIM,
     N_QUERIES,
     _as_double,
-    _dot,
+    cosine,
+    cosine_sql,
     cosine_topk,
+    top_k_rows,
 )
-from data_ingestion_system_spark.similarity.ivf import _cos
 from data_ingestion_system_spark.tables import load_table
 
 POOL_K = 12   # relevance pool per query feeding the greedy loop
 MMR_K = 5     # diverse results returned per query
 LAMBDA = 0.7  # relevance-diversity trade-off
-
-
-def _cosine(a: str, b: str):
-    """Cosine from SQL column refs (ann._dot contract)."""
-    return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
 
 
 def mmr_topk(
@@ -72,12 +67,13 @@ def mmr_topk(
         )
         .localCheckpoint(eager=True)
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("cand_id"))
     first = (
-        pool.withColumn("score", F.lit(lam) * F.col("rel") - F.lit(1.0 - lam) * F.lit(0.0))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("query_id", "cand_id", "rel", "cv", "score", F.lit(1).alias("rank"))
+        top_k_rows(
+            pool.withColumn("score", F.lit(lam) * F.col("rel") - F.lit(1.0 - lam) * F.lit(0.0)),
+            1,
+            "score",
+            rank="rn",
+        ).select("query_id", "cand_id", "rel", "cv", "score", F.lit(1).alias("rank"))
     )
     selected = first.localCheckpoint(eager=True)
     for step in range(2, k + 1):
@@ -93,21 +89,20 @@ def mmr_topk(
             .select(
                 "query_id",
                 F.col("r.cand_id").alias("cand_id"),
-                _cosine("r.cv", "sv").alias("sim"),
+                cosine("r.cv", "sv").alias("sim"),
             )
             .groupBy("query_id", "cand_id")
             .agg(F.max("sim").alias("maxsim"))
         )
-        pick = (
-            remaining.join(sims, ["query_id", "cand_id"])
-            .withColumn(
+        pick = top_k_rows(
+            remaining.join(sims, ["query_id", "cand_id"]).withColumn(
                 "score",
                 F.lit(lam) * F.col("rel") - F.lit(1.0 - lam) * F.col("maxsim"),
-            )
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("query_id", "cand_id", "rel", "cv", "score", F.lit(step).alias("rank"))
-        )
+            ),
+            1,
+            "score",
+            rank="rn",
+        ).select("query_id", "cand_id", "rel", "cv", "score", F.lit(step).alias("rank"))
         selected = selected.unionByName(pick).localCheckpoint(eager=True)
     return selected.select("query_id", "rank", "cand_id", "rel", "score")
 
@@ -130,10 +125,10 @@ def _mmr_oracle() -> str:
 )""",
         f"""pool AS MATERIALIZED (
   SELECT query_id, cand_id, rel, cv FROM (
-    SELECT query_id, cand_id, {_cos("qv", "cv")} AS rel, cv,
+    SELECT query_id, cand_id, {cosine_sql("qv", "cv")} AS rel, cv,
            ROW_NUMBER() OVER (
              PARTITION BY query_id
-             ORDER BY {_cos("qv", "cv")} DESC, cand_id ASC
+             ORDER BY {cosine_sql("qv", "cv")} DESC, cand_id ASC
            ) AS rn
     FROM q, c
   ) t WHERE rn <= {POOL_K}
@@ -159,7 +154,7 @@ def _mmr_oracle() -> str:
         prev = step - 1
         ctes.append(
             f"""sims{step} AS MATERIALIZED (
-  SELECT r.query_id, r.cand_id, MAX({_cos("r.cv", "s.cv")}) AS maxsim
+  SELECT r.query_id, r.cand_id, MAX({cosine_sql("r.cv", "s.cv")}) AS maxsim
   FROM rem{prev} r JOIN all{prev} s ON s.query_id = r.query_id
   GROUP BY r.query_id, r.cand_id
 )"""

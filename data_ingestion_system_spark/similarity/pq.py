@@ -25,7 +25,7 @@ normalized embeddings and the standard PQ scoring choice.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_system_spark.functions.scalar import round_port
@@ -44,7 +44,10 @@ from data_ingestion_system_spark.similarity.ann import (
     TOP_K,
     _check_col_ref,
     _dot,
+    cosine,
+    cosine_sql,
     load_vectors,
+    top_k_rows,
 )
 
 M_SUB = 8                  # subspaces
@@ -55,14 +58,13 @@ PQ_TRAIN_MOD = 4           # train on vec_id % PQ_TRAIN_MOD == 0
 PQ_CODE_BASE = 200         # vec_ids seeding the codebooks
 
 
-def _l2(a: str, b: str, dim: int = SD):
+def _l2(a: str, b: str):
     """Sequential-fold squared L2 over SD-dim subvectors from SQL column
     refs (one parsed expression; same fold-vs-unrolled trade as
     ann._dot — the fold wins the join shapes and adds left-to-right, the
     IEEE order the oracle's list arithmetic uses)."""
     _check_col_ref(a)
     _check_col_ref(b)
-    del dim
     return F.expr(
         f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)),"
         " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
@@ -127,15 +129,14 @@ def train_codebooks(v: DataFrame, cache_key: str | None = None) -> DataFrame:
     return local_rows_df(v.sparkSession, rows, CODES_SCHEMA)
 
 
-def pq_topk(
-    v: DataFrame,
-    codes: DataFrame,
-    top_k: int = TOP_K,
-    n_queries: int = N_QUERIES,
+def _adc_scores(
+    sv: DataFrame, codes: DataFrame, n_queries: int, cands: DataFrame | None = None
 ) -> DataFrame:
-    """ADC search: encode the corpus to (vec_id, m, code), build the
-    query x code inner-product LUT, sum LUT hits per candidate."""
-    sv = corpus_checkpoint(subvectors(v), eager=False)
+    """(query_id, cand_id, adot): asymmetric-distance scores. The corpus
+    subvectors `sv` encode to (cand_id, m, code), the query subvectors
+    build the query x code inner-product LUT, and each candidate sums
+    its 8 LUT hits. Every candidate is scored against every query, or,
+    with `cands`, only the (query_id, cand_id) pairs it lists."""
     encoded = _assign(sv.filter(F.col("vec_id") >= n_queries), codes).select(
         F.col("vec_id").alias("cand_id"), "m", "code"
     )
@@ -143,19 +144,34 @@ def pq_topk(
         sv.filter(F.col("vec_id") < n_queries)
         .join(F.broadcast(codes), "m")
         .select(
-            F.col("vec_id").alias("query_id"),
-            "m",
-            "code",
-            _dot("sv", "cv", dim=SD).alias("pd"),
+            F.col("vec_id").alias("query_id"), "m", "code", _dot("sv", "cv").alias("pd")
         )
     )
-    approx = (
-        encoded.join(F.broadcast(lut), ["m", "code"])
-        .groupBy("query_id", "cand_id")
-        .agg(F.sum("pd").alias("adot"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("adot"), F.asc("cand_id"))
-    return approx.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= top_k)
+    if cands is None:
+        hits = encoded.join(F.broadcast(lut), ["m", "code"])
+    else:
+        # cands is NOT query-batch-sized: it holds the probed-cell members
+        # (~nprobe/K of the corpus per query), so broadcasting would collect
+        # a corpus-proportional relation to the driver; a shuffle-HASH join
+        # on cand_id keeps it distributed without the sort-merge the planner
+        # picks when the checkpointed lineage hides size stats.
+        hits = (
+            cands.hint("shuffle_hash")
+            .join(encoded, "cand_id")
+            .join(F.broadcast(lut), ["query_id", "m", "code"])
+        )
+    return hits.groupBy("query_id", "cand_id").agg(F.sum("pd").alias("adot"))
+
+
+def pq_topk(
+    v: DataFrame,
+    codes: DataFrame,
+    top_k: int = TOP_K,
+    n_queries: int = N_QUERIES,
+) -> DataFrame:
+    """ADC search over the whole corpus (`_adc_scores`)."""
+    sv = corpus_checkpoint(subvectors(v), eager=False)
+    return top_k_rows(_adc_scores(sv, codes, n_queries), top_k, "adot")
 
 
 def _sv_sql(m: int) -> str:
@@ -198,28 +214,9 @@ def pq_rerank_topk(
     scored = (
         short.join(F.broadcast(q), "query_id")
         .join(c, "cand_id")
-        .select(
-            "query_id",
-            "cand_id",
-            (
-                _dot("qv", "cv")
-                / (
-                    F.sqrt(_dot("qv", "qv"))
-                    * F.sqrt(_dot("cv", "cv"))
-                )
-            ).alias("cosine"),
-        )
+        .select("query_id", "cand_id", cosine("qv", "cv").alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= top_k)
-
-
-def _fcos_sql(a: str, b: str) -> str:
-    return (
-        f"list_sum(list_transform(range(1, {DIM} + 1), i -> {a}[i] * {b}[i]))"
-        f" / (sqrt(list_sum(list_transform(range(1, {DIM} + 1), i -> {a}[i] * {a}[i])))"
-        f" * sqrt(list_sum(list_transform(range(1, {DIM} + 1), i -> {b}[i] * {b}[i]))))"
-    )
+    return top_k_rows(scored, top_k)
 
 
 def _codebook_ctes() -> list[str]:
@@ -307,7 +304,7 @@ def _pq_rerank_oracle() -> str:
 short AS (
   SELECT query_id, cand_id FROM ranked WHERE rank <= {SHORTLIST}
 ), rescored AS (
-  SELECT s.query_id, s.cand_id, {_fcos_sql("q.ev", "c.ev")} AS cosine
+  SELECT s.query_id, s.cand_id, {cosine_sql("q.ev", "c.ev")} AS cosine
   FROM short s
   JOIN v q ON q.vec_id = s.query_id
   JOIN v c ON c.vec_id = s.cand_id
@@ -359,12 +356,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivfpq_oracle() -> str:
-    from data_ingestion_system_spark.similarity.ivf import (
-        NPROBE,
-        N_ITERS,
-        _cos,
-        _kmeans_ctes,
-    )
+    from data_ingestion_system_spark.similarity.ivf import NPROBE, N_ITERS, _kmeans_ctes
 
     cb = f"pcb{PQ_ITERS}"
     ivf_ctes = _kmeans_ctes()
@@ -379,13 +371,13 @@ centroids AS (
 ), assigned AS (
   SELECT vec_id, cell_id FROM (
     SELECT v.vec_id, c.cell_id,
-           ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY {_cos("v.ev", "c.cv")} DESC, c.cell_id ASC) AS rn
+           ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY {cosine_sql("v.ev", "c.cv")} DESC, c.cell_id ASC) AS rn
     FROM v, centroids c
   ) t WHERE rn = 1
 ), probes AS (
   SELECT vec_id AS query_id, cell_id FROM (
     SELECT v.vec_id, c.cell_id,
-           ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY {_cos("v.ev", "c.cv")} DESC, c.cell_id ASC) AS rn
+           ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY {cosine_sql("v.ev", "c.cv")} DESC, c.cell_id ASC) AS rn
     FROM v, centroids c
     WHERE v.vec_id < {N_QUERIES}
   ) t WHERE rn <= {NPROBE}
@@ -443,37 +435,12 @@ def ivfpq_topk(
     assigned, probes = assign_and_probes(
         v, centroids, NPROBE if nprobe is None else nprobe, n_queries
     )
-    encoded = _assign(sv.filter(F.col("vec_id") >= n_queries), codes).select(
-        F.col("vec_id").alias("cand_id"), "m", "code"
-    )
-    lut = (
-        sv.filter(F.col("vec_id") < n_queries)
-        .join(F.broadcast(codes), "m")
-        .select(
-            F.col("vec_id").alias("query_id"),
-            "m",
-            "code",
-            _dot("sv", "cv", dim=SD).alias("pd"),
-        )
-    )
-    # probes (|queries| x nprobe rows) is query-batch-sized — broadcast it.
-    # cands is NOT: it holds the probed-cell members (~nprobe/K of the
-    # corpus per query), so broadcasting would collect a corpus-proportional
-    # relation to the driver; a shuffle-HASH join on cand_id keeps it
-    # distributed without the sort-merge the planner picks when the
-    # checkpointed lineage hides size stats.
+    # probes (|queries| x nprobe rows) is query-batch-sized — broadcast it
     cands = F.broadcast(probes).join(
         assigned.filter(F.col("vec_id") >= n_queries).select("vec_id", "cell_id"),
         "cell_id",
     ).select("query_id", F.col("vec_id").alias("cand_id"))
-    approx = (
-        cands.hint("shuffle_hash").join(encoded, "cand_id")
-        .join(F.broadcast(lut), ["query_id", "m", "code"])
-        .groupBy("query_id", "cand_id")
-        .agg(F.sum("pd").alias("adot"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("adot"), F.asc("cand_id"))
-    return approx.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= top_k)
+    return top_k_rows(_adc_scores(sv, codes, n_queries, cands), top_k, "adot")
 
 
 @query("ann_ivfpq_topk", oracle=_ivfpq_oracle(), survey="EXT-similarity")

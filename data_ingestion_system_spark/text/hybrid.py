@@ -30,10 +30,10 @@ from pyspark.sql import functions as F
 from data_ingestion_system_spark.functions.scalar import round_port
 from data_ingestion_system_spark.registry import query
 from data_ingestion_system_spark.similarity.ann import (
-    DIM,
     N_QUERIES,
+    cosine,
+    cosine_sql,
     load_vectors,
-    _dot,
 )
 from data_ingestion_system_spark.tables import load_table
 from data_ingestion_system_spark.text.ranking import B, BM25_TERMS, K1, bm25_scores
@@ -42,13 +42,6 @@ FUSE_K = 100  # depth of each retriever's candidate list
 RRF_K = 60  # the RRF dampening constant from the paper
 QUERY_VEC = 0  # the semantic query: embeddings.vec_id == 0
 TOP_N = 20
-
-_COS = f"""
-list_sum(list_transform(range(1, {DIM} + 1), i -> q.qv[i] * c.cv[i]))
-  / (sqrt(list_sum(list_transform(range(1, {DIM} + 1), i -> q.qv[i] * q.qv[i])))
-     * sqrt(list_sum(list_transform(range(1, {DIM} + 1), i -> c.cv[i] * c.cv[i]))))
-"""
-
 
 def _hybrid_oracle() -> str:
     terms_list = ", ".join(f"'{t}'" for t in BM25_TERMS)
@@ -85,7 +78,7 @@ WITH toks AS (
 ), sem AS (
   SELECT doc_id, rank FROM (
     SELECT c.vec_id AS doc_id,
-           ROW_NUMBER() OVER (ORDER BY {_COS} DESC, c.vec_id ASC) AS rank
+           ROW_NUMBER() OVER (ORDER BY {cosine_sql("q.qv", "c.cv")} DESC, c.vec_id ASC) AS rank
     FROM (SELECT ev AS cv, vec_id FROM v WHERE vec_id >= {N_QUERIES}) c,
          (SELECT ev AS qv FROM v WHERE vec_id = {QUERY_VEC}) q
   ) r WHERE rank <= {FUSE_K}
@@ -129,16 +122,7 @@ def hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = load_vectors(spark, sf_dir)
     q = v.filter(F.col("vec_id") == QUERY_VEC).select(F.col("ev").alias("qv"))
     cands = v.filter(F.col("vec_id") >= N_QUERIES)
-    cos = cands.crossJoin(F.broadcast(q)).select(
-        "vec_id",
-        (
-            _dot("qv", "ev")
-            / (
-                F.sqrt(_dot("qv", "qv"))
-                * F.sqrt(_dot("ev", "ev"))
-            )
-        ).alias("cosine"),
-    )
+    cos = cands.crossJoin(F.broadcast(q)).select("vec_id", cosine("qv", "ev").alias("cosine"))
     sem = _ranked_topk(cos, "cosine", "vec_id", FUSE_K)
 
     fused = (

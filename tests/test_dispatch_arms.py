@@ -110,7 +110,7 @@ DISPATCHED = [
     ),
     pytest.param(
         # r9 assignment-shape dispatch: the fat single-pass scoring vs
-        # the skinny score + hash-agg argmax + vectors-join must assign
+        # the skinny score + argmax aggregate + vectors-join must assign
         # identical cells (tie order (c DESC, cell_id ASC) both arms)
         "ann_ivf_topk",
         [(ivf, "ASSIGN_SKINNY_MIN_BYTES")],

@@ -143,3 +143,57 @@ def test_box_factor_refuses_another_core_count(tmp_path, monkeypatch):
     del prev["cpus"]  # a record that does not say where it ran
     (tmp_path / "BENCH_r01.json").write_text(json.dumps(prev))
     assert bench._box_factor(times, registry, 0.1, 32) is None
+
+
+def test_spark_argmax_ties_pick_the_lower_id(spark, tmp_path, monkeypatch):
+    """The Spark side of the tie rule: every nearest-centroid caller sends
+    an exact cosine tie to the lower id. Cells 3 and 1 (and fine cells 1
+    and 0 of cell 1, and labels 5 and 2) are identical centroids, listed
+    higher id first, so vectors along x tie exactly between them."""
+    from data_ingestion_system_spark.dedup.semdedup import _normed, assign_cells
+    from data_ingestion_system_spark.similarity import ivf
+    from data_ingestion_system_spark.similarity.ann import DIM, _with_norm
+    from data_ingestion_system_spark.similarity.classify import predict_labels
+
+    def pad(x):
+        return x + [0.0] * (DIM - len(x))
+
+    vecs = [(0, 1, [1.0, 0.1]), (1, 1, [0.9, -0.2]), (2, 0, [0.0, 1.0])]
+    path = str(tmp_path / "vecs.parquet")
+    spark.createDataFrame(
+        [(i, lab, pad(x)) for i, lab, x in vecs], "vec_id long, label int, ev array<double>"
+    ).write.parquet(path)
+    v = spark.read.parquet(path).select("vec_id", "ev")  # file-backed: both arms open
+    cents = spark.createDataFrame(
+        [(3, pad([1.0, 0.0])), (1, pad([1.0, 0.0])), (2, pad([0.0, 1.0]))],
+        "cell_id int, cv array<double>",
+    )
+    want = {0: 1, 1: 1, 2: 2}
+
+    def cells(df, col="cell_id"):
+        return {r.vec_id: r[col] for r in df.select("vec_id", col).collect()}
+
+    shared = ivf.nearest_centroid(ivf.centroid_cosines(_with_norm(v, "ev", "nrm"), cents))
+    assert cells(shared) == want
+
+    for floor in (10**12, 0):  # fat arm, then skinny arm
+        monkeypatch.setattr(ivf, "ASSIGN_SKINNY_MIN_BYTES", floor)
+        assigned, probes = ivf.assign_and_probes(v, cents, nprobe=1, n_queries=2)
+        assert cells(assigned) == want
+        assert sorted(map(tuple, probes.collect())) == [(0, 1), (1, 1)]
+
+    coarse = assign_cells(_normed(v), cents)
+    assert cells(coarse) == want
+    fcents = spark.createDataFrame(
+        [(1, 1, pad([1.0, 0.0])), (1, 0, pad([1.0, 0.0])), (2, 0, pad([0.0, 1.0]))],
+        "cell_id int, fine_id int, cv array<double>",
+    )
+    fine = assign_cells(coarse.drop("ccos"), fcents, "fine_id", ("cell_id",), "fcos")
+    assert cells(fine, "fine_id") == {0: 0, 1: 0, 2: 0}
+
+    labeled = spark.read.parquet(path)
+    label_cents = spark.createDataFrame(
+        [(5, pad([1.0, 0.0])), (2, pad([1.0, 0.0])), (0, pad([0.0, 1.0]))],
+        "label int, cv array<double>",
+    )
+    assert cells(predict_labels(labeled, label_cents), "predicted") == {0: 2, 1: 2, 2: 0}

@@ -1,5 +1,8 @@
 """Pinned Spark job counts of the queries that read the MinHash pair
-relation (and of the ngram near-dup query next to it).
+relation (and of the ngram near-dup query next to it), and of the
+vector queries built on the shared scoring core of `similarity/` (the
+ANN searches, the k-means profile, SemDeDup, the nearest-centroid
+classifier, the embedding near-dup pairs and the hybrid retriever).
 
 A plan change that adds or removes a materialization, a probe or an
 exchange run as its own job moves these counts, so they pin each
@@ -25,6 +28,20 @@ JOB_BUDGETS = {
     "cluster_aware_split_stats": 23,
     "fold_leakage_audit": 9,
     "near_dup_ngram_jaccard": 24,
+    "ann_topk_bruteforce": 5,
+    "ann_lsh_topk": 5,
+    "ann_ivf_topk": 9,
+    "ann_filtered_topk": 9,
+    "kmeans_cluster_profile": 6,
+    "ann_pq_topk": 8,
+    "ann_pq_rerank_topk": 10,
+    "ann_ivfpq_topk": 13,
+    "label_centroid_confusion": 8,
+    "near_dup_embedding_cosine": 6,
+    "semantic_dedup": 16,
+    "semantic_dedup_hier": 19,
+    "contrastive_pairs": 7,
+    "hybrid_rrf_search": 7,
 }
 
 
@@ -50,10 +67,12 @@ def _query_jobs(spark, spec, sf_dir, group: str) -> int:
 def test_minhash_consumer_job_budget(spark, sf_dir, registry, qname):
     """Each query runs exactly its pinned number of jobs. AQE can start
     one extra broadcast job on a query's first run in a session (seen on
-    near_dup_ngram_jaccard: 25 instead of 24 in three sessions of eight), so
-    a first count off the budget is re-read from a second run, and the
-    lower of the two must equal it: a plan that adds a job misses on
-    both runs, and one that drops a job reads low."""
+    near_dup_ngram_jaccard: 25 instead of 24 in three sessions of eight),
+    and the first vector query that needs an index artifact trains it
+    (the session memo serves every later run), so a first count off the
+    budget is re-read from a second run, and the lower of the two must
+    equal it: a plan that adds a job misses on both runs, and one that
+    drops a job reads low."""
     spec = registry[qname]
     jobs = _query_jobs(spark, spec, sf_dir, f"budget-{qname}-1")
     if jobs != JOB_BUDGETS[qname]:

@@ -220,8 +220,8 @@ def test_semdedup_hier_pairwise_is_fine_cell_bucketed(spark, sf_dir):
     # the fine-scoring join sits behind a checkpoint in the full query —
     # assert its broadcast shape on the builder directly
     from data_ingestion_system_spark.dedup.semdedup import (
-        assign_fine,
-        assign_with_centroid_cosine,
+        _normed,
+        assign_cells,
         train_fine_centroids,
     )
     from data_ingestion_system_spark.similarity.ann import _as_double
@@ -230,9 +230,9 @@ def test_semdedup_hier_pairwise_is_fine_cell_bucketed(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     v = emb.select("vec_id", _as_double("embedding").alias("ev"))
-    cassigned = assign_with_centroid_cosine(v, train_centroids(v, n_cells=4)).drop("ccos")
+    cassigned = assign_cells(_normed(v), train_centroids(v, n_cells=4)).drop("ccos")
     fcents = train_fine_centroids(cassigned, 4)
-    fine_plan = simple_plan_str(assign_fine(cassigned, fcents))
+    fine_plan = simple_plan_str(assign_cells(cassigned, fcents, "fine_id", ("cell_id",), "fcos"))
     assert "CartesianProduct" not in fine_plan
     assert "BroadcastHashJoin" in fine_plan  # fine-table scoring join
 

@@ -6,7 +6,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_ingestion_system_spark.dedup.semdedup import (
-    assign_with_centroid_cosine,
+    _normed,
+    assign_cells,
     semdedup_pairs_dropped,
 )
 from data_ingestion_system_spark.similarity.ann import DIM
@@ -57,7 +58,7 @@ def test_semdedup_drops_the_more_cluster_typical_member(spark, keys, rank_col):
             (20, [0.0, 1.0]),
         ],
     )
-    assigned = assign_with_centroid_cosine(v, cents)
+    assigned = assign_cells(_normed(v), cents)
     got = {(r.vec_id, r.cell_id) for r in assigned.select("vec_id", "cell_id").collect()}
     assert got == {(10, 0), (11, 0), (20, 1)}
 
@@ -83,7 +84,7 @@ def test_semdedup_tie_drops_higher_id_and_respects_threshold(spark):
             (12, [0.5, -0.5]),  # cell 0 but cosine to 10/11 ~0.55 < 0.9
         ],
     )
-    assigned = assign_with_centroid_cosine(v, cents)
+    assigned = assign_cells(_normed(v), cents)
     pairs, dropped = semdedup_pairs_dropped(assigned, ("cell_id",), "ccos", threshold=0.9)
     assert [(r.va, r.vb) for r in pairs.select("va", "vb").collect()] == [(10, 11)]
     assert [r.vec_id for r in dropped.collect()] == [11]
@@ -126,8 +127,9 @@ def test_flat_semdedup_dispatch_sides_agree(spark, sf_dir, monkeypatch):
     the SEMDEDUP_BLAS_MIN_ROWS floor."""
     from data_ingestion_system_spark.dedup import semdedup
     from data_ingestion_system_spark.dedup.semdedup import (
+        _normed,
         adaptive_cells,
-        assign_with_centroid_cosine,
+        assign_cells,
         semdedup_group_stats,
     )
     from data_ingestion_system_spark.similarity.ann import load_vectors
@@ -142,7 +144,7 @@ def test_flat_semdedup_dispatch_sides_agree(spark, sf_dir, monkeypatch):
     cents = train_centroids(
         v, cache_key=dataset_cache_key(sf_dir), n_cells=adaptive_cells(n)
     )
-    assigned = assign_with_centroid_cosine(v, cents)
+    assigned = assign_cells(_normed(v), cents)
 
     def stats(rows):
         return semdedup_group_stats(assigned, rows, ("cell_id",), "ccos")
@@ -165,7 +167,11 @@ def test_fine_centroid_memo_replays_identically(spark, sf_dir):
     train_centroids pattern) must replay EXACTLY the rows, types, and
     fnrm the cold Lloyd training produced — warm and cold serving paths
     may never diverge in schema or values."""
-    from data_ingestion_system_spark.dedup.semdedup import train_fine_centroids
+    from data_ingestion_system_spark.dedup.semdedup import (
+        _normed,
+        assign_cells,
+        train_fine_centroids,
+    )
     from data_ingestion_system_spark.similarity.ann import load_vectors
     from data_ingestion_system_spark.similarity.ivf import (
         _index_cache,
@@ -181,7 +187,7 @@ def test_fine_centroid_memo_replays_identically(spark, sf_dir):
     kc, kf = hier_cells(n)
     key = dataset_cache_key(sf_dir)
     cents = train_centroids(v, cache_key=key, n_cells=kc)
-    cassigned = assign_with_centroid_cosine(v, cents).drop("ccos")
+    cassigned = assign_cells(_normed(v), cents).drop("ccos")
     memo = ("fine_centroids", key, kf, adaptive_train_mod(n))
     _index_cache(spark).pop(memo, None)  # force the cold path
     cold = train_fine_centroids(
